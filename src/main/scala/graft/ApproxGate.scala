@@ -38,28 +38,17 @@ object ApproxGate {
     * insensitive at that resolution. */
   val pctAccuracy: Int = 10000
 
-  /** One decision per (session, dir, table), memoized: the gate's count
-    * is parquet-footer-cheap but not free, and a bench run asks the same
-    * question per gated query — at 100 TB list-scale that's a real job
-    * each time. The memo is safe because the decision is a pure function
-    * of the table's row count and the fixture contract (same as
-    * Ratings/Tables memos) is immutable data under a dir. [[clearCache]]
-    * resets (tests, data rewritten under the same dir). */
-  private val decisionCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, String), Boolean]
-
-  def clearCache(): Unit = decisionCache.clear()
-
   /** Decide ONCE per query from the BASE TABLE's row count; callers
     * thread the result through every percentile column so one query
-    * never mixes paths. */
+    * never mixes paths. The count is [[Tables.countCached]]'s, so a
+    * bench run pays it once per (session, dir, table) — at 100 TB
+    * list-scale a per-query count would be a real job each time. */
   def useApprox(s: org.apache.spark.sql.SparkSession, sfDir: String,
       table: String): Boolean =
     sys.env.get("SPARK_GRAFT_APPROX_PCT") match {
       case Some("1") => true
       case Some("0") => false
-      case _ => decisionCache.getOrElseUpdate((s, sfDir, table),
-        Tables.load(s, sfDir, table).count() > pctRowThreshold)
+      case _ => Tables.countCached(s, sfDir, table) > pctRowThreshold
     }
 
   /** `percentile(c, p)` on the exact branch, `approx_percentile(c, p,

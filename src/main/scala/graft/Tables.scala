@@ -23,21 +23,16 @@ object Tables {
     else df
   }
 
-  private val countCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), Long]
+  private val counts = SharedBuild[(SparkSession, String, String), Long]()()
 
-  /** Memoized row count per (session, dir, table) — the ApproxGate memo
-    * idiom for count-derived sizing decisions (IVF list counts, banding
-    * widths) that would otherwise pay a count job on every invocation;
-    * at 100 TB list-scale that recurring count is a real job. Safe
-    * because fixture data under a dir is immutable for a session's
-    * lifetime (same contract as the Ratings/ApproxGate memos);
-    * [[clearCountCache]] resets for tests / in-place rewrites. */
+  /** Memoized row count per (session, dir, table) for count-derived
+    * sizing decisions (the ApproxGate percentile gate, IVF list counts,
+    * banding widths) that would otherwise pay a count job on every
+    * invocation; at 100 TB list-scale that recurring count is a real job.
+    * Safe because fixture data under a dir is immutable for a session's
+    * lifetime (same contract as the Ratings memo). */
   def countCached(spark: SparkSession, sfDir: String, name: String): Long =
-    countCache.getOrElseUpdate((spark, sfDir, name),
-      load(spark, sfDir, name).count())
-
-  def clearCountCache(): Unit = countCache.clear()
+    counts((spark, sfDir, name))(load(spark, sfDir, name).count())
 
   /** Normalize `events.ts` to TIMESTAMP_NTZ regardless of how the fixture
     * encodes it. Fixture generations have carried three encodings: parquet

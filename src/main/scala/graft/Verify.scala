@@ -4,13 +4,14 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
-  /** The driver-equivalent session config, shared with PlanAudit. */
-  def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+  /** The one session config, shared with Bench, PlanAudit, PlanDump and
+    * GenData. Bench passes its own CPU count and shuffle width. */
+  def session(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"),
+      shufflePartitions: Option[String] = None): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", shufflePartitions.getOrElse(cpus))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
@@ -24,10 +25,44 @@ object Verify {
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         "1000000")
       .config("spark.ui.enabled", "false")
+      // Late-run inflation guards (VERDICT r7 task 5): shuffle files and
+      // broadcast blocks are only reclaimed when a GC collects their dead
+      // Shuffle/Broadcast references — Spark's own backstop fires every
+      // 30 min by default, which a ~10 min 500-query run never reaches.
+      // 2 min keeps the accumulated state of early queries from taxing
+      // late ones.
+      .config("spark.cleaner.periodicGC.interval", "2min")
+      .config("spark.sql.ui.retainedExecutions", "50")
+      // Single-JVM big-heap runs (the sf10 rung at 64 g) can pause >2 min
+      // in full GC while materializing a checkpoint; the default 120 s
+      // network timeout then REMOVES the local executor, which in local
+      // mode is unrecoverable (every later query fails on the lost
+      // scheduler endpoint — measured in the r12 sf10 dedup batch).
+      .config("spark.network.timeout", "600s")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Storage hygiene across a 500-query single-JVM run: queries pin
+    * blocks (localCheckpoint lineage barriers, Antidote/GraphX internal
+    * caches) that a multi-job cluster would drop with the app — here they
+    * accumulate and squeeze execution memory for every later query
+    * (round 6: 9× full-run inflation on the iterative tail). After each
+    * query's terminal action its result is never touched again, so every
+    * persistent RDD it left is released — except `keep` and the blocks a
+    * [[SharedBuild]] memo owns (their lineage is truncated: releasing
+    * them would break, not slow, every later consumer). Cached frames
+    * that do get released recompute from lineage, so this is a perf
+    * lever, never a correctness one. */
+  def releaseUnowned(spark: SparkSession, keep: Set[Int]): Unit =
+    spark.sparkContext.getPersistentRDDs
+      .filterNot { case (id, _) => keep.contains(id) || SharedBuild.owns(id) }
+      .values.foreach(_.unpersist(blocking = false))
+
+  /** `<class>: <first line of the message>` — a failure's printable cause. */
+  def cause(e: Throwable): String = e.getClass.getName + ": " +
+    Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -39,31 +74,6 @@ object Verify {
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val selected = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-    // Same storage hygiene as Bench: warm the three MF-family memos up
-    // front (so the shared caches land in the keep-set), then release
-    // every persistent RDD a query pins once its dump is written — a
-    // 267-query single-JVM run otherwise accumulates localCheckpoint and
-    // internal-cache blocks until execution memory starves (round 6).
-    val mfish = (n: String) => n.startsWith("q_mf") || n.startsWith("q_antidote") ||
-      n.startsWith("q_metric") || n.startsWith("q_ratings") || n.startsWith("q_rec") ||
-      n.startsWith("q_ndcg") || n.startsWith("q_negative")
-    if (selected.keys.exists(mfish))
-      try {
-        ml.Ratings.viewCached(spark, sfDir)
-        ml.AlsEngine.trainCachedOnRatingsView(spark, sfDir)
-        ml.Baseline.polRmseCached(spark, sfDir)
-      } catch { case _: Throwable => () }
-    val keep = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    def releaseNew(): Unit =
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) =>
-          // MemoKeep: memoized localCheckpoints (SimSearch index cache,
-          // co-occurrence memo) built mid-run — lineage is truncated, so
-          // releasing them breaks every later consumer instead of
-          // slowing it
-          keep.contains(id) || MemoKeep.isProtected(id) }
-        .values.foreach(r => try r.unpersist(blocking = false)
-          catch { case _: Throwable => () })
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     var nOk = 0
     selected
@@ -74,9 +84,9 @@ object Verify {
           nOk += 1
         } catch { case e: Throwable =>
           failed += name
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          System.err.println(s"[verify] $name failed: ${cause(e)}")
         }
-        releaseNew()
+        releaseUnowned(spark, Set.empty)
       }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

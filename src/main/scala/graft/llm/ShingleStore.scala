@@ -58,8 +58,8 @@ object ShingleStore {
 
   private val Buckets = 64
 
-  private val cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, Int), DataFrame]
+  private val tables =
+    graft.SharedBuild[(SparkSession, String, Int, Int), DataFrame]()()
 
   /** Stable table name per (sfDir, k, maxPos) — the digest keeps
     * distinct fixture dirs from colliding in one warehouse. */
@@ -83,32 +83,26 @@ object ShingleStore {
     * partitions), so the build pays one extra partition-local sort, no
     * new shuffle. */
   def counted(spark: SparkSession, sfDir: String, k: Int,
-      maxPos: Int): DataFrame = cache.synchronized {
-    cache.getOrElseUpdate((spark, sfDir, k, maxPos), {
-      val docs = Tables.load(spark, sfDir, "documents")
-        .select(col("doc_id"), col("text"))
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("shingle")
-      val frame = docs
-        .select(col("doc_id"), col("text"),
-          explode(sequence(lit(1),
-            least(greatest(length(col("text")) - (k - 1), lit(1)),
-              lit(maxPos)))).as("p"))
-        .select(col("doc_id"), expr(s"substr(text, p, $k)").as("shingle"))
-        .repartition(Buckets, col("shingle"))
-        .groupBy("doc_id", "shingle").agg(count(lit(1)).as("c"))
-        .withColumn("df", count(lit(1)).over(w))
-      val table = tableName(sfDir, k, maxPos)
-      Layout.writeBucketed(frame, table, Buckets, "shingle")
-      spark.table(table)
-    })
+      maxPos: Int): DataFrame = tables((spark, sfDir, k, maxPos)) {
+    val docs = Tables.load(spark, sfDir, "documents")
+      .select(col("doc_id"), col("text"))
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("shingle")
+    val frame = docs
+      .select(col("doc_id"), col("text"),
+        explode(sequence(lit(1),
+          least(greatest(length(col("text")) - (k - 1), lit(1)),
+            lit(maxPos)))).as("p"))
+      .select(col("doc_id"), expr(s"substr(text, p, $k)").as("shingle"))
+      .repartition(Buckets, col("shingle"))
+      .groupBy("doc_id", "shingle").agg(count(lit(1)).as("c"))
+      .withColumn("df", count(lit(1)).over(w))
+    val table = tableName(sfDir, k, maxPos)
+    Layout.writeBucketed(frame, table, Buckets, "shingle")
+    spark.table(table)
   }
 
   /** Distinct (doc_id, shingle) pairs — the counted frame minus `c`. */
   def distinct(spark: SparkSession, sfDir: String, k: Int,
       maxPos: Int): DataFrame =
     counted(spark, sfDir, k, maxPos).select("doc_id", "shingle")
-
-  /** Drop all memoized handles (tests / in-place data rewrites). The
-    * on-disk tables stay; the next `counted` touch rewrites them. */
-  def clearCache(): Unit = cache.synchronized(cache.clear())
 }

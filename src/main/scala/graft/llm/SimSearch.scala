@@ -107,10 +107,10 @@ object SimSearch {
     * them per (session, data-dir). Keyed by session as well as data key —
     * a localCheckpoint-backed frame is bound to the context that built
     * it, and a later session reusing the same dir must rebuild, not
-    * inherit a frame whose blocks died with the old context. Checkpoint
-    * block ids are MemoKeep-protected so the bench's per-query release
-    * pass cannot free a shared index mid-run; each cache entry records
-    * the ids it protected so eviction can hand the storage back.
+    * inherit a frame whose blocks died with the old context. Each memo
+    * owns its index's checkpoint blocks, so the bench's per-query release
+    * pass cannot free a shared index mid-run, and the bench's three
+    * independent index builds (disjoint keys) overlap.
     *
     * Cache-key contract: entries key on (session, dataKey, params) and
     * do NOT fingerprint the `embs` frame itself — `embs` MUST be exactly
@@ -118,100 +118,22 @@ object SimSearch {
     * that dir). Passing a filtered or otherwise derived frame under the
     * same dataKey would silently return an index built from different
     * data; build un-memoized via buildIvfIndex/buildPqIndex for that. */
-  private final case class Memo[A](idx: A, rddIds: Set[Int])
-  private val ivfCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, Int, Int),
-      Memo[IvfIndex]]
-  private val pqCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, Int, Int, Int, Int),
-      Memo[PqIndex]]
-
-  /** Evict the index memos AND release their storage: unprotect the
-    * recorded checkpoint block ids and unpersist the blocks, so a
-    * rebuild (tests, data rewritten under the same dir) doesn't pin a
-    * second permanently-protected copy on top of the first. */
-  def clearIndexCache(): Unit = synchronized {
-    val memos = ivfCache.values.map(m => (m.idx.centroids.sparkSession, m.rddIds)) ++
-      pqCache.values.map(m => (m.idx.codebooks.sparkSession, m.rddIds))
-    memos.foreach { case (session, rddIds) =>
-      graft.MemoKeep.unprotect(rddIds)
-      val sc = session.sparkContext
-      if (!sc.isStopped)
-        rddIds.foreach(id =>
-          sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-    }
-    ivfCache.clear(); pqCache.clear()
-  }
-
-  /** The persisted RDD ids a localCheckpoint-backed frame OWNS: a
-    * checkpointed Dataset's plan is exactly one LogicalRDD over the
-    * materialized internal RDD, so collecting those ids records precisely
-    * what the builder persisted — never an unrelated frame that happened
-    * to be cached during the build window (which a getPersistentRDDs
-    * set-diff would claim, and eviction would then wrongly free). */
-  private def checkpointedIds(frames: DataFrame*): Set[Int] =
-    frames.flatMap(_.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-    }).toSet
-
-  /** Per-key build guard (optimization r14): builds used to serialize on
-    * the SimSearch object lock, so the bench's three INDEPENDENT index
-    * builds (IVF, PQ, gemm-IVF — disjoint keys) could never overlap
-    * (guide §2.6). A per-key latch keeps the memo's
-    * build-exactly-once-per-key contract while letting different keys
-    * build concurrently; a second caller of the SAME key awaits the
-    * first build instead of duplicating it. */
-  private val inFlight =
-    scala.collection.concurrent.TrieMap
-      .empty[Any, java.util.concurrent.CountDownLatch]
-
-  private def memoized[K, A](cache: scala.collection.concurrent.TrieMap[K, Memo[A]],
-      key: K)(build: => A)(owned: A => Set[Int]): A =
-    cache.get(key) match {
-      case Some(m) => m.idx
-      case None =>
-        val latch = new java.util.concurrent.CountDownLatch(1)
-        inFlight.putIfAbsent(key, latch) match {
-          case Some(other) =>
-            other.await()
-            // builder either populated the cache or failed — retry reads
-            // the cache (or rebuilds after a failure)
-            memoized(cache, key)(build)(owned)
-          case None =>
-            try {
-              // Double-checked latch (ADVICE r14): a thread that read a
-              // miss before a concurrent builder's cache.put but won the
-              // latch after that builder's inFlight.remove would rebuild
-              // the key and orphan the first Memo's protected checkpoint
-              // blocks. Re-check under the won latch and reuse.
-              cache.get(key) match {
-                case Some(m) => m.idx
-                case None =>
-                  val idx = build
-                  val ids = owned(idx)
-                  graft.MemoKeep.protect(ids)
-                  cache.put(key, Memo(idx, ids))
-                  idx
-              }
-            } finally {
-              inFlight.remove(key)
-              latch.countDown()
-            }
-        }
-    }
+  private val ivfIndexes = graft.SharedBuild[
+    (org.apache.spark.sql.SparkSession, String, Int, Int), IvfIndex]()(
+    idx => graft.SharedBuild.frames(idx.centroids, idx.assigned))
+  private val pqIndexes = graft.SharedBuild[
+    (org.apache.spark.sql.SparkSession, String, Int, Int, Int, Int),
+    PqIndex]()(idx => graft.SharedBuild.frames(idx.codebooks, idx.codes))
 
   def ivfIndexCached(embs: DataFrame, dataKey: String, nLists: Int,
       lloydIters: Int): IvfIndex =
-    memoized(ivfCache, (embs.sparkSession, dataKey, nLists, lloydIters))(
-      buildIvfIndex(embs, nLists, lloydIters))(
-      idx => checkpointedIds(idx.centroids, idx.assigned))
+    ivfIndexes((embs.sparkSession, dataKey, nLists, lloydIters))(
+      buildIvfIndex(embs, nLists, lloydIters))
 
   def pqIndexCached(embs: DataFrame, dataKey: String, dims: Int, m: Int,
       codebookSize: Int, lloydIters: Int): PqIndex =
-    memoized(pqCache,
-      (embs.sparkSession, dataKey, dims, m, codebookSize, lloydIters))(
-      buildPqIndex(embs, dims, m, codebookSize, lloydIters))(
-      idx => checkpointedIds(idx.codebooks, idx.codes))
+    pqIndexes((embs.sparkSession, dataKey, dims, m, codebookSize,
+      lloydIters))(buildPqIndex(embs, dims, m, codebookSize, lloydIters))
 
   /** Index build: Lloyd centroids as the coarse quantizer + one
     * nearest-centroid assignment pass over the corpus. */
@@ -333,14 +255,12 @@ object SimSearch {
     IvfIndex(cents, assigned)
   }
 
-  /** Memoized [[buildIvfIndexGemm]] (same cache/eviction semantics as
+  /** Memoized [[buildIvfIndexGemm]] (same memo and ownership as
     * [[ivfIndexCached]]; key space disjoint via the #gemm suffix). */
   def ivfIndexGemmCached(embs: DataFrame, dataKey: String, nLists: Int,
       lloydIters: Int): IvfIndex =
-    memoized(ivfCache,
-      (embs.sparkSession, dataKey + "#gemm", nLists, lloydIters))(
-      buildIvfIndexGemm(embs, nLists, lloydIters))(
-      idx => checkpointedIds(idx.centroids, idx.assigned))
+    ivfIndexes((embs.sparkSession, dataKey + "#gemm", nLists, lloydIters))(
+      buildIvfIndexGemm(embs, nLists, lloydIters))
 
   /** All-probes MIPS top-k as BLOCKED MATRIX WORK — the serving shape
     * that survives the scale where [[ivfTopKAll]]'s row-per-candidate

@@ -15,74 +15,47 @@ object AlsEngine {
   case class Config(rank: Int = 8, regParam: Double = 0.1, maxIter: Int = 10,
       seed: Long = 42L)
 
-  /** Memoized model per (sfDir, cfg): the train/predict/metric queries all
-    * need the identical deterministic model — retraining per query would
-    * triple the ALS cost in a bench run. Assumes immutable fixture data
-    * under sfDir; [[clearCache]] resets. Bench bills the first training
-    * as its own `warm:` line (see Bench.scala).
+  /** Memoized model per (session, sfDir, cfg): the train/predict/metric
+    * queries all need the identical deterministic model — retraining per
+    * query would triple the ALS cost in a bench run. Assumes immutable
+    * fixture data under sfDir; [[clearCache]] resets. Bench bills the
+    * first training as its own `warm:` line (see Bench.scala). Keyed by
+    * session as well as dir: the model's factor frames belong to the
+    * session that trained it, so a later session on the same dir must
+    * retrain, not inherit frames from a stopped context.
     *
     * The memoized model is lineage-FENCED
     * ([[org.apache.spark.ml.recommendation.GraftAlsLineage.fence]]):
     * factor values are bit-identical, but the factors are re-rooted on
     * localCheckpoints so the memo stops pinning the training job's
     * shuffle files for the whole session (~15–20 GB at sf10 — the r14
-    * sweep-wall finding). The checkpoint block ids are MemoKeep-
-    * protected so the bench's per-query release pass cannot free a
-    * truncated-lineage frame mid-run. */
-  private final case class Memo(model: ALSModel, rddIds: Set[Int])
+    * sweep-wall finding). The memo owns the checkpoint blocks, so the
+    * bench's per-query release pass cannot free a truncated-lineage frame
+    * mid-run. */
+  private def factorBlocks(m: ALSModel): graft.SharedBuild.Owned =
+    graft.SharedBuild.frames(m.userFactors, m.itemFactors)
 
-  private val modelCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.sql.SparkSession, String, Config), Memo]
+  private val models = graft.SharedBuild[
+    (org.apache.spark.sql.SparkSession, String, Config), ALSModel]()(
+    factorBlocks)
 
   def trainCachedOnRatingsView(spark: org.apache.spark.sql.SparkSession,
       sfDir: String, cfg: Config = Config()): ALSModel =
-    // synchronized: getOrElseUpdate may otherwise train twice under
-    // concurrent first access. Keyed by session as well as dir: the
-    // model's factor frames belong to the session that trained it, so a
-    // later session on the same dir must retrain, not inherit frames
-    // from a stopped context.
-    modelCache.synchronized {
-      modelCache.getOrElseUpdate((spark, sfDir, cfg), {
-        val view = Ratings.viewCached(spark, sfDir)
-        val (m, ids) = org.apache.spark.ml.recommendation.GraftAlsLineage
-          .fence(train(view, cfg))
-        graft.MemoKeep.protect(ids)
-        // the unfenced model and its train shuffles are now dead
-        // references — reclaim the scratch before the next consumer
-        // piles its own on top (scale-gated: at bench rungs the scratch
-        // is MBs and the forced full GC costs more than it frees)
-        graft.ScratchGc.maybe(view.count())
-        Memo(m, ids)
-      }).model
+    models((spark, sfDir, cfg)) {
+      val view = Ratings.viewCached(spark, sfDir)
+      val m = org.apache.spark.ml.recommendation.GraftAlsLineage
+        .fence(train(view, cfg))
+      // the unfenced model and its train shuffles are now dead
+      // references — reclaim the scratch before the next consumer
+      // piles its own on top (scale-gated: at bench rungs the scratch
+      // is MBs and the forced full GC costs more than it frees)
+      graft.ScratchGc.maybe(view.count())
+      m
     }
 
   /** Drop memoized models (cold benchmarking / data changed) and hand
     * their checkpoint blocks back to the storage layer. */
-  def clearCache(): Unit = {
-    modelCache.synchronized {
-      modelCache.values.foreach(releaseMemo)
-      modelCache.clear()
-    }
-    trainMemo.synchronized {
-      // release the completed entries; an in-flight build's blocks are
-      // owned by its waiters and get dropped with the session
-      trainMemo.values.flatMap(_.value).flatMap(_.toOption)
-        .foreach(releaseMemo)
-      trainMemo.clear()
-      trainMemoOrder.clear()
-    }
-  }
-
-  private def releaseMemo(memo: Memo): Unit = {
-    graft.MemoKeep.unprotect(memo.rddIds)
-    // best-effort: the owning session may already be stopped
-    try {
-      val sc = memo.model.userFactors.sparkSession.sparkContext
-      memo.rddIds.foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-    } catch { case _: Throwable => () }
-  }
+  def clearCache(): Unit = { models.clear(); trains.clear() }
 
   /** Content-digest-keyed memo of seeded trains (optimization r14): the
     * antidote family trains several BIT-IDENTICAL models per run — the
@@ -97,82 +70,15 @@ object AlsEngine {
     * numerics risk: a false hit needs a 128-bit digest collision between
     * different rating multisets. Hits return the lineage-FENCED model
     * (values bit-identical; see [[GraftAlsLineage]]), so memo entries
-    * hold MB-sized checkpoints, never training shuffles. Bounded LRU
-    * (`SPARK_GRAFT_ALS_MEMO` entries, default 16, 0 disables); evicted
-    * and cleared entries hand their checkpoint blocks back. */
-  private val trainMemoCap: Int =
-    sys.env.get("SPARK_GRAFT_ALS_MEMO").flatMap(_.toIntOption).getOrElse(16)
-
-  /** Whether the content-digest train memo is active — callers that add
-    * their own lineage fence for scratch bounding can skip it when the
-    * memo (which fences internally) is on. */
-  def memoEnabled: Boolean = trainMemoCap > 0
-
+    * hold MB-sized checkpoints, never training shuffles. Two different
+    * keys train concurrently (the sweep's independent budgets overlap
+    * under guide §2.6's independent-jobs rule); at most 16 entries, and
+    * evicted and cleared entries hand their checkpoint blocks back. */
   private type TrainKey = (org.apache.spark.sql.SparkSession, String,
     Long, Long, Long, java.math.BigDecimal, java.math.BigDecimal, Config)
 
-  /** Memo entries hold a Future so the map lock is only held for
-    * bookkeeping, never across a train: two DIFFERENT keys can train
-    * CONCURRENTLY (the sweep's independent budgets overlap under guide
-    * §2.6's independent-jobs rule), while a second caller of the SAME key
-    * blocks on the first build's future instead of training twice. */
-  private val trainMemo = scala.collection.mutable
-    .LinkedHashMap.empty[TrainKey, scala.concurrent.Future[Memo]]
-  private val trainMemoOrder = scala.collection.mutable.Queue.empty[TrainKey]
-
-  private def trainMemoized(key: TrainKey)(doTrain: => ALSModel): ALSModel = {
-    val slot = trainMemo.synchronized {
-      trainMemo.get(key) match {
-        case Some(f) => Left(f)
-        case None =>
-          val pr = scala.concurrent.Promise[Memo]()
-          trainMemo.put(key, pr.future)
-          trainMemoOrder.enqueue(key)
-          // Evict only COMPLETED entries past the cap — an in-flight
-          // build's future must stay reachable for its waiters. Scan past
-          // in-flight heads instead of halting at the first one (ADVICE
-          // r14): a long-running build at the head must not let completed
-          // entries behind it pin their checkpoint blocks forever.
-          var evictable = true
-          while (trainMemoOrder.size > trainMemoCap && evictable) {
-            val idx = trainMemoOrder.indexWhere(k =>
-              trainMemo.get(k).forall(_.isCompleted))
-            if (idx < 0) evictable = false
-            else {
-              val old = trainMemoOrder.remove(idx)
-              trainMemo.remove(old)
-                .flatMap(_.value).flatMap(_.toOption).foreach(releaseMemo)
-            }
-          }
-          Right(pr)
-      }
-    }
-    slot match {
-      case Left(f) =>
-        scala.concurrent.Await
-          .result(f, scala.concurrent.duration.Duration.Inf).model
-      case Right(pr) =>
-        try {
-          val (m, ids) = org.apache.spark.ml.recommendation.GraftAlsLineage
-            .fence(doTrain)
-          graft.MemoKeep.protect(ids)
-          pr.success(Memo(m, ids))
-          m
-        } catch {
-          case t: Throwable =>
-            // Purge the key from the eviction queue too (ADVICE r14): a
-            // retrain of the same key re-enqueues it, and a stale first
-            // copy at cap overflow would dequeue-and-release the LIVE
-            // rebuilt entry while callers still hold its checkpoint.
-            trainMemo.synchronized {
-              trainMemo.remove(key)
-              trainMemoOrder.filterInPlace(_ != key)
-            }
-            pr.failure(t)
-            throw t
-        }
-    }
-  }
+  private val trains =
+    graft.SharedBuild[TrainKey, ALSModel](cap = 16)(factorBlocks)
 
   /** Size ALS's block count to the input: MLlib's default of 10 blocks
     * packs ~n/10 ratings into each in-block's primitive arrays, which at
@@ -249,8 +155,8 @@ object AlsEngine {
       .setUserCol("user").setItemCol("item").setRatingCol("rating")
       .setColdStartStrategy("drop")
       .fit(prepared)
-    if (trainMemoCap <= 0) fit
-    else trainMemoized(memoKey(ratings, bounds, "explicit", cfg))(fit)
+    trains(memoKey(ratings, bounds, "explicit", cfg))(
+      org.apache.spark.ml.recommendation.GraftAlsLineage.fence(fit))
   }
 
   /** Implicit-feedback ALS (Hu-Koren-Volinsky): the rating column is a
@@ -281,8 +187,8 @@ object AlsEngine {
       .setUserCol("user").setItemCol("item").setRatingCol("rating")
       .setColdStartStrategy("drop")
       .fit(prepared)
-    if (trainMemoCap <= 0) fit
-    else trainMemoized(memoKey(ratings, bounds, s"implicit:$alpha", cfg))(fit)
+    trains(memoKey(ratings, bounds, s"implicit:$alpha", cfg))(
+      org.apache.spark.ml.recommendation.GraftAlsLineage.fence(fit))
   }
 
   /** Stable dense id dictionary: original id → contiguous INT index,

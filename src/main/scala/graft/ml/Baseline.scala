@@ -123,27 +123,20 @@ object Baseline {
     * these exact scalars more than once per run. Values come from
     * `polarizationAndRmse`, i.e. already rounded to 6 dp with the same
     * arithmetic the oracle uses. Assumes the data under `sfDir` is
-    * immutable for the session (fixture layout); [[clearCache]] resets.
+    * immutable for the session (fixture layout).
     * The standalone q_metric_* queries deliberately recompute via
     * `Ratings.view` — they are the oracle-checked definitions and must
     * stay self-contained plans. */
-  private val polRmseCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), (Double, Double)]
+  private val polRmses = graft.SharedBuild[
+    (org.apache.spark.sql.SparkSession, String), (Double, Double)]()()
 
   def polRmseCached(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): (Double, Double) =
-    // synchronized: getOrElseUpdate may otherwise run the Spark job twice
-    // under concurrent first access
-    polRmseCache.synchronized {
-      polRmseCache.getOrElseUpdate((spark, sfDir), {
-        val r = polarizationAndRmse(
-          predictions(Ratings.viewCached(spark, sfDir))).head()
-        (r.getDouble(0), r.getDouble(1))
-      })
+    polRmses((spark, sfDir)) {
+      val r = polarizationAndRmse(
+        predictions(Ratings.viewCached(spark, sfDir))).head()
+      (r.getDouble(0), r.getDouble(1))
     }
-
-  /** Drop the memoized scalars (cold benchmarking / data changed). */
-  def clearCache(): Unit = polRmseCache.synchronized(polRmseCache.clear())
 
   /** DuckDB CTEs mirroring predictions/userLoss — appended after
     * Ratings.cte in oracle SQL. */

@@ -38,35 +38,23 @@ object Ratings {
     *
     * ASSUMPTIONS the memo bakes in: (1) the parquet under `sfDir` is
     * immutable for the session's lifetime (true for the fixture layout;
-    * call [[clearCache]] if data is rewritten in place); (2) the first
+    * clear the memo if data is rewritten in place); (2) the first
     * materialization's configuration wins — a suite that mutates e.g.
     * `spark.sql.shuffle.partitions` on a SHARED session and re-derives
     * (DeterminismSpec's sweep) gets the cached frame from the first conf,
     * so conf-sensitivity probes must either use `view` directly or clear
-    * the cache between conf flips. Bench bills the first materialization
-    * as its own `warm:` line (see Bench.scala). */
-  private val viewCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    * the memos between conf flips. The memo owns the cache's blocks, so
+    * clearing it unpersists the view. Bench bills the first
+    * materialization as its own `warm:` line (see Bench.scala). */
+  private val views = graft.SharedBuild[(SparkSession, String), DataFrame]()(
+    graft.SharedBuild.frames(_))
 
   def viewCached(spark: SparkSession, sfDir: String): DataFrame =
-    // synchronized: TrieMap.getOrElseUpdate may run the builder twice
-    // under concurrent first access, orphaning a materialized cache entry
-    viewCache.synchronized {
-      viewCache.getOrElseUpdate((spark, sfDir), {
-        val df = view(spark, sfDir).cache()
-        df.count() // materialize eagerly so first consumer gets a warm cache
-        df
-      })
+    views((spark, sfDir)) {
+      val df = view(spark, sfDir).cache()
+      df.count() // materialize eagerly so first consumer gets a warm cache
+      df
     }
-
-  /** Unpersist and drop every memoized view (and the derived scalar memos
-    * that build on it) — for cold benchmarking and for sessions whose
-    * underlying data changes. */
-  def clearCache(): Unit = viewCache.synchronized {
-    viewCache.values.foreach(df =>
-      try df.unpersist() catch { case _: Throwable => () })
-    viewCache.clear()
-  }
 
   def view(spark: SparkSession, sfDir: String): DataFrame = {
     val perRow = least(

@@ -121,12 +121,12 @@ object CurationQueries {
       |    AS catalog_novelty_bits
       |FROM bits CROSS JOIN cat c""".stripMargin) { (s, d) =>
     // r14: pairs, popularity and the order count all derive from the
-    // shared PairStore (the q_pop_bias conversion) — coPairs IS the
+    // shared PairStore (the q_pop_bias conversion) — coPairsSym IS the
     // pa ≠ pb raw pair-count matrix, and the store's deduped (ok, pk)
     // cells give per-part distinct-order counts and the distinct-order
     // total without another fact scan. Exact integers, same values.
     val cells = PairStore.liCounts(s, d)
-    val pairs = MfQueries.coPairs(s, d)
+    val pairs = PairStore.coPairsSym(s, d)
     val pop = cells.groupBy(col("pk").as("l_partkey"))
       .agg(count(lit(1)).as("p"))
     val no = cells.agg(countDistinct(col("ok")).as("n_ord"))

@@ -25,16 +25,13 @@ object LlmQueries {
     * Exactness matters: the oracle computes its detector from the
     * exact augmented count, so an approximation could band differently
     * at a decade boundary. */
-  private val plantedCountCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Long]
+  private val plantedCounts =
+    graft.SharedBuild[(SparkSession, String), Long]()()
 
   private def augDocCount(s: SparkSession, d: String): Long =
     graft.Tables.countCached(s, d, "documents") +
-      plantedCountCache.getOrElseUpdate((s, d),
+      plantedCounts((s, d))(
         t(s, d, "documents").filter(col("doc_id") % 50 === 0).count())
-
-  /** Drop the planted-count memo (cold benchmarking / data rewrites). */
-  def clearCountCache(): Unit = plantedCountCache.clear()
 
   /** Shared banded-simhash candidate store (optimization r15, guide §2.4
     * "two operations keyed the same way share one exchange"): six
@@ -54,23 +51,20 @@ object LlmQueries {
     * reads). Banding is cutoff-INDEPENDENT (keep-masks derive from the
     * reported thr alone — see Dedup.simhashNearDups), so both frames are
     * row-identical to the private calls they replace (SharedStoreSpec).
-    * localCheckpoint-backed per (session, sfDir), MemoKeep-protected,
-    * billed as the bench's `warm:simhash_cand` line;
-    * [[clearSimhashCache]] restores cold mode. */
-  private val simhashCandCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+    * localCheckpoint-backed per (session, sfDir), each memo owning its
+    * own checkpoint; billed as the bench's `warm:simhash_cand` line. */
+  private[graft] val simhashCandFrames =
+    graft.SharedBuild[(SparkSession, String), DataFrame]()(
+      graft.SharedBuild.frames(_))
 
   /** Shared signature frame (doc_id, sh0[, sh1]; one row per augmented
     * doc): the full-corpus token explode + sign aggregation that BOTH the
     * thr-pair store and the sweep's gridMax histogram consume — computed
-    * once, checkpointed (dictionary-sized at any scale). */
-  private val simhashSigCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  def clearSimhashCache(): Unit = {
-    simhashCandCache.synchronized(simhashCandCache.clear())
-    simhashSigCache.synchronized(simhashSigCache.clear())
-  }
+    * once, checkpointed (dictionary-sized at any scale). Billed as the
+    * bench's `warm:simhash_sigs` line. */
+  private[graft] val simhashSigFrames =
+    graft.SharedBuild[(SparkSession, String), DataFrame]()(
+      graft.SharedBuild.frames(_))
 
   def warmSimhashCands(s: SparkSession, d: String): Unit = {
     simhashCands(s, d); ()
@@ -95,17 +89,9 @@ object LlmQueries {
 
   /** The checkpointed signature frame for the augmented corpus. */
   private[graft] def simhashSigs(s: SparkSession, d: String): DataFrame =
-    simhashSigCache.synchronized {
-      simhashSigCache.getOrElseUpdate((s, d), {
-        val before = s.sparkContext.getPersistentRDDs.keySet.toSet
-        val (lanes, bits, _, _) =
-          Dedup.simhashParamsFor(augDocCount(s, d))
-        val f = Dedup.simhashLanes(simhashAugDocs(s, d), bits, lanes)
-          .localCheckpoint()
-        graft.MemoKeep.protect(
-          s.sparkContext.getPersistentRDDs.keySet.toSet -- before)
-        f
-      })
+    simhashSigFrames((s, d)) {
+      val (lanes, bits, _, _) = Dedup.simhashParamsFor(augDocCount(s, d))
+      Dedup.simhashLanes(simhashAugDocs(s, d), bits, lanes).localCheckpoint()
     }
 
   /** (doc_a, doc_b, hamming ≤ thr) — the store frame, materialized at the
@@ -114,29 +100,15 @@ object LlmQueries {
     * materialized — its histogram aggregates the banded-join stream
     * directly (r15.2: checkpointing the ≤ gridMax superset was measured
     * at sf1 as 24×/decade — the loose bins are banded-collision mass that
-    * only ever feeds one aggregation). */
+    * only ever feeds one aggregation). Row-identical to
+    * `Dedup.simhashNearDups(simhashAugDocs(s, d))` (same signatures, same
+    * banding, same filter; SharedStoreSpec pins the equality). */
   private[graft] def simhashCands(s: SparkSession, d: String): DataFrame =
-    simhashCandCache.synchronized {
-      // keyed by (session, sfDir): checkpointed blocks belong to the
-      // session that built them (PairStore/coPairs idiom)
-      simhashCandCache.getOrElseUpdate((s, d), {
-        val before = s.sparkContext.getPersistentRDDs.keySet.toSet
-        val nAug = augDocCount(s, d)
-        val (lanes, bits, thr, blocks) = Dedup.simhashParamsFor(nAug)
-        val f = Dedup.simhashNearDupsFromSigs(simhashSigs(s, d), bits,
-          thr, blocks, blocks - thr / lanes, lanes).localCheckpoint()
-        graft.MemoKeep.protect(
-          s.sparkContext.getPersistentRDDs.keySet.toSet -- before)
-        f
-      })
+    simhashCandFrames((s, d)) {
+      val (lanes, bits, thr, blocks) = Dedup.simhashParamsFor(augDocCount(s, d))
+      Dedup.simhashNearDupsFromSigs(simhashSigs(s, d), bits,
+        thr, blocks, blocks - thr / lanes, lanes).localCheckpoint()
     }
-
-  /** The default-detector pair set (hamming ≤ thr) — the store itself,
-    * row-identical to `Dedup.simhashNearDups(simhashAugDocs(s, d))`
-    * (same signatures, same banding, same filter; SharedStoreSpec pins
-    * the equality). */
-  private[graft] def simhashPairsThr(s: SparkSession, d: String): DataFrame =
-    simhashCands(s, d)
 
   val qDedupExact = Q(
     "q_dedup_exact",
@@ -348,7 +320,7 @@ object LlmQueries {
        |ORDER BY doc_a, doc_b""".stripMargin) { (s, d) =>
     // r15: reads the shared candidate store (same corpus, same detector,
     // row-identical by filter composition — see simhashCandCache).
-    simhashPairsThr(s, d).orderBy("doc_a", "doc_b")
+    simhashCands(s, d).orderBy("doc_a", "doc_b")
   }
 
   /** Combination-table keep-mask CTEs (the SQL mirror of
@@ -723,7 +695,7 @@ object LlmQueries {
     }
     val sx = removable(md5(expr("right(text, 16)")))
     val pf = removable(md5(substring(col("text"), 1, 64)))
-    val sh = simhashPairsThr(s, d)
+    val sh = simhashCands(s, d)
       .select(col("doc_b").as("doc_id")).distinct()
     val sets = pf.withColumn("det", lit("prefix"))
       .unionByName(sh.withColumn("det", lit("simhash")))
@@ -1688,7 +1660,7 @@ object LlmQueries {
       docs.filter(col("doc_id") % 50 === 0)
         .select((col("doc_id") + 1000000L).as("doc_id"),
           expr("substr(text, 11)").as("text")))
-    val pairs = simhashPairsThr(s, d)
+    val pairs = simhashCands(s, d)
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
     val labels = graft.plans.LabelProp.iterate(pairs, 3)
     val survivors = Dedup.survivors(withDups,
@@ -2537,7 +2509,7 @@ object LlmQueries {
       docs.filter(col("doc_id") % 50 === 0)
         .select((col("doc_id") + 1000000).as("doc_id"),
           expr("substr(text, 11)").as("text")))
-    val pairs = simhashPairsThr(s, d)
+    val pairs = simhashCands(s, d)
     val dupIds = pairs.select(col("doc_a").as("doc_id"))
       .unionByName(pairs.select(col("doc_b").as("doc_id"))).distinct()
     val attributed = withDups
@@ -2747,7 +2719,7 @@ object LlmQueries {
        |  ROUND(CAST(n_hit AS DOUBLE) / nullif(n_truth, 0), 6) AS recall
        |FROM m""".stripMargin) { (s, d) =>
     val docs = t(s, d, "documents")
-    val found = simhashPairsThr(s, d)
+    val found = simhashCands(s, d)
       .select("doc_a", "doc_b")
     val truth = docs.filter(col("doc_id") % 50 === 0)
       .select(col("doc_id").as("t_a"), (col("doc_id") + 1000000).as("t_b"))

@@ -87,8 +87,8 @@ object MfQueries {
 
   /** Trained-IVF index over the ALS ITEM factors, memoized per
     * (session, dir) via SimSearch's index cache (dataKey suffixed so it
-    * can never collide with the embeddings-table indexes; the cache
-    * handles MemoKeep protection and eviction). List count scales with
+    * can never collide with the embeddings-table indexes; the memo owns
+    * the index's checkpoint blocks). List count scales with
     * the catalog — ~500 items per list, clamped [4, 4096] — so the
     * per-user candidate scan stays O(nProbe × 500) items as the catalog
     * grows: the property that turns the dense user×item cross into a
@@ -558,12 +558,9 @@ object MfQueries {
     * retrains ALS once per nonzero budget (the paper's Alg. 1 cost
     * structure), so the two registered readouts of it — the full sweep
     * table and the Figure-style group-unfairness projection — must share
-    * one computation. 9 driver-side scalar rows; [[clearSweepCache]] for
-    * cold benchmarking. */
-  private val sweepCache = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[(Double, String, Double, Double)]]
-
-  def clearSweepCache(): Unit = sweepCache.synchronized(sweepCache.clear())
+    * one computation. 9 driver-side scalar rows. */
+  private val sweeps =
+    graft.SharedBuild[String, Seq[(Double, String, Double, Double)]]()()
 
   /** Build the sweep memo eagerly — the bench's `warm:antidote_sweep` line,
     * so the ~4 ALS retrains the optimized sweep intrinsically costs are
@@ -575,134 +572,126 @@ object MfQueries {
 
   private def sweepRows(s: org.apache.spark.sql.SparkSession,
       d: String): Seq[(Double, String, Double, Double)] =
-    sweepCache.synchronized {
-      sweepCache.getOrElseUpdate(d, {
-        // viewCached, not view().cache(): a second cache() of the identical
-        // plan dedupes onto the memo's entry with a CacheManager WARN and
-        // leaves an unpaired cache registration behind
-        val ratings = Ratings.viewCached(s, d)
-        val cfg = AlsEngine.Config(maxIter = 3)
-        val groups = t(s, d, "customer")
-          .select(col("c_custkey").as("user_id"),
-            col("c_mktsegment").as("grp"))
-        // Scratch policy is scale-derived from the same threshold both
-        // ways (ScratchGc): at big rungs each train's shuffle scratch is
-        // tens of GB, so budgets run SEQUENTIALLY with eager GC between
-        // trains (peak scratch = one live train — the r14 sf10 wall fix);
-        // at bench rungs scratch is MBs, the GCs are pure pause, and the
-        // three INDEPENDENT budgets overlap as concurrent jobs (guide
-        // §2.6 — a 10-block ALS leaves most of local[32] idle).
-        val nRatings = ratings.count()
-        val sequentialBudgets = nRatings >= graft.ScratchGc.minRows
-        def budgetRows(alpha: Double): Seq[(Double, String, Double, Double)] = {
-          // α = 0 is the un-augmented baseline — share the memoized model
-          // with the other MF queries instead of re-training it. Nonzero
-          // budgets deploy the paper's OPTIMIZED antidote: §4.3 heuristic
-          // warm start, then one projected-GD step on the group-unfairness
-          // gradient (Alg. 1 with T=1), then the final re-factorization —
-          // two ALS trains per budget. The sweep plots what a deployed
-          // antidote achieves per budget, not what random filler does
-          // (hash-random filler INCREASES U_grp at the fixture scale).
-          val model =
-            if (alpha == 0.0) AlsEngine.trainCachedOnRatingsView(s, d)
-            else {
-              // §4.3 item-support cap (VERDICT r10 task 4): dense X while
-              // k̃·m fits (every oracle/fixture scale — bit-identical to
-              // the uncapped sweep there), top-M-items support beyond, so
-              // the α=0.05 branch's ALS input stays bounded at sf1+.
-              // SPARK_GRAFT_ANTIDOTE_CAP=<M> forces a cap, =0 forces dense.
-              val cap = sys.env.get("SPARK_GRAFT_ANTIDOTE_CAP") match {
-                case Some(v) => v.toIntOption match {
-                  case Some(0)            => None // force dense
-                  case Some(m) if m > 0   => Some(m)
-                  case _ => throw new IllegalArgumentException(
-                    "SPARK_GRAFT_ANTIDOTE_CAP must be a non-negative " +
-                      s"integer (0 = force dense), got '$v'")
-                }
-                case None => Antidote.autoCap(ratings, alpha)
+    sweeps(d) {
+      // viewCached, not view().cache(): a second cache() of the identical
+      // plan dedupes onto the memo's entry with a CacheManager WARN and
+      // leaves an unpaired cache registration behind
+      val ratings = Ratings.viewCached(s, d)
+      val cfg = AlsEngine.Config(maxIter = 3)
+      val groups = t(s, d, "customer")
+        .select(col("c_custkey").as("user_id"),
+          col("c_mktsegment").as("grp"))
+      // Scratch policy is scale-derived from the same threshold both
+      // ways (ScratchGc): at big rungs each train's shuffle scratch is
+      // tens of GB, so budgets run SEQUENTIALLY with eager GC between
+      // trains (peak scratch = one live train — the r14 sf10 wall fix);
+      // at bench rungs scratch is MBs, the GCs are pure pause, and the
+      // three INDEPENDENT budgets overlap as concurrent jobs (guide
+      // §2.6 — a 10-block ALS leaves most of local[32] idle).
+      val nRatings = ratings.count()
+      val sequentialBudgets = nRatings >= graft.ScratchGc.minRows
+      def budgetRows(alpha: Double): Seq[(Double, String, Double, Double)] = {
+        // α = 0 is the un-augmented baseline — share the memoized model
+        // with the other MF queries instead of re-training it. Nonzero
+        // budgets deploy the paper's OPTIMIZED antidote: §4.3 heuristic
+        // warm start, then one projected-GD step on the group-unfairness
+        // gradient (Alg. 1 with T=1), then the final re-factorization —
+        // two ALS trains per budget. The sweep plots what a deployed
+        // antidote achieves per budget, not what random filler does
+        // (hash-random filler INCREASES U_grp at the fixture scale).
+        val model =
+          if (alpha == 0.0) AlsEngine.trainCachedOnRatingsView(s, d)
+          else {
+            // §4.3 item-support cap (VERDICT r10 task 4): dense X while
+            // k̃·m fits (every oracle/fixture scale — bit-identical to
+            // the uncapped sweep there), top-M-items support beyond, so
+            // the α=0.05 branch's ALS input stays bounded at sf1+.
+            // SPARK_GRAFT_ANTIDOTE_CAP=<M> forces a cap, =0 forces dense.
+            val cap = sys.env.get("SPARK_GRAFT_ANTIDOTE_CAP") match {
+              case Some(v) => v.toIntOption match {
+                case Some(0)            => None // force dense
+                case Some(m) if m > 0   => Some(m)
+                case _ => throw new IllegalArgumentException(
+                  "SPARK_GRAFT_ANTIDOTE_CAP must be a non-negative " +
+                    s"integer (0 = force dense), got '$v'")
               }
-              val x0 = Antidote.initHeuristicCapped(s, ratings, alpha, cap)
-              // Train [R; X0] explicitly (content-digest memoized +
-              // lineage-fenced inside AlsEngine.train) and hand the step
-              // ONE cached prediction pass, mirroring optimize's
-              // iteration shape — the bare step call re-derived
-              // predictKnown twice (loss weights + gradient cells) per
-              // budget (r14).
-              val model0 = AlsEngine.train(ratings.unionByName(x0), cfg)
-              val pred0 = AlsEngine.predictKnown(model0, ratings).cache()
-              val lu0 = Antidote.lossesWithCounts(pred0).cache()
-              // localCheckpoint fences the GD step's lineage (which holds
-              // a whole ALS train) out of the FINAL train's — without it
-              // both trains' shuffle files stay referenced simultaneously.
-              // x1 is budget-sized (k̃ × m, support-capped), so the fence
-              // materializes a bounded frame. Part of the sf10 finding:
-              // the sweep died on single-box scratch (> 64 GB) because
-              // consumed shuffles of earlier trains stayed live.
-              val x1 = Antidote.step(s, ratings, x0, cfg, eta = 1e4,
-                metric = Metric.GroupUnfairness(groups, "BUILDING",
-                  "MACHINERY"), model = Some(model0), pred = Some(pred0),
-                lu = Some(lu0))
-                .localCheckpoint()
-              pred0.unpersist()
-              lu0.unpersist()
-              // x1 is materialized, so the heuristic-init and GD-step
-              // trains behind it are now dead references — reclaim
-              // their shuffle files BEFORE the final train writes its
-              // own. Without this mid-α GC the within-budget peak is
-              // ~3 trains' scratch, which is exactly the r14-measured
-              // sf10 wall (44.8 GB against ~50 GB free): the end-of-α
-              // GC below fires too late to bound the peak. Scale-gated
-              // (ScratchGc): at bench rungs the pause costs more than
-              // the MBs it frees.
-              graft.ScratchGc.maybe(nRatings)
-              // The final train memoizes + fences inside AlsEngine.train
-              // (evaluation then runs against MB-sized checkpointed
-              // factors while the train's shuffles are already
-              // reclaimable — peak scratch stays "one live train").
-              // Only the memo-off path (DeterminismSpec sweeps, cold
-              // mode) needs the explicit fence the pre-memo code had.
-              val trained = AlsEngine.train(ratings.unionByName(x1), cfg)
-              val m =
-                if (AlsEngine.memoEnabled) trained
-                else org.apache.spark.ml.recommendation.GraftAlsLineage
-                  .fence(trained)._1
-              graft.ScratchGc.maybe(nRatings)
-              m
+              case None => Antidote.autoCap(ratings, alpha)
             }
-          val rows = Antidote.evaluateAll(model, ratings, groups,
-              "BUILDING", "MACHINERY")
-            .toSeq.map { case (name, tp) =>
-              (alpha, name, tp.objective, tp.rmse) }
-          // this α's model and trains are now dead references; a GC here
-          // lets ContextCleaner reclaim their shuffle files before the
-          // next α trains (Spark's own periodicGC fires only every 2 min
-          // — too slow to keep peak scratch at one train's footprint).
-          // Scale-gated like the mid-α GC above.
-          if (alpha != 0.0) graft.ScratchGc.maybe(nRatings)
-          rows
-        }
-        val budgets = Seq(0.0, 0.01, 0.05)
-        if (sequentialBudgets) budgets.flatMap(budgetRows)
-        else {
-          // Independent budgets as concurrent jobs (guide §2.6): each
-          // budget's chain is internally sequential, the three chains
-          // share no state beyond memoized immutable inputs, and every
-          // value is a seeded/deterministic computation — overlap changes
-          // wall-clock, never results. Output order is pinned by mapping
-          // over the ordered budget list.
-          val pool = java.util.concurrent.Executors
-            .newFixedThreadPool(budgets.size)
-          try {
-            val tasks = budgets.map(a => pool.submit(
-              new java.util.concurrent.Callable[
-                  Seq[(Double, String, Double, Double)]] {
-                def call(): Seq[(Double, String, Double, Double)] =
-                  budgetRows(a)
-              }))
-            tasks.flatMap(_.get())
-          } finally pool.shutdown()
-        }
-      })
+            val x0 = Antidote.initHeuristicCapped(s, ratings, alpha, cap)
+            // Train [R; X0] explicitly (content-digest memoized +
+            // lineage-fenced inside AlsEngine.train) and hand the step
+            // ONE cached prediction pass, mirroring optimize's
+            // iteration shape — the bare step call re-derived
+            // predictKnown twice (loss weights + gradient cells) per
+            // budget (r14).
+            val model0 = AlsEngine.train(ratings.unionByName(x0), cfg)
+            val pred0 = AlsEngine.predictKnown(model0, ratings).cache()
+            val lu0 = Antidote.lossesWithCounts(pred0).cache()
+            // localCheckpoint fences the GD step's lineage (which holds
+            // a whole ALS train) out of the FINAL train's — without it
+            // both trains' shuffle files stay referenced simultaneously.
+            // x1 is budget-sized (k̃ × m, support-capped), so the fence
+            // materializes a bounded frame. Part of the sf10 finding:
+            // the sweep died on single-box scratch (> 64 GB) because
+            // consumed shuffles of earlier trains stayed live.
+            val x1 = Antidote.step(s, ratings, x0, cfg, eta = 1e4,
+              metric = Metric.GroupUnfairness(groups, "BUILDING",
+                "MACHINERY"), model = Some(model0), pred = Some(pred0),
+              lu = Some(lu0))
+              .localCheckpoint()
+            pred0.unpersist()
+            lu0.unpersist()
+            // x1 is materialized, so the heuristic-init and GD-step
+            // trains behind it are now dead references — reclaim
+            // their shuffle files BEFORE the final train writes its
+            // own. Without this mid-α GC the within-budget peak is
+            // ~3 trains' scratch, which is exactly the r14-measured
+            // sf10 wall (44.8 GB against ~50 GB free): the end-of-α
+            // GC below fires too late to bound the peak. Scale-gated
+            // (ScratchGc): at bench rungs the pause costs more than
+            // the MBs it frees.
+            graft.ScratchGc.maybe(nRatings)
+            // The final train memoizes + fences inside AlsEngine.train
+            // (evaluation then runs against MB-sized checkpointed
+            // factors while the train's shuffles are already
+            // reclaimable — peak scratch stays "one live train").
+            val m = AlsEngine.train(ratings.unionByName(x1), cfg)
+            graft.ScratchGc.maybe(nRatings)
+            m
+          }
+        val rows = Antidote.evaluateAll(model, ratings, groups,
+            "BUILDING", "MACHINERY")
+          .toSeq.map { case (name, tp) =>
+            (alpha, name, tp.objective, tp.rmse) }
+        // this α's model and trains are now dead references; a GC here
+        // lets ContextCleaner reclaim their shuffle files before the
+        // next α trains (Spark's own periodicGC fires only every 2 min
+        // — too slow to keep peak scratch at one train's footprint).
+        // Scale-gated like the mid-α GC above.
+        if (alpha != 0.0) graft.ScratchGc.maybe(nRatings)
+        rows
+      }
+      val budgets = Seq(0.0, 0.01, 0.05)
+      if (sequentialBudgets) budgets.flatMap(budgetRows)
+      else {
+        // Independent budgets as concurrent jobs (guide §2.6): each
+        // budget's chain is internally sequential, the three chains
+        // share no state beyond memoized immutable inputs, and every
+        // value is a seeded/deterministic computation — overlap changes
+        // wall-clock, never results. Output order is pinned by mapping
+        // over the ordered budget list.
+        val pool = java.util.concurrent.Executors
+          .newFixedThreadPool(budgets.size)
+        try {
+          val tasks = budgets.map(a => pool.submit(
+            new java.util.concurrent.Callable[
+                Seq[(Double, String, Double, Double)]] {
+              def call(): Seq[(Double, String, Double, Double)] =
+                budgetRows(a)
+            }))
+          tasks.flatMap(_.get())
+        } finally pool.shutdown()
+      }
     }
 
   val qAntidoteSweepAls = Q.noOracle("q_antidote_sweep_als") { (s, d) =>
@@ -978,10 +967,10 @@ object MfQueries {
       |CROSS JOIN cat c""".stripMargin) { (s, d) =>
     // r14: pairs and popularity both derive from the shared PairStore —
     // the private fact self-join + distinct this query re-ran is the
-    // store's build. coPairs IS the pa ≠ pb raw pair-count matrix, and
+    // store's build. coPairsSym IS the pa ≠ pb raw pair-count matrix, and
     // per-part distinct-order counts are a groupBy over the store's
     // deduped (ok, pk) cells — exact integers both ways, same values.
-    val pairs = coPairs(s, d)
+    val pairs = PairStore.coPairsSym(s, d)
     val pop = PairStore.liCounts(s, d)
       .groupBy(col("pk").as("l_partkey")).agg(count(lit(1)).as("p"))
     val w = Window.partitionBy("pa").orderBy(col("w").desc, col("pb"))
@@ -1011,40 +1000,9 @@ object MfQueries {
     * equi-join (user-history ⋈ item-item edges — never user × catalog);
     * owned items drop via anti-join; a 20-user probe slice bounds the
     * output (full materialization is the same plan without the probe
-    * filter, which Spark pushes through the history join). */
-  /** Memoized item co-occurrence matrix over RAW lineitem (pa ≠ pb, pair
-    * count w) — the candidate-generation backbone shared by
-    * q_user_recs_cf and q_rec_gini. The self-join + pair groupBy is the
-    * dominant cost of both; the frame is item-pair-sized (not fact-
-    * sized), so one localCheckpoint serves every consumer per (session,
-    * sfDir) — the ShingleStore "build once, consume many" layout step.
-    * Billed as the bench's warm:cooccur line; [[clearCoCache]] for cold
-    * mode. */
-  private val coCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String),
-      org.apache.spark.sql.DataFrame]
-
-  def clearCoCache(): Unit = coCache.synchronized(coCache.clear())
-
-  def warmCoPairs(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    coPairs(s, d); ()
-  }
-
-  private[operators] def coPairs(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = coCache.synchronized {
-    // keyed by (session, sfDir): the memo hands out a
-    // localCheckpoint-backed frame whose blocks belong to the session
-    // that built it — a later session on the same data dir must rebuild,
-    // not inherit a frame checkpointed in a stopped context
-    // r14: derived from the shared PairStore — the raw pa ≠ pb pair
-    // count is symmetric, so it is the symmetric closure of the store's
-    // src < dst n_raw half. r15 (VERDICT r14 item 4, measured A/B): a
-    // second checkpoint of the symmetric frame trades pair-frame-sized
-    // memory (linear in orders) for the re-union every one of the four
-    // consumers paid; billed to the warm:cooccur line.
-    coCache.getOrElseUpdate((s, d), PairStore.coPairsSym(s, d))
-  }
-
+    * filter, which Spark pushes through the history join). The
+    * co-occurrence weights are the symmetric closure of the shared
+    * PairStore's raw pair counts ([[PairStore.coPairsSym]]). */
   val qUserRecsCf = Q(
     "q_user_recs_cf",
     """WITH ui AS (
@@ -1076,7 +1034,7 @@ object MfQueries {
       .join(li, col("l_orderkey") === col("o_orderkey"))
       .select(col("o_custkey").as("u"), col("l_partkey").as("item"))
       .distinct()
-    val co = coPairs(s, d)
+    val co = PairStore.coPairsSym(s, d)
     val cand = ui.filter(col("u") <= 20)
       .join(co, col("item") === col("pa"))
       .groupBy(col("u"), col("pb").as("item"))
@@ -1154,7 +1112,7 @@ object MfQueries {
       .join(li, col("l_orderkey") === col("o_orderkey"))
       .select(col("o_custkey").as("u"), col("l_partkey").as("item"))
       .distinct()
-    val co0 = coPairs(s, d)
+    val co0 = PairStore.coPairsSym(s, d)
     // fence the PANEL-sized ownership frame: it feeds both the candidate
     // join and the anti-join, and without the fence each consumer replays
     // the fact-table join + distinct

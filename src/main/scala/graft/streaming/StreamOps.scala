@@ -907,32 +907,27 @@ object StreamOps {
     * order-INDEPENDENT maintainers, whose merges are commutative, so
     * batch composition is immaterial to their final state). Billed as the
     * bench's warm:stream_slices line; cold mode clears it like any memo. */
-  private val sliceCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), String]
-
-  def clearSliceCache(): Unit = sliceCache.synchronized(sliceCache.clear())
+  private val sliceDirs = graft.SharedBuild[(String, Int), String]()()
 
   def warmSlices(spark: SparkSession, sfDir: String): Unit = {
     orderedSliceDir(spark, sfDir, 4); ()
   }
 
   private def orderedSliceDir(spark: SparkSession, sfDir: String,
-      nBatches: Int): String = sliceCache.synchronized {
-    sliceCache.getOrElseUpdate((sfDir, nBatches), {
-      // the readable sanitized name alone can collide across distinct
-      // raw sfDirs (sanitization is lossy); a digest of the RAW path
-      // makes the slice dir injective, so one fixture's rebuild can
-      // never clobber a directory another fixture's memo still serves
-      val digest = java.security.MessageDigest.getInstance("MD5")
-        .digest(sfDir.getBytes("UTF-8")).take(6)
-        .map(b => f"${b & 0xff}%02x").mkString
-      val dir = "target/stream_slices/" +
-        sfDir.replaceAll("[^A-Za-z0-9._-]", "_") + s"_$digest/n$nBatches"
-      writeOrderedSlices(
-        graft.Tables.tsAsTimestamp(
-          spark.read.parquet(s"$sfDir/events.parquet")), dir, nBatches)
-      dir
-    })
+      nBatches: Int): String = sliceDirs((sfDir, nBatches)) {
+    // the readable sanitized name alone can collide across distinct
+    // raw sfDirs (sanitization is lossy); a digest of the RAW path
+    // makes the slice dir injective, so one fixture's rebuild can
+    // never clobber a directory another fixture's memo still serves
+    val digest = java.security.MessageDigest.getInstance("MD5")
+      .digest(sfDir.getBytes("UTF-8")).take(6)
+      .map(b => f"${b & 0xff}%02x").mkString
+    val dir = "target/stream_slices/" +
+      sfDir.replaceAll("[^A-Za-z0-9._-]", "_") + s"_$digest/n$nBatches"
+    writeOrderedSlices(
+      graft.Tables.tsAsTimestamp(
+        spark.read.parquet(s"$sfDir/events.parquet")), dir, nBatches)
+    dir
   }
 
   /** The shared slice stream (full events schema — project what you

@@ -23,24 +23,17 @@ package org.apache.spark.ml.recommendation
   * (checkpointing moves bytes, not math), so transform/predict/metric
   * results are bit-identical; MfSpec's model pins are the arbiters.
   *
-  * Returns the persistent RDD ids the checkpoints own so callers can
-  * MemoKeep-protect memoized models (and unpersist on eviction). */
+  * Memos read the checkpoint blocks a fenced model owns off its factor
+  * plans (`graft.SharedBuild.frames`). */
 object GraftAlsLineage {
 
-  def fence(m: ALSModel): (ALSModel, Set[Int]) = {
+  def fence(m: ALSModel): ALSModel = {
     val uf = m.userFactors.localCheckpoint()
     val itf = m.itemFactors.localCheckpoint()
-    // ids of exactly the blocks the checkpoints own (the SimSearch memo
-    // idiom): a checkpointed Dataset's plan is one LogicalRDD over the
-    // materialized internal RDD
-    val ids = Seq(uf, itf).flatMap(_.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-    }).toSet
-    val out = new ALSModel(m.uid, m.rank, uf, itf)
+    new ALSModel(m.uid, m.rank, uf, itf)
       .setUserCol(m.getUserCol)
       .setItemCol(m.getItemCol)
       .setPredictionCol(m.getPredictionCol)
       .setColdStartStrategy(m.getColdStartStrategy)
-    (out, ids)
   }
 }

@@ -25,6 +25,15 @@ class ContractSpec extends SparkTestBase {
     }
   }
 
+  test("every consumer of a bench warm line is a registered query") {
+    val qk = SparkEntry.queries.keySet
+    Bench.warmLines.foreach { w =>
+      val unknown = w.consumers -- qk
+      assert(w.consumers.nonEmpty && unknown.isEmpty,
+        s"${w.name}: unregistered consumers ${unknown.mkString(",")}")
+    }
+  }
+
   test("entry() smoke: flagship query returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

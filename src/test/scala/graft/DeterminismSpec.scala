@@ -278,23 +278,11 @@ class DeterminismSpec extends SparkTestBase {
     val conf = spark.conf
     val orig = conf.get("spark.sql.shuffle.partitions")
     try {
-      // memoized views/models materialize under the FIRST conf and would
-      // silently defeat the sweep for any query that touches them —
-      // clear them at each flip so every derivation is under its own conf
-      def clearMemos(): Unit = {
-        graft.ml.Ratings.clearCache()
-        graft.ml.AlsEngine.clearCache()
-        graft.ml.Baseline.clearCache()
-        graft.ApproxGate.clearCache()
-        // r14 shared edge stores: clear so the invariance sweep derives
-        // the store itself under each conf (a memoized store would
-        // silently exempt every graph consumer from the test)
-        graft.operators.PairStore.clearCache()
-        graft.operators.TradeGraph.clearCache()
-        graft.operators.MfQueries.clearCoCache()
-        // r15 shared banded-simhash candidate store (same rationale)
-        graft.operators.LlmQueries.clearSimhashCache()
-      }
+      // memoized views/models/stores materialize under the FIRST conf
+      // and would silently defeat the sweep for any query that touches
+      // them — clear every memo at each flip so every derivation is under
+      // its own conf
+      def clearMemos(): Unit = SharedBuild.clearAll()
       sensitive.foreach { q =>
         conf.set("spark.sql.shuffle.partitions", "5")
         clearMemos()

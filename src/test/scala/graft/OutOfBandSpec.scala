@@ -488,39 +488,83 @@ class OutOfBandSpec extends SparkTestBase {
     } finally { index.assigned.unpersist(); () }
   }
 
-  test("index memo owns exactly its checkpoints: eviction spares frames " +
-      "co-cached during the build window") {
-    graft.llm.SimSearch.clearIndexCache()
-    // A shared table cache that first MATERIALIZES inside the index-build
-    // window (the build scans this very frame) — the ownership bug was
-    // recording it via a persistent-set diff and then freeing it on
-    // clearIndexCache.
-    val embs = Tables.load(spark, sf, "embeddings")
-    embs.cache()
-    try {
-      val preBuild = spark.sparkContext.getPersistentRDDs.keySet.toSet
-      val idx = graft.llm.SimSearch.ivfIndexCached(embs, sf + "#ownership",
+  /** The block ids a built value's plans hold: the LogicalRDD behind each
+    * localCheckpoint and the InMemoryRelation behind each cached frame. */
+  private def planIds(dfs: org.apache.spark.sql.DataFrame*): Set[Int] =
+    dfs.flatMap(_.queryExecution.withCachedData.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+      case m: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+        m.cacheBuilder.cachedColumnBuffers.id
+    }).toSet
+
+  // Each block-owning memo: (label, the table its build scans — cached as
+  // a bystander that first materializes INSIDE the build window — and a
+  // build through the memo's entry point returning the value's block ids)
+  private val owningMemos: Seq[(String, String, () => Set[Int])] = Seq(
+    ("index", "embeddings", () => {
+      val idx = llm.SimSearch.ivfIndexCached(
+        Tables.load(spark, sf, "embeddings"), sf + "#ownership",
         nLists = 4, lloydIters = 1)
-      embs.count() // ensure the bystander cache is materialized
-      val idxIds = Seq(idx.centroids, idx.assigned)
-        .flatMap(_.queryExecution.analyzed.collect {
-          case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-        }).toSet
-      val afterBuild = spark.sparkContext.getPersistentRDDs.keySet.toSet
-      assert(idxIds.nonEmpty && idxIds.subsetOf(afterBuild),
-        s"index checkpoints $idxIds not persisted ($afterBuild)")
-      val bystanders = afterBuild -- preBuild -- idxIds
-      assert(bystanders.nonEmpty, "expected the embeddings cache to " +
-        "materialize inside the build window")
-      graft.llm.SimSearch.clearIndexCache()
-      val after = spark.sparkContext.getPersistentRDDs.keySet.toSet
-      assert((idxIds & after).isEmpty, "eviction must free the index blocks")
-      assert(idxIds.forall(!MemoKeep.isProtected(_)),
-        "eviction must unprotect the index blocks")
-      assert(bystanders.subsetOf(after),
-        s"eviction freed co-cached frames it never owned: " +
-          s"${bystanders -- after}")
-    } finally { embs.unpersist(); () }
+      planIds(idx.centroids, idx.assigned)
+    }),
+    ("PairStore", "lineitem", () => planIds(
+      operators.PairStore.liCounts(spark, sf),
+      operators.PairStore.pairStats(spark, sf))),
+    ("simhash signature", "documents", () =>
+      planIds(operators.LlmQueries.simhashSigs(spark, sf))),
+    ("simhash candidate", "documents", () =>
+      planIds(operators.LlmQueries.simhashCands(spark, sf))),
+    ("ALS model", "lineitem", () => {
+      val m = ml.AlsEngine.trainCachedOnRatingsView(spark, sf,
+        ml.AlsEngine.Config(rank = 4, maxIter = 2))
+      planIds(m.userFactors, m.itemFactors)
+    }),
+    ("ratings view", "lineitem", () =>
+      planIds(ml.Ratings.viewCached(spark, sf))))
+
+  owningMemos.foreach { case (label, table, build) =>
+    test(s"$label memo owns exactly its checkpoints: eviction spares " +
+        "frames co-cached during the build window") {
+      SharedBuild.clearAll()
+      // A shared table cache that first MATERIALIZES inside the build
+      // window (the build scans this very frame) — the ownership bug was
+      // recording it via a persistent-set diff and then freeing it on
+      // eviction.
+      val bystander = Tables.load(spark, sf, table)
+      bystander.cache()
+      try {
+        val preBuild = spark.sparkContext.getPersistentRDDs.keySet.toSet
+        val ids = build()
+        bystander.count() // ensure the bystander cache is materialized
+        val afterBuild = spark.sparkContext.getPersistentRDDs.keySet.toSet
+        assert(ids.nonEmpty && ids.subsetOf(afterBuild),
+          s"$label blocks $ids not persisted ($afterBuild)")
+        assert(ids.forall(SharedBuild.owns), s"$label blocks $ids not owned")
+        val bystanders = afterBuild -- preBuild -- ids
+        assert(bystanders.exists(!SharedBuild.owns(_)), "expected the " +
+          s"$table cache to materialize inside the build window")
+        val kept = bystanders.filterNot(SharedBuild.owns)
+        SharedBuild.clearAll()
+        val after = spark.sparkContext.getPersistentRDDs.keySet.toSet
+        assert((ids & after).isEmpty, s"clearAll must free the $label blocks")
+        assert(ids.forall(!SharedBuild.owns(_)),
+          s"clearAll must stop owning the $label blocks")
+        assert(kept.subsetOf(after),
+          s"clearAll freed co-cached frames it never owned: ${kept -- after}")
+      } finally { bystander.unpersist(); () }
+    }
+  }
+
+  test("simhash signature blocks belong only to the signature memo") {
+    SharedBuild.clearAll()
+    val cands = operators.LlmQueries.simhashCands(spark, sf)
+    val sigIds = planIds(operators.LlmQueries.simhashSigs(spark, sf))
+    assert(sigIds.nonEmpty)
+    assert(operators.LlmQueries.simhashSigFrames.ownedIds == sigIds)
+    assert((operators.LlmQueries.simhashCandFrames.ownedIds & sigIds).isEmpty,
+      "the candidate memo claims the signature memo's blocks")
+    assert(operators.LlmQueries.simhashCandFrames.ownedIds == planIds(cands))
+    SharedBuild.clearAll()
   }
 
   test("multi-probe IVF search surfaces the planted nearest neighbor") {

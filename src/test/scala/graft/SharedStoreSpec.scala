@@ -73,7 +73,7 @@ class SharedStoreSpec extends SparkTestBase {
     // Dedup.simhashNearDups call each pair-consumer used to make.
     val direct = llm.Dedup.simhashNearDups(
       operators.LlmQueries.simhashAugDocs(spark, sf))
-    val store = operators.LlmQueries.simhashPairsThr(spark, sf)
+    val store = operators.LlmQueries.simhashCands(spark, sf)
     assert(diffCount(direct, store) === 0)
     assert(store.count() > 0)
   }
