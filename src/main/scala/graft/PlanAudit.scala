@@ -76,14 +76,21 @@ object PlanAudit {
     sb.append("""
 Known-legitimate entries (reviewed):
 - `q_join_full`: FULL OUTER cannot broadcast — SMJ is the only strategy.
-- `q_funnel_stages`, `q_mf_predict`, `q_metric_*`, `q_mf_compact_train`:
-  joins where BOTH sides are fact-sized at scale (per-user stage tables,
-  predictions⋈ratings on (user,item)) — SMJ co-partitioned on the join key
-  is the plan you want at 100 TB; AQE demotes to broadcast when a side is
-  actually small.
-- `q_mf_topk_recs`: the CartesianProduct is MLlib's `recommendForAllUsers`
-  blocked factor cross-join — the standard all-pairs scoring, blocked for
-  BLAS; bounded by (users/block)×(items/block) tasks.
+- `q_funnel_stages`, `q_metric_*`: joins where BOTH sides are fact-sized
+  at scale (per-user stage tables, predictions⋈ratings on (user,item)) —
+  SMJ co-partitioned on the join key is the plan you want at 100 TB; AQE
+  demotes to broadcast when a side is actually small.
+- `q_mf_predict`, `q_mf_compact_train`: one side of each ALS join is a
+  factor frame (users × rank or items × rank), not a fact table. Their
+  sort-merge joins at fixture scale came from MLlib's unknown (8 EiB)
+  size estimate for the factor frames; the fenced factor checkpoints now
+  carry measured sizes, so the planner broadcasts them below
+  `spark.sql.autoBroadcastJoinThreshold` and keeps shuffle joins above it.
+- `q_mf_topk_recs`: MLlib's `recommendForAllUsers` blocked factor
+  cross-join — the standard all-pairs scoring, blocked for BLAS; bounded by
+  (users/block)×(items/block) tasks. With measured factor sizes it plans
+  as a broadcast nested-loop join while a factor side fits the broadcast
+  threshold, and as a CartesianProduct beyond it.
 - `q_merge_upsert`, `q_snapshot_diff`: FULL OUTER of two PRE-AGGREGATED
   key-level sides (one row per key after the windows/group-bys) — SMJ on
   the merge key is the CDC/diff plan at scale.

@@ -93,10 +93,6 @@ object AlsEngine {
   private def sizedBlocks(n: Long): Int =
     math.max(10, math.min(256, (n / 2000000L).toInt))
 
-  /** Train on ratings(user_id BIGINT, item_id BIGINT, rating DOUBLE).
-    * ALS wants int ids; ids outside Int range FAIL LOUDLY here (the cast
-    * would otherwise wrap silently) — route big id spaces through
-    * `trainCompacted`. */
   /** The two content-digest columns of [[digestBounds]]: independent
     * 64-bit hash streams over the CANONICAL cell types (long ids, float
     * rating — what ALS actually consumes), summed as DECIMAL(38,0) so
@@ -134,6 +130,10 @@ object AlsEngine {
     (ratings.sparkSession, kind, bounds.getLong(0), bounds.getLong(1),
       bounds.getLong(2), bounds.getDecimal(3), bounds.getDecimal(4), cfg)
 
+  /** Train on ratings(user_id BIGINT, item_id BIGINT, rating DOUBLE).
+    * ALS wants int ids; ids outside Int range FAIL LOUDLY here (the cast
+    * would otherwise wrap silently) — route big id spaces through
+    * `trainCompacted`. */
   def train(ratings: DataFrame, cfg: Config = Config()): ALSModel = {
     val (bounds, n) = digestBounds(ratings, "train")
     val blocks = sizedBlocks(n)

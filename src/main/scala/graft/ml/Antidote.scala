@@ -2,7 +2,7 @@ package graft.ml
 
 import breeze.linalg.{DenseMatrix, DenseVector}
 import org.apache.spark.ml.recommendation.ALSModel
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -28,12 +28,29 @@ object Antidote {
     round(lit(1) + lit(4) *
       ((userId * lit(2654435761L) + itemId * lit(40503L)) % 1000) / lit(999.0), 6)
 
-  /** (n_users, max_user_id) — computed once and shared across budgets. */
-  def userStats(ratings: DataFrame): (Long, Long) = {
-    val row = ratings.agg(
-      countDistinct(col("user_id")).as("n"), max(col("user_id")).as("mx")).head()
-    (row.getLong(0), row.getLong(1))
+  /** The per-view scalars the antidote paths read: the real user count
+    * (k̃ = ⌈α·n_users⌉), the largest real user id (synthetic ids start
+    * above it, and the unfairness step finds the antidote users' factors
+    * by it) and the item count (the [[autoCap]] policy). */
+  final case class ViewStats(nUsers: Long, maxUserId: Long, nItems: Long)
+
+  /** [[ViewStats]] in one aggregate — computed once per [[optimize]] or
+    * sweep call and passed down through the `stats` overloads. */
+  def userStats(ratings: DataFrame): ViewStats = {
+    val row = ratings.agg(countDistinct(col("user_id")),
+      max(col("user_id")), countDistinct(col("item_id"))).head()
+    ViewStats(row.getLong(0), row.getLong(1), row.getLong(2))
   }
+
+  private val viewStatsMemo =
+    graft.SharedBuild[(SparkSession, String), ViewStats]()()
+
+  /** [[userStats]] of the memoized ratings view, memoized per (session,
+    * dir) like the view itself: the sweep and every antidote query of a
+    * session read the same three scalars. */
+  def userStatsCached(spark: SparkSession, sfDir: String): ViewStats =
+    viewStatsMemo((spark, sfDir))(
+      userStats(Ratings.viewCached(spark, sfDir)))
 
   /** Item-support cap (paper §4.3 / SCALE.md sf10 forecast): restrict
     * each synthetic user's support to the `m` MOST-RATED items (ties
@@ -57,12 +74,15 @@ object Antidote {
     * default keeps the fixture scales exactly dense (sf0.1: k̃·m ≈ 55 k)
     * and bounds sf1 α = 0.05 (k̃ ≈ 7.5 k) to ~2 M antidote cells. */
   def autoCap(ratings: DataFrame, alpha: Double,
-      maxCells: Long = 2000000L): Option[Int] = {
-    val row = ratings.agg(countDistinct(col("user_id")),
-      countDistinct(col("item_id"))).head()
-    val kTilde = math.ceil(alpha * row.getLong(0)).toLong
-    val m = row.getLong(1)
-    if (kTilde <= 0 || kTilde * m <= maxCells) None
+      maxCells: Long = maxAntidoteCells): Option[Int] =
+    autoCap(userStats(ratings), alpha, maxCells)
+
+  /** [[autoCap]]'s default bound on the antidote block's ALS input rows. */
+  val maxAntidoteCells: Long = 2000000L
+
+  def autoCap(stats: ViewStats, alpha: Double, maxCells: Long): Option[Int] = {
+    val kTilde = math.ceil(alpha * stats.nUsers).toLong
+    if (kTilde <= 0 || kTilde * stats.nItems <= maxCells) None
     else Some(math.max(1L, maxCells / kTilde).toInt)
   }
 
@@ -71,20 +91,19 @@ object Antidote {
     init(spark, ratings, alpha, userStats(ratings))
 
   def init(spark: SparkSession, ratings: DataFrame, alpha: Double,
-      stats: (Long, Long)): DataFrame =
+      stats: ViewStats): DataFrame =
     initCapped(spark, ratings, alpha, stats, None)
 
   /** [[init]] with the §4.3 item-support cap: synthetic users rate only
     * the top-`itemCap` items by support (None = dense, the paper's exact
     * X). */
   def initCapped(spark: SparkSession, ratings: DataFrame, alpha: Double,
-      stats: (Long, Long), itemCap: Option[Int]): DataFrame = {
-    val (n, mx) = stats
-    val k = math.ceil(alpha * n).toLong
+      stats: ViewStats, itemCap: Option[Int]): DataFrame = {
+    val k = math.ceil(alpha * stats.nUsers).toLong
     val items = itemCap.map(topSupportItems(ratings, _))
       .getOrElse(ratings.select("item_id").distinct())
     spark.range(1, k + 1)
-      .select((lit(mx) + col("id")).as("user_id"))
+      .select((lit(stats.maxUserId) + col("id")).as("user_id"))
       .crossJoin(broadcast(items))
       .select(col("user_id"), col("item_id"),
         ratingFormula(col("user_id"), col("item_id")).as("rating"))
@@ -103,15 +122,22 @@ object Antidote {
       alpha: Double): DataFrame =
     initHeuristicCapped(spark, ratings, alpha, None)
 
+  def initHeuristic(spark: SparkSession, ratings: DataFrame, alpha: Double,
+      stats: ViewStats): DataFrame =
+    initHeuristicCapped(spark, ratings, alpha, stats, None)
+
   /** [[initHeuristic]] with the §4.3 item-support cap (see
     * [[topSupportItems]] / [[autoCap]]): the synthetic users rate only
     * the top-`itemCap` items by support, at those items' mean rating —
     * X becomes k̃×M instead of k̃×m, bounding the ALS re-train input
     * (the only data-sized consumer of X) at any scale. */
   def initHeuristicCapped(spark: SparkSession, ratings: DataFrame,
-      alpha: Double, itemCap: Option[Int]): DataFrame = {
-    val (n, mx) = userStats(ratings)
-    val k = math.ceil(alpha * n).toLong
+      alpha: Double, itemCap: Option[Int]): DataFrame =
+    initHeuristicCapped(spark, ratings, alpha, userStats(ratings), itemCap)
+
+  def initHeuristicCapped(spark: SparkSession, ratings: DataFrame,
+      alpha: Double, stats: ViewStats, itemCap: Option[Int]): DataFrame = {
+    val k = math.ceil(alpha * stats.nUsers).toLong
     val means = ratings.groupBy("item_id")
       .agg(round(least(lit(5.0), greatest(lit(1.0), avg(col("rating")))), 6)
         .as("rating"))
@@ -119,7 +145,7 @@ object Antidote {
       .map(m => means.join(topSupportItems(ratings, m), "item_id"))
       .getOrElse(means)
     spark.range(1, k + 1)
-      .select((lit(mx) + col("id")).as("user_id"))
+      .select((lit(stats.maxUserId) + col("id")).as("user_id"))
       .crossJoin(broadcast(itemMeans))
       .select(col("user_id"), col("item_id"), col("rating"))
   }
@@ -133,14 +159,16 @@ object Antidote {
     * instance (models are themselves memoized) dedupes the recomputation
     * without pinning models the trainers have dropped. */
   private val momentsCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[ALSModel,
-      (DenseVector[Double], DenseMatrix[Double])]())
+    new java.util.WeakHashMap[ALSModel, Moments]())
 
-  /** Mean user factor ū and mean outer-product second moment S = E[u uᵀ],
-    * computed distributedly (k and k² cells — constant-size reductions),
-    * memoized per model instance. */
-  def factorMoments(model: ALSModel)
-      : (DenseVector[Double], DenseMatrix[Double]) = {
+  /** The user-factor count n, the mean user factor ū and the mean
+    * outer-product second moment S = E[u uᵀ]. */
+  final case class Moments(n: Double, uBar: DenseVector[Double],
+      s: DenseMatrix[Double])
+
+  /** [[Moments]] computed distributedly (k and k² cells — constant-size
+    * reductions), memoized per model instance. */
+  def factorMoments(model: ALSModel): Moments = {
     val hit = momentsCache.get(model)
     if (hit != null) hit
     else {
@@ -150,8 +178,7 @@ object Antidote {
     }
   }
 
-  private def factorMomentsUncached(model: ALSModel)
-      : (DenseVector[Double], DenseMatrix[Double]) = {
+  private def factorMomentsUncached(model: ALSModel): Moments = {
     val k = model.rank
     val uf = model.userFactors // (id INT, features ARRAY<FLOAT>)
     val sums = uf.select(
@@ -171,7 +198,7 @@ object Antidote {
       s(i, j) = v; s(j, i) = v
       idx += 1
     }
-    (uBar, s)
+    Moments(n, uBar, s)
   }
 
   /** Polarization of the model's predictions over ALL (user,item) pairs in
@@ -181,7 +208,7 @@ object Antidote {
     * codegen'd column over itemFactors (no m×k collect — at large m the
     * old driver-side loop was the bottleneck of the Alg-1 trace). */
   def polarization(model: ALSModel): Double = {
-    val (uBar, s) = factorMoments(model)
+    val Moments(_, uBar, s) = factorMoments(model)
     val k = model.rank
     def e(i: Int): Column =
       element_at(col("features"), i + 1).cast(DoubleType)
@@ -202,72 +229,121 @@ object Antidote {
 
   /** The chosen metric evaluated on the ALS model, plus RMSE over the real
     * ratings — all distributed (driver sees two scalars). */
-  def evaluate(model: ALSModel, ratings: DataFrame, metric: Metric): TracePoint = {
-    val pred = AlsEngine.predictKnown(model, ratings)
-    evaluateOn(pred, lossesOf(pred), model, metric)
-  }
+  def evaluate(model: ALSModel, ratings: DataFrame,
+      metric: Metric): TracePoint =
+    evaluateModel(model, ratings, metric, None).point
 
-  /** [[evaluate]] over a precomputed (typically cached) predictKnown
-    * frame and its per-user loss frame — the optimize loop shares ONE
-    * cached prediction pass and ONE per-user-loss pass per model between
-    * the trace evaluation's rmse + metric reads and the next gradient
-    * step, instead of re-deriving predictKnown up to four times and
-    * lossesOf up to three times per iteration (r14; expressions are
-    * identical, only the source frames are reused, so every scalar is
-    * unchanged). */
-  private def evaluateOn(pred: DataFrame, lu: DataFrame, model: ALSModel,
-      metric: Metric): TracePoint = {
-    val rmse = pred.agg(round(sqrt(avg((col("rating") - col("p")) *
-      (col("rating") - col("p")))), 6).as("rmse")).head().getDouble(0)
-    val obj = metric match {
-      case Metric.Polarization => polarization(model)
-      case Metric.IndividualUnfairness =>
-        lu.agg(var_pop(col("l_u"))).head().getDouble(0)
-      case Metric.GroupUnfairness(groups, a, b) =>
-        lu.join(groups, Seq("user_id"), "left")
-          .agg(abs(avg(when(col("grp") === a, col("l_u"))) -
-            avg(when(col("grp") === b, col("l_u"))))).head().getDouble(0)
-    }
-    TracePoint(obj, rmse)
-  }
-
-  /** All three societal metrics + RMSE from ONE cached pass over the known
+  /** All three societal metrics + RMSE from ONE action over the known
     * cells (plus polarization's constant-size factor-moment reduction) —
     * what a metric-vs-budget sweep should call instead of three separate
     * `evaluate`s re-deriving predictions each time. */
   def evaluateAll(model: ALSModel, ratings: DataFrame, groups: DataFrame,
       a: String, b: String): Map[String, TracePoint] = {
-    val pred = AlsEngine.predictKnown(model, ratings).cache()
-    val rmse = pred.agg(sqrt(avg((col("rating") - col("p")) *
-      (col("rating") - col("p"))))).head().getDouble(0)
-    val lu = pred.groupBy("user_id")
-      .agg(avg((col("p") - col("rating")) * (col("p") - col("rating")))
-        .as("l_u"))
-      .cache()
-    val ind = lu.agg(var_pop(col("l_u"))).head().getDouble(0)
-    val grp = lu.join(groups, Seq("user_id"), "left")
-      .agg(abs(avg(when(col("grp") === a, col("l_u"))) -
-        avg(when(col("grp") === b, col("l_u"))))).head().getDouble(0)
+    val lu = losses(AlsEngine.predictKnown(model, ratings))
+      .join(groups, Seq("user_id"), "left")
+    val ls = evaluateLosses(lu, Some((a, b)), None)
     val pol = polarization(model)
-    pred.unpersist()
-    lu.unpersist()
     Map(
-      "polarization" -> TracePoint(pol, rmse),
-      "ind_unfairness" -> TracePoint(ind, rmse),
-      "grp_unfairness" -> TracePoint(grp, rmse))
+      "polarization" -> TracePoint(pol, ls.rmse),
+      "ind_unfairness" -> TracePoint(ls.indUnfairness, ls.rmse),
+      "grp_unfairness" -> TracePoint(ls.grpUnfairness, ls.rmse))
   }
 
-  /** [[lossesOf]] for callers that manage their own cache lifecycle (the
-    * sweep shares one cached loss pass between its step's weight and
-    * gradient consumers, like the optimize loop). */
-  def lossesWithCounts(pred: DataFrame): DataFrame = lossesOf(pred)
-
   /** Per-user ALS loss ℓ_u = mean squared error over the user's known
-    * cells, with the cell count (needed by the gradient chain rule). */
-  private def lossesOf(pred: DataFrame): DataFrame =
+    * cells, with the cell count (needed by the gradient chain rule) and
+    * the squared-error sum (RMSE is √(Σ sse / Σ n_u)). */
+  private def losses(pred: DataFrame): DataFrame = {
+    val sq = (col("p") - col("rating")) * (col("p") - col("rating"))
     pred.groupBy("user_id")
-      .agg(avg((col("p") - col("rating")) * (col("p") - col("rating")))
-        .as("l_u"), count(lit(1)).as("n_u"))
+      .agg(avg(sq).as("l_u"), count(lit(1)).as("n_u"), sum(sq).as("sse"))
+  }
+
+  /** Everything one model's evaluation and the next step read off the
+    * per-user loss frame: RMSE (unrounded and rounded to 6 dp), U_ind and
+    * the U_ind step's ℓ̄ and n, U_grp and its step's per-group mean loss
+    * and count (NaN / 0 without groups), and the antidote factor block
+    * U_a in the factor frame's row order (empty unless asked for). */
+  private[graft] final case class LossStats(rmse: Double, rmse6: Double,
+      indUnfairness: Double, lBar: Double, n: Long, grpUnfairness: Double,
+      lA: Double, lB: Double, nA: Long, nB: Long,
+      ua: Seq[(Long, Array[Double])])
+
+  /** [[LossStats]] from ONE action: one aggregate over `lu` (carrying a
+    * `grp` column when `groupLabels` is set), left-joined with the rows
+    * of `ua` (the antidote users' factors) when it is given — so the
+    * action returns the aggregate once per antidote user, each copy next
+    * to that user's factor, in the factor frame's row order. */
+  private def evaluateLosses(lu: DataFrame,
+      groupLabels: Option[(String, String)],
+      ua: Option[DataFrame]): LossStats = {
+    val l = col("l_u")
+    val rmse = sqrt(sum(col("sse")) / sum(col("n_u")))
+    val base = Seq(rmse.as("rmse"), round(rmse, 6).as("rmse6"),
+      var_pop(l).as("ind"), avg(l).as("l_bar"), count(lit(1)).as("n"))
+    val byGroup = groupLabels.toSeq.flatMap { case (a, b) =>
+      Seq(avg(when(col("grp") === a, l)).as("l_a"),
+        avg(when(col("grp") === b, l)).as("l_b"),
+        count(when(col("grp") === a, lit(1))).as("n_a"),
+        count(when(col("grp") === b, lit(1))).as("n_b"))
+    }
+    val aggCols = base ++ byGroup
+    val stats = lu.agg(aggCols.head, aggCols.tail: _*)
+    val rows = ua.fold(stats)(u => stats.join(
+      u.select(col("id").cast(LongType).as("ua_id"), col("features")),
+      lit(true), "left")).collect()
+    val row = rows.head
+    val (lA, lB) =
+      if (groupLabels.isEmpty) (Double.NaN, Double.NaN)
+      else (row.getAs[Double]("l_a"), row.getAs[Double]("l_b"))
+    LossStats(row.getAs[Double]("rmse"), row.getAs[Double]("rmse6"),
+      row.getAs[Double]("ind"), row.getAs[Double]("l_bar"),
+      row.getAs[Long]("n"), math.abs(lA - lB), lA, lB,
+      if (groupLabels.isEmpty) 0L else row.getAs[Long]("n_a"),
+      if (groupLabels.isEmpty) 0L else row.getAs[Long]("n_b"),
+      rows.toSeq.filter(r => ua.nonEmpty && !r.isNullAt(r.fieldIndex("ua_id")))
+        .map(r => (r.getAs[Long]("ua_id"),
+          r.getAs[Seq[Float]]("features").map(_.toDouble).toArray)))
+  }
+
+  /** One model's known-cell pass and its one evaluation action. Under
+    * U_grp the loss frame carries each user's `grp`. When a gradient step
+    * follows (`antidoteAbove` = the largest real user id, unfairness
+    * metrics only), the prediction frame also carries each cell's user
+    * factor `u`, both frames are cached for the step to read, and the
+    * action also collects U_a (the factors of the users above that id).
+    * [[unpersist]] frees them. */
+  private[graft] final class ModelEval(val pred: DataFrame, val lu: DataFrame,
+      val point: TracePoint, val loss: LossStats) {
+    def unpersist(): Unit = { pred.unpersist(); lu.unpersist() }
+  }
+
+  private[graft] def evaluateModel(model: ALSModel, ratings: DataFrame,
+      metric: Metric, antidoteAbove: Option[Long]): ModelEval = {
+    val stepping = antidoteAbove.filter(_ => metric != Metric.Polarization)
+    val known = AlsEngine.predictKnown(model, ratings)
+    // joined on the INT factor id, so the plan reuses the prediction's
+    // own broadcast of the user factors
+    val pred = if (stepping.isEmpty) known else known
+      .join(model.userFactors.as("uf"),
+        col("user_id").cast(IntegerType) === col("uf.id"))
+      .select(col("user_id"), col("item_id"), col("rating"), col("p"),
+        col("uf.features").as("u")).cache()
+    val labels = metric match {
+      case Metric.GroupUnfairness(groups, a, b) => Some((groups, a, b))
+      case _ => None
+    }
+    val lu = labels.fold(losses(pred)) { case (groups, _, _) =>
+      losses(pred).join(groups, Seq("user_id"), "left") }
+    if (stepping.nonEmpty) lu.cache()
+    val ls = evaluateLosses(lu, labels.map(g => (g._2, g._3)),
+      stepping.map(mx => model.userFactors.filter(col("id") > mx)))
+    val obj = metric match {
+      case Metric.Polarization => polarization(model)
+      case Metric.IndividualUnfairness => ls.indUnfairness
+      case _: Metric.GroupUnfairness => ls.grpUnfairness
+    }
+    new ModelEval(pred, lu, TracePoint(obj, ls.rmse6), ls)
+  }
 
   /** Full Alg. 1 loop: init X, then `steps` projected-GD iterations, each
     * re-factorizing [R; X] and descending the chosen metric. Returns the
@@ -277,57 +353,69 @@ object Antidote {
     * Each iteration trains ONE ALS model on [R; X_t] and shares it between
     * the trace evaluation and the gradient linearization of the next step
     * (ALS is seeded, so the step's model would be bit-identical anyway) —
-    * halving the loop's dominant cost vs the naive train-per-call shape. */
+    * halving the loop's dominant cost vs the naive train-per-call shape.
+    * Per model, one cached known-cell pass feeds ONE evaluation action
+    * (trace point, step constants and U_a together) and the step's one
+    * materialization; the view's scalars are computed once per call. */
   def optimize(spark: SparkSession, ratings: DataFrame, alpha: Double,
       steps: Int, cfg: AlsEngine.Config = AlsEngine.Config(),
       eta: Double = 1e4, metric: Metric = Metric.Polarization,
-      initFn: (SparkSession, DataFrame, Double) => DataFrame = init)
-      : (DataFrame, Seq[TracePoint]) = {
-    var x = initFn(spark, ratings, alpha).cache()
-    var model = AlsEngine.train(ratings.unionByName(x), cfg)
-    // One cached prediction pass and one cached per-user-loss pass per
-    // model, shared by this iteration's trace point (rmse + metric) and
-    // the next step's loss/cell frames — the same rows were previously
-    // re-derived up to four (pred) / three (losses) times per iteration
-    // (r14). The loss cache is lazy: the polarization trace never touches
-    // it, so it costs nothing there. Unpersisted only after the step
-    // consuming them has materialized its output.
-    var pred = AlsEngine.predictKnown(model, ratings).cache()
-    var lu = lossesOf(pred).cache()
+      initFn: (SparkSession, DataFrame, Double, ViewStats) => DataFrame = init,
+      stats: Option[ViewStats] = None): (DataFrame, Seq[TracePoint]) = {
+    val view = stats.getOrElse(userStats(ratings))
+    var x = initFn(spark, ratings, alpha, view).cache()
     val trace = Seq.newBuilder[TracePoint]
-    trace += evaluateOn(pred, lu, model, metric)
-    for (_ <- 1 to steps) {
-      val next = step(spark, ratings, x, cfg, eta, metric, Some(model),
-          Some(pred), Some(lu))
-        .cache()
-      next.count() // materialize before unpersisting the predecessor
-      x.unpersist()
-      x = next
-      pred.unpersist()
-      lu.unpersist()
-      model = AlsEngine.train(ratings.unionByName(x), cfg)
-      pred = AlsEngine.predictKnown(model, ratings).cache()
-      lu = lossesOf(pred).cache()
-      trace += evaluateOn(pred, lu, model, metric)
+    for (t <- 0 to steps) {
+      val model = AlsEngine.train(ratings.unionByName(x), cfg)
+      val ev = evaluateModel(model, ratings, metric,
+        if (t < steps) Some(view.maxUserId) else None)
+      trace += ev.point
+      if (t < steps) {
+        val next = (metric match {
+          case Metric.Polarization =>
+            polarizationStep(spark, ratings, x, cfg, eta, Some(model))
+          case m => unfairnessStep(spark, x, cfg, eta, m, ev)
+        }).cache()
+        // fill the cache (one job; a count would add an aggregation stage)
+        // before unpersisting the predecessor
+        next.foreachPartition((_: Iterator[Row]) => ())
+        x.unpersist()
+        x = next
+      }
+      ev.unpersist()
     }
-    pred.unpersist()
-    lu.unpersist()
     (x, trace.result())
   }
 
   /** One projected-GD step on X (Alg. 1) for the chosen metric, then
     * box-project into [1,5]. Returns the updated antidote rows. Pass
     * `model` when [R; X] is already factorized (the optimize loop): the
-    * step linearizes around exactly that model instead of retraining. */
+    * step linearizes around exactly that model instead of retraining;
+    * pass `stats` when the caller already holds the view's scalars.
+    *
+    * The unfairness steps return a local checkpoint: they read a cached
+    * known-cell pass, which is freed once the new rows are materialized.
+    * The checkpoint also fences the step's lineage (which holds a whole
+    * ALS train) out of the next train's, so the two trains' shuffle files
+    * are never referenced at the same time. */
   def step(spark: SparkSession, ratings: DataFrame, x: DataFrame,
       cfg: AlsEngine.Config = AlsEngine.Config(), eta: Double = 1.0,
       metric: Metric = Metric.Polarization,
       model: Option[ALSModel] = None,
-      pred: Option[DataFrame] = None,
-      lu: Option[DataFrame] = None): DataFrame = metric match {
+      stats: Option[ViewStats] = None): DataFrame = metric match {
     case Metric.Polarization =>
       polarizationStep(spark, ratings, x, cfg, eta, model)
-    case m => unfairnessStep(spark, ratings, x, cfg, eta, m, model, pred, lu)
+    case m =>
+      val aug =
+        if (model.isEmpty) Some(ratings.unionByName(x).cache()) else None
+      val trained = model.getOrElse(AlsEngine.train(aug.get, cfg))
+      val mx = stats.getOrElse(userStats(ratings)).maxUserId
+      val ev = evaluateModel(trained, ratings, m, Some(mx))
+      try unfairnessStep(spark, x, cfg, eta, m, ev).localCheckpoint()
+      finally {
+        ev.unpersist()
+        aug.foreach(_.unpersist())
+      }
   }
 
   /** Polarization step: descend through the ridge closed form
@@ -351,16 +439,19 @@ object Antidote {
     val model = pretrained.getOrElse(AlsEngine.train(aug.get, cfg))
     val k = cfg.rank
 
-    val (uBar, _) = factorMoments(model)
-    val nTot = model.userFactors.count().toDouble
-    val m = model.itemFactors.count().toDouble
+    // n (the user-factor count) rides on the memoized moments, m on the
+    // Gram reduction: no separate count actions.
+    val Moments(nTot, uBar, _) = factorMoments(model)
 
     // B = VᵀV — k×k reduction over item factors via the typed Gram
     // aggregator (partial-aggregates map-side; merges associatively).
     val f = col("features")
     val gram = udaf(new graft.functions.GramAggregator(k),
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Float]]())
-    val tri = model.itemFactors.select(gram(f).as("g")).head().getSeq[Double](0)
+    val gm = model.itemFactors.agg(gram(f).as("g"), count(lit(1)).as("m"))
+      .head()
+    val tri = gm.getSeq[Double](0)
+    val m = gm.getLong(1).toDouble
     val b = DenseMatrix.zeros[Double](k, k)
     var idx = 0
     for (i <- 0 until k; j <- i until k) {
@@ -424,56 +515,37 @@ object Antidote {
     * documented mapPartitions-class exception); the only driver-held state
     * is the k̃×k antidote factor block and its k×k Gram — budget-sized,
     * independent of n, m, and |ratings|. */
-  private def unfairnessStep(spark: SparkSession, ratings: DataFrame,
-      x: DataFrame, cfg: AlsEngine.Config, eta: Double,
-      metric: Metric, pretrained: Option[ALSModel] = None,
-      predIn: Option[DataFrame] = None,
-      luIn: Option[DataFrame] = None): DataFrame = {
+  private def unfairnessStep(spark: SparkSession, x: DataFrame,
+      cfg: AlsEngine.Config, eta: Double, metric: Metric,
+      ev: ModelEval): DataFrame = {
     import spark.implicits._
-    val aug =
-      if (pretrained.isEmpty) Some(ratings.unionByName(x).cache()) else None
-    val model = pretrained.getOrElse(AlsEngine.train(aug.get, cfg))
-    // Known-cell predictions feed BOTH the per-user loss weights and the
-    // per-item gradient cells; when the optimize loop supplies its cached
-    // pass, neither is re-derived (standalone calls keep the lazy
-    // two-pass shape — the caller controls no cache lifecycle here).
-    val pred = predIn.getOrElse(AlsEngine.predictKnown(model, ratings))
     val k = cfg.rank
 
-    // Antidote factor block U_a (k̃×k — budget-sized driver state).
-    val mx = ratings.agg(max(col("user_id"))).head().getLong(0)
-    val uaRows = model.userFactors.filter(col("id") > mx).collect()
-      .map(r => (r.getInt(0).toLong, r.getSeq[Float](1).map(_.toDouble).toArray))
+    // Antidote factor block U_a (k̃×k — budget-sized driver state),
+    // collected by the model's evaluation action.
+    val uaRows = ev.loss.ua
     val kTilde = uaRows.length
     val sa = DenseMatrix.zeros[Double](k, k)
     uaRows.foreach { case (_, u) =>
       for (i <- 0 until k; j <- 0 until k) sa(i, j) += u(i) * u(j)
     }
 
-    // Per-user metric weight d_i = ∂U/∂ℓ_i (constant-size driver scalars).
-    // The optimize loop / sweep pass their cached per-user loss frame;
-    // standalone calls derive it lazily (same expressions either way).
-    val lu = luIn.getOrElse(lossesOf(pred))
+    // Per-user metric weight d_i = ∂U/∂ℓ_i, from the evaluation's
+    // constant-size scalars over the cached per-user loss frame.
+    val ls = ev.loss
     val dDf = metric match {
       case Metric.IndividualUnfairness =>
-        val g = lu.agg(avg(col("l_u")), count(lit(1))).head()
-        val (lBar, n) = (g.getDouble(0), g.getLong(1).toDouble)
-        lu.select(col("user_id"), col("n_u"),
+        val (lBar, n) = (ls.lBar, ls.n.toDouble)
+        ev.lu.select(col("user_id"), col("n_u"),
           ((col("l_u") - lBar) * (2.0 / n)).as("d_u"))
-      case Metric.GroupUnfairness(groups, a, b) =>
-        val withG = lu.join(groups, Seq("user_id"), "left")
-        val g = withG.agg(
-          avg(when(col("grp") === a, col("l_u"))),
-          avg(when(col("grp") === b, col("l_u"))),
-          count(when(col("grp") === a, lit(1))),
-          count(when(col("grp") === b, lit(1)))).head()
+      case Metric.GroupUnfairness(_, a, b) =>
         // Descend (ℓ̄_A − ℓ̄_B)² rather than |ℓ̄_A − ℓ̄_B|: identical descent
         // direction, but the magnitude is ∝ the current gap, so steps
         // self-damp near Δ = 0 instead of oscillating across the zero
         // crossing the way the constant-magnitude sign(Δ) weight does.
-        val delta = g.getDouble(0) - g.getDouble(1)
-        val (na, nb) = (g.getLong(2).toDouble, g.getLong(3).toDouble)
-        withG.select(col("user_id"), col("n_u"),
+        val delta = ls.lA - ls.lB
+        val (na, nb) = (ls.nA.toDouble, ls.nB.toDouble)
+        ev.lu.select(col("user_id"), col("n_u"),
           when(col("grp") === a, 2.0 * delta / na)
             .when(col("grp") === b, -2.0 * delta / nb)
             .otherwise(0.0).as("d_u"))
@@ -481,12 +553,10 @@ object Antidote {
         throw new IllegalArgumentException("use polarizationStep")
     }
 
-    // Cells with error, weight, and the rating user's factor vector.
-    val uf = model.userFactors
-      .select(col("id").cast(LongType).as("user_id"), col("features").as("u"))
-    val cells = pred
+    // Cells with error, weight, and the rating user's factor vector (the
+    // cached prediction pass carries it).
+    val cells = ev.pred
       .join(dDf, "user_id")
-      .join(uf, "user_id")
       .select(col("item_id"),
         ((col("p") - col("rating")) * col("d_u") * lit(2.0) / col("n_u"))
           .as("wgt"),
@@ -525,19 +595,22 @@ object Antidote {
 
     // grad_aj = u_aᵀ w_j; projected update stays fully distributed (items
     // without real cells keep their rating: left join + zero gradient).
-    val uaDf = uaRows.toSeq.map { case (id, u) => (id, u.toSeq) }
+    // X meets the solve result in a join co-partitioned on item_id: the
+    // solve's size is unknown until it runs, and materializing it first
+    // so the planner could broadcast it cost more jobs than it saved. The
+    // cached X of a later iteration is already partitioned by item_id, so
+    // only the first step shuffles X.
+    val uaDf = uaRows.map { case (id, u) => (id, u.toSeq) }
       .toDF("user_id", "ua")
     val dot = coalesce(aggregate(
       zip_with(col("ua"), col("w"), (p, q) => p * q),
       lit(0.0), (acc, v) => acc + v), lit(0.0))
-    val out = x.select(col("user_id"), col("item_id"),
+    x.select(col("user_id"), col("item_id"),
         col("rating").cast(DoubleType).as("rating"))
       .join(solved, Seq("item_id"), "left")
       .join(broadcast(uaDf), "user_id")
       .select(col("user_id"), col("item_id"),
         round(least(lit(5.0), greatest(lit(1.0),
           col("rating") - lit(eta) * dot)), 6).as("rating"))
-    aug.foreach(_.unpersist())
-    out
   }
 }

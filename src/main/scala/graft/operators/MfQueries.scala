@@ -315,7 +315,8 @@ object MfQueries {
        |UNION ALL SELECT user_id, item_id, rating FROM antidotea
        |ORDER BY user_id, item_id""".stripMargin) { (s, d) =>
     val ratings = Ratings.view(s, d)
-    ratings.unionByName(Antidote.init(s, ratings, 0.01))
+    ratings.unionByName(
+      Antidote.init(s, ratings, 0.01, Antidote.userStatsCached(s, d)))
       .orderBy("user_id", "item_id")
   }
 
@@ -352,7 +353,7 @@ object MfQueries {
 
   val qAntidoteStep = Q.noOracle("q_antidote_step") { (s, d) =>
     val ratings = Ratings.view(s, d)
-    val x0 = Antidote.init(s, ratings, 0.01)
+    val x0 = Antidote.init(s, ratings, 0.01, Antidote.userStatsCached(s, d))
     // 5 ALS sweeps are plenty for the V the gradient linearizes around
     Antidote.step(s, ratings, x0, AlsEngine.Config(maxIter = 5))
       .orderBy("user_id", "item_id")
@@ -412,7 +413,7 @@ object MfQueries {
     // and exactly one.
     val ratings = Ratings.viewCached(s, d)
     val (polB, rmseB) = Baseline.polRmseCached(s, d)
-    val stats = Antidote.userStats(ratings)
+    val stats = Antidote.userStatsCached(s, d)
     val r = col("rating")
     val umB = ratings.groupBy("user_id").agg(avg(r).as("mu"))
     val base = ratings.join(umB, "user_id")
@@ -430,13 +431,13 @@ object MfQueries {
     // exist: (999+4m)·10⁶/999 has fractional part k/999, never 1/2).
     // At 100 TB this turns the evaluation's dominant term from α·n·m
     // synthetic cells into one ≤1000-row broadcast join per budget.
-    val (nUsers, _) = stats
+    val nUsers = stats.nUsers
     val g6 = (0 until 1000).map(m =>
       (2L * (999 + 4 * m) * 1000000L + 999) / 1998) // round6(·)·10⁶ exact
     val items = ratings.select("item_id").distinct()
       .select(col("item_id"), (col("item_id") * 40503L % 1000).as("si"))
       .localCheckpoint()
-    val mItems = items.count()
+    val mItems = stats.nItems
     val hI = new Array[Long](1000)
     items.groupBy("si").count().collect()
       .foreach(row => hI(row.getLong(0).toInt) = row.getLong(1))
@@ -446,7 +447,7 @@ object MfQueries {
       // ≤1000-row result) — then the whole residue algebra on the driver
       val hU = new Array[Long](1000)
       s.range(1, kT + 1)
-        .select(((col("id") + stats._2) * 2654435761L % 1000).as("ra"))
+        .select(((col("id") + stats.maxUserId) * 2654435761L % 1000).as("ra"))
         .groupBy("ra").count().collect()
         .foreach(row => hU(row.getLong(0).toInt) = row.getLong(1))
       // mu_a by user residue: mean over the item-residue histogram
@@ -589,6 +590,8 @@ object MfQueries {
       // three INDEPENDENT budgets overlap as concurrent jobs (guide
       // §2.6 — a 10-block ALS leaves most of local[32] idle).
       val nRatings = ratings.count()
+      // the view's scalars, once for all budgets (autoCap, init, step)
+      val stats = Antidote.userStatsCached(s, d)
       val sequentialBudgets = nRatings >= graft.ScratchGc.minRows
       def budgetRows(alpha: Double): Seq[(Double, String, Double, Double)] = {
         // α = 0 is the un-augmented baseline — share the memoized model
@@ -606,41 +609,23 @@ object MfQueries {
             // k̃·m fits (every oracle/fixture scale — bit-identical to
             // the uncapped sweep there), top-M-items support beyond, so
             // the α=0.05 branch's ALS input stays bounded at sf1+.
-            // SPARK_GRAFT_ANTIDOTE_CAP=<M> forces a cap, =0 forces dense.
-            val cap = sys.env.get("SPARK_GRAFT_ANTIDOTE_CAP") match {
-              case Some(v) => v.toIntOption match {
-                case Some(0)            => None // force dense
-                case Some(m) if m > 0   => Some(m)
-                case _ => throw new IllegalArgumentException(
-                  "SPARK_GRAFT_ANTIDOTE_CAP must be a non-negative " +
-                    s"integer (0 = force dense), got '$v'")
-              }
-              case None => Antidote.autoCap(ratings, alpha)
-            }
-            val x0 = Antidote.initHeuristicCapped(s, ratings, alpha, cap)
+            val cap = Antidote.autoCap(stats, alpha, Antidote.maxAntidoteCells)
+            val x0 = Antidote.initHeuristicCapped(s, ratings, alpha, stats, cap)
             // Train [R; X0] explicitly (content-digest memoized +
             // lineage-fenced inside AlsEngine.train) and hand the step
-            // ONE cached prediction pass, mirroring optimize's
-            // iteration shape — the bare step call re-derived
-            // predictKnown twice (loss weights + gradient cells) per
-            // budget (r14).
+            // that model, mirroring optimize's iteration shape. The step
+            // returns a local checkpoint, which fences the GD step's
+            // lineage (which holds a whole ALS train) out of the FINAL
+            // train's — without it both trains' shuffle files stay
+            // referenced simultaneously. x1 is budget-sized (k̃ × m,
+            // support-capped), so the fence materializes a bounded frame.
+            // Part of the sf10 finding: the sweep died on single-box
+            // scratch (> 64 GB) because consumed shuffles of earlier
+            // trains stayed live.
             val model0 = AlsEngine.train(ratings.unionByName(x0), cfg)
-            val pred0 = AlsEngine.predictKnown(model0, ratings).cache()
-            val lu0 = Antidote.lossesWithCounts(pred0).cache()
-            // localCheckpoint fences the GD step's lineage (which holds
-            // a whole ALS train) out of the FINAL train's — without it
-            // both trains' shuffle files stay referenced simultaneously.
-            // x1 is budget-sized (k̃ × m, support-capped), so the fence
-            // materializes a bounded frame. Part of the sf10 finding:
-            // the sweep died on single-box scratch (> 64 GB) because
-            // consumed shuffles of earlier trains stayed live.
             val x1 = Antidote.step(s, ratings, x0, cfg, eta = 1e4,
               metric = Metric.GroupUnfairness(groups, "BUILDING",
-                "MACHINERY"), model = Some(model0), pred = Some(pred0),
-              lu = Some(lu0))
-              .localCheckpoint()
-            pred0.unpersist()
-            lu0.unpersist()
+                "MACHINERY"), model = Some(model0), stats = Some(stats))
             // x1 is materialized, so the heuristic-init and GD-step
             // trains behind it are now dead references — reclaim
             // their shuffle files BEFORE the final train writes its
@@ -744,7 +729,8 @@ object MfQueries {
     import spark.implicits._
     val ratings = Ratings.viewCached(s, d)
     val (_, trace) = Antidote.optimize(s, ratings, 0.01, 3,
-      AlsEngine.Config(maxIter = 3), eta = 1e4)
+      AlsEngine.Config(maxIter = 3), eta = 1e4,
+      stats = Some(Antidote.userStatsCached(s, d)))
     trace.zipWithIndex.map { case (p, i) =>
       (i.toLong, p.objective, p.rmse)
     }.toDF("iter", "objective", "rmse")
@@ -774,7 +760,8 @@ object MfQueries {
     val (_, trace) = Antidote.optimize(s, ratings, 0.01, 2,
       AlsEngine.Config(maxIter = 3), eta = 1e4,
       metric = Metric.GroupUnfairness(groups, "BUILDING", "MACHINERY"),
-      initFn = Antidote.initHeuristic)
+      initFn = Antidote.initHeuristic,
+      stats = Some(Antidote.userStatsCached(s, d)))
     trace.zipWithIndex.map { case (p, i) =>
       (i.toLong, p.objective, p.rmse)
     }.toDF("iter", "objective", "rmse")
@@ -799,7 +786,8 @@ object MfQueries {
     val (_, trace) = Antidote.optimize(s, ratings, 0.01, 2,
       AlsEngine.Config(maxIter = 3), eta = 1e4,
       metric = Metric.IndividualUnfairness,
-      initFn = Antidote.initHeuristic)
+      initFn = Antidote.initHeuristic,
+      stats = Some(Antidote.userStatsCached(s, d)))
     trace.zipWithIndex.map { case (p, i) =>
       (i.toLong, p.objective, p.rmse)
     }.toDF("iter", "objective", "rmse")

@@ -1,5 +1,10 @@
 package org.apache.spark.ml.recommendation
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{ExternalRDD, LogicalRDD}
+import org.apache.spark.storage.StorageLevel
+
 /** Lineage fence for a trained [[ALSModel]] — graft's one
   * private[ml]-package shim (the ALSModel constructor is private[ml],
   * so the re-rooted copy must be built from inside this package).
@@ -23,17 +28,63 @@ package org.apache.spark.ml.recommendation
   * (checkpointing moves bytes, not math), so transform/predict/metric
   * results are bit-identical; MfSpec's model pins are the arbiters.
   *
+  * Each checkpoint carries MEASURED statistics: it is taken through a
+  * cache of the frame, so it inherits the loaded in-memory relation's
+  * size and row count instead of MLlib's unknown (8 EiB) estimate. The
+  * planner then decides every join against a factor frame
+  * (`predictKnown`, the Alg. 1 steps) from
+  * `spark.sql.autoBroadcastJoinThreshold` like any other table:
+  * broadcast while the factors are small, shuffle joins once they are
+  * not. The cache is dropped as soon as the checkpoint exists, and so
+  * are the factor RDDs the fit itself left persisted, so a fenced model
+  * holds exactly its two checkpoints.
+  *
   * Memos read the checkpoint blocks a fenced model owns off its factor
   * plans (`graft.SharedBuild.frames`). */
 object GraftAlsLineage {
 
   def fence(m: ALSModel): ALSModel = {
-    val uf = m.userFactors.localCheckpoint()
-    val itf = m.itemFactors.localCheckpoint()
+    val fitBlocks = alsPersisted(m.userFactors) ++ alsPersisted(m.itemFactors)
+    val uf = measuredCheckpoint(m.userFactors)
+    val itf = measuredCheckpoint(m.itemFactors)
+    fitBlocks.foreach(_.unpersist(blocking = false))
     new ALSModel(m.uid, m.rank, uf, itf)
       .setUserCol(m.getUserCol)
       .setItemCol(m.getItemCol)
       .setPredictionCol(m.getPredictionCol)
       .setColdStartStrategy(m.getColdStartStrategy)
+  }
+
+  /** A local checkpoint of `df` whose plan reports the measured size and
+    * row count of the rows it holds, in one job: the checkpoint reads
+    * `df` through a cache that the same job fills, so by the time the
+    * checkpoint takes its statistics the in-memory relation is loaded.
+    * The checkpoint is taken of a fresh plan over `df`, which sees the
+    * cache even when `df`'s own plan was optimized before it existed. */
+  private def measuredCheckpoint(df: DataFrame): DataFrame = {
+    df.cache()
+    val cp = df.select("*").localCheckpoint()
+    df.unpersist(blocking = false)
+    cp
+  }
+
+  /** The RDDs ALS's fit left persisted behind a factor frame: its final
+    * `userFactors` / `itemFactors` and the last checkpointed
+    * `itemFactors-<iter>` iterate, found on the frame's lineage by the
+    * names ALS gives them (the same lineage also reaches the training
+    * input, whose caches are not ALS's to drop). Empty for a model that
+    * is already fenced. */
+  private def alsPersisted(df: DataFrame): Seq[RDD[_]] = {
+    val named = "(user|item)Factors(-\\d+)?".r
+    val seen = scala.collection.mutable.Set.empty[Int]
+    def walk(r: RDD[_]): Seq[RDD[_]] =
+      if (!seen.add(r.id)) Nil
+      else (if (r.getStorageLevel != StorageLevel.NONE &&
+          Option(r.name).exists(named.matches)) Seq(r) else Nil) ++
+        r.dependencies.flatMap(d => walk(d.rdd))
+    df.queryExecution.analyzed.collect {
+      case e: ExternalRDD[_] => e.rdd
+      case l: LogicalRDD => l.rdd
+    }.flatMap(walk)
   }
 }
