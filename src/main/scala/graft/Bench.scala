@@ -123,9 +123,11 @@ object Bench {
     WarmLine("warm:item_ivf", Set("q_mf_topk_recs_ann"),
       operators.MfQueries.warmItemIvf),
     // The optimized-antidote sweep (≈4 ALS retrains + GD steps, the
-    // paper's Alg. 1 cost) feeds exactly two readouts.
+    // paper's Alg. 1 cost) feeds its two readouts, and its α = 0.01
+    // branch's trains and memoized step are the U_grp trace's iteration 0.
     WarmLine("warm:antidote_sweep",
-      Set("q_antidote_sweep_als", "q_antidote_figure"),
+      Set("q_antidote_sweep_als", "q_antidote_figure",
+        "q_antidote_trace_grp"),
       operators.MfQueries.warmSweep))
 
   def main(args: Array[String]): Unit = {

@@ -28,8 +28,10 @@ import org.apache.spark.sql.functions._
   * shingle-keyed joins/aggregations downstream start from a scan whose
   * bucketing already satisfies their required hash partitioning (no
   * re-shuffle of the big side). On a real cluster this is the persisted
-  * intermediate table a 100 TB pipeline would maintain; buckets = 64
-  * keeps per-bucket sorts ~15 M rows at the sf10 rung.
+  * intermediate table a 100 TB pipeline would maintain. The bucket count
+  * is sized to the explode ([[bucketsFor]]): 64 keeps per-bucket sorts
+  * ~15 M rows at the sf10 rung, and a small corpus gets one bucket per
+  * shuffle partition instead of 64 tiny sorted files.
   *
   * Queries that shingle AUGMENTED corpora (docs ∪ planted copies) draw
   * the raw-corpus side from this store too; only their planted slice
@@ -56,7 +58,15 @@ import org.apache.spark.sql.functions._
   * test suites must not share a warehouse. */
 object ShingleStore {
 
-  private val Buckets = 64
+  private val MaxBuckets = 64
+  private val RowsPerBucket = 15000000L
+
+  /** Buckets for an explode of `rows` rows: one per ~15 M rows, at least
+    * `shufflePartitions` (every core sorts and writes a bucket), at most
+    * 64. */
+  private[graft] def bucketsFor(rows: Long, shufflePartitions: Int): Int =
+    math.min(MaxBuckets, math.max(shufflePartitions.toLong,
+      (rows + RowsPerBucket - 1) / RowsPerBucket)).toInt
 
   private val tables =
     graft.SharedBuild[(SparkSession, String, Int, Int), DataFrame]()()
@@ -81,23 +91,28 @@ object ShingleStore {
     * count aggregate (partitioning on `shingle` clusters both the
     * (doc_id, shingle) groups — subset rule — and the window's
     * partitions), so the build pays one extra partition-local sort, no
-    * new shuffle. */
+    * new shuffle. One aggregate over `documents` first sums the exact
+    * explode size, which sizes the bucket count. */
   def counted(spark: SparkSession, sfDir: String, k: Int,
       maxPos: Int): DataFrame = tables((spark, sfDir, k, maxPos)) {
     val docs = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"))
+    // positions per doc: min(max(len − k + 1, 1), maxPos)
+    val positions = least(greatest(length(col("text")) - (k - 1), lit(1)),
+      lit(maxPos))
+    val rows = docs.agg(coalesce(sum(positions), lit(0L))).head().getLong(0)
+    val buckets = bucketsFor(rows,
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
     val w = org.apache.spark.sql.expressions.Window.partitionBy("shingle")
     val frame = docs
       .select(col("doc_id"), col("text"),
-        explode(sequence(lit(1),
-          least(greatest(length(col("text")) - (k - 1), lit(1)),
-            lit(maxPos)))).as("p"))
+        explode(sequence(lit(1), positions)).as("p"))
       .select(col("doc_id"), expr(s"substr(text, p, $k)").as("shingle"))
-      .repartition(Buckets, col("shingle"))
+      .repartition(buckets, col("shingle"))
       .groupBy("doc_id", "shingle").agg(count(lit(1)).as("c"))
       .withColumn("df", count(lit(1)).over(w))
     val table = tableName(sfDir, k, maxPos)
-    Layout.writeBucketed(frame, table, Buckets, "shingle")
+    Layout.writeBucketed(frame, table, buckets, "shingle")
     spark.table(table)
   }
 

@@ -356,7 +356,11 @@ object Antidote {
     * halving the loop's dominant cost vs the naive train-per-call shape.
     * Per model, one cached known-cell pass feeds ONE evaluation action
     * (trace point, step constants and U_a together) and the step's one
-    * materialization; the view's scalars are computed once per call. */
+    * materialization; the view's scalars are computed once per call.
+    * Under U_ind / U_grp each step reads through [[stepUnfairness]]'s
+    * memo, so an iteration another caller already stepped (the sweep's
+    * α = 0.01 branch is the U_grp trace's iteration 0) costs no job; the
+    * returned X is then the memo's checkpoint. */
   def optimize(spark: SparkSession, ratings: DataFrame, alpha: Double,
       steps: Int, cfg: AlsEngine.Config = AlsEngine.Config(),
       eta: Double = 1e4, metric: Metric = Metric.Polarization,
@@ -367,22 +371,29 @@ object Antidote {
     val trace = Seq.newBuilder[TracePoint]
     for (t <- 0 to steps) {
       val model = AlsEngine.train(ratings.unionByName(x), cfg)
-      val ev = evaluateModel(model, ratings, metric,
-        if (t < steps) Some(view.maxUserId) else None)
-      trace += ev.point
-      if (t < steps) {
-        val next = (metric match {
+      if (t == steps) trace += evaluate(model, ratings, metric)
+      else {
+        val next = metric match {
           case Metric.Polarization =>
-            polarizationStep(spark, ratings, x, cfg, eta, Some(model))
-          case m => unfairnessStep(spark, x, cfg, eta, m, ev)
-        }).cache()
-        // fill the cache (one job; a count would add an aggregation stage)
-        // before unpersisting the predecessor
-        next.foreachPartition((_: Iterator[Row]) => ())
+            val ev = evaluateModel(model, ratings, metric, None)
+            trace += ev.point
+            val next = polarizationStep(spark, ratings, x, cfg, eta,
+              Some(model)).cache()
+            // fill the cache (one job; a count would add an aggregation
+            // stage) before unpersisting the predecessor
+            next.foreachPartition((_: Iterator[Row]) => ())
+            next
+          case m =>
+            val (point, next) = stepUnfairness(spark, ratings, x, cfg, eta,
+              m, model, view.maxUserId)
+            trace += point
+            next
+        }
+        // a no-op on the memo's checkpoints: only cache() registers a frame
+        // with the CacheManager
         x.unpersist()
         x = next
       }
-      ev.unpersist()
     }
     (x, trace.result())
   }
@@ -393,11 +404,9 @@ object Antidote {
     * step linearizes around exactly that model instead of retraining;
     * pass `stats` when the caller already holds the view's scalars.
     *
-    * The unfairness steps return a local checkpoint: they read a cached
-    * known-cell pass, which is freed once the new rows are materialized.
-    * The checkpoint also fences the step's lineage (which holds a whole
-    * ALS train) out of the next train's, so the two trains' shuffle files
-    * are never referenced at the same time. */
+    * The unfairness steps read through [[stepUnfairness]]'s memo and
+    * return its local checkpoint, which the memo owns: callers must not
+    * free it. */
   def step(spark: SparkSession, ratings: DataFrame, x: DataFrame,
       cfg: AlsEngine.Config = AlsEngine.Config(), eta: Double = 1.0,
       metric: Metric = Metric.Polarization,
@@ -410,12 +419,75 @@ object Antidote {
         if (model.isEmpty) Some(ratings.unionByName(x).cache()) else None
       val trained = model.getOrElse(AlsEngine.train(aug.get, cfg))
       val mx = stats.getOrElse(userStats(ratings)).maxUserId
-      val ev = evaluateModel(trained, ratings, m, Some(mx))
-      try unfairnessStep(spark, x, cfg, eta, m, ev).localCheckpoint()
-      finally {
-        ev.unpersist()
-        aug.foreach(_.unpersist())
-      }
+      try stepUnfairness(spark, ratings, x, cfg, eta, m, trained, mx)._2
+      finally aug.foreach(_.unpersist())
+  }
+
+  /** The inputs one unfairness step reads besides X, which the model
+    * pins: the train memo returns one model instance per content digest
+    * of [R; X], so with R fixed the model fixes X. The model compares by
+    * identity, the ratings and `groups` frames by semantic equality of
+    * their analyzed plans (the 32-bit semantic hashes only bucket), the
+    * labels, η and the ALS config by value. U_ind carries no groups. */
+  private[graft] final class StepKey(val model: ALSModel,
+      val ratings: DataFrame, val groups: Option[DataFrame],
+      val labels: Option[(String, String)], val eta: Double,
+      val cfg: AlsEngine.Config) {
+    override val hashCode: Int = (System.identityHashCode(model),
+      ratings.semanticHash(), groups.map(_.semanticHash()), labels, eta,
+      cfg).##
+    override def equals(o: Any): Boolean = o match {
+      case k: StepKey =>
+        (k.model eq model) && k.labels == labels && k.eta == eta &&
+          k.cfg == cfg && k.ratings.sameSemantics(ratings) &&
+          ((k.groups, groups) match {
+            case (Some(g), Some(h)) => g.sameSemantics(h)
+            case (g, h) => g.isEmpty && h.isEmpty
+          })
+      case _ => false
+    }
+  }
+
+  /** Per-model memo of the unfairness step: the model's trace point and
+    * the projected X_{t+1} as a local checkpoint the memo owns. The
+    * sweep's α = 0.01 branch and `q_antidote_trace_grp` step the same
+    * model 0, so the trace reads its iteration-0 point and X₁ from here.
+    * Polarization steps have no cross-query reuse and are not memoized.
+    * At most 4 entries (each X is at most [[maxAntidoteCells]] rows under
+    * [[autoCap]]); evicted and cleared entries free their checkpoint. In
+    * the bench's order the sweep adds two entries (α = 0.01 and 0.05)
+    * and the polarization trace none, so the α = 0.01 entry is still
+    * there when the U_grp trace reads it. */
+  private[graft] val stepMemo =
+    graft.SharedBuild[StepKey, (TracePoint, DataFrame)](cap = 4)(v =>
+      graft.SharedBuild.frames(v._2))
+
+  /** One U_ind / U_grp step on `model` = the train of [R; x]: its trace
+    * point under `metric` and X_{t+1}, memoized per model. */
+  private def stepUnfairness(spark: SparkSession, ratings: DataFrame,
+      x: DataFrame, cfg: AlsEngine.Config, eta: Double, metric: Metric,
+      model: ALSModel, maxUserId: Long): (TracePoint, DataFrame) = {
+    val (groups, labels) = metric match {
+      case Metric.GroupUnfairness(g, a, b) => (Some(g), Some((a, b)))
+      case _ => (None, None)
+    }
+    stepMemo(new StepKey(model, ratings, groups, labels, eta, cfg))(
+      stepEvaluated(spark, ratings, x, cfg, eta, metric, model, maxUserId))
+  }
+
+  /** [[stepUnfairness]]'s build: the model's one evaluation action, then
+    * the step materialized as a local checkpoint, which also fences the
+    * step's lineage (which holds a whole ALS train) out of the next
+    * train's, so the two trains' shuffle files are never referenced at
+    * the same time. The cached known-cell pass is freed once the new rows
+    * are materialized. */
+  private def stepEvaluated(spark: SparkSession, ratings: DataFrame,
+      x: DataFrame, cfg: AlsEngine.Config, eta: Double, metric: Metric,
+      model: ALSModel, maxUserId: Long): (TracePoint, DataFrame) = {
+    val ev = evaluateModel(model, ratings, metric, Some(maxUserId))
+    try (ev.point, unfairnessStep(spark, x, cfg, eta, metric, ev)
+      .localCheckpoint())
+    finally ev.unpersist()
   }
 
   /** Polarization step: descend through the ridge closed form

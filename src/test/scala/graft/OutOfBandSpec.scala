@@ -520,7 +520,15 @@ class OutOfBandSpec extends SparkTestBase {
       planIds(m.userFactors, m.itemFactors)
     }),
     ("ratings view", "lineitem", () =>
-      planIds(ml.Ratings.viewCached(spark, sf))))
+      planIds(ml.Ratings.viewCached(spark, sf))),
+    ("Alg. 1 step", "lineitem", () => {
+      val ratings = ml.Ratings.viewCached(spark, sf)
+      val cfg = ml.AlsEngine.Config(rank = 4, maxIter = 2)
+      val x0 = ml.Antidote.initHeuristic(spark, ratings, 0.01)
+      val m = ml.AlsEngine.train(ratings.unionByName(x0), cfg)
+      planIds(ml.Antidote.step(spark, ratings, x0, cfg, eta = 1e4,
+        metric = ml.Metric.IndividualUnfairness, model = Some(m)))
+    }))
 
   owningMemos.foreach { case (label, table, build) =>
     test(s"$label memo owns exactly its checkpoints: eviction spares " +

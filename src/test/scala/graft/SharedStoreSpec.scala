@@ -94,6 +94,35 @@ class SharedStoreSpec extends SparkTestBase {
     assert(diffCount(direct, shared) === 0)
   }
 
+  for (k <- Seq(5, 20)) {
+    test(s"ShingleStore k=$k rows equal the direct explode, count and df window") {
+      val docs = Tables.load(spark, sf, "documents")
+      val direct = docs
+        .select(col("doc_id"), col("text"), explode(sequence(lit(1),
+          least(greatest(length(col("text")) - (k - 1), lit(1)),
+            lit(2000)))).as("p"))
+        .select(col("doc_id"), expr(s"substr(text, p, $k)").as("shingle"))
+        .groupBy("doc_id", "shingle").agg(count(lit(1)).as("c"))
+        .withColumn("df", count(lit(1)).over(
+          org.apache.spark.sql.expressions.Window.partitionBy("shingle")))
+      val store = llm.ShingleStore.counted(spark, sf, k, 2000)
+        .select("doc_id", "shingle", "c", "df")
+      assert(store.count() > 0)
+      assert(diffCount(direct, store) === 0)
+    }
+  }
+
+  test("ShingleStore buckets: one per 15 M rows, at least the shuffle partitions, at most 64") {
+    import llm.ShingleStore.bucketsFor
+    assert(bucketsFor(0L, 4) == 4)
+    assert(bucketsFor(3000000L, 4) == 4)
+    assert(bucketsFor(15000000L * 4 + 1, 4) == 5)
+    assert(bucketsFor(15000000L * 20, 4) == 20)
+    assert(bucketsFor(1000000000L, 4) == 64)
+    assert(bucketsFor(1000L, 128) == 64)
+    assert(bucketsFor(1000L, 32) == 32)
+  }
+
   test("ALS train memo hit is bit-identical to a fresh seeded train") {
     val ratings = ml.Ratings.view(spark, sf)
     val cfg = ml.AlsEngine.Config(rank = 4, maxIter = 2)

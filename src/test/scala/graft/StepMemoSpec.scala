@@ -1,0 +1,162 @@
+package graft
+
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.collection.concurrent.TrieMap
+
+import graft.ml.{AlsEngine, Antidote, Metric, Ratings}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.functions._
+
+/** The unfairness step memo: a hit replays the stepped iteration bit for
+  * bit without running its jobs; any input the step reads misses. */
+class StepMemoSpec extends SparkTestBase {
+
+  // the memo's view, re-read after every clearAll(): a frame held across
+  // one would lose its cache and recompute, and a recomputed view's row
+  // order can change the float sums of the trains that read it
+  private def ratings: DataFrame = Ratings.viewCached(spark, sf)
+  private def groups: DataFrame = Tables.load(spark, sf, "customer")
+    .select(col("c_custkey").as("user_id"), col("c_mktsegment").as("grp"))
+  private val cfg = AlsEngine.Config(maxIter = 2)
+  private lazy val stats = Antidote.userStats(ratings)
+  private def x0: DataFrame =
+    Antidote.initHeuristic(spark, ratings, 0.01, stats)
+
+  /** Spark jobs run by `f` whose call site holds `frame` — read off the
+    * job's own call site, or, for adaptive stages submitted from a pool
+    * thread, off its SQL execution's. */
+  private def jobsUnder(frame: String)(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val execSites = TrieMap.empty[String, String]
+    val hits = new AtomicInteger
+    val sentinel = new CountDownLatch(1)
+    val group = "step-memo-sentinel-" + System.nanoTime()
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart =>
+          execSites(x.executionId.toString) = x.details
+        case _ => ()
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty("spark.jobGroup.id") == group))
+          sentinel.countDown()
+        val own = e.stageInfos.headOption.map(_.details).getOrElse("")
+        val exec = props.flatMap(p =>
+          Option(p.getProperty("spark.sql.execution.id")))
+        if ((own + exec.flatMap(execSites.get).getOrElse("")).contains(frame))
+          hits.incrementAndGet()
+      }
+    }
+    sc.addSparkListener(l)
+    try {
+      f
+      // events reach a listener in order: once the sentinel job's start
+      // is seen, every job `f` ran has been counted
+      sc.setJobGroup(group, "sentinel")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.clearJobGroup()
+      assert(sentinel.await(60, TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(l)
+    hits.get()
+  }
+
+  private val stepFrame = "Antidote$.stepEvaluated"
+
+  private def run(metric: Metric, steps: Int)
+      : (Seq[Row], Seq[Antidote.TracePoint]) = {
+    val (x, trace) = Antidote.optimize(spark, ratings, 0.01, steps, cfg,
+      eta = 1e4, metric = metric, initFn = Antidote.initHeuristic,
+      stats = Some(stats))
+    (x.orderBy("user_id", "item_id").collect().toSeq, trace)
+  }
+
+  /** The α-sweep's shape: train [R; X₀], then step that model. */
+  private def sweepStep(metric: Metric): DataFrame = {
+    val m0 = AlsEngine.train(ratings.unionByName(x0), cfg)
+    Antidote.step(spark, ratings, x0, cfg, eta = 1e4, metric = metric,
+      model = Some(m0), stats = Some(stats))
+  }
+
+  for ((label, metric) <- Seq(
+      "U_ind" -> (() => Metric.IndividualUnfairness),
+      "U_grp" -> (() => Metric.GroupUnfairness(groups, "BUILDING",
+        "MACHINERY")))) {
+    test(s"$label: optimize after a sweep-shaped step equals a cold run bit for bit and skips the stepped iteration") {
+      SharedBuild.clearAll()
+      var cold: (Seq[Row], Seq[Antidote.TracePoint]) = null
+      val coldSteps = jobsUnder(stepFrame) { cold = run(metric(), 2) }
+      assert(cold._2.length == 3 && cold._1.nonEmpty)
+
+      SharedBuild.clearAll()
+      sweepStep(metric())
+      var warm: (Seq[Row], Seq[Antidote.TracePoint]) = null
+      val warmSteps = jobsUnder(stepFrame) { warm = run(metric(), 2) }
+      assert(warm._2 == cold._2, s"trace ${warm._2} vs cold ${cold._2}")
+      assert(warm._1 == cold._1, "final X differs from the cold run's")
+      assert(warmSteps > 0 && warmSteps < coldSteps,
+        s"step jobs: warm $warmSteps, cold $coldSteps")
+
+      // T = 1: iteration 0 is the only step, so the hit runs no step job
+      SharedBuild.clearAll()
+      sweepStep(metric())
+      assert(jobsUnder(stepFrame) { run(metric(), 1) } == 0)
+      SharedBuild.clearAll()
+      assert(jobsUnder(stepFrame) { run(metric(), 1) } > 0)
+    }
+  }
+
+  test("changing eta, swapping the group labels or another groups frame misses") {
+    SharedBuild.clearAll()
+    val m0 = AlsEngine.train(ratings.unionByName(x0), cfg)
+    def stepJobs(eta: Double, g: DataFrame, a: String, b: String): Int =
+      jobsUnder(stepFrame) {
+        Antidote.step(spark, ratings, x0, cfg, eta = eta,
+          metric = Metric.GroupUnfairness(g, a, b), model = Some(m0),
+          stats = Some(stats))
+      }
+    assert(stepJobs(1e4, groups, "BUILDING", "MACHINERY") > 0)
+    // a separately loaded, semantically equal groups frame hits
+    assert(stepJobs(1e4, groups, "BUILDING", "MACHINERY") == 0)
+    assert(stepJobs(2e4, groups, "BUILDING", "MACHINERY") > 0)
+    assert(stepJobs(1e4, groups, "MACHINERY", "BUILDING") > 0)
+    assert(stepJobs(1e4, groups.filter(col("user_id") % 2 === 0),
+      "BUILDING", "MACHINERY") > 0)
+    // U_ind on the same model is its own entry too
+    assert(jobsUnder(stepFrame) {
+      Antidote.step(spark, ratings, x0, cfg, eta = 1e4,
+        metric = Metric.IndividualUnfairness, model = Some(m0),
+        stats = Some(stats))
+    } > 0)
+    SharedBuild.clearAll()
+  }
+
+  test("the step memo's cap evicts the oldest entry and frees its checkpoint") {
+    SharedBuild.clearAll()
+    val sc = spark.sparkContext
+    val m0 = AlsEngine.train(ratings.unionByName(x0), cfg)
+    def stepIds(eta: Double): Set[Int] = {
+      val x1 = Antidote.step(spark, ratings, x0, cfg, eta = eta,
+        metric = Metric.IndividualUnfairness, model = Some(m0),
+        stats = Some(stats))
+      x1.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd.id }
+        .toSet
+    }
+    val ids = (1 to 5).map(i => stepIds(1e3 * i))
+    assert(ids.forall(_.size == 1) && ids.flatten.distinct.size == 5, ids)
+    val persisted = sc.getPersistentRDDs.keySet.toSet
+    assert((ids.head & persisted).isEmpty, "the evicted checkpoint is alive")
+    assert(!ids.head.exists(SharedBuild.owns))
+    assert(ids.tail.flatten.forall(id =>
+      persisted.contains(id) && SharedBuild.owns(id)))
+    assert(Antidote.stepMemo.ownedIds == ids.tail.flatten.toSet)
+    SharedBuild.clearAll()
+    assert((ids.flatten.toSet & sc.getPersistentRDDs.keySet.toSet).isEmpty)
+  }
+}
