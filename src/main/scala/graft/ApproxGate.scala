@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Scale gate for exact-percentile aggregates (sf1-ladder fix, VERDICT
@@ -18,9 +18,7 @@ import org.apache.spark.sql.functions._
   * metadata-cheap parquet count — deciding from a derived frame would
   * run real work just to choose a plan) so the oracle scales
   * (≤ ~1.5 M rows at sf0.1) keep the exact branch the DuckDB comparison
-  * requires, and the ladder scales (sf1+) get the sketch. Overridable
-  * for tests and ladder experiments via SPARK_GRAFT_APPROX_PCT=1 (force
-  * sketch) / =0 (force exact).
+  * requires, and the ladder scales (sf1+) get the sketch.
   */
 object ApproxGate {
   /** Base-table rows above which exact percentile switches to the
@@ -45,11 +43,7 @@ object ApproxGate {
     * list-scale a per-query count would be a real job each time. */
   def useApprox(s: org.apache.spark.sql.SparkSession, sfDir: String,
       table: String): Boolean =
-    sys.env.get("SPARK_GRAFT_APPROX_PCT") match {
-      case Some("1") => true
-      case Some("0") => false
-      case _ => Tables.countCached(s, sfDir, table) > pctRowThreshold
-    }
+    Tables.countCached(s, sfDir, table) > pctRowThreshold
 
   /** `percentile(c, p)` on the exact branch, `approx_percentile(c, p,
     * accuracy)` on the scaled branch. Exact `percentile` always yields

@@ -140,10 +140,9 @@ object Bench {
     // SPARK_GRAFT_SHUFFLE_PARTITIONS (e.g. 128 at sf10); AQE coalesces
     // small ones back, so oversizing costs little.
     val spark = Verify.session(cpus, sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS"))
-    // SPARK_GRAFT_ONLY=q1,q2 benches a subset (repeats allowed via
-    // SPARK_GRAFT_REPEAT) — for isolating noisy measurements.
+    // SPARK_GRAFT_ONLY=q1,q2 benches a subset — for isolating noisy
+    // measurements.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val repeat = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "1").toInt
     // SPARK_GRAFT_COLD=1 runs no warm line and clears every memo before
     // each query — each number then bills the full cost of computing
     // from parquet. SPARK_GRAFT_CACHE_TABLES=0 drops warm:tables, which
@@ -167,51 +166,46 @@ object Bench {
         .filter(w => cacheTables || w.name != "warm:tables")
         .map(w => w.name -> timed(w.name)(w.build(spark, sfDir)))
     // The keep-set is snapshotted AFTER warmup so the table cache
-    // survives every release pass (SPARK_GRAFT_RELEASE=0 restores the
-    // round-6 accumulate-forever mode).
-    val release = !sys.env.get("SPARK_GRAFT_RELEASE").contains("0")
+    // survives every release pass.
     val keep = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val selected = SparkEntry.queries
       .filter { case (n, _) => only.forall(_.contains(n)) }
     var sinceGc = 0
     val best2Sec = sys.env.get("SPARK_GRAFT_BEST2")
       .map(_.toDouble).getOrElse(2.5)
-    val results = warmResults ++
-      (1 to repeat).flatMap(i => selected.map {
-        case (n, f) => (if (repeat > 1) s"$n#$i" else n) -> f
-      }).map { case (name, fn) =>
-        if (cold) SharedBuild.clearAll()
-        val dt1 = timed(name)(fn(spark, sfDir).count())
-        // Small queries report best-of-2 (VERDICT r8 task 6): the
-        // single-JVM co-tenant noise floor swings small queries >2×
-        // between runs, swallowing real regressions; min-of-2 estimates
-        // the intrinsic cost (noise only ever ADDS time). Disabled in
-        // cold mode — the second run would be memo-warm — and for
-        // queries big enough that noise is relatively small.
-        // SPARK_GRAFT_BEST2 sets the threshold in seconds (0 = off;
-        // default 2.5 keeps the full-registry wall time inside any
-        // driver capture window; 5 is the stability-snapshot setting).
-        val dt =
-          if (dt1 >= 0 && !cold && dt1 < best2Sec) {
-            val dt2 = timed(name)(fn(spark, sfDir).count())
-            if (dt2 >= 0) math.min(dt1, dt2) else dt1
-          } else dt1
-        if (release) Verify.releaseUnowned(spark, keep)
-        // Deterministic GC cadence (billed OUTSIDE the per-query timer,
-        // like the release pass): lets ContextCleaner reclaim the shuffle
-        // files dead queries left behind before they tax the late-run
-        // tail. Skip the cadence at ≤8 cores (VERDICT r14 task 7): a full
-        // GC pause is ~4× of the 8-core run's per-query floor and distorts
-        // the driver's 8-vs-32-core scaling control; the 2-min periodic
-        // ContextCleaner GC (which the longer low-core run reaches more
-        // often) keeps reclaiming shuffle files there.
-        sinceGc += 1
-        if (sinceGc >= 64) {
-          sinceGc = 0
-          if (scala.util.Try(cpus.toInt).getOrElse(32) > 8) System.gc()
-        }
-        (name, dt)
+    val results = warmResults ++ selected.map { case (name, fn) =>
+      if (cold) SharedBuild.clearAll()
+      val dt1 = timed(name)(fn(spark, sfDir).count())
+      // Small queries report best-of-2 (VERDICT r8 task 6): the
+      // single-JVM co-tenant noise floor swings small queries >2×
+      // between runs, swallowing real regressions; min-of-2 estimates
+      // the intrinsic cost (noise only ever ADDS time). Disabled in
+      // cold mode — the second run would be memo-warm — and for
+      // queries big enough that noise is relatively small.
+      // SPARK_GRAFT_BEST2 sets the threshold in seconds (0 = off;
+      // default 2.5 keeps the full-registry wall time inside any
+      // stdout capture window; 5 is the stability-snapshot setting).
+      val dt =
+        if (dt1 >= 0 && !cold && dt1 < best2Sec) {
+          val dt2 = timed(name)(fn(spark, sfDir).count())
+          if (dt2 >= 0) math.min(dt1, dt2) else dt1
+        } else dt1
+      Verify.releaseUnowned(spark, keep)
+      // Deterministic GC cadence (billed OUTSIDE the per-query timer,
+      // like the release pass): lets ContextCleaner reclaim the shuffle
+      // files dead queries left behind before they tax the late-run
+      // tail. Skip the cadence at ≤8 cores (VERDICT r14 task 7): a full
+      // GC pause is ~4× of the 8-core run's per-query floor and distorts
+      // the 8-vs-32-core scaling control; the 2-min periodic
+      // ContextCleaner GC (which the longer low-core run reaches more
+      // often) keeps reclaiming shuffle files there.
+      sinceGc += 1
+      if (sinceGc >= 64) {
+        sinceGc = 0
+        if (scala.util.Try(cpus.toInt).getOrElse(32) > 8) System.gc()
       }
+      (name, dt)
+    }
     def r3(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     val errors = results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
     val total = results.map(_._2).filter(_ >= 0).sum
@@ -263,18 +257,17 @@ object Bench {
       // round 12: the ANN escapes for the registry's one cartesian and
       // the panel×corpus evaluation cross
       "q_mf_topk_recs_ann", "q_map_at_k_ann")
-    // In repeat mode every headline query matches `repeat` keys; keep only
-    // the last repeat (warm steady-state) so the short line stays bounded.
-    val headQs = results.filter { case (k, _) => headline.contains(k.takeWhile(_ != '#')) }
-      .groupBy(_._1.takeWhile(_ != '#')).map { case (base, reps) => base -> reps.last._2 }
+    val headQs = results.filter { case (k, _) => headline.contains(k) }
       .map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
     val short = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$headQs,"sf":"$sfDir","n_queries":${results.size},"queries_full":"target/bench_queries.json","errors":[${errors.mkString(",")}]}"""
     // Stamp the timing regime into the emitted JSON so ratio tooling can
     // refuse to compare maps produced under different regimes (best-of-2
-    // threshold, cold vs warm memos, table caching, repeat count) —
-    // cross-regime diffs report spurious speedups/regressions.
+    // threshold, cold vs warm memos, table caching) — cross-regime diffs
+    // report spurious speedups/regressions. "repeat" is always 1 now; it
+    // stays in the stamp so maps written before it was fixed compare
+    // without a regime warning.
     val regime = s"""{"best2_sec":${r3(best2Sec)},"cold":$cold,""" +
-      s""""cache_tables":$cacheTables,"repeat":$repeat}"""
+      s""""cache_tables":$cacheTables,"repeat":1}"""
     val full = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","regime":$regime,"errors":[${errors.mkString(",")}]}"""
     try {
       // Subset runs (SPARK_GRAFT_ONLY) go to a separate file so they can

@@ -26,7 +26,7 @@ object PlanDump {
           txt.getBytes("UTF-8"))
         println(s"[plandump] wrote ${q.name}_$suffix.txt")
       } catch { case e: Throwable =>
-        println(s"[plandump] ${q.name} FAILED: ${e.getMessage}")
+        println(s"[plandump] ${q.name} FAILED: ${Verify.cause(e)}")
       }
     }
     spark.stop()

@@ -11,11 +11,9 @@ package graft
   * frees. Gate the GC on the training input's row count: below the
   * threshold the cleaner's periodic pass (Bench pins it to 2 min) is
   * plenty; at and above it the eager GC is what keeps peak scratch at
-  * "one live train". `SPARK_GRAFT_SCRATCH_GC_MIN` overrides the
-  * threshold (rows; 0 = always GC). */
+  * "one live train". */
 object ScratchGc {
-  val minRows: Long = sys.env.get("SPARK_GRAFT_SCRATCH_GC_MIN")
-    .flatMap(_.toLongOption).getOrElse(20000000L)
+  val minRows: Long = 20000000L
 
   /** Run System.gc() only when `inputRows` says a train's scratch is
     * big enough that eager reclamation beats the GC pause. */

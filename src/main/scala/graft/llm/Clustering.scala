@@ -31,7 +31,7 @@ object Clustering {
     * centroid id), not a window — one shuffle on the point id. */
   def assign(points: DataFrame, vecCol: String, centroids: DataFrame)
       : DataFrame = {
-    val keep = points.columns.filterNot(_ == vecCol).map(col)
+    val keep = points.columns.toSeq.filterNot(_ == vecCol).map(col)
     points.crossJoin(broadcast(centroids))
       .withColumn("graft_d2", sqDist(col(vecCol), col("cvec")))
       .groupBy(keep: _*)
@@ -254,5 +254,5 @@ object Clustering {
   def wcss(points: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame): Double =
     assign(points.select(col(idCol), col(vecCol)), vecCol, centroids)
-      .agg(sum(col("d2"))).head.getDouble(0)
+      .agg(sum(col("d2"))).head().getDouble(0)
 }

@@ -83,7 +83,6 @@ object Dedup {
     * path; this MLlib form is the library-interop one. */
   def minhashPairs(docs: DataFrame, maxDist: Double = 0.6,
       numHashTables: Int = 2): DataFrame = {
-    val spark = docs.sparkSession
     val shingled = docs.select(col("doc_id"),
       expr("""transform(sequence(1, greatest(size(split(text,' ')) - 2, 1)),
              |  i -> concat_ws(' ', slice(split(text,' '), i, 3)))""".stripMargin)

@@ -586,13 +586,6 @@ object SimSearch {
       .limit(k)
   }
 
-  /** Build-and-search convenience form of [[pqTopK]]. */
-  def pqSearch(embs: DataFrame, probeId: Long, k: Int, dims: Int,
-      m: Int = 8, codebookSize: Int = 16, lloydIters: Int = 2,
-      rerank: Int = 50): DataFrame =
-    pqTopK(buildPqIndex(embs, dims, m, codebookSize, lloydIters),
-      embs, probeId, k, rerank)
-
   /** Exact top-k by squared L2 distance to `probeId`'s embedding, on the
     * fused one-walk `graft_l2sq` kernel (HOF fallback bit-equal). Same
     * shape as [[cosineTopK]]: broadcast probe, TakeOrderedAndProject —

@@ -503,7 +503,7 @@ object Antidote {
     * round-trip of X even at sf0.1). */
   private def polarizationStep(spark: SparkSession, ratings: DataFrame,
       x: DataFrame, cfg: AlsEngine.Config, eta: Double,
-      pretrained: Option[ALSModel] = None): DataFrame = {
+      pretrained: Option[ALSModel]): DataFrame = {
     import spark.implicits._
 
     val aug =

@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.Q
 import graft.Dsl._
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -12,8 +11,6 @@ import org.apache.spark.sql.types._
   * retention-policy sweeps. House determinism contract throughout.
   */
 object CurationQueries {
-
-  private val big38 = DecimalType(38, 0)
 
   /** Within-source boilerplate profile: the share of a source's distinct
     * (doc, 5-gram-shingle) occurrences whose shingle repeats across ≥25%
@@ -531,7 +528,6 @@ object CurationQueries {
       |  ROUND(CAST(score6 AS DOUBLE) / 1000000, 6) AS rake_score
       |FROM agg ORDER BY score6 DESC, phrase LIMIT 15""".stripMargin) {
     (s, d) =>
-    val big38 = DecimalType(38, 0)
     val stops = Seq("the", "a", "of", "and", "to")
     val toks = t(s, d, "documents")
       .select(col("doc_id"), split(col("text"), " ").as("sp"))

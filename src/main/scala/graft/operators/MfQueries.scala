@@ -359,7 +359,7 @@ object MfQueries {
       .orderBy("user_id", "item_id")
   }
 
-  private def evalBlock(alpha: Double, sfx: String): String =
+  private def evalBlock(sfx: String): String =
     s"""aug$sfx AS (SELECT * FROM ratings
        |  UNION ALL SELECT * FROM antidote$sfx),
        |um$sfx AS (SELECT user_id, avg(rating) AS mu FROM aug$sfx GROUP BY 1),
@@ -391,9 +391,9 @@ object MfQueries {
        |${Baseline.cte},
        |$statsCte,
        |${antidoteCte(0.01, "a")},
-       |${evalBlock(0.01, "a")},
+       |${evalBlock("a")},
        |${antidoteCte(0.05, "b")},
-       |${evalBlock(0.05, "b")}
+       |${evalBlock("b")}
        |${evalSelect(0.01, "a")}
        |UNION ALL
        |${evalSelect(0.05, "b")}
@@ -903,7 +903,7 @@ object MfQueries {
     import s.implicits._
     val disc = Seq((1, 1.0), (2, 0.6309297535714575), (3, 0.5),
       (4, 0.43067655807339306), (5, 0.38685280723454163)).toDF("dpos", "w")
-    def q9(posCol: String, w: Column): Column =
+    def q9(w: Column): Column =
       sum(when(w.isNotNull,
         round(col("rating") * w * 1000000000).cast(big38))
         .otherwise(lit(0).cast(big38)))
@@ -913,7 +913,7 @@ object MfQueries {
       .join(broadcast(disc.select(col("dpos").as("pi"), col("w").as("wi"))),
         col("ipos") === col("pi"), "left")
       .groupBy("user_id")
-      .agg(q9("pos", col("wd")).as("dcg9"), q9("ipos", col("wi")).as("idcg9"))
+      .agg(q9(col("wd")).as("dcg9"), q9(col("wi")).as("idcg9"))
     dcg.agg(count(lit(1)).as("n_users"),
       round(sum(round(col("dcg9").cast(DoubleType)
           / col("idcg9").cast(DoubleType) * 1000000000).cast(big38))

@@ -2,7 +2,6 @@ package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.sketch.BloomFilter
 
 /** Runtime Bloom-filter join pruning: when the build side of a join is too
   * large to broadcast as rows but its KEY SET fits a few MB of bits,

@@ -42,13 +42,6 @@ object StreamOps {
       .select(col("window.start").as("window_start"), col("event_type"),
         col("cnt"))
 
-  /** Sliding-window counts (size/slide). */
-  def slidingCounts(events: DataFrame, size: String, slide: String): DataFrame =
-    events
-      .groupBy(window(col("ts"), size, slide))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("window.start").as("w_start"), col("cnt"))
-
   /** Per-user session windows with a fixed inactivity gap. */
   def sessionize(events: DataFrame, gap: String): DataFrame =
     events

@@ -2,7 +2,6 @@ package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** Measurement harness (guide §1): time the phases of one seeded ALS
   * train at sf0.1 and attribute stage time, so the antidote family's

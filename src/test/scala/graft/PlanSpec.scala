@@ -196,4 +196,22 @@ class PlanSpec extends SparkTestBase {
     assert(filterOp.isDefined,
       s"no codegen'd Filter found in q_join_bloom plan:\n$p")
   }
+
+  test("PlanFacts counts the executed final plan once, not AQE's initial " +
+      "plan too") {
+    import org.apache.spark.sql.execution.adaptive.ShuffleQueryStageExec
+    def executed(q: Q) = {
+      val qe = q.run(spark, sf).queryExecution
+      qe.executedPlan.execute().count()
+      qe
+    }
+    // one join: AQE's printed plan string shows it twice (final + initial)
+    val join = PlanFacts.executed(executed(Relational.qJoinInner))
+    assert(join.broadcastJoins == 1, join)
+    val agg = executed(Aggregates.qAggGroupby)
+    val stages = PlanFacts.nodes(agg.executedPlan)
+      .count(_.isInstanceOf[ShuffleQueryStageExec])
+    assert(stages >= 1 && PlanFacts.executed(agg).exchanges == stages,
+      s"${PlanFacts.executed(agg)} vs $stages shuffle query stages")
+  }
 }

@@ -1,13 +1,5 @@
 package graft
 
-import org.apache.spark.sql.catalyst.plans.logical.{
-  Aggregate, Generate, GlobalLimit, Join, LocalLimit, LocalRelation,
-  LogicalPlan, OneRowRelation, Union, Window => LWindow}
-import org.apache.spark.sql.execution.{SparkPlan, UnionExec}
-import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-import org.apache.spark.sql.execution.joins.{
-  CartesianProductExec, ShuffledHashJoinExec, SortMergeJoinExec}
-
 /** Registry-wide physical/logical posture sweep (VERDICT r7 task 3): the
   * house rules that were previously enforced only by review are asserted
   * here over EVERY registered query, so a new query that violates them
@@ -25,34 +17,12 @@ import org.apache.spark.sql.execution.joins.{
   *  (c) no shuffled join (SMJ / shuffled-hash) where one side is a
   *      provably one-row panel — a one-row side must broadcast.
   *
-  * The sweep inspects optimizedPlan + sparkPlan only (no job execution);
-  * queries whose construction itself executes (streaming replays, ALS
-  * trains) pay that cost once, same as any other suite that touches them.
+  * The rules read [[PlanSweep]]'s facts (rule (a) on optimizedPlan, rules
+  * (b) and (c) on AQE's initialPlan), the same registry sweep
+  * PlanDriftSpec reads: no job runs beyond what query construction
+  * itself executes.
   */
 class PostureSpec extends SparkTestBase {
-
-  /** Subtree provably produces a bounded (small-constant) row count. */
-  private def bounded(p: LogicalPlan): Boolean = p match {
-    case _: GlobalLimit | _: LocalLimit => true
-    case _: LocalRelation | _: OneRowRelation => true
-    case a: Aggregate if a.groupingExpressions.isEmpty => true
-    case j: Join => bounded(j.left) && bounded(j.right)
-    case u: Union => u.children.forall(bounded)
-    case _: Generate => false // explode expands rows
-    case u if u.children.size == 1 => bounded(u.children.head)
-    case _ => false
-  }
-
-  /** Physical subtree provably produces at most one row (global agg,
-    * carried through row-preserving unary operators). */
-  private def oneRow(p: SparkPlan): Boolean = p match {
-    case a: BaseAggregateExec => a.groupingExpressions.isEmpty
-    case _: org.apache.spark.sql.execution.GenerateExec => false
-    case _: org.apache.spark.sql.execution.ExpandExec => false
-    case _: UnionExec => false
-    case u if u.children.size == 1 => oneRow(u.children.head)
-    case _ => false
-  }
 
   /** Queries whose unpartitioned windows are individually adjudicated:
     * every entry's global window runs over a frame bounded by something
@@ -115,45 +85,17 @@ class PostureSpec extends SparkTestBase {
 
   test("registry posture: windows partitioned, cartesians allowlisted, " +
       "one-row panels broadcast") {
-    val violations = scala.collection.mutable.ArrayBuffer.empty[String]
-    SparkEntry.registry.foreach { q =>
-      try {
-        val qe = q.run(spark, sf).queryExecution
-        val opt = qe.optimizedPlan
-        val phys = qe.sparkPlan
-        if (!windowAllowlist.contains(q.name)) {
-          opt.foreach {
-            case w: LWindow if w.partitionSpec.isEmpty && !bounded(w.child) =>
-              violations += s"${q.name}: unpartitioned window over " +
-                s"unbounded input (${w.child.nodeName})"
-            case _ =>
-          }
-        }
-        if (!cartesianAllowlist.contains(q.name)) {
-          phys.foreach {
-            case _: CartesianProductExec =>
-              violations += s"${q.name}: CartesianProduct outside allowlist"
-            case _ =>
-          }
-        }
-        if (!oneRowJoinAllowlist.contains(q.name)) {
-          phys.foreach {
-            case j: SortMergeJoinExec
-                if oneRow(j.left) || oneRow(j.right) =>
-              violations += s"${q.name}: sort-merge join with a one-row " +
-                "side (should broadcast)"
-            case j: ShuffledHashJoinExec
-                if oneRow(j.left) || oneRow(j.right) =>
-              violations += s"${q.name}: shuffled-hash join with a " +
-                "one-row side (should broadcast)"
-            case _ =>
-          }
-        }
-      } catch {
-        case e: Throwable =>
-          violations += s"${q.name}: sweep error ${e.getClass.getSimpleName}: " +
-            s"${Option(e.getMessage).getOrElse("").take(200)}"
-      }
+    val violations = PlanSweep(sf).flatMap {
+      case (q, Left(cause)) => Seq(s"$q: sweep error $cause")
+      case (q, Right(f)) =>
+        (if (windowAllowlist.contains(q)) Nil
+         else f.globalWindows.map(c =>
+           s"$q: unpartitioned window over unbounded input ($c)")) ++
+        (if (cartesianAllowlist.contains(q) || f.cartesians == 0) Nil
+         else Seq(s"$q: CartesianProduct outside allowlist")) ++
+        (if (oneRowJoinAllowlist.contains(q)) Nil
+         else f.oneRowShuffledJoins.map(j =>
+           s"$q: $j with a one-row side (should broadcast)"))
     }
     assert(violations.isEmpty,
       s"\n${violations.size} posture violations:\n${violations.mkString("\n")}")
@@ -164,10 +106,8 @@ class PostureSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     val planted = Tables.load(spark, sf, "lineitem")
       .withColumn("rn", row_number().over(W.orderBy(col("l_orderkey"))))
-    val bad = planted.queryExecution.optimizedPlan.collect {
-      case w: LWindow if w.partitionSpec.isEmpty && !bounded(w.child) => w
-    }
-    assert(bad.nonEmpty, "planted global window was not detected")
+    assert(PlanFacts.initial(planted.queryExecution).globalWindows.nonEmpty,
+      "planted global window was not detected")
   }
 
   test("the sweep actually catches a planted one-row SMJ side") {
@@ -183,12 +123,8 @@ class PostureSpec extends SparkTestBase {
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val j = big.join(one, Seq("k"))
-      val hits = j.queryExecution.sparkPlan.collect {
-        case jn: SortMergeJoinExec if oneRow(jn.left) || oneRow(jn.right) => jn
-        case jn: ShuffledHashJoinExec
-            if oneRow(jn.left) || oneRow(jn.right) => jn
-      }
-      assert(hits.nonEmpty, "planted one-row shuffled join was not detected")
+      assert(PlanFacts.initial(j.queryExecution).oneRowShuffledJoins.nonEmpty,
+        "planted one-row shuffled join was not detected")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 }
