@@ -24,23 +24,6 @@ object Bench {
 
   private val mfFamily = prefixed("q_mf", "q_antidote", "q_metric", "q_ratings")
 
-  /** Run independent jobs on an n-thread pool (guide §2.6: a chain of
-    * small jobs leaves most cores idle), failing fast with the ORIGINAL
-    * cause (ADVICE r14): `get()` wraps it in ExecutionException, and a
-    * plain shutdown() would let the remaining jobs run on after the first
-    * failure. */
-  private def concurrently(n: Int)(jobs: Seq[() => Unit]): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
-    try {
-      val futs = jobs.map(f => pool.submit(
-        new java.util.concurrent.Callable[Unit] { def call(): Unit = f() }))
-      try futs.foreach(_.get())
-      catch { case e: java.util.concurrent.ExecutionException =>
-        pool.shutdownNow(); throw Option(e.getCause).getOrElse(e)
-      }
-    } finally pool.shutdown()
-  }
-
   /** Cold/warm attribution (PERF.md "Bench semantics"): warm mode (the
     * default) builds each shared memo UP FRONT as its own timed line, in
     * this order, so no query's number silently includes (or double-pays)
@@ -56,7 +39,7 @@ object Bench {
     // substitutes the identical logical plan, Verify never caches. Each
     // table's cache+count is its own job, 4 in flight.
     WarmLine("warm:tables", SparkEntry.queries.keySet, (s, d) =>
-      concurrently(4)(Tables.all.map(n =>
+      Concurrently(4)(Tables.all.map(n =>
         () => { Tables.load(s, d, n).cache().count(); () }))),
     // ShingleStore: the raw-document shingle consumers split two explode
     // configs; each config's bucketed-table WRITE is its own line.
@@ -103,7 +86,7 @@ object Bench {
       val embs = Tables.load(s, d, "embeddings")
       val nl = math.max(8,
         math.min(4096, math.round(embs.count() / 250.0).toInt))
-      concurrently(3)(Seq(
+      Concurrently(3)(Seq(
         () => { llm.SimSearch.ivfIndexCached(embs, d, nLists = 8,
           lloydIters = 2); () },
         () => { llm.SimSearch.pqIndexCached(embs, d, dims = 64, m = 16,

@@ -42,14 +42,17 @@ object AlsEngine {
   def trainCachedOnRatingsView(spark: org.apache.spark.sql.SparkSession,
       sfDir: String, cfg: Config = Config()): ALSModel =
     models((spark, sfDir, cfg)) {
+      // built here, not through the train memo: this memo alone owns the
+      // base model's two factor checkpoints, so the train memo's cap can
+      // never free them under a live entry
       val view = Ratings.viewCached(spark, sfDir)
-      val m = org.apache.spark.ml.recommendation.GraftAlsLineage
-        .fence(train(view, cfg))
+      val (_, n) = digestBounds(view, "train")
+      val m = fit(view, cfg, None, n)
       // the unfenced model and its train shuffles are now dead
       // references — reclaim the scratch before the next consumer
       // piles its own on top (scale-gated: at bench rungs the scratch
       // is MBs and the forced full GC costs more than it frees)
-      graft.ScratchGc.maybe(view.count())
+      graft.ScratchGc.maybe(n)
       m
     }
 
@@ -134,8 +137,33 @@ object AlsEngine {
     * ALS wants int ids; ids outside Int range FAIL LOUDLY here (the cast
     * would otherwise wrap silently) — route big id spaces through
     * `trainCompacted`. */
-  def train(ratings: DataFrame, cfg: Config = Config()): ALSModel = {
-    val (bounds, n) = digestBounds(ratings, "train")
+  def train(ratings: DataFrame, cfg: Config = Config()): ALSModel =
+    memoized(ratings, cfg, None)
+
+  /** Implicit-feedback ALS (Hu-Koren-Volinsky): the rating column is a
+    * CONFIDENCE signal, not a value to reproduce — the factorization fits
+    * binary preference weighted by 1 + α·confidence. The variant every
+    * view/click/dwell pipeline uses when no explicit ratings exist; same
+    * id contract and determinism (fixed seed) as `train`. */
+  def trainImplicit(ratings: DataFrame, cfg: Config = Config(),
+      alpha: Double = 1.0): ALSModel =
+    memoized(ratings, cfg, Some(alpha))
+
+  /** The one train body: one bounds+digest pass (id-range check, block
+    * sizing and the memo key), then the fenced [[fit]] through the train
+    * memo. `implicitAlpha` selects implicit feedback. */
+  private def memoized(ratings: DataFrame, cfg: Config,
+      implicitAlpha: Option[Double]): ALSModel = {
+    val (bounds, n) = digestBounds(ratings,
+      implicitAlpha.fold("train")(_ => "trainImplicit"))
+    val kind = implicitAlpha.fold("explicit")(a => s"implicit:$a")
+    trains(memoKey(ratings, bounds, kind, cfg))(
+      fit(ratings, cfg, implicitAlpha, n))
+  }
+
+  /** The seeded ALS fit of `n` ratings, lineage-fenced. */
+  private def fit(ratings: DataFrame, cfg: Config,
+      implicitAlpha: Option[Double], n: Long): ALSModel = {
     val blocks = sizedBlocks(n)
     // ALS's iterative lineage needs periodic checkpoints (checkpointInterval
     // is silently a no-op without a checkpoint dir) — without this, deep
@@ -146,7 +174,7 @@ object AlsEngine {
       col("user_id").cast(IntegerType).as("user"),
       col("item_id").cast(IntegerType).as("item"),
       col("rating").cast(FloatType).as("rating"))
-    def fit: ALSModel = new ALS()
+    val als = new ALS()
       .setRank(cfg.rank)
       .setRegParam(cfg.regParam)
       .setMaxIter(cfg.maxIter)
@@ -154,41 +182,9 @@ object AlsEngine {
       .setNumUserBlocks(blocks).setNumItemBlocks(blocks)
       .setUserCol("user").setItemCol("item").setRatingCol("rating")
       .setColdStartStrategy("drop")
-      .fit(prepared)
-    trains(memoKey(ratings, bounds, "explicit", cfg))(
-      org.apache.spark.ml.recommendation.GraftAlsLineage.fence(fit))
-  }
-
-  /** Implicit-feedback ALS (Hu-Koren-Volinsky): the rating column is a
-    * CONFIDENCE signal, not a value to reproduce — the factorization fits
-    * binary preference weighted by 1 + α·confidence. The variant every
-    * view/click/dwell pipeline uses when no explicit ratings exist; same
-    * id contract and determinism (fixed seed) as `train`. */
-  def trainImplicit(ratings: DataFrame, cfg: Config = Config(),
-      alpha: Double = 1.0): ALSModel = {
-    // One bounds+count aggregate (same shape as train): id-range check,
-    // block sizing and the train-memo digest share a single pass.
-    val (bounds, n) = digestBounds(ratings, "trainImplicit")
-    val blocks = sizedBlocks(n)
-    val sc = ratings.sparkSession.sparkContext
-    if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir("target/checkpoints")
-    val prepared = ratings.select(
-      col("user_id").cast(IntegerType).as("user"),
-      col("item_id").cast(IntegerType).as("item"),
-      col("rating").cast(FloatType).as("rating"))
-    def fit: ALSModel = new ALS()
-      .setRank(cfg.rank)
-      .setRegParam(cfg.regParam)
-      .setMaxIter(cfg.maxIter)
-      .setSeed(cfg.seed)
-      .setImplicitPrefs(true)
-      .setAlpha(alpha)
-      .setNumUserBlocks(blocks).setNumItemBlocks(blocks)
-      .setUserCol("user").setItemCol("item").setRatingCol("rating")
-      .setColdStartStrategy("drop")
-      .fit(prepared)
-    trains(memoKey(ratings, bounds, s"implicit:$alpha", cfg))(
-      org.apache.spark.ml.recommendation.GraftAlsLineage.fence(fit))
+    org.apache.spark.ml.recommendation.GraftAlsLineage.fence(
+      implicitAlpha.fold(als)(a => als.setImplicitPrefs(true).setAlpha(a))
+        .fit(prepared))
   }
 
   /** Stable dense id dictionary: original id → contiguous INT index,
@@ -219,22 +215,8 @@ object AlsEngine {
     // builds overlap as concurrent jobs (guide §1.2, §2.6). Values are
     // unchanged: the dictionaries are deterministic and the checkpoint
     // only fences lineage.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val (uDict, iDict) =
-      try {
-        val uF = pool.submit(new java.util.concurrent.Callable[DataFrame] {
-          def call(): DataFrame =
-            idDictionary(ratings, "user_id").localCheckpoint()
-        })
-        val iF = pool.submit(new java.util.concurrent.Callable[DataFrame] {
-          def call(): DataFrame =
-            idDictionary(ratings, "item_id").localCheckpoint()
-        })
-        try (uF.get(), iF.get())
-        catch { case e: java.util.concurrent.ExecutionException =>
-          pool.shutdownNow(); throw Option(e.getCause).getOrElse(e)
-        }
-      } finally pool.shutdown()
+    val Seq(uDict, iDict) = graft.Concurrently(2)(Seq("user_id", "item_id")
+      .map(c => () => idDictionary(ratings, c).localCheckpoint()))
     val compacted = ratings
       .join(uDict.withColumnRenamed("idx", "__u"), "user_id")
       .join(iDict.withColumnRenamed("idx", "__i"), "item_id")

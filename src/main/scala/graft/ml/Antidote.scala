@@ -34,8 +34,8 @@ object Antidote {
     * by it) and the item count (the [[autoCap]] policy). */
   final case class ViewStats(nUsers: Long, maxUserId: Long, nItems: Long)
 
-  /** [[ViewStats]] in one aggregate — computed once per [[optimize]] or
-    * sweep call and passed down through the `stats` overloads. */
+  /** [[ViewStats]] in one aggregate — computed once per view and passed
+    * to every init, step and [[optimize]] call. */
   def userStats(ratings: DataFrame): ViewStats = {
     val row = ratings.agg(countDistinct(col("user_id")),
       max(col("user_id")), countDistinct(col("item_id"))).head()
@@ -70,44 +70,33 @@ object Antidote {
 
   /** Auto-size the cap so the antidote block contributes at most
     * `maxCells` rows to the ALS train input: None (dense X, the paper's
-    * exact form) while k̃·m fits, top-⌊maxCells/k̃⌋ items beyond. The
-    * default keeps the fixture scales exactly dense (sf0.1: k̃·m ≈ 55 k)
-    * and bounds sf1 α = 0.05 (k̃ ≈ 7.5 k) to ~2 M antidote cells. */
-  def autoCap(ratings: DataFrame, alpha: Double,
-      maxCells: Long = maxAntidoteCells): Option[Int] =
-    autoCap(userStats(ratings), alpha, maxCells)
-
-  /** [[autoCap]]'s default bound on the antidote block's ALS input rows. */
-  val maxAntidoteCells: Long = 2000000L
-
+    * exact form) while k̃·m fits, top-⌊maxCells/k̃⌋ items beyond.
+    * [[maxAntidoteCells]] keeps the fixture scales exactly dense (sf0.1:
+    * k̃·m ≈ 55 k) and bounds sf1 α = 0.05 (k̃ ≈ 7.5 k) to ~2 M antidote
+    * cells. */
   def autoCap(stats: ViewStats, alpha: Double, maxCells: Long): Option[Int] = {
     val kTilde = math.ceil(alpha * stats.nUsers).toLong
     if (kTilde <= 0 || kTilde * stats.nItems <= maxCells) None
     else Some(math.max(1L, maxCells / kTilde).toInt)
   }
 
-  /** k̃ = ⌈α·n_users⌉ synthetic users (ids above max real id) × all items. */
-  def init(spark: SparkSession, ratings: DataFrame, alpha: Double): DataFrame =
-    init(spark, ratings, alpha, userStats(ratings))
+  /** [[autoCap]]'s bound on the antidote block's ALS input rows. */
+  val maxAntidoteCells: Long = 2000000L
 
-  def init(spark: SparkSession, ratings: DataFrame, alpha: Double,
-      stats: ViewStats): DataFrame =
-    initCapped(spark, ratings, alpha, stats, None)
-
-  /** [[init]] with the §4.3 item-support cap: synthetic users rate only
-    * the top-`itemCap` items by support (None = dense, the paper's exact
-    * X). */
-  def initCapped(spark: SparkSession, ratings: DataFrame, alpha: Double,
-      stats: ViewStats, itemCap: Option[Int]): DataFrame = {
-    val k = math.ceil(alpha * stats.nUsers).toLong
-    val items = itemCap.map(topSupportItems(ratings, _))
-      .getOrElse(ratings.select("item_id").distinct())
-    spark.range(1, k + 1)
+  /** The k̃ = ⌈α·n_users⌉ synthetic users (ids above the largest real id)
+    * crossed with `items`, which carries the columns each rates. */
+  private def syntheticUsers(spark: SparkSession, alpha: Double,
+      stats: ViewStats, items: DataFrame): DataFrame =
+    spark.range(1, math.ceil(alpha * stats.nUsers).toLong + 1)
       .select((lit(stats.maxUserId) + col("id")).as("user_id"))
       .crossJoin(broadcast(items))
+
+  /** k̃ synthetic users × all items, rated by [[ratingFormula]]. */
+  def init(spark: SparkSession, ratings: DataFrame, alpha: Double,
+      stats: ViewStats): DataFrame =
+    syntheticUsers(spark, alpha, stats, ratings.select("item_id").distinct())
       .select(col("user_id"), col("item_id"),
         ratingFormula(col("user_id"), col("item_id")).as("rating"))
-  }
 
   /** Heuristic antidote initializer (paper §4.3's cheap alternative to
     * gradient search): each of the k̃ synthetic users rates every item at
@@ -116,37 +105,23 @@ object Antidote {
     * at the consensus pulls the re-factorization toward the mean
     * prediction, which shrinks prediction variance — i.e. it descends
     * polarization before any ALS-in-the-loop gradient step, at the cost
-    * of ONE item-mean aggregate. Use it as the warm start for
-    * [[optimize]] via `initFn = Antidote.initHeuristic`. */
-  def initHeuristic(spark: SparkSession, ratings: DataFrame,
-      alpha: Double): DataFrame =
-    initHeuristicCapped(spark, ratings, alpha, None)
-
+    * of ONE item-mean aggregate. Pass it as [[optimize]]'s X₀ for the
+    * warm start.
+    *
+    * With `itemCap` (the §4.3 item-support cap, see [[topSupportItems]] /
+    * [[autoCap]]) the synthetic users rate only the top-`itemCap` items by
+    * support — X becomes k̃×M instead of k̃×m, bounding the ALS re-train
+    * input (the only data-sized consumer of X) at any scale. None is the
+    * paper's dense X. */
   def initHeuristic(spark: SparkSession, ratings: DataFrame, alpha: Double,
-      stats: ViewStats): DataFrame =
-    initHeuristicCapped(spark, ratings, alpha, stats, None)
-
-  /** [[initHeuristic]] with the §4.3 item-support cap (see
-    * [[topSupportItems]] / [[autoCap]]): the synthetic users rate only
-    * the top-`itemCap` items by support, at those items' mean rating —
-    * X becomes k̃×M instead of k̃×m, bounding the ALS re-train input
-    * (the only data-sized consumer of X) at any scale. */
-  def initHeuristicCapped(spark: SparkSession, ratings: DataFrame,
-      alpha: Double, itemCap: Option[Int]): DataFrame =
-    initHeuristicCapped(spark, ratings, alpha, userStats(ratings), itemCap)
-
-  def initHeuristicCapped(spark: SparkSession, ratings: DataFrame,
-      alpha: Double, stats: ViewStats, itemCap: Option[Int]): DataFrame = {
-    val k = math.ceil(alpha * stats.nUsers).toLong
+      stats: ViewStats, itemCap: Option[Int]): DataFrame = {
     val means = ratings.groupBy("item_id")
       .agg(round(least(lit(5.0), greatest(lit(1.0), avg(col("rating")))), 6)
         .as("rating"))
     val itemMeans = itemCap
       .map(m => means.join(topSupportItems(ratings, m), "item_id"))
       .getOrElse(means)
-    spark.range(1, k + 1)
-      .select((lit(stats.maxUserId) + col("id")).as("user_id"))
-      .crossJoin(broadcast(itemMeans))
+    syntheticUsers(spark, alpha, stats, itemMeans)
       .select(col("user_id"), col("item_id"), col("rating"))
   }
 
@@ -155,11 +130,11 @@ object Antidote {
     * the trace point's `polarization(model)` and the next
     * `polarizationStep(model)` — and the baseline/metric queries re-read
     * the memoized base model's moments per query. The moments are one
-    * deterministic k+k² reduction per model; keying weakly on the model
-    * instance (models are themselves memoized) dedupes the recomputation
-    * without pinning models the trainers have dropped. */
-  private val momentsCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[ALSModel, Moments]())
+    * deterministic k+k² reduction per model; keying on the model instance
+    * (the train memos return one instance per model) dedupes the
+    * recomputation. At most 16 entries, like the train memo; the entries
+    * hold driver-side k×k matrices, no blocks. */
+  private val momentsMemo = graft.SharedBuild[ALSModel, Moments](cap = 16)()
 
   /** The user-factor count n, the mean user factor ū and the mean
     * outer-product second moment S = E[u uᵀ]. */
@@ -168,15 +143,8 @@ object Antidote {
 
   /** [[Moments]] computed distributedly (k and k² cells — constant-size
     * reductions), memoized per model instance. */
-  def factorMoments(model: ALSModel): Moments = {
-    val hit = momentsCache.get(model)
-    if (hit != null) hit
-    else {
-      val computed = factorMomentsUncached(model)
-      momentsCache.put(model, computed)
-      computed
-    }
-  }
+  def factorMoments(model: ALSModel): Moments =
+    momentsMemo(model)(factorMomentsUncached(model))
 
   private def factorMomentsUncached(model: ALSModel): Moments = {
     val k = model.rank
@@ -345,7 +313,8 @@ object Antidote {
     new ModelEval(pred, lu, TracePoint(obj, ls.rmse6), ls)
   }
 
-  /** Full Alg. 1 loop: init X, then `steps` projected-GD iterations, each
+  /** Full Alg. 1 loop from the antidote block `x0` ([[init]] or
+    * [[initHeuristic]]): `steps` projected-GD iterations, each
     * re-factorizing [R; X] and descending the chosen metric. Returns the
     * final X and the (objective, rmse) trace — one point per model, so
     * metric-vs-budget AND rmse-vs-budget curves fall out of one run.
@@ -356,18 +325,15 @@ object Antidote {
     * halving the loop's dominant cost vs the naive train-per-call shape.
     * Per model, one cached known-cell pass feeds ONE evaluation action
     * (trace point, step constants and U_a together) and the step's one
-    * materialization; the view's scalars are computed once per call.
-    * Under U_ind / U_grp each step reads through [[stepUnfairness]]'s
-    * memo, so an iteration another caller already stepped (the sweep's
-    * α = 0.01 branch is the U_grp trace's iteration 0) costs no job; the
-    * returned X is then the memo's checkpoint. */
-  def optimize(spark: SparkSession, ratings: DataFrame, alpha: Double,
-      steps: Int, cfg: AlsEngine.Config = AlsEngine.Config(),
-      eta: Double = 1e4, metric: Metric = Metric.Polarization,
-      initFn: (SparkSession, DataFrame, Double, ViewStats) => DataFrame = init,
-      stats: Option[ViewStats] = None): (DataFrame, Seq[TracePoint]) = {
-    val view = stats.getOrElse(userStats(ratings))
-    var x = initFn(spark, ratings, alpha, view).cache()
+    * materialization. Under U_ind / U_grp each step reads through
+    * [[stepUnfairness]]'s memo, so an iteration another caller already
+    * stepped (the sweep's α = 0.01 branch is the U_grp trace's iteration
+    * 0) costs no job; the returned X is then the memo's checkpoint. */
+  def optimize(spark: SparkSession, ratings: DataFrame, x0: DataFrame,
+      steps: Int, stats: ViewStats,
+      cfg: AlsEngine.Config = AlsEngine.Config(), eta: Double = 1e4,
+      metric: Metric = Metric.Polarization): (DataFrame, Seq[TracePoint]) = {
+    var x = x0.cache()
     val trace = Seq.newBuilder[TracePoint]
     for (t <- 0 to steps) {
       val model = AlsEngine.train(ratings.unionByName(x), cfg)
@@ -377,15 +343,14 @@ object Antidote {
           case Metric.Polarization =>
             val ev = evaluateModel(model, ratings, metric, None)
             trace += ev.point
-            val next = polarizationStep(spark, ratings, x, cfg, eta,
-              Some(model)).cache()
+            val next = polarizationStep(spark, x, cfg, eta, model).cache()
             // fill the cache (one job; a count would add an aggregation
             // stage) before unpersisting the predecessor
             next.foreachPartition((_: Iterator[Row]) => ())
             next
           case m =>
             val (point, next) = stepUnfairness(spark, ratings, x, cfg, eta,
-              m, model, view.maxUserId)
+              m, model, stats.maxUserId)
             trace += point
             next
         }
@@ -399,28 +364,19 @@ object Antidote {
   }
 
   /** One projected-GD step on X (Alg. 1) for the chosen metric, then
-    * box-project into [1,5]. Returns the updated antidote rows. Pass
-    * `model` when [R; X] is already factorized (the optimize loop): the
-    * step linearizes around exactly that model instead of retraining;
-    * pass `stats` when the caller already holds the view's scalars.
+    * box-project into [1,5]. Returns the updated antidote rows. The step
+    * linearizes around `model`, the ALS train of [R; X].
     *
     * The unfairness steps read through [[stepUnfairness]]'s memo and
     * return its local checkpoint, which the memo owns: callers must not
     * free it. */
   def step(spark: SparkSession, ratings: DataFrame, x: DataFrame,
+      model: ALSModel, stats: ViewStats,
       cfg: AlsEngine.Config = AlsEngine.Config(), eta: Double = 1.0,
-      metric: Metric = Metric.Polarization,
-      model: Option[ALSModel] = None,
-      stats: Option[ViewStats] = None): DataFrame = metric match {
-    case Metric.Polarization =>
-      polarizationStep(spark, ratings, x, cfg, eta, model)
+      metric: Metric = Metric.Polarization): DataFrame = metric match {
+    case Metric.Polarization => polarizationStep(spark, x, cfg, eta, model)
     case m =>
-      val aug =
-        if (model.isEmpty) Some(ratings.unionByName(x).cache()) else None
-      val trained = model.getOrElse(AlsEngine.train(aug.get, cfg))
-      val mx = stats.getOrElse(userStats(ratings)).maxUserId
-      try stepUnfairness(spark, ratings, x, cfg, eta, m, trained, mx)._2
-      finally aug.foreach(_.unpersist())
+      stepUnfairness(spark, ratings, x, cfg, eta, m, model, stats.maxUserId)._2
   }
 
   /** The inputs one unfairness step reads besides X, which the model
@@ -501,14 +457,9 @@ object Antidote {
     * join + groupBy, the update x−η·v_i·w_a a zip_with). This is what
     * makes the step valid at 100 TB (and ~3× faster than a driver
     * round-trip of X even at sf0.1). */
-  private def polarizationStep(spark: SparkSession, ratings: DataFrame,
-      x: DataFrame, cfg: AlsEngine.Config, eta: Double,
-      pretrained: Option[ALSModel]): DataFrame = {
+  private def polarizationStep(spark: SparkSession, x: DataFrame,
+      cfg: AlsEngine.Config, eta: Double, model: ALSModel): DataFrame = {
     import spark.implicits._
-
-    val aug =
-      if (pretrained.isEmpty) Some(ratings.unionByName(x).cache()) else None
-    val model = pretrained.getOrElse(AlsEngine.train(aug.get, cfg))
     val k = cfg.rank
 
     // n (the user-factor count) rides on the memoized moments, m on the
@@ -559,13 +510,11 @@ object Antidote {
     val dot = aggregate(
       zip_with(col("features"), col("w"), (p, q) => p.cast(DoubleType) * q),
       lit(0.0), (acc, v) => acc + v)
-    val out = xi.join(broadcast(vdf), "item_idx")
+    xi.join(broadcast(vdf), "item_idx")
       .join(broadcast(wdf), "user_id")
       .select(col("user_id"), col("item_id"),
         round(least(lit(5.0), greatest(lit(1.0),
           col("rating") - lit(eta) * dot)), 6).as("rating"))
-    aug.foreach(_.unpersist())
-    out
   }
 
   /** Unfairness step (paper Alg. 1 for U_ind / U_grp): the antidote data

@@ -353,9 +353,14 @@ object MfQueries {
 
   val qAntidoteStep = Q.noOracle("q_antidote_step") { (s, d) =>
     val ratings = Ratings.view(s, d)
-    val x0 = Antidote.init(s, ratings, 0.01, Antidote.userStatsCached(s, d))
-    // 5 ALS sweeps are plenty for the V the gradient linearizes around
-    Antidote.step(s, ratings, x0, AlsEngine.Config(maxIter = 5))
+    val stats = Antidote.userStatsCached(s, d)
+    val x0 = Antidote.init(s, ratings, 0.01, stats)
+    // 5 ALS sweeps are plenty for the V the gradient linearizes around;
+    // [R; X₀] is cached for the train's digest pass and its fit
+    val cfg = AlsEngine.Config(maxIter = 5)
+    val aug = ratings.unionByName(x0).cache()
+    val model = try AlsEngine.train(aug, cfg) finally aug.unpersist()
+    Antidote.step(s, ratings, x0, model, stats, cfg)
       .orderBy("user_id", "item_id")
   }
 
@@ -579,9 +584,7 @@ object MfQueries {
       // leaves an unpaired cache registration behind
       val ratings = Ratings.viewCached(s, d)
       val cfg = AlsEngine.Config(maxIter = 3)
-      val groups = t(s, d, "customer")
-        .select(col("c_custkey").as("user_id"),
-          col("c_mktsegment").as("grp"))
+      val gap = segmentGap(s, d)
       // Scratch policy is scale-derived from the same threshold both
       // ways (ScratchGc): at big rungs each train's shuffle scratch is
       // tens of GB, so budgets run SEQUENTIALLY with eager GC between
@@ -610,7 +613,7 @@ object MfQueries {
             // the uncapped sweep there), top-M-items support beyond, so
             // the α=0.05 branch's ALS input stays bounded at sf1+.
             val cap = Antidote.autoCap(stats, alpha, Antidote.maxAntidoteCells)
-            val x0 = Antidote.initHeuristicCapped(s, ratings, alpha, stats, cap)
+            val x0 = Antidote.initHeuristic(s, ratings, alpha, stats, cap)
             // Train [R; X0] explicitly (content-digest memoized +
             // lineage-fenced inside AlsEngine.train) and hand the step
             // that model, mirroring optimize's iteration shape. The step
@@ -623,9 +626,8 @@ object MfQueries {
             // scratch (> 64 GB) because consumed shuffles of earlier
             // trains stayed live.
             val model0 = AlsEngine.train(ratings.unionByName(x0), cfg)
-            val x1 = Antidote.step(s, ratings, x0, cfg, eta = 1e4,
-              metric = Metric.GroupUnfairness(groups, "BUILDING",
-                "MACHINERY"), model = Some(model0), stats = Some(stats))
+            val x1 = Antidote.step(s, ratings, x0, model0, stats, cfg,
+              eta = 1e4, metric = gap)
             // x1 is materialized, so the heuristic-init and GD-step
             // trains behind it are now dead references — reclaim
             // their shuffle files BEFORE the final train writes its
@@ -644,8 +646,8 @@ object MfQueries {
             graft.ScratchGc.maybe(nRatings)
             m
           }
-        val rows = Antidote.evaluateAll(model, ratings, groups,
-            "BUILDING", "MACHINERY")
+        val rows = Antidote.evaluateAll(model, ratings, gap.groups, gap.a,
+            gap.b)
           .toSeq.map { case (name, tp) =>
             (alpha, name, tp.objective, tp.rmse) }
         // this α's model and trains are now dead references; a GC here
@@ -665,17 +667,8 @@ object MfQueries {
         // value is a seeded/deterministic computation — overlap changes
         // wall-clock, never results. Output order is pinned by mapping
         // over the ordered budget list.
-        val pool = java.util.concurrent.Executors
-          .newFixedThreadPool(budgets.size)
-        try {
-          val tasks = budgets.map(a => pool.submit(
-            new java.util.concurrent.Callable[
-                Seq[(Double, String, Double, Double)]] {
-              def call(): Seq[(Double, String, Double, Double)] =
-                budgetRows(a)
-            }))
-          tasks.flatMap(_.get())
-        } finally pool.shutdown()
+        graft.Concurrently(budgets.size)(
+          budgets.map(a => () => budgetRows(a))).flatten
       }
     }
 
@@ -725,18 +718,10 @@ object MfQueries {
     * (the optimize loop shares each model between its trace point and the
     * next gradient linearization, so no train is paid twice). */
   val qAntidoteTrace = Q.noOracle("q_antidote_trace") { (s, d) =>
-    val spark = s
-    import spark.implicits._
     val ratings = Ratings.viewCached(s, d)
-    val (_, trace) = Antidote.optimize(s, ratings, 0.01, 3,
-      AlsEngine.Config(maxIter = 3), eta = 1e4,
-      stats = Some(Antidote.userStatsCached(s, d)))
-    trace.zipWithIndex.map { case (p, i) =>
-      (i.toLong, p.objective, p.rmse)
-    }.toDF("iter", "objective", "rmse")
-      .select(col("iter"), round(col("objective"), 6).as("objective"),
-        round(col("rmse"), 6).as("rmse"))
-      .orderBy("iter")
+    val stats = Antidote.userStatsCached(s, d)
+    traceRows(s, ratings, Antidote.init(s, ratings, 0.01, stats), 3, stats,
+      Metric.Polarization)
   }
 
   /** Alg. 1 over the paper's HEADLINE metric: T = 2 projected-GD
@@ -751,23 +736,11 @@ object MfQueries {
     * non-increasing-objective property of this exact metric/optimize pair
     * is pinned in MfSpec ("optimize decreases group unfairness"). */
   val qAntidoteTraceGrp = Q.noOracle("q_antidote_trace_grp") { (s, d) =>
-    val spark = s
-    import spark.implicits._
     val ratings = Ratings.viewCached(s, d)
-    val groups = t(s, d, "customer")
-      .select(col("c_custkey").as("user_id"),
-        col("c_mktsegment").as("grp"))
-    val (_, trace) = Antidote.optimize(s, ratings, 0.01, 2,
-      AlsEngine.Config(maxIter = 3), eta = 1e4,
-      metric = Metric.GroupUnfairness(groups, "BUILDING", "MACHINERY"),
-      initFn = Antidote.initHeuristic,
-      stats = Some(Antidote.userStatsCached(s, d)))
-    trace.zipWithIndex.map { case (p, i) =>
-      (i.toLong, p.objective, p.rmse)
-    }.toDF("iter", "objective", "rmse")
-      .select(col("iter"), round(col("objective"), 6).as("objective"),
-        round(col("rmse"), 6).as("rmse"))
-      .orderBy("iter")
+    val stats = Antidote.userStatsCached(s, d)
+    traceRows(s, ratings,
+      Antidote.initHeuristic(s, ratings, 0.01, stats, None), 2, stats,
+      segmentGap(s, d))
   }
 
   /** Alg. 1 over INDIVIDUAL unfairness — the last library Alg-1
@@ -780,14 +753,32 @@ object MfQueries {
     * property of this exact metric/optimize pair is pinned in MfSpec
     * ("U_ind antidote: objective non-increasing"). */
   val qAntidoteTraceInd = Q.noOracle("q_antidote_trace_ind") { (s, d) =>
+    val ratings = Ratings.viewCached(s, d)
+    val stats = Antidote.userStatsCached(s, d)
+    traceRows(s, ratings,
+      Antidote.initHeuristic(s, ratings, 0.01, stats, None), 2, stats,
+      Metric.IndividualUnfairness)
+  }
+
+  /** The antidote family's groups: market segments BUILDING vs MACHINERY
+    * of the customers (the ratings' users). */
+  private def segmentGap(s: org.apache.spark.sql.SparkSession,
+      d: String): Metric.GroupUnfairness =
+    Metric.GroupUnfairness(t(s, d, "customer")
+      .select(col("c_custkey").as("user_id"), col("c_mktsegment").as("grp")),
+      "BUILDING", "MACHINERY")
+
+  /** An Alg. 1 trace from `x0` as rows (iter, objective, rmse): `steps`
+    * projected-GD iterations at 3 ALS sweeps per train and η = 10⁴. */
+  private def traceRows(s: org.apache.spark.sql.SparkSession,
+      ratings: org.apache.spark.sql.DataFrame,
+      x0: org.apache.spark.sql.DataFrame, steps: Int,
+      stats: Antidote.ViewStats, metric: Metric)
+      : org.apache.spark.sql.DataFrame = {
     val spark = s
     import spark.implicits._
-    val ratings = Ratings.viewCached(s, d)
-    val (_, trace) = Antidote.optimize(s, ratings, 0.01, 2,
-      AlsEngine.Config(maxIter = 3), eta = 1e4,
-      metric = Metric.IndividualUnfairness,
-      initFn = Antidote.initHeuristic,
-      stats = Some(Antidote.userStatsCached(s, d)))
+    val (_, trace) = Antidote.optimize(s, ratings, x0, steps, stats,
+      AlsEngine.Config(maxIter = 3), eta = 1e4, metric = metric)
     trace.zipWithIndex.map { case (p, i) =>
       (i.toLong, p.objective, p.rmse)
     }.toDF("iter", "objective", "rmse")

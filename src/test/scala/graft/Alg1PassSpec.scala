@@ -24,7 +24,8 @@ class Alg1PassSpec extends SparkTestBase {
   /** A model of [R; X] with a hash-random antidote block, so U_a is not
     * empty. */
   private lazy val model: ALSModel = AlsEngine.train(
-    ratings.unionByName(Antidote.init(spark, ratings, 0.01)),
+    ratings.unionByName(Antidote.init(spark, ratings, 0.01,
+      Antidote.userStats(ratings))),
     AlsEngine.Config(maxIter = 2))
 
   private def initialPlan(df: DataFrame): SparkPlan =
@@ -130,7 +131,8 @@ class Alg1PassSpec extends SparkTestBase {
   }
 
   test("a train leaves persisted exactly the checkpoints its memo owns") {
-    val aug = ratings.unionByName(Antidote.init(spark, ratings, 0.02))
+    val aug = ratings.unionByName(Antidote.init(spark, ratings, 0.02,
+      Antidote.userStats(ratings)))
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet.toSet
     val m = AlsEngine.train(aug, AlsEngine.Config(maxIter = 2, seed = 7L))

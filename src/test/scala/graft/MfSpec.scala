@@ -106,7 +106,8 @@ class MfSpec extends SparkTestBase {
 
   test("antidote init: budget size, id range, ratings within [1,5]") {
     val ratings = Ratings.view(spark, sf).cache()
-    val x = Antidote.init(spark, ratings, 0.01).cache()
+    val x = Antidote.init(spark, ratings, 0.01, Antidote.userStats(ratings))
+      .cache()
     val nUsers = ratings.select("user_id").distinct().count()
     val nItems = ratings.select("item_id").distinct().count()
     assert(x.count() == math.ceil(0.01 * nUsers).toLong * nItems)
@@ -120,8 +121,10 @@ class MfSpec extends SparkTestBase {
     val cfg = AlsEngine.Config(maxIter = 5)
     // alpha = 0.05: at the fixture scale the 0.01 budget is ~1 user and
     // init quality disappears into ALS noise; 0.05 gives a clear signal
-    val heu = Antidote.initHeuristic(spark, ratings, 0.05).cache()
-    val rnd = Antidote.init(spark, ratings, 0.05).cache()
+    val stats = Antidote.userStats(ratings)
+    val heu = Antidote.initHeuristic(spark, ratings, 0.05, stats, None)
+      .cache()
+    val rnd = Antidote.init(spark, ratings, 0.05, stats).cache()
     // same budget shape as the hash-random init, ratings in range
     assert(heu.count() == rnd.count())
     assert(heu.filter(col("rating") < 1 || col("rating") > 5).count() == 0)
@@ -131,7 +134,7 @@ class MfSpec extends SparkTestBase {
     val orig = conf.get("spark.sql.shuffle.partitions")
     val a = try {
       conf.set("spark.sql.shuffle.partitions", "5")
-      Antidote.initHeuristic(spark, ratings, 0.05)
+      Antidote.initHeuristic(spark, ratings, 0.05, stats, None)
         .orderBy("user_id", "item_id").collect().map(_.toString).toSeq
     } finally conf.set("spark.sql.shuffle.partitions", orig)
     val b = heu.orderBy("user_id", "item_id").collect().map(_.toString).toSeq
@@ -139,7 +142,8 @@ class MfSpec extends SparkTestBase {
     // equal GD budget (one projected step each): the warm start must do
     // at least as well on the objective as hash-random init
     def objAfter(x0: org.apache.spark.sql.DataFrame): Double = {
-      val x1 = Antidote.step(spark, ratings, x0, cfg, eta = 1e4)
+      val x1 = Antidote.step(spark, ratings, x0,
+        AlsEngine.train(ratings.unionByName(x0), cfg), stats, cfg, eta = 1e4)
       Antidote.polarization(AlsEngine.train(ratings.unionByName(x1), cfg))
     }
     val heuObj = objAfter(heu)
@@ -151,10 +155,13 @@ class MfSpec extends SparkTestBase {
   test("projected GD step stays in [1,5] and does not increase polarization") {
     val ratings = Ratings.view(spark, sf).cache()
     val cfg = AlsEngine.Config(maxIter = 5)
-    val x0 = Antidote.init(spark, ratings, 0.01).cache()
+    val stats = Antidote.userStats(ratings)
+    val x0 = Antidote.init(spark, ratings, 0.01, stats).cache()
     val before = Antidote.polarization(
       AlsEngine.train(ratings.unionByName(x0), cfg))
-    val x1 = Antidote.step(spark, ratings, x0, cfg, eta = 1e4).cache()
+    val x1 = Antidote.step(spark, ratings, x0,
+      AlsEngine.train(ratings.unionByName(x0), cfg), stats, cfg, eta = 1e4)
+      .cache()
     assert(x1.filter(col("rating") < 1 || col("rating") > 5).count() == 0)
     assert(x1.count() == x0.count())
     val after = Antidote.polarization(
@@ -166,7 +173,9 @@ class MfSpec extends SparkTestBase {
   test("Alg 1 loop: objective trace is non-increasing over 3 iterations") {
     val ratings = Ratings.view(spark, sf).cache()
     val cfg = AlsEngine.Config(maxIter = 5)
-    val (_, trace) = Antidote.optimize(spark, ratings, 0.01, 3, cfg, eta = 1e4)
+    val stats = Antidote.userStats(ratings)
+    val (_, trace) = Antidote.optimize(spark, ratings,
+      Antidote.init(spark, ratings, 0.01, stats), 3, stats, cfg, eta = 1e4)
     assert(trace.length == 4)
     trace.map(_.objective).sliding(2).foreach { case Seq(a, b) =>
       assert(b <= a * 1.05, s"objective rose: $trace")
@@ -180,7 +189,9 @@ class MfSpec extends SparkTestBase {
   test("U_ind antidote: objective non-increasing over 3 iterations") {
     val ratings = Ratings.view(spark, sf).cache()
     val cfg = AlsEngine.Config(maxIter = 5)
-    val (x, trace) = Antidote.optimize(spark, ratings, 0.01, 3, cfg,
+    val stats = Antidote.userStats(ratings)
+    val (x, trace) = Antidote.optimize(spark, ratings,
+      Antidote.init(spark, ratings, 0.01, stats), 3, stats, cfg,
       eta = 1e4, metric = ml.Metric.IndividualUnfairness)
     assert(x.filter(col("rating") < 1 || col("rating") > 5).count() == 0)
     assert(trace.length == 4)
@@ -197,8 +208,9 @@ class MfSpec extends SparkTestBase {
     // A grouping with a STRUCTURAL loss gap (median split on the initial
     // per-user ALS loss): market segments are random w.r.t. loss, so their
     // gap is refit noise and no optimizer can descend it monotonically.
+    val stats = Antidote.userStats(ratings)
     val model0 = AlsEngine.train(
-      ratings.unionByName(Antidote.init(spark, ratings, 0.01)), cfg)
+      ratings.unionByName(Antidote.init(spark, ratings, 0.01, stats)), cfg)
     val lu = AlsEngine.predictKnown(model0, ratings)
       .groupBy("user_id")
       .agg(avg((col("p") - col("rating")) * (col("p") - col("rating")))
@@ -206,7 +218,8 @@ class MfSpec extends SparkTestBase {
     val medLoss = lu.agg(percentile(col("l_u"), lit(0.5))).head().getDouble(0)
     val groups = lu.select(col("user_id"),
       when(col("l_u") > medLoss, "HI").otherwise("LO").as("grp"))
-    val (x, trace) = Antidote.optimize(spark, ratings, 0.01, 3, cfg,
+    val (x, trace) = Antidote.optimize(spark, ratings,
+      Antidote.init(spark, ratings, 0.01, stats), 3, stats, cfg,
       eta = 1e4,
       metric = ml.Metric.GroupUnfairness(groups, "HI", "LO"))
     assert(x.filter(col("rating") < 1 || col("rating") > 5).count() == 0)
@@ -415,15 +428,17 @@ class MfSpec extends SparkTestBase {
     // cap machinery: top-M support set has exactly M items, and the
     // capped init rates exactly k̃·M cells inside [1,5]
     assert(Antidote.topSupportItems(ratings, cap).count() == cap)
-    val x0 = Antidote.initHeuristicCapped(spark, ratings, 0.05, Some(cap))
+    val stats = Antidote.userStats(ratings)
+    val x0 = Antidote.initHeuristic(spark, ratings, 0.05, stats, Some(cap))
     val nUsers = ratings.select("user_id").distinct().count()
     assert(x0.count() == math.ceil(0.05 * nUsers).toLong * cap)
     assert(x0.filter(col("rating") < 1 || col("rating") > 5).count() == 0)
     // autoCap: dense at the fixture scale, capped once k̃·m > maxCells
-    assert(Antidote.autoCap(ratings, 0.05).isEmpty)
-    assert(Antidote.autoCap(ratings, 0.05, maxCells = cap).nonEmpty)
+    assert(Antidote.autoCap(stats, 0.05, Antidote.maxAntidoteCells).isEmpty)
+    assert(Antidote.autoCap(stats, 0.05, maxCells = cap).nonEmpty)
     // the deployed shape (one GD step + refit) still improves the metric
-    val x1 = Antidote.step(spark, ratings, x0, cfg, eta = 1e4,
+    val x1 = Antidote.step(spark, ratings, x0,
+      AlsEngine.train(ratings.unionByName(x0), cfg), stats, cfg, eta = 1e4,
       metric = metric)
     val capped = AlsEngine.train(ratings.unionByName(x1), cfg)
     val base = AlsEngine.trainCachedOnRatingsView(spark, sf)

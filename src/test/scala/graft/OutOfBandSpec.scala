@@ -524,10 +524,11 @@ class OutOfBandSpec extends SparkTestBase {
     ("Alg. 1 step", "lineitem", () => {
       val ratings = ml.Ratings.viewCached(spark, sf)
       val cfg = ml.AlsEngine.Config(rank = 4, maxIter = 2)
-      val x0 = ml.Antidote.initHeuristic(spark, ratings, 0.01)
+      val stats = ml.Antidote.userStats(ratings)
+      val x0 = ml.Antidote.initHeuristic(spark, ratings, 0.01, stats, None)
       val m = ml.AlsEngine.train(ratings.unionByName(x0), cfg)
-      planIds(ml.Antidote.step(spark, ratings, x0, cfg, eta = 1e4,
-        metric = ml.Metric.IndividualUnfairness, model = Some(m)))
+      planIds(ml.Antidote.step(spark, ratings, x0, m, stats, cfg, eta = 1e4,
+        metric = ml.Metric.IndividualUnfairness))
     }))
 
   owningMemos.foreach { case (label, table, build) =>
@@ -561,6 +562,20 @@ class OutOfBandSpec extends SparkTestBase {
           s"clearAll freed co-cached frames it never owned: ${kept -- after}")
       } finally { bystander.unpersist(); () }
     }
+  }
+
+  test("the base ALS model adds only its two factor checkpoints on a warm ratings view") {
+    SharedBuild.clearAll()
+    ml.Ratings.viewCached(spark, sf).count()
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val m = ml.AlsEngine.trainCachedOnRatingsView(spark, sf,
+      ml.AlsEngine.Config(rank = 4, maxIter = 2))
+    val added = sc.getPersistentRDDs.keySet.toSet -- before
+    val factors = planIds(m.userFactors, m.itemFactors)
+    assert(factors.size == 2 && added == factors,
+      s"added $added, factor checkpoints $factors")
+    SharedBuild.clearAll()
   }
 
   test("simhash signature blocks belong only to the signature memo") {

@@ -26,7 +26,7 @@ class StepMemoSpec extends SparkTestBase {
   private val cfg = AlsEngine.Config(maxIter = 2)
   private lazy val stats = Antidote.userStats(ratings)
   private def x0: DataFrame =
-    Antidote.initHeuristic(spark, ratings, 0.01, stats)
+    Antidote.initHeuristic(spark, ratings, 0.01, stats, None)
 
   /** Spark jobs run by `f` whose call site holds `frame` — read off the
     * job's own call site, or, for adaptive stages submitted from a pool
@@ -71,17 +71,16 @@ class StepMemoSpec extends SparkTestBase {
 
   private def run(metric: Metric, steps: Int)
       : (Seq[Row], Seq[Antidote.TracePoint]) = {
-    val (x, trace) = Antidote.optimize(spark, ratings, 0.01, steps, cfg,
-      eta = 1e4, metric = metric, initFn = Antidote.initHeuristic,
-      stats = Some(stats))
+    val (x, trace) = Antidote.optimize(spark, ratings, x0, steps, stats,
+      cfg, eta = 1e4, metric = metric)
     (x.orderBy("user_id", "item_id").collect().toSeq, trace)
   }
 
   /** The α-sweep's shape: train [R; X₀], then step that model. */
   private def sweepStep(metric: Metric): DataFrame = {
     val m0 = AlsEngine.train(ratings.unionByName(x0), cfg)
-    Antidote.step(spark, ratings, x0, cfg, eta = 1e4, metric = metric,
-      model = Some(m0), stats = Some(stats))
+    Antidote.step(spark, ratings, x0, m0, stats, cfg, eta = 1e4,
+      metric = metric)
   }
 
   for ((label, metric) <- Seq(
@@ -117,9 +116,8 @@ class StepMemoSpec extends SparkTestBase {
     val m0 = AlsEngine.train(ratings.unionByName(x0), cfg)
     def stepJobs(eta: Double, g: DataFrame, a: String, b: String): Int =
       jobsUnder(stepFrame) {
-        Antidote.step(spark, ratings, x0, cfg, eta = eta,
-          metric = Metric.GroupUnfairness(g, a, b), model = Some(m0),
-          stats = Some(stats))
+        Antidote.step(spark, ratings, x0, m0, stats, cfg, eta = eta,
+          metric = Metric.GroupUnfairness(g, a, b))
       }
     assert(stepJobs(1e4, groups, "BUILDING", "MACHINERY") > 0)
     // a separately loaded, semantically equal groups frame hits
@@ -130,9 +128,8 @@ class StepMemoSpec extends SparkTestBase {
       "BUILDING", "MACHINERY") > 0)
     // U_ind on the same model is its own entry too
     assert(jobsUnder(stepFrame) {
-      Antidote.step(spark, ratings, x0, cfg, eta = 1e4,
-        metric = Metric.IndividualUnfairness, model = Some(m0),
-        stats = Some(stats))
+      Antidote.step(spark, ratings, x0, m0, stats, cfg, eta = 1e4,
+        metric = Metric.IndividualUnfairness)
     } > 0)
     SharedBuild.clearAll()
   }
@@ -142,9 +139,8 @@ class StepMemoSpec extends SparkTestBase {
     val sc = spark.sparkContext
     val m0 = AlsEngine.train(ratings.unionByName(x0), cfg)
     def stepIds(eta: Double): Set[Int] = {
-      val x1 = Antidote.step(spark, ratings, x0, cfg, eta = eta,
-        metric = Metric.IndividualUnfairness, model = Some(m0),
-        stats = Some(stats))
+      val x1 = Antidote.step(spark, ratings, x0, m0, stats, cfg, eta = eta,
+        metric = Metric.IndividualUnfairness)
       x1.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd.id }
         .toSet
     }
@@ -158,5 +154,39 @@ class StepMemoSpec extends SparkTestBase {
     assert(Antidote.stepMemo.ownedIds == ids.tail.flatten.toSet)
     SharedBuild.clearAll()
     assert((ids.flatten.toSet & sc.getPersistentRDDs.keySet.toSet).isEmpty)
+  }
+
+  test("the moments memo runs one factorMoments reduction per model, and clearAll drops it") {
+    val momentsFrame = "Antidote$.factorMoments"
+    SharedBuild.clearAll()
+    val m0 = AlsEngine.train(ratings.unionByName(x0), cfg)
+    // an evaluation and then a polarization step of the same model
+    assert(jobsUnder(momentsFrame) {
+      Antidote.evaluate(m0, ratings, Metric.Polarization)
+    } > 0)
+    assert(jobsUnder(momentsFrame) {
+      Antidote.step(spark, ratings, x0, m0, stats, cfg, eta = 1e4)
+    } == 0)
+    // two q_antidote_step runs step the one memoized model
+    def antidoteStep(): Unit = {
+      operators.MfQueries.qAntidoteStep.run(spark, sf).collect(); ()
+    }
+    assert(jobsUnder(momentsFrame)(antidoteStep()) > 0)
+    assert(jobsUnder(momentsFrame)(antidoteStep()) == 0)
+    // a model no memo owns keeps its factors across clearAll(), so only
+    // the moments entry goes
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val raw = new org.apache.spark.ml.recommendation.ALS()
+      .setRank(2).setMaxIter(1).setSeed(1L)
+      .setUserCol("user_id").setItemCol("item_id").setRatingCol("rating")
+      .fit(ratings)
+    val rawBlocks = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(jobsUnder(momentsFrame)(Antidote.factorMoments(raw)) > 0)
+    assert(jobsUnder(momentsFrame)(Antidote.factorMoments(raw)) == 0)
+    SharedBuild.clearAll()
+    assert(jobsUnder(momentsFrame)(Antidote.factorMoments(raw)) > 0)
+    SharedBuild.clearAll()
+    rawBlocks.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist()))
   }
 }
