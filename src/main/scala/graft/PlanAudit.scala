@@ -73,16 +73,20 @@ object PlanAudit {
     spark.stop()
   }
 
+  /** Execute the query's OWN plan to finalize AQE, but count at the RDD
+    * layer instead of collect(): data-sized outputs (e.g. the 306M-row
+    * q_antidote_init at sf1) blow spark.driver.maxResultSize under
+    * collect, and a separate count() would finalize a different
+    * QueryExecution than the one read afterwards. */
+  private[graft] def executeOwnPlan(
+      qe: org.apache.spark.sql.execution.QueryExecution): Long =
+    qe.executedPlan.execute().count()
+
   private def auditOne(spark: SparkSession, sfDir: String,
       q: Q): Seq[String] =
     try {
       val qe = q.run(spark, sfDir).queryExecution
-      // execute the query's OWN plan to finalize AQE, but count at the
-      // RDD layer instead of collect(): data-sized outputs (e.g. the
-      // 306M-row q_antidote_init at sf1) blow spark.driver.maxResultSize
-      // under collect, and a separate count() would finalize a different
-      // QueryExecution than the one audited below
-      qe.executedPlan.execute().count()
+      executeOwnPlan(qe)
       val f = PlanFacts.executed(qe)
       Seq(f.exchanges, f.broadcastJoins, f.sortMergeJoins, f.cartesians,
         f.codegenSpans).map(_.toString) :+ ""

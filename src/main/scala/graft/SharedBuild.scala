@@ -5,6 +5,7 @@ import java.util.concurrent.CountDownLatch
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.storage.StorageLevel
@@ -67,6 +68,9 @@ final class SharedBuild[K, V] private (cap: Int,
       }
   }
 
+  /** The completed entry for `key`, if there is one; never builds. */
+  def get(key: K): Option[V] = done.get(key).map(_._1)
+
   private def insert(key: K, v: V, o: Owned): Unit = {
     val evicted = synchronized {
       done.put(key, (v, o))
@@ -91,6 +95,20 @@ final class SharedBuild[K, V] private (cap: Int,
 }
 
 object SharedBuild {
+
+  /** A memo key that compares frames the way `Dataset.sameSemantics`
+    * does: two keys are equal when their analyzed plans have the same
+    * canonical form, and the plan's semantic hash buckets them. It keeps
+    * the analyzed plan only, so a memo entry never holds a frame's
+    * executed plan (or the shuffles behind it). */
+  final class SamePlan(df: DataFrame) {
+    val plan: LogicalPlan = df.queryExecution.analyzed
+    override val hashCode: Int = plan.semanticHash()
+    override def equals(o: Any): Boolean = o match {
+      case p: SamePlan => plan.sameResult(p.plan)
+      case _ => false
+    }
+  }
 
   /** Persisted block ids an entry owns, and how to hand them back. */
   final case class Owned(ids: Set[Int], free: () => Unit)

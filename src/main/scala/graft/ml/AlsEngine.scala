@@ -1,7 +1,9 @@
 package graft.ml
 
 import org.apache.spark.ml.recommendation.{ALS, ALSModel}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{CurrentDate,
+  CurrentTimestampLike, LocalTimestamp}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -58,7 +60,7 @@ object AlsEngine {
 
   /** Drop memoized models (cold benchmarking / data changed) and hand
     * their checkpoint blocks back to the storage layer. */
-  def clearCache(): Unit = { models.clear(); trains.clear() }
+  def clearCache(): Unit = { models.clear(); trains.clear(); digests.clear() }
 
   /** Content-digest-keyed memo of seeded trains (optimization r14): the
     * antidote family trains several BIT-IDENTICAL models per run — the
@@ -82,6 +84,43 @@ object AlsEngine {
 
   private val trains =
     graft.SharedBuild[TrainKey, ALSModel](cap = 16)(factorBlocks)
+
+  /** The [[digestBounds]] row each trained frame was first keyed by,
+    * found by the frame's analyzed plan (a semantic-hash bucket, then
+    * `sameSemantics`). A frame whose plan is here and whose train entry
+    * is still in [[trains]] gets its fenced model with no Spark job: the
+    * Alg. 1 trace re-trains [R; X₀] and [R; X₁] the α-sweep already
+    * trained, over the same cached view and the step memo's X₁.
+    *
+    * Why a plan hit cannot be false: equal analyzed plans read the same
+    * sources through the same expressions. The sources are immutable
+    * fixture files and local checkpoints (a checkpoint leaf compares by
+    * its RDD instance, whose blocks never change and whose lineage is
+    * cut, so it cannot be recomputed into other rows), so a plan that
+    * holds only deterministic expressions yields the same row multiset
+    * every time it runs — the same content digest, so the same key the
+    * digest pass would compute. Every `SharedBuild` memo keyed on
+    * (session, dir) already rests on the immutable-files half of this.
+    * Row ORDER may differ between runs of one plan (a cached and an
+    * uncached read), but the content key ignores order too, so a plan hit
+    * returns exactly the model a content hit would. [[replayable]] keeps
+    * the other plans, and a hit whose train entry the cap has evicted,
+    * on the digest pass with its id-range and empty-input checks. The
+    * entries hold analyzed plans and digest rows only, no blocks. */
+  private val digests =
+    graft.SharedBuild[graft.SharedBuild.SamePlan, Row](cap = 16)()
+
+  /** Whether a rerun of the frame's plan must yield its rows again: no
+    * nondeterministic expression (`rand()`, `monotonically_increasing_id`,
+    * …) and no reading of the clock, which an analyzed plan holds
+    * unevaluated. */
+  private def replayable(df: DataFrame): Boolean = {
+    val p = df.queryExecution.analyzed
+    p.deterministic && !p.exists(_.expressions.exists(_.exists {
+      case _: CurrentTimestampLike | _: CurrentDate | _: LocalTimestamp => true
+      case _ => false
+    }))
+  }
 
   /** Size ALS's block count to the input: MLlib's default of 10 blocks
     * packs ~n/10 ratings into each in-block's primitive arrays, which at
@@ -112,7 +151,7 @@ object AlsEngine {
   /** One pass over the input: id bounds + count (the preexisting range
     * check) plus the two train-memo digest sums. */
   private def digestBounds(ratings: DataFrame, what: String)
-      : (org.apache.spark.sql.Row, Long) = {
+      : (Row, Long) = {
     val aggCols = Seq(
       max(abs(col("user_id").cast(LongType))),
       max(abs(col("item_id").cast(LongType))),
@@ -128,7 +167,7 @@ object AlsEngine {
     (bounds, bounds.getLong(2))
   }
 
-  private def memoKey(ratings: DataFrame, bounds: org.apache.spark.sql.Row,
+  private def memoKey(ratings: DataFrame, bounds: Row,
       kind: String, cfg: Config): TrainKey =
     (ratings.sparkSession, kind, bounds.getLong(0), bounds.getLong(1),
       bounds.getLong(2), bounds.getDecimal(3), bounds.getDecimal(4), cfg)
@@ -149,16 +188,25 @@ object AlsEngine {
       alpha: Double = 1.0): ALSModel =
     memoized(ratings, cfg, Some(alpha))
 
-  /** The one train body: one bounds+digest pass (id-range check, block
-    * sizing and the memo key), then the fenced [[fit]] through the train
-    * memo. `implicitAlpha` selects implicit feedback. */
+  /** The one train body: a frame already trained under this plan
+    * returns its memoized model ([[digests]]); otherwise one bounds+digest
+    * pass (id-range check, block sizing and the memo key), then the
+    * fenced [[fit]] through the train memo. `implicitAlpha` selects
+    * implicit feedback. */
   private def memoized(ratings: DataFrame, cfg: Config,
       implicitAlpha: Option[Double]): ALSModel = {
-    val (bounds, n) = digestBounds(ratings,
-      implicitAlpha.fold("train")(_ => "trainImplicit"))
     val kind = implicitAlpha.fold("explicit")(a => s"implicit:$a")
-    trains(memoKey(ratings, bounds, kind, cfg))(
-      fit(ratings, cfg, implicitAlpha, n))
+    val plan = Option.when(replayable(ratings))(
+      new graft.SharedBuild.SamePlan(ratings))
+    plan.flatMap(digests.get)
+      .flatMap(b => trains.get(memoKey(ratings, b, kind, cfg)))
+      .getOrElse {
+        val (bounds, n) = digestBounds(ratings,
+          implicitAlpha.fold("train")(_ => "trainImplicit"))
+        plan.foreach(p => digests(p)(bounds))
+        trains(memoKey(ratings, bounds, kind, cfg))(
+          fit(ratings, cfg, implicitAlpha, n))
+      }
   }
 
   /** The seeded ALS fit of `n` ratings, lineage-fenced. */

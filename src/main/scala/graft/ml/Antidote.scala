@@ -2,7 +2,8 @@ package graft.ml
 
 import breeze.linalg.{DenseMatrix, DenseVector}
 import org.apache.spark.ml.recommendation.ALSModel
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -237,10 +238,11 @@ object Antidote {
       ua: Seq[(Long, Array[Double])])
 
   /** [[LossStats]] from ONE action: one aggregate over `lu` (carrying a
-    * `grp` column when `groupLabels` is set), left-joined with the rows
-    * of `ua` (the antidote users' factors) when it is given — so the
-    * action returns the aggregate once per antidote user, each copy next
-    * to that user's factor, in the factor frame's row order. */
+    * `grp` column when `groupLabels` is set), followed by the rows of
+    * `ua` (the antidote users' factors) when it is given — a union, so
+    * the action returns the aggregate's one row and then each antidote
+    * user's factor in the factor frame's row order, with no broadcast
+    * job. */
   private def evaluateLosses(lu: DataFrame,
       groupLabels: Option[(String, String)],
       ua: Option[DataFrame]): LossStats = {
@@ -256,9 +258,9 @@ object Antidote {
     }
     val aggCols = base ++ byGroup
     val stats = lu.agg(aggCols.head, aggCols.tail: _*)
-    val rows = ua.fold(stats)(u => stats.join(
+    val rows = ua.fold(stats)(u => stats.unionByName(
       u.select(col("id").cast(LongType).as("ua_id"), col("features")),
-      lit(true), "left")).collect()
+      allowMissingColumns = true)).collect()
     val row = rows.head
     val (lA, lB) =
       if (groupLabels.isEmpty) (Double.NaN, Double.NaN)
@@ -276,13 +278,15 @@ object Antidote {
   /** One model's known-cell pass and its one evaluation action. Under
     * U_grp the loss frame carries each user's `grp`. When a gradient step
     * follows (`antidoteAbove` = the largest real user id, unfairness
-    * metrics only), the prediction frame also carries each cell's user
-    * factor `u`, both frames are cached for the step to read, and the
-    * action also collects U_a (the factors of the users above that id).
-    * [[unpersist]] frees them. */
+    * metrics only), the per-user loss frame is cached for the step to
+    * read, the prediction frame also carries each cell's user factor `u`,
+    * and the action also collects U_a (the factors of the users above
+    * that id). The prediction frame is not cached: the step re-runs its
+    * broadcast joins, which costs less than caching an R-sized frame with
+    * an array column did. [[unpersist]] frees the loss frame. */
   private[graft] final class ModelEval(val pred: DataFrame, val lu: DataFrame,
       val point: TracePoint, val loss: LossStats) {
-    def unpersist(): Unit = { pred.unpersist(); lu.unpersist() }
+    def unpersist(): Unit = lu.unpersist()
   }
 
   private[graft] def evaluateModel(model: ALSModel, ratings: DataFrame,
@@ -295,13 +299,13 @@ object Antidote {
       .join(model.userFactors.as("uf"),
         col("user_id").cast(IntegerType) === col("uf.id"))
       .select(col("user_id"), col("item_id"), col("rating"), col("p"),
-        col("uf.features").as("u")).cache()
+        col("uf.features").as("u"))
     val labels = metric match {
       case Metric.GroupUnfairness(groups, a, b) => Some((groups, a, b))
       case _ => None
     }
-    val lu = labels.fold(losses(pred)) { case (groups, _, _) =>
-      losses(pred).join(groups, Seq("user_id"), "left") }
+    val lu = labels.fold(losses(known)) { case (groups, _, _) =>
+      losses(known).join(groups, Seq("user_id"), "left") }
     if (stepping.nonEmpty) lu.cache()
     val ls = evaluateLosses(lu, labels.map(g => (g._2, g._3)),
       stepping.map(mx => model.userFactors.filter(col("id") > mx)))
@@ -349,8 +353,8 @@ object Antidote {
             next.foreachPartition((_: Iterator[Row]) => ())
             next
           case m =>
-            val (point, next) = stepUnfairness(spark, ratings, x, cfg, eta,
-              m, model, stats.maxUserId)
+            val (point, next) = stepUnfairness(ratings, x, cfg, eta, m,
+              model, stats.maxUserId)
             trace += point
             next
         }
@@ -376,33 +380,19 @@ object Antidote {
       metric: Metric = Metric.Polarization): DataFrame = metric match {
     case Metric.Polarization => polarizationStep(spark, x, cfg, eta, model)
     case m =>
-      stepUnfairness(spark, ratings, x, cfg, eta, m, model, stats.maxUserId)._2
+      stepUnfairness(ratings, x, cfg, eta, m, model, stats.maxUserId)._2
   }
 
   /** The inputs one unfairness step reads besides X, which the model
     * pins: the train memo returns one model instance per content digest
     * of [R; X], so with R fixed the model fixes X. The model compares by
     * identity, the ratings and `groups` frames by semantic equality of
-    * their analyzed plans (the 32-bit semantic hashes only bucket), the
-    * labels, η and the ALS config by value. U_ind carries no groups. */
-  private[graft] final class StepKey(val model: ALSModel,
-      val ratings: DataFrame, val groups: Option[DataFrame],
-      val labels: Option[(String, String)], val eta: Double,
-      val cfg: AlsEngine.Config) {
-    override val hashCode: Int = (System.identityHashCode(model),
-      ratings.semanticHash(), groups.map(_.semanticHash()), labels, eta,
-      cfg).##
-    override def equals(o: Any): Boolean = o match {
-      case k: StepKey =>
-        (k.model eq model) && k.labels == labels && k.eta == eta &&
-          k.cfg == cfg && k.ratings.sameSemantics(ratings) &&
-          ((k.groups, groups) match {
-            case (Some(g), Some(h)) => g.sameSemantics(h)
-            case (g, h) => g.isEmpty && h.isEmpty
-          })
-      case _ => false
-    }
-  }
+    * their analyzed plans ([[graft.SharedBuild.SamePlan]]), the labels, η
+    * and the ALS config by value. U_ind carries no groups. */
+  private[graft] final case class StepKey(model: ALSModel,
+      ratings: graft.SharedBuild.SamePlan,
+      groups: Option[graft.SharedBuild.SamePlan],
+      labels: Option[(String, String)], eta: Double, cfg: AlsEngine.Config)
 
   /** Per-model memo of the unfairness step: the model's trace point and
     * the projected X_{t+1} as a local checkpoint the memo owns. The
@@ -420,28 +410,29 @@ object Antidote {
 
   /** One U_ind / U_grp step on `model` = the train of [R; x]: its trace
     * point under `metric` and X_{t+1}, memoized per model. */
-  private def stepUnfairness(spark: SparkSession, ratings: DataFrame,
-      x: DataFrame, cfg: AlsEngine.Config, eta: Double, metric: Metric,
+  private def stepUnfairness(ratings: DataFrame, x: DataFrame,
+      cfg: AlsEngine.Config, eta: Double, metric: Metric,
       model: ALSModel, maxUserId: Long): (TracePoint, DataFrame) = {
     val (groups, labels) = metric match {
       case Metric.GroupUnfairness(g, a, b) => (Some(g), Some((a, b)))
       case _ => (None, None)
     }
-    stepMemo(new StepKey(model, ratings, groups, labels, eta, cfg))(
-      stepEvaluated(spark, ratings, x, cfg, eta, metric, model, maxUserId))
+    stepMemo(StepKey(model, new graft.SharedBuild.SamePlan(ratings),
+        groups.map(new graft.SharedBuild.SamePlan(_)), labels, eta, cfg))(
+      stepEvaluated(ratings, x, cfg, eta, metric, model, maxUserId))
   }
 
   /** [[stepUnfairness]]'s build: the model's one evaluation action, then
     * the step materialized as a local checkpoint, which also fences the
     * step's lineage (which holds a whole ALS train) out of the next
     * train's, so the two trains' shuffle files are never referenced at
-    * the same time. The cached known-cell pass is freed once the new rows
-    * are materialized. */
-  private def stepEvaluated(spark: SparkSession, ratings: DataFrame,
-      x: DataFrame, cfg: AlsEngine.Config, eta: Double, metric: Metric,
+    * the same time. The cached per-user loss frame is freed once the new
+    * rows are materialized. */
+  private def stepEvaluated(ratings: DataFrame, x: DataFrame,
+      cfg: AlsEngine.Config, eta: Double, metric: Metric,
       model: ALSModel, maxUserId: Long): (TracePoint, DataFrame) = {
     val ev = evaluateModel(model, ratings, metric, Some(maxUserId))
-    try (ev.point, unfairnessStep(spark, x, cfg, eta, metric, ev)
+    try (ev.point, unfairnessStep(x, cfg, eta, metric, model, ev)
       .localCheckpoint())
     finally ev.unpersist()
   }
@@ -470,7 +461,7 @@ object Antidote {
     // aggregator (partial-aggregates map-side; merges associatively).
     val f = col("features")
     val gram = udaf(new graft.functions.GramAggregator(k),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Float]]())
+      ExpressionEncoder[Seq[Float]]())
     val gm = model.itemFactors.agg(gram(f).as("g"), count(lit(1)).as("m"))
       .head()
     val tri = gm.getSeq[Double](0)
@@ -530,16 +521,15 @@ object Antidote {
     * collapses to ∂U/∂X_aj = g_jᵀ M_j⁻¹ u_a with
     * g_j = Σ_{i∈Ω_j} (2 d_i/|Ω_i|)(p_ij − R_ij) u_i.
     *
-    * Distribution of labor: per-item B_j/g_j/n_j are ONE groupBy(item) of
-    * codegen'd factor products; the k×k solve M_j⁻¹ g_j runs per item
-    * INSIDE the cluster (typed map — genuine per-row linear algebra, the
-    * documented mapPartitions-class exception); the only driver-held state
+    * Distribution of labor: per-item B_j/g_j/n_j and the k×k solve
+    * M_j⁻¹ g_j are ONE groupBy(item) through [[UnfairnessItemSolve]]
+    * (genuine per-key linear algebra, the documented typed-aggregator
+    * exception), run INSIDE the cluster; the only driver-held state
     * is the k̃×k antidote factor block and its k×k Gram — budget-sized,
     * independent of n, m, and |ratings|. */
-  private def unfairnessStep(spark: SparkSession, x: DataFrame,
-      cfg: AlsEngine.Config, eta: Double, metric: Metric,
+  private def unfairnessStep(x: DataFrame, cfg: AlsEngine.Config,
+      eta: Double, metric: Metric, model: ALSModel,
       ev: ModelEval): DataFrame = {
-    import spark.implicits._
     val k = cfg.rank
 
     // Antidote factor block U_a (k̃×k — budget-sized driver state),
@@ -575,7 +565,7 @@ object Antidote {
     }
 
     // Cells with error, weight, and the rating user's factor vector (the
-    // cached prediction pass carries it).
+    // prediction pass carries it).
     val cells = ev.pred
       .join(dDf, "user_id")
       .select(col("item_id"),
@@ -583,55 +573,84 @@ object Antidote {
           .as("wgt"),
         col("u"))
 
-    // One shuffle on item_id: upper-tri of B_j, the k-vector g_j, and n_j.
-    def e(i: Int): Column = element_at(col("u"), i + 1).cast(DoubleType)
-    val triNames = for (i <- 0 until k; j <- i until k) yield s"b${i}_$j"
-    val aggCols =
-      (for (i <- 0 until k; j <- i until k)
-        yield sum(e(i) * e(j)).as(s"b${i}_$j")) ++
-      (0 until k).map(i => sum(col("wgt") * e(i)).as(s"g$i")) :+
-      count(lit(1)).as("nj")
-    val itemAgg = cells.groupBy("item_id")
-      .agg(aggCols.head, aggCols.tail: _*)
-
-    // Per-item ridge solve w_j = M_j⁻¹ g_j — distributed typed map.
-    val saArr = sa.toArray // column-major k×k
-    val lam = cfg.regParam
-    val solved = itemAgg.select(col("item_id"),
-        array(triNames.map(col): _*).as("btri"),
-        array((0 until k).map(i => col(s"g$i")): _*).as("g"),
-        col("nj"))
-      .as[(Long, Seq[Double], Seq[Double], Long)]
-      .map { case (item, bTri, gv, nj) =>
-        val m = new DenseMatrix[Double](k, k, saArr.clone())
-        var idx = 0
-        for (i <- 0 until k; j <- i until k) {
-          m(i, j) += bTri(idx); if (i != j) m(j, i) += bTri(idx)
-          idx += 1
-        }
-        for (i <- 0 until k) m(i, i) += lam * (nj + kTilde)
-        val w = m \ DenseVector(gv.toArray)
-        (item, w.toArray.toSeq)
-      }.toDF("item_id", "w")
+    // One shuffle on item_id: per item, B_j, g_j and n_j summed by one
+    // kernel, which then solves w_j = M_j⁻¹ g_j.
+    val solve = udaf(new UnfairnessItemSolve(k, sa.toArray, cfg.regParam,
+      kTilde), ExpressionEncoder[(Double, Seq[Float])]())
+    val solved = cells.groupBy("item_id")
+      .agg(solve(col("wgt"), col("u")).as("w"))
 
     // grad_aj = u_aᵀ w_j; projected update stays fully distributed (items
     // without real cells keep their rating: left join + zero gradient).
     // X meets the solve result in a join co-partitioned on item_id: the
     // solve's size is unknown until it runs, and materializing it first
-    // so the planner could broadcast it cost more jobs than it saved. The
-    // cached X of a later iteration is already partitioned by item_id, so
-    // only the first step shuffles X.
-    val uaDf = uaRows.map { case (id, u) => (id, u.toSeq) }
-      .toDF("user_id", "ua")
+    // so the planner could broadcast it cost more jobs than it saved.
+    // X's shuffle on item_id sets X_{t+1}'s row layout, which the next
+    // ALS train reads. u_a comes from the user factors on the cells' join
+    // key, so the plan reuses the cells' broadcast of them (a float
+    // widened to double: the same values U_a holds).
     val dot = coalesce(aggregate(
-      zip_with(col("ua"), col("w"), (p, q) => p * q),
+      zip_with(col("ua.features"), col("w"), (p, q) => p * q),
       lit(0.0), (acc, v) => acc + v), lit(0.0))
     x.select(col("user_id"), col("item_id"),
         col("rating").cast(DoubleType).as("rating"))
       .join(solved, Seq("item_id"), "left")
-      .join(broadcast(uaDf), "user_id")
+      .join(model.userFactors.as("ua"),
+        col("user_id").cast(IntegerType) === col("ua.id"))
       .select(col("user_id"), col("item_id"),
         round(least(lit(5.0), greatest(lit(1.0),
           col("rating") - lit(eta) * dot)), 6).as("rating"))
   }
+}
+
+/** [[Antidote]]'s per-item unfairness kernel. Over one item j's cells
+  * (wgt_i, u_i) it sums, in one double buffer, the upper triangle of
+  * B_j = Σ u_i u_iᵀ, the k-vector g_j = Σ wgt_i u_i and the count n_j,
+  * then solves w_j = M_j⁻¹ g_j with M_j = S_a + B_j + λ(n_j + k̃)I
+  * (`sa` is S_a = Σ_a u_a u_aᵀ column-major). Each cell adds the same
+  * float-to-double products, in row order, that one SQL `sum` per cell
+  * of B_j and g_j adds, and partial buffers merge in the order the
+  * shuffle delivers them, as those sums' partials do — so every sum, and
+  * the solve, keeps its bits. */
+private[ml] final class UnfairnessItemSolve(k: Int, sa: Array[Double],
+    lam: Double, kTilde: Int)
+    extends org.apache.spark.sql.expressions.Aggregator[
+      (Double, Seq[Float]), Array[Double], Seq[Double]] {
+
+  private val tri = k * (k + 1) / 2
+
+  override def zero: Array[Double] = new Array[Double](tri + k + 1)
+
+  override def reduce(buf: Array[Double], cell: (Double, Seq[Float]))
+      : Array[Double] = {
+    val (wgt, u) = cell
+    var idx = 0
+    for (i <- 0 until k; j <- i until k) {
+      buf(idx) += u(i).toDouble * u(j).toDouble
+      idx += 1
+    }
+    for (i <- 0 until k) buf(tri + i) += wgt * u(i).toDouble
+    buf(tri + k) += 1
+    buf
+  }
+
+  override def merge(a: Array[Double], b: Array[Double]): Array[Double] = {
+    for (i <- a.indices) a(i) += b(i)
+    a
+  }
+
+  override def finish(buf: Array[Double]): Seq[Double] = {
+    val m = new DenseMatrix[Double](k, k, sa.clone())
+    var idx = 0
+    for (i <- 0 until k; j <- i until k) {
+      m(i, j) += buf(idx); if (i != j) m(j, i) += buf(idx)
+      idx += 1
+    }
+    for (i <- 0 until k) m(i, i) += lam * (buf(tri + k).toLong + kTilde)
+    val w = m \ DenseVector(buf.slice(tri, tri + k))
+    w.toArray.toSeq
+  }
+
+  override def bufferEncoder: Encoder[Array[Double]] = ExpressionEncoder()
+  override def outputEncoder: Encoder[Seq[Double]] = ExpressionEncoder()
 }

@@ -214,4 +214,10 @@ class PlanSpec extends SparkTestBase {
     assert(stages >= 1 && PlanFacts.executed(agg).exchanges == stages,
       s"${PlanFacts.executed(agg)} vs $stages shuffle query stages")
   }
+
+  test("PlanDump writes the executed final plan of q_agg_groupby") {
+    val txt = PlanDump.finalPlanText(Aggregates.qAggGroupby.run(spark, sf))
+    assert(txt.contains("isFinalPlan=true"), txt)
+    assert(!txt.contains("isFinalPlan=false"), txt)
+  }
 }

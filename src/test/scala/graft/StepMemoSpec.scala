@@ -6,6 +6,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.concurrent.TrieMap
 
 import graft.ml.{AlsEngine, Antidote, Metric, Ratings}
+import org.apache.spark.ml.recommendation.ALSModel
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
@@ -188,5 +189,49 @@ class StepMemoSpec extends SparkTestBase {
     assert(jobsUnder(momentsFrame)(Antidote.factorMoments(raw)) > 0)
     SharedBuild.clearAll()
     rawBlocks.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist()))
+  }
+
+  test("a train-memo plan hit runs no digest pass; rand(), one changed " +
+      "rating and an evicted entry still run it") {
+    val digestFrame = "AlsEngine$.digestBounds"
+    SharedBuild.clearAll()
+    val m = AlsEngine.train(ratings.unionByName(x0), cfg)
+
+    // a separately built, semantically equal deterministic frame: the
+    // uncached view's plan and a fresh X₀ frame
+    def rebuilt: DataFrame = Ratings.view(spark, sf).unionByName(x0)
+    var hit: ALSModel = null
+    assert(jobsUnder(digestFrame) { hit = AlsEngine.train(rebuilt, cfg) } == 0)
+    assert(hit eq m)
+
+    // rand() makes the plan nondeterministic: every call runs the pass,
+    // and the content key still finds the model
+    def noisy: DataFrame = rebuilt.withColumn("noise", rand(7L))
+    for (_ <- 1 to 2) {
+      var r: ALSModel = null
+      assert(jobsUnder(digestFrame) { r = AlsEngine.train(noisy, cfg) } > 0)
+      assert(r eq m)
+    }
+
+    // one changed rating misses and fits: the train memo hands out one
+    // instance per key, so a new instance is a new fit
+    val first = x0.orderBy("user_id", "item_id").head()
+    val changed = rebuilt.withColumn("rating",
+      when(col("user_id") === first.getLong(0) &&
+        col("item_id") === first.getLong(1), col("rating") * 0.5 + 0.25)
+        .otherwise(col("rating")))
+    var other: ALSModel = null
+    assert(jobsUnder(digestFrame) { other = AlsEngine.train(changed, cfg) } > 0)
+    assert(!(other eq m))
+
+    // sixteen other trains of the same frame evict m's entry (cap 16): the
+    // plan still finds the digest row, but the call re-runs the pass and
+    // refits
+    (1 to 16).foreach(i => AlsEngine.train(rebuilt,
+      AlsEngine.Config(rank = 2, maxIter = 1, seed = i.toLong)))
+    var refit: ALSModel = null
+    assert(jobsUnder(digestFrame) { refit = AlsEngine.train(rebuilt, cfg) } > 0)
+    assert(!(refit eq m))
+    SharedBuild.clearAll()
   }
 }
