@@ -126,13 +126,6 @@ object Bench {
     // SPARK_GRAFT_ONLY=q1,q2 benches a subset — for isolating noisy
     // measurements.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    // SPARK_GRAFT_COLD=1 runs no warm line and clears every memo before
-    // each query — each number then bills the full cost of computing
-    // from parquet. SPARK_GRAFT_CACHE_TABLES=0 drops warm:tables, which
-    // restores cold scans per query.
-    val cold = sys.env.get("SPARK_GRAFT_COLD").contains("1")
-    val cacheTables = !cold &&
-      !sys.env.get("SPARK_GRAFT_CACHE_TABLES").contains("0")
     /** Seconds `f` took, or -1 (with its cause on stderr) if it threw. */
     def timed(name: String)(f: => Any): Double = {
       val t0 = System.nanoTime()
@@ -142,34 +135,27 @@ object Bench {
         -1.0
       }
     }
-    val warmResults =
-      if (cold) Seq.empty
-      else warmLines
-        .filter(w => only.forall(sel => w.consumers.exists(sel.contains)))
-        .filter(w => cacheTables || w.name != "warm:tables")
-        .map(w => w.name -> timed(w.name)(w.build(spark, sfDir)))
+    val warmResults = warmLines
+      .filter(w => only.forall(sel => w.consumers.exists(sel.contains)))
+      .map(w => w.name -> timed(w.name)(w.build(spark, sfDir)))
     // The keep-set is snapshotted AFTER warmup so the table cache
     // survives every release pass.
     val keep = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val selected = SparkEntry.queries
       .filter { case (n, _) => only.forall(_.contains(n)) }
     var sinceGc = 0
-    val best2Sec = sys.env.get("SPARK_GRAFT_BEST2")
-      .map(_.toDouble).getOrElse(2.5)
+    // Best-of-2 threshold: 2.5 s keeps the full-registry wall time
+    // inside any stdout capture window.
+    val best2Sec = 2.5
     val results = warmResults ++ selected.map { case (name, fn) =>
-      if (cold) SharedBuild.clearAll()
       val dt1 = timed(name)(fn(spark, sfDir).count())
       // Small queries report best-of-2 (VERDICT r8 task 6): the
       // single-JVM co-tenant noise floor swings small queries >2×
       // between runs, swallowing real regressions; min-of-2 estimates
-      // the intrinsic cost (noise only ever ADDS time). Disabled in
-      // cold mode — the second run would be memo-warm — and for
+      // the intrinsic cost (noise only ever ADDS time). Skipped for
       // queries big enough that noise is relatively small.
-      // SPARK_GRAFT_BEST2 sets the threshold in seconds (0 = off;
-      // default 2.5 keeps the full-registry wall time inside any
-      // stdout capture window; 5 is the stability-snapshot setting).
       val dt =
-        if (dt1 >= 0 && !cold && dt1 < best2Sec) {
+        if (dt1 >= 0 && dt1 < best2Sec) {
           val dt2 = timed(name)(fn(spark, sfDir).count())
           if (dt2 >= 0) math.min(dt1, dt2) else dt1
         } else dt1
@@ -246,11 +232,12 @@ object Bench {
     // Stamp the timing regime into the emitted JSON so ratio tooling can
     // refuse to compare maps produced under different regimes (best-of-2
     // threshold, cold vs warm memos, table caching) — cross-regime diffs
-    // report spurious speedups/regressions. "repeat" is always 1 now; it
-    // stays in the stamp so maps written before it was fixed compare
-    // without a regime warning.
-    val regime = s"""{"best2_sec":${r3(best2Sec)},"cold":$cold,""" +
-      s""""cache_tables":$cacheTables,"repeat":1}"""
+    // report spurious speedups/regressions. The regime is fixed now (warm
+    // memos, cached tables, best-of-2 under 2.5 s, one repeat); every
+    // field stays in the stamp so older maps compare without a regime
+    // warning.
+    val regime = s"""{"best2_sec":${r3(best2Sec)},"cold":false,""" +
+      s""""cache_tables":true,"repeat":1}"""
     val full = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","regime":$regime,"errors":[${errors.mkString(",")}]}"""
     try {
       // Subset runs (SPARK_GRAFT_ONLY) go to a separate file so they can

@@ -254,10 +254,10 @@ object AlsEngine {
     * BIGINT columns. */
   def trainCompacted(ratings: DataFrame, cfg: Config = Config())
       : (ALSModel, DataFrame, DataFrame) = {
-    // r15 (profiled first — ProfileCompact): the two dictionaries are
-    // each consumed twice (compaction join + factor re-key), and every
-    // consumption re-ran the GlobalRank bucketed pass; their builds are
-    // independent chains of small eager jobs that serialized. One
+    // r15: the two dictionaries are each consumed twice (compaction
+    // join + factor re-key), and every consumption re-ran the GlobalRank
+    // bucketed pass; their builds are independent chains of small eager
+    // jobs that serialized. One
     // localCheckpoint each (dictionary-sized: one row per distinct id —
     // exactly what a production compaction materializes) and the two
     // builds overlap as concurrent jobs (guide §1.2, §2.6). Values are

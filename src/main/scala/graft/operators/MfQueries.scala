@@ -352,11 +352,11 @@ object MfQueries {
   }
 
   val qAntidoteStep = Q.noOracle("q_antidote_step") { (s, d) =>
-    val ratings = Ratings.view(s, d)
+    val ratings = Ratings.viewCached(s, d)
     val stats = Antidote.userStatsCached(s, d)
     // X₀ materialized once: the train, the step's pass over X₀ and the
-    // result all read it, where its plan re-derives the ratings view for
-    // the item list on every read
+    // result all read it, where its plan re-derives the item list on
+    // every read
     val x0 = Antidote.init(s, ratings, 0.01, stats).localCheckpoint()
     // 5 ALS sweeps are plenty for the V the gradient linearizes around;
     // [R; X₀] is cached for the train's digest pass and its fit

@@ -222,6 +222,35 @@ object StreamOps {
       }
   }
 
+  /** The versioned-state loop of the incremental maintainers: replay
+    * `stream` to completion (Trigger.AvailableNow) and write each
+    * micro-batch's `step(batch, prev)` as state version v<batchId>, where
+    * `prev` is the last version written (None on the first batch).
+    * Versioning per batch (read v<prev>, write v<id>) means a version is
+    * never read and overwritten in the same job; at scale the same loop
+    * writes to a partitioned table and only touches the partitions the
+    * batch contains. A re-run in the same `workDir` numbers its batches
+    * from 0 again and never reads the versions an earlier, longer run
+    * left behind. Returns the final version. */
+  private def foldState(stream: DataFrame, workDir: String)(
+      step: (DataFrame, Option[DataFrame]) => DataFrame): DataFrame = {
+    val spark = stream.sparkSession
+    def state(v: Long): String = s"$workDir/state/v$v"
+    @volatile var version = -1L
+    stream.writeStream
+      .outputMode(OutputMode.Append())
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val prev =
+          if (version < 0) None else Some(spark.read.parquet(state(version)))
+        step(batch, prev).write.mode("overwrite").parquet(state(batchId))
+        version = batchId
+      }
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    spark.read.parquet(state(version))
+  }
+
   /** Streaming incremental aggregate maintenance: replay the events table
     * file-by-file (maxFilesPerTrigger=1 over a 4-file split → 4 real
     * micro-batches) and maintain a (day, event_type) count table in
@@ -229,36 +258,20 @@ object StreamOps {
     * state version — the streaming analog of q_incr_agg. Because count
     * partials are additive (commutative + associative), the FINAL state is
     * independent of batch boundaries and ordering, which is exactly what
-    * lets the DuckDB batch recompute serve as its oracle. State is
-    * versioned per batch (read v_{prev}, write v_{id}) so a version is
-    * never read and overwritten in the same job; at scale the same loop
-    * writes to a partitioned table and only touches the partitions the
-    * batch contains. Returns the final state. */
+    * lets the DuckDB batch recompute serve as its oracle. Returns the
+    * final state. */
   def incrementalDailyCounts(spark: SparkSession, sfDir: String,
       workDir: String): DataFrame = {
     val stream = sliceStream(spark, sfDir, 4)._1
       .select(col("ts"), col("event_type"))
-    val stateBase = s"$workDir/state"
-    @volatile var version = -1L
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val partial = batch
-          .groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
-          .agg(count(lit(1)).as("cnt"))
-        val merged =
-          if (version < 0) partial
-          else spark.read.parquet(s"$stateBase/v$version")
-            .unionByName(partial)
-            .groupBy("day", "event_type")
-            .agg(sum(col("cnt")).cast(LongType).as("cnt"))
-        merged.write.mode("overwrite").parquet(s"$stateBase/v$batchId")
-        version = batchId
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(s"$stateBase/v$version")
+    foldState(stream, workDir) { (batch, prev) =>
+      val partial = batch
+        .groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
+        .agg(count(lit(1)).as("cnt"))
+      prev.fold(partial)(_.unionByName(partial)
+        .groupBy("day", "event_type")
+        .agg(sum(col("cnt")).cast(LongType).as("cnt")))
+    }
   }
 
   /** Streaming fingerprint maintenance: replay events as a 4-file stream
@@ -277,35 +290,22 @@ object StreamOps {
     val stream = sliceStream(spark, sfDir, 4)._1
       .select(col("event_id"), col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("us"))
-    val stateBase = s"$workDir/state"
     val mod = 1099511627776L // 2^40
     val h = conv(substring(md5(concat_ws("|", col("event_id"),
       col("user_id"), col("event_type"), col("us"))), 1, 15), 16, 10)
       .cast(LongType)
-    @volatile var version = -1L
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val partial = batch.select(col("event_type"), h.as("h"))
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("n_rows"),
-            (sum(col("h") % mod) % mod).cast(LongType).as("sum_hash"),
-            bit_xor(col("h")).as("xor_hash"))
-        val merged =
-          if (version < 0) partial
-          else spark.read.parquet(s"$stateBase/v$version")
-            .unionByName(partial)
-            .groupBy("event_type")
-            .agg(sum(col("n_rows")).cast(LongType).as("n_rows"),
-              (sum(col("sum_hash")) % mod).cast(LongType).as("sum_hash"),
-              bit_xor(col("xor_hash")).as("xor_hash"))
-        merged.write.mode("overwrite").parquet(s"$stateBase/v$batchId")
-        version = batchId
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(s"$stateBase/v$version")
+    foldState(stream, workDir) { (batch, prev) =>
+      val partial = batch.select(col("event_type"), h.as("h"))
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n_rows"),
+          (sum(col("h") % mod) % mod).cast(LongType).as("sum_hash"),
+          bit_xor(col("h")).as("xor_hash"))
+      prev.fold(partial)(_.unionByName(partial)
+        .groupBy("event_type")
+        .agg(sum(col("n_rows")).cast(LongType).as("n_rows"),
+          (sum(col("sum_hash")) % mod).cast(LongType).as("sum_hash"),
+          bit_xor(col("xor_hash")).as("xor_hash")))
+    }
   }
 
   /** Streaming MERGE/upsert maintenance: replay events as a 4-file
@@ -324,7 +324,6 @@ object StreamOps {
     val stream = sliceStream(spark, sfDir, nBatches)._1
       .select(col("event_id"), col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("us"))
-    val stateBase = s"$workDir/state"
     def latest(df: DataFrame): DataFrame = {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("user_id")
@@ -333,24 +332,11 @@ object StreamOps {
         .filter(col("__rk") === 1)
         .drop("__rk")
     }
-    @volatile var version = -1L
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val partial = latest(batch.select(
-          col("user_id"), col("event_type"), col("us"), col("event_id")))
-        val merged =
-          if (version < 0) partial
-          else latest(spark.read.parquet(s"$stateBase/v$version")
-            .unionByName(partial))
-        merged.write.mode("overwrite").parquet(s"$stateBase/v$batchId")
-        version = batchId
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(s"$stateBase/v$version")
-      .select(col("user_id"), col("event_type").as("state"), col("us"))
+    foldState(stream, workDir) { (batch, prev) =>
+      val partial = latest(batch.select(
+        col("user_id"), col("event_type"), col("us"), col("event_id")))
+      prev.fold(partial)(p => latest(p.unionByName(partial)))
+    }.select(col("user_id"), col("event_type").as("state"), col("us"))
   }
 
   /** Streaming quantile maintenance: replay events as a 4-file stream and
@@ -369,26 +355,13 @@ object StreamOps {
     val stream = sliceStream(spark, sfDir, nBatches)._1
       .select(col("event_type"),
         floor(col("value") * 100).cast(LongType).as("bin"))
-    val stateBase = s"$workDir/state"
-    @volatile var version = -1L
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val partial = batch.groupBy("event_type", "bin")
-          .agg(count(lit(1)).as("cnt"))
-        val merged =
-          if (version < 0) partial
-          else spark.read.parquet(s"$stateBase/v$version")
-            .unionByName(partial)
-            .groupBy("event_type", "bin")
-            .agg(sum(col("cnt")).cast(LongType).as("cnt"))
-        merged.write.mode("overwrite").parquet(s"$stateBase/v$batchId")
-        version = batchId
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    histogramQuantiles(spark.read.parquet(s"$stateBase/v$version"))
+    histogramQuantiles(foldState(stream, workDir) { (batch, prev) =>
+      val partial = batch.groupBy("event_type", "bin")
+        .agg(count(lit(1)).as("cnt"))
+      prev.fold(partial)(_.unionByName(partial)
+        .groupBy("event_type", "bin")
+        .agg(sum(col("cnt")).cast(LongType).as("cnt")))
+    })
   }
 
   /** p50/p90/p99 off a (event_type, bin, cnt) histogram: smallest bin
@@ -425,30 +398,17 @@ object StreamOps {
     val stream = sliceStream(spark, sfDir, nBatches)._1
       .select(col("event_type"),
         round(col("value") * 1000000L).cast(LongType).as("v6"))
-    val stateBase = s"$workDir/state"
-    @volatile var version = -1L
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val partial = batch.groupBy("event_type")
-          .agg(count(lit(1)).as("n_rows"),
-            sum(col("v6")).cast(LongType).as("sum6"),
-            min(col("v6")).as("min6"), max(col("v6")).as("max6"))
-        val merged =
-          if (version < 0) partial
-          else spark.read.parquet(s"$stateBase/v$version")
-            .unionByName(partial)
-            .groupBy("event_type")
-            .agg(sum(col("n_rows")).cast(LongType).as("n_rows"),
-              sum(col("sum6")).cast(LongType).as("sum6"),
-              min(col("min6")).as("min6"), max(col("max6")).as("max6"))
-        merged.write.mode("overwrite").parquet(s"$stateBase/v$batchId")
-        version = batchId
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(s"$stateBase/v$version")
+    foldState(stream, workDir) { (batch, prev) =>
+      val partial = batch.groupBy("event_type")
+        .agg(count(lit(1)).as("n_rows"),
+          sum(col("v6")).cast(LongType).as("sum6"),
+          min(col("v6")).as("min6"), max(col("v6")).as("max6"))
+      prev.fold(partial)(_.unionByName(partial)
+        .groupBy("event_type")
+        .agg(sum(col("n_rows")).cast(LongType).as("n_rows"),
+          sum(col("sum6")).cast(LongType).as("sum6"),
+          min(col("min6")).as("min6"), max(col("max6")).as("max6")))
+    }
   }
 
   /** Incremental second-moment maintainer per event type: state is
@@ -464,30 +424,17 @@ object StreamOps {
     val stream = sliceStream(spark, sfDir, nBatches)._1
       .select(col("event_type"),
         round(col("value") * 1000000L).cast(LongType).as("v6"))
-    val stateBase = s"$workDir/state"
-    @volatile var version = -1L
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val partial = batch.groupBy("event_type")
-          .agg(count(lit(1)).as("n_rows"),
-            sum(col("v6")).cast(LongType).as("sum6"),
-            sum(col("v6").cast(big38) * col("v6")).cast(big38).as("ssq"))
-        val merged =
-          if (version < 0) partial
-          else spark.read.parquet(s"$stateBase/v$version")
-            .unionByName(partial)
-            .groupBy("event_type")
-            .agg(sum(col("n_rows")).cast(LongType).as("n_rows"),
-              sum(col("sum6")).cast(LongType).as("sum6"),
-              sum(col("ssq")).cast(big38).as("ssq"))
-        merged.write.mode("overwrite").parquet(s"$stateBase/v$batchId")
-        version = batchId
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(s"$stateBase/v$version")
+    foldState(stream, workDir) { (batch, prev) =>
+      val partial = batch.groupBy("event_type")
+        .agg(count(lit(1)).as("n_rows"),
+          sum(col("v6")).cast(LongType).as("sum6"),
+          sum(col("v6").cast(big38) * col("v6")).cast(big38).as("ssq"))
+      prev.fold(partial)(_.unionByName(partial)
+        .groupBy("event_type")
+        .agg(sum(col("n_rows")).cast(LongType).as("n_rows"),
+          sum(col("sum6")).cast(LongType).as("sum6"),
+          sum(col("ssq")).cast(big38).as("ssq")))
+    }
   }
 
   /** Incremental PSI drift monitor: state is the per-(event_type, bucket)
@@ -504,26 +451,13 @@ object StreamOps {
       .select(col("event_type"),
         least(lit(15L), floor(col("value") / 10)).cast(LongType)
           .as("bucket"))
-    val stateBase = s"$workDir/state"
-    @volatile var version = -1L
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val partial = batch.groupBy("event_type", "bucket")
-          .agg(count(lit(1)).as("cnt"))
-        val merged =
-          if (version < 0) partial
-          else spark.read.parquet(s"$stateBase/v$version")
-            .unionByName(partial)
-            .groupBy("event_type", "bucket")
-            .agg(sum(col("cnt")).cast(LongType).as("cnt"))
-        merged.write.mode("overwrite").parquet(s"$stateBase/v$batchId")
-        version = batchId
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    psiFromHistogram(spark.read.parquet(s"$stateBase/v$version"))
+    psiFromHistogram(foldState(stream, workDir) { (batch, prev) =>
+      val partial = batch.groupBy("event_type", "bucket")
+        .agg(count(lit(1)).as("cnt"))
+      prev.fold(partial)(_.unionByName(partial)
+        .groupBy("event_type", "bucket")
+        .agg(sum(col("cnt")).cast(LongType).as("cnt")))
+    })
   }
 
   /** Laplace-smoothed PSI of each type's bucket distribution vs the
@@ -571,26 +505,13 @@ object StreamOps {
       workDir: String, nBatches: Int = 4): DataFrame = {
     val stream = sliceStream(spark, sfDir, nBatches)._1
       .select(col("event_type"), to_date(col("ts")).as("day"))
-    val stateBase = s"$workDir/state"
-    @volatile var version = -1L
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val partial = batch.groupBy("event_type", "day")
-          .agg(count(lit(1)).as("cnt"))
-        val merged =
-          if (version < 0) partial
-          else spark.read.parquet(s"$stateBase/v$version")
-            .unionByName(partial)
-            .groupBy("event_type", "day")
-            .agg(sum(col("cnt")).cast(LongType).as("cnt"))
-        merged.write.mode("overwrite").parquet(s"$stateBase/v$batchId")
-        version = batchId
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    dayCoverageFromState(spark.read.parquet(s"$stateBase/v$version"))
+    dayCoverageFromState(foldState(stream, workDir) { (batch, prev) =>
+      val partial = batch.groupBy("event_type", "day")
+        .agg(count(lit(1)).as("cnt"))
+      prev.fold(partial)(_.unionByName(partial)
+        .groupBy("event_type", "day")
+        .agg(sum(col("cnt")).cast(LongType).as("cnt")))
+    })
   }
 
   /** q_missing_days finalization off a (event_type, day, cnt) state
@@ -621,29 +542,15 @@ object StreamOps {
     val stream = sliceStream(spark, sfDir, nBatches)._1
       .select(col("user_id"), col("event_id"), col("event_type"),
         unix_micros(col("ts")).as("us"))
-    val stateBase = s"$workDir/state"
-    @volatile var version = -1L
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val partial = batch.groupBy("user_id")
-          .agg(min(struct(col("us"), col("event_id"), col("event_type")))
-            .as("m"))
-        val merged =
-          if (version < 0) partial
-          else spark.read.parquet(s"$stateBase/v$version")
-            .unionByName(partial)
-            .groupBy("user_id")
-            .agg(min(col("m")).as("m"))
-        merged.write.mode("overwrite").parquet(s"$stateBase/v$batchId")
-        version = batchId
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(s"$stateBase/v$version")
-      .select(col("user_id"), col("m.us").as("first_us"),
-        col("m.event_type").as("first_type"))
+    foldState(stream, workDir) { (batch, prev) =>
+      val partial = batch.groupBy("user_id")
+        .agg(min(struct(col("us"), col("event_id"), col("event_type")))
+          .as("m"))
+      prev.fold(partial)(_.unionByName(partial)
+        .groupBy("user_id")
+        .agg(min(col("m")).as("m")))
+    }.select(col("user_id"), col("m.us").as("first_us"),
+      col("m.event_type").as("first_type"))
   }
 
   /** Incremental Bloom-filter maintenance over a real micro-batch replay:
@@ -673,25 +580,12 @@ object StreamOps {
         .select(col(idName), expr("pos DIV 64").as("word"),
           expr("shiftleft(1L, CAST(pos % 64 AS INT))").as("mask"))
     }
-    val stateBase = s"$workDir/state"
-    @volatile var version = -1L
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val partial = positions(batch, "event_id")
-          .groupBy("word").agg(bit_or(col("mask")).as("bits"))
-        val merged =
-          if (version < 0) partial
-          else spark.read.parquet(s"$stateBase/v$version")
-            .unionByName(partial)
-            .groupBy("word").agg(bit_or(col("bits")).as("bits"))
-        merged.write.mode("overwrite").parquet(s"$stateBase/v$batchId")
-        version = batchId
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val bloom = spark.read.parquet(s"$stateBase/v$version")
+    val bloom = foldState(stream, workDir) { (batch, prev) =>
+      val partial = positions(batch, "event_id")
+        .groupBy("word").agg(bit_or(col("mask")).as("bits"))
+      prev.fold(partial)(_.unionByName(partial)
+        .groupBy("word").agg(bit_or(col("bits")).as("bits")))
+    }
     // Probe: every ingested id (must all hit — OR-merge loses nothing)
     // plus a disjoint offset set measuring the false-positive rate.
     val ids = spark.read.parquet(src).select(col("event_id"))
@@ -753,27 +647,14 @@ object StreamOps {
           .cast(LongType).as("hv"))
     val kmv = udaf(new graft.functions.KmvSketch(k),
       org.apache.spark.sql.Encoders.scalaLong)
-    val stateBase = s"$workDir/state"
-    @volatile var version = -1L
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val partial = batch.groupBy("event_type")
-          .agg(kmv(col("hv")).as("mins"))
-          .select(col("event_type"), explode(col("mins")).as("hv"))
-        val merged =
-          if (version < 0) partial
-          else spark.read.parquet(s"$stateBase/v$version")
-            .unionByName(partial)
-            .groupBy("event_type").agg(kmv(col("hv")).as("mins"))
-            .select(col("event_type"), explode(col("mins")).as("hv"))
-        merged.write.mode("overwrite").parquet(s"$stateBase/v$batchId")
-        version = batchId
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(s"$stateBase/v$version")
+    foldState(stream, workDir) { (batch, prev) =>
+      val partial = batch.groupBy("event_type")
+        .agg(kmv(col("hv")).as("mins"))
+        .select(col("event_type"), explode(col("mins")).as("hv"))
+      prev.fold(partial)(_.unionByName(partial)
+        .groupBy("event_type").agg(kmv(col("hv")).as("mins"))
+        .select(col("event_type"), explode(col("mins")).as("hv")))
+    }
   }
 
   /** Jitter-planted event stream shared by q_watermark_plan and the
@@ -827,16 +708,6 @@ object StreamOps {
       .orderBy("event_type")
   }
 
-  /** Incremental watermark-plan maintainer (12th incremental
-    * maintainer): state is (a) the per-user running event-time max and
-    * (b) the per-(event_type, bucket) lateness histogram. Batches are
-    * event_id-RANGE slices replayed oldest-first (arrival = log order —
-    * the kafka-offset contract), so an event's "prior events" set is
-    * {event_id' < event_id} under ANY slice count: the per-user
-    * running-max state composes exactly and the maintained histogram is
-    * batch-boundary-independent, equal to the one-shot recompute (the
-    * q_watermark_plan semantics). A 100 TB feed keeps its watermark
-    * sizing current digesting only each day's tail. */
   /** Write `e` as `nBatches` event_id-RANGE slices under `src`, one file
     * per slice with mtimes pinned ascending, so the file stream source
     * (oldest-first) replays slices in log order. Range slicing gives the
@@ -899,7 +770,8 @@ object StreamOps {
     * projections commute with id-range slicing; the store also serves the
     * order-INDEPENDENT maintainers, whose merges are commutative, so
     * batch composition is immaterial to their final state). Billed as the
-    * bench's warm:stream_slices line; cold mode clears it like any memo. */
+    * bench's warm:stream_slices line; `SharedBuild.clearAll()` clears it
+    * like any memo. */
   private val sliceDirs = graft.SharedBuild[(String, Int), String]()()
 
   def warmSlices(spark: SparkSession, sfDir: String): Unit = {
@@ -934,6 +806,18 @@ object StreamOps {
       .parquet(src), src)
   }
 
+  /** Incremental watermark-plan maintainer (12th incremental
+    * maintainer): state is (a) the per-user running event-time max and
+    * (b) the per-(event_type, bucket) lateness histogram. Batches are
+    * event_id-RANGE slices replayed oldest-first (arrival = log order —
+    * the kafka-offset contract), so an event's "prior events" set is
+    * {event_id' < event_id} under ANY slice count: the per-user
+    * running-max state composes exactly and the maintained histogram is
+    * batch-boundary-independent, equal to the one-shot recompute (the
+    * q_watermark_plan semantics). A 100 TB feed keeps its watermark
+    * sizing current digesting only each day's tail. Its state has two
+    * parts per version (v<id>/hist, v<id>/umax), so it runs its own copy
+    * of the `foldState` loop. */
   def incrementalWatermark(spark: SparkSession, sfDir: String,
       workDir: String, nBatches: Int = 4): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1013,49 +897,35 @@ object StreamOps {
     val stream = sliceStream(spark, sfDir, nBatches)._1
       .select(col("event_id"), col("user_id"),
         unix_micros(col("ts")).as("us"))
-    val stateBase = s"$workDir/state"
-    @volatile var version = -1L
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val bw = Window.partitionBy("user_id").orderBy("event_id")
-        val withLag = batch.withColumn("prev_us",
-          lag(col("us"), 1).over(bw))
-        // Boundary events are by EVENT_ID order (the lag ordering), not by
-        // time: with late/out-of-order events min(us)/max(us) would pick
-        // the wrong boundary and the cross-batch gap check below would
-        // diverge from the lag-by-event_id oracle. min_by/max_by(us,
-        // event_id) is the first/last event of the batch in replay order.
-        val partial = withLag.groupBy("user_id").agg(
-          (sum(when(col("prev_us").isNull
-              || col("us") - col("prev_us") >= gapUs, 1L).otherwise(0L)))
-            .as("n_sess"),
-          min_by(col("us"), col("event_id")).as("first_us"),
-          max_by(col("us"), col("event_id")).as("last_us"))
-        val merged =
-          if (version < 0) partial
-          else {
-            val st = spark.read.parquet(s"$stateBase/v$version")
-              .select(col("user_id"), col("n_sess").as("s_n"),
-                col("first_us").as("s_first"), col("last_us").as("s_last"))
-            st.join(partial, Seq("user_id"), "full_outer")
-              .select(col("user_id"),
-                (coalesce(col("s_n"), lit(0L))
-                  + coalesce(col("n_sess"), lit(0L))
-                  - when(col("s_last").isNotNull
-                      && col("first_us").isNotNull
-                      && col("first_us") - col("s_last") < gapUs, 1L)
-                    .otherwise(0L)).as("n_sess"),
-                coalesce(col("s_first"), col("first_us")).as("first_us"),
-                coalesce(col("last_us"), col("s_last")).as("last_us"))
-          }
-        merged.write.mode("overwrite").parquet(s"$stateBase/v$batchId")
-        version = batchId
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    sessionRollup(spark.read.parquet(s"$stateBase/v$version"))
+    sessionRollup(foldState(stream, workDir) { (batch, prev) =>
+      val bw = Window.partitionBy("user_id").orderBy("event_id")
+      val withLag = batch.withColumn("prev_us",
+        lag(col("us"), 1).over(bw))
+      // Boundary events are by EVENT_ID order (the lag ordering), not by
+      // time: with late/out-of-order events min(us)/max(us) would pick
+      // the wrong boundary and the cross-batch gap check below would
+      // diverge from the lag-by-event_id oracle. min_by/max_by(us,
+      // event_id) is the first/last event of the batch in replay order.
+      val partial = withLag.groupBy("user_id").agg(
+        (sum(when(col("prev_us").isNull
+            || col("us") - col("prev_us") >= gapUs, 1L).otherwise(0L)))
+          .as("n_sess"),
+        min_by(col("us"), col("event_id")).as("first_us"),
+        max_by(col("us"), col("event_id")).as("last_us"))
+      prev.fold(partial)(_
+        .select(col("user_id"), col("n_sess").as("s_n"),
+          col("first_us").as("s_first"), col("last_us").as("s_last"))
+        .join(partial, Seq("user_id"), "full_outer")
+        .select(col("user_id"),
+          (coalesce(col("s_n"), lit(0L))
+            + coalesce(col("n_sess"), lit(0L))
+            - when(col("s_last").isNotNull
+                && col("first_us").isNotNull
+                && col("first_us") - col("s_last") < gapUs, 1L)
+              .otherwise(0L)).as("n_sess"),
+          coalesce(col("s_first"), col("first_us")).as("first_us"),
+          coalesce(col("last_us"), col("s_last")).as("last_us")))
+    })
   }
 
   /** Incremental one-sided CUSUM monitor (14th incremental maintainer):
@@ -1081,64 +951,49 @@ object StreamOps {
     val stream = sliceStream(spark, sfDir, nBatches)._1
       .select(col("event_id"), col("event_type"),
         (round(col("value") * 1000000L).cast(LongType) - ref6).as("d"))
-    val stateBase = s"$workDir/state"
-    @volatile var version = -1L
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val w = Window.partitionBy("event_type").orderBy("event_id")
-        val pre = batch
-          .withColumn("pre", sum(col("d")).over(w))
-          .withColumn("runmin", min(col("pre")).over(w))
-        val partial = pre.groupBy("event_type").agg(
-          count(lit(1)).as("b_n"),
-          sum(col("d")).as("b_sum"),
-          min(col("pre")).as("b_minp"),
-          max(col("pre")).as("b_maxp"),
-          max(col("pre") - col("runmin")).as("b_rawbest"))
-        val merged =
-          if (version < 0)
-            partial.select(col("event_type"),
-              col("b_n").as("n"), col("b_sum").as("s"),
-              col("b_minp").as("minp"), col("b_maxp").as("maxp"),
-              col("b_rawbest").as("rawbest"),
-              greatest(col("b_maxp"), col("b_rawbest")).as("best"))
-          else {
-            val st = spark.read.parquet(s"$stateBase/v$version")
-            st.join(partial, Seq("event_type"), "full_outer")
-              .select(col("event_type"),
-                (coalesce(col("n"), lit(0L))
-                  + coalesce(col("b_n"), lit(0L))).as("n"),
-                (coalesce(col("s"), lit(0L))
-                  + coalesce(col("b_sum"), lit(0L))).as("s"),
-                when(col("b_minp").isNull, col("minp"))
-                  .when(col("minp").isNull, col("b_minp"))
-                  .otherwise(least(col("minp"),
-                    col("s") + col("b_minp"))).as("minp"),
-                when(col("b_maxp").isNull, col("maxp"))
-                  .when(col("maxp").isNull, col("b_maxp"))
-                  .otherwise(greatest(col("maxp"),
-                    col("s") + col("b_maxp"))).as("maxp"),
-                when(col("b_rawbest").isNull, col("rawbest"))
-                  .when(col("rawbest").isNull, col("b_rawbest"))
-                  .otherwise(greatest(col("rawbest"), col("b_rawbest"),
-                    col("s") + col("b_maxp") - col("minp")))
-                  .as("rawbest"),
-                when(col("b_maxp").isNull, col("best"))
-                  .when(col("best").isNull,
-                    greatest(col("b_maxp"), col("b_rawbest")))
-                  .otherwise(greatest(col("best"),
-                    col("s") + col("b_maxp")
-                      - least(lit(0L), col("minp")),
-                    col("b_rawbest"))).as("best"))
-          }
-        merged.write.mode("overwrite").parquet(s"$stateBase/v$batchId")
-        version = batchId
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(s"$stateBase/v$version")
+    foldState(stream, workDir) { (batch, prev) =>
+      val w = Window.partitionBy("event_type").orderBy("event_id")
+      val pre = batch
+        .withColumn("pre", sum(col("d")).over(w))
+        .withColumn("runmin", min(col("pre")).over(w))
+      val partial = pre.groupBy("event_type").agg(
+        count(lit(1)).as("b_n"),
+        sum(col("d")).as("b_sum"),
+        min(col("pre")).as("b_minp"),
+        max(col("pre")).as("b_maxp"),
+        max(col("pre") - col("runmin")).as("b_rawbest"))
+      prev.fold(partial.select(col("event_type"),
+          col("b_n").as("n"), col("b_sum").as("s"),
+          col("b_minp").as("minp"), col("b_maxp").as("maxp"),
+          col("b_rawbest").as("rawbest"),
+          greatest(col("b_maxp"), col("b_rawbest")).as("best")))(_
+        .join(partial, Seq("event_type"), "full_outer")
+        .select(col("event_type"),
+          (coalesce(col("n"), lit(0L))
+            + coalesce(col("b_n"), lit(0L))).as("n"),
+          (coalesce(col("s"), lit(0L))
+            + coalesce(col("b_sum"), lit(0L))).as("s"),
+          when(col("b_minp").isNull, col("minp"))
+            .when(col("minp").isNull, col("b_minp"))
+            .otherwise(least(col("minp"),
+              col("s") + col("b_minp"))).as("minp"),
+          when(col("b_maxp").isNull, col("maxp"))
+            .when(col("maxp").isNull, col("b_maxp"))
+            .otherwise(greatest(col("maxp"),
+              col("s") + col("b_maxp"))).as("maxp"),
+          when(col("b_rawbest").isNull, col("rawbest"))
+            .when(col("rawbest").isNull, col("b_rawbest"))
+            .otherwise(greatest(col("rawbest"), col("b_rawbest"),
+              col("s") + col("b_maxp") - col("minp")))
+            .as("rawbest"),
+          when(col("b_maxp").isNull, col("best"))
+            .when(col("best").isNull,
+              greatest(col("b_maxp"), col("b_rawbest")))
+            .otherwise(greatest(col("best"),
+              col("s") + col("b_maxp")
+                - least(lit(0L), col("minp")),
+              col("b_rawbest"))).as("best")))
+    }
   }
 
   /** Incremental per-type trend regression (15th incremental
@@ -1156,36 +1011,23 @@ object StreamOps {
       .select(col("event_type"),
         expr("unix_micros(ts) DIV 1000000").as("x"),
         round(col("value") * 1000000L).cast(LongType).as("v6"))
-    val stateBase = s"$workDir/state"
-    @volatile var version = -1L
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val partial = batch.groupBy("event_type")
-          .agg(count(lit(1)).cast(LongType).as("n"),
-            sum(col("x")).cast(LongType).as("sx"),
-            sum(col("v6")).cast(LongType).as("sv"),
-            sum(col("x").cast(big38) * col("x")).cast(big38).as("sxx"),
-            sum(col("x").cast(big38) * col("v6")).cast(big38).as("sxv"),
-            sum(col("v6").cast(big38) * col("v6")).cast(big38).as("svv"))
-        val merged =
-          if (version < 0) partial
-          else spark.read.parquet(s"$stateBase/v$version")
-            .unionByName(partial)
-            .groupBy("event_type")
-            .agg(sum(col("n")).cast(LongType).as("n"),
-              sum(col("sx")).cast(LongType).as("sx"),
-              sum(col("sv")).cast(LongType).as("sv"),
-              sum(col("sxx")).cast(big38).as("sxx"),
-              sum(col("sxv")).cast(big38).as("sxv"),
-              sum(col("svv")).cast(big38).as("svv"))
-        merged.write.mode("overwrite").parquet(s"$stateBase/v$batchId")
-        version = batchId
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(s"$stateBase/v$version")
+    foldState(stream, workDir) { (batch, prev) =>
+      val partial = batch.groupBy("event_type")
+        .agg(count(lit(1)).cast(LongType).as("n"),
+          sum(col("x")).cast(LongType).as("sx"),
+          sum(col("v6")).cast(LongType).as("sv"),
+          sum(col("x").cast(big38) * col("x")).cast(big38).as("sxx"),
+          sum(col("x").cast(big38) * col("v6")).cast(big38).as("sxv"),
+          sum(col("v6").cast(big38) * col("v6")).cast(big38).as("svv"))
+      prev.fold(partial)(_.unionByName(partial)
+        .groupBy("event_type")
+        .agg(sum(col("n")).cast(LongType).as("n"),
+          sum(col("sx")).cast(LongType).as("sx"),
+          sum(col("sv")).cast(LongType).as("sv"),
+          sum(col("sxx")).cast(big38).as("sxx"),
+          sum(col("sxv")).cast(big38).as("sxv"),
+          sum(col("svv")).cast(big38).as("svv")))
+    }
   }
 
   /** Incremental inter-event gap monitor (16th incremental maintainer):
@@ -1207,55 +1049,41 @@ object StreamOps {
     val stream = sliceStream(spark, sfDir, nBatches)._1
       .select(col("event_id"), col("event_type"),
         unix_micros(col("ts")).as("us"))
-    val stateBase = s"$workDir/state"
-    @volatile var version = -1L
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val bw = Window.partitionBy("event_type").orderBy("event_id")
-        val withLag = batch.withColumn("gap",
-          col("us") - lag(col("us"), 1).over(bw))
-        val partial = withLag.groupBy("event_type").agg(
-          count(lit(1)).as("n"),
-          sum(when(col("gap").isNotNull, 1L).otherwise(0L)).as("n_gaps"),
-          coalesce(sum(col("gap")), lit(0L)).as("sum_gap"),
-          max(col("gap")).as("max_gap"),
-          min_by(col("us"), col("event_id")).as("first_us"),
-          max_by(col("us"), col("event_id")).as("last_us"))
-        val merged =
-          if (version < 0) partial
-          else {
-            val st = spark.read.parquet(s"$stateBase/v$version")
-              .select(col("event_type"), col("n").as("s_n"),
-                col("n_gaps").as("s_ng"), col("sum_gap").as("s_sg"),
-                col("max_gap").as("s_mg"), col("first_us").as("s_first"),
-                col("last_us").as("s_last"))
-            val boundary = when(col("s_last").isNotNull
-              && col("first_us").isNotNull,
-              col("first_us") - col("s_last"))
-            st.join(partial, Seq("event_type"), "full_outer")
-              .select(col("event_type"),
-                (coalesce(col("s_n"), lit(0L))
-                  + coalesce(col("n"), lit(0L))).as("n"),
-                (coalesce(col("s_ng"), lit(0L))
-                  + coalesce(col("n_gaps"), lit(0L))
-                  + when(boundary.isNotNull, 1L).otherwise(0L))
-                  .as("n_gaps"),
-                (coalesce(col("s_sg"), lit(0L))
-                  + coalesce(col("sum_gap"), lit(0L))
-                  + coalesce(boundary, lit(0L))).as("sum_gap"),
-                greatest(col("s_mg"), col("max_gap"), boundary)
-                  .as("max_gap"),
-                coalesce(col("s_first"), col("first_us")).as("first_us"),
-                coalesce(col("last_us"), col("s_last")).as("last_us"))
-          }
-        merged.write.mode("overwrite").parquet(s"$stateBase/v$batchId")
-        version = batchId
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(s"$stateBase/v$version")
+    foldState(stream, workDir) { (batch, prev) =>
+      val bw = Window.partitionBy("event_type").orderBy("event_id")
+      val withLag = batch.withColumn("gap",
+        col("us") - lag(col("us"), 1).over(bw))
+      val partial = withLag.groupBy("event_type").agg(
+        count(lit(1)).as("n"),
+        sum(when(col("gap").isNotNull, 1L).otherwise(0L)).as("n_gaps"),
+        coalesce(sum(col("gap")), lit(0L)).as("sum_gap"),
+        max(col("gap")).as("max_gap"),
+        min_by(col("us"), col("event_id")).as("first_us"),
+        max_by(col("us"), col("event_id")).as("last_us"))
+      val boundary = when(col("s_last").isNotNull
+        && col("first_us").isNotNull,
+        col("first_us") - col("s_last"))
+      prev.fold(partial)(_
+        .select(col("event_type"), col("n").as("s_n"),
+          col("n_gaps").as("s_ng"), col("sum_gap").as("s_sg"),
+          col("max_gap").as("s_mg"), col("first_us").as("s_first"),
+          col("last_us").as("s_last"))
+        .join(partial, Seq("event_type"), "full_outer")
+        .select(col("event_type"),
+          (coalesce(col("s_n"), lit(0L))
+            + coalesce(col("n"), lit(0L))).as("n"),
+          (coalesce(col("s_ng"), lit(0L))
+            + coalesce(col("n_gaps"), lit(0L))
+            + when(boundary.isNotNull, 1L).otherwise(0L))
+            .as("n_gaps"),
+          (coalesce(col("s_sg"), lit(0L))
+            + coalesce(col("sum_gap"), lit(0L))
+            + coalesce(boundary, lit(0L))).as("sum_gap"),
+          greatest(col("s_mg"), col("max_gap"), boundary)
+            .as("max_gap"),
+          coalesce(col("s_first"), col("first_us")).as("first_us"),
+          coalesce(col("last_us"), col("s_last")).as("last_us")))
+    }
   }
 
   /** Incremental running z-score alarm monitor (17th incremental
@@ -1279,71 +1107,53 @@ object StreamOps {
     val stream = sliceStream(spark, sfDir, nBatches)._1
       .select(col("event_id"), col("event_type"),
         round(col("value") * 1000000L).cast(LongType).as("v6"))
-    val stateBase = s"$workDir/state"
-    @volatile var version = -1L
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val w = Window.partitionBy("event_type").orderBy("event_id")
-        val offsets =
-          if (version < 0) null
-          else spark.read.parquet(s"$stateBase/v$version")
-            .select(col("event_type"), col("n").as("o_n"),
-              col("s").as("o_s"), col("q").as("o_q"))
-        val seeded = {
-          val base = if (offsets == null) batch
-            .withColumn("o_n", lit(0L))
-            .withColumn("o_s", lit(0L))
-            .withColumn("o_q", lit(0L).cast(big38))
-          else batch.join(broadcast(offsets), Seq("event_type"), "left")
-            .withColumn("o_n", coalesce(col("o_n"), lit(0L)))
-            .withColumn("o_s", coalesce(col("o_s"), lit(0L)))
-            .withColumn("o_q", coalesce(col("o_q"), lit(0L).cast(big38)))
-          val vb = col("v6").cast(big38)
-          base
-            .withColumn("np",
-              col("o_n") + row_number().over(w).cast(LongType) - 1L)
-            .withColumn("sp", (col("o_s").cast(big38)
-              + sum(col("v6")).over(w).cast(big38) - vb).cast(big38))
-            .withColumn("qp", (col("o_q")
-              + sum((vb * vb).cast(big38)).over(w)
-              - (vb * vb).cast(big38)).cast(big38))
-        }
-        val vb = col("v6").cast(big38)
-        val dev = (vb * col("np").cast(big38) - col("sp")).cast(big38)
-        val alarm = col("np") >= 30L &&
-          (dev * dev).cast(big38) >
-            (lit(9).cast(big38) * (col("np").cast(big38) * col("qp")
-              - col("sp") * col("sp"))).cast(big38)
-        val partial = seeded.groupBy("event_type").agg(
-          count(lit(1)).as("b_n"),
-          sum(col("v6")).as("b_s"),
-          sum((vb * vb).cast(big38)).cast(big38).as("b_q"),
-          sum(when(alarm, 1L).otherwise(0L)).as("b_al"))
-        val merged =
-          if (version < 0)
-            partial.select(col("event_type"), col("b_n").as("n"),
-              col("b_s").as("s"), col("b_q").as("q"),
-              col("b_al").as("alarms"))
-          else spark.read.parquet(s"$stateBase/v$version")
-            .join(partial, Seq("event_type"), "full_outer")
-            .select(col("event_type"),
-              (coalesce(col("n"), lit(0L))
-                + coalesce(col("b_n"), lit(0L))).as("n"),
-              (coalesce(col("s"), lit(0L))
-                + coalesce(col("b_s"), lit(0L))).as("s"),
-              (coalesce(col("q"), lit(0L).cast(big38))
-                + coalesce(col("b_q"), lit(0L).cast(big38)))
-                .cast(big38).as("q"),
-              (coalesce(col("alarms"), lit(0L))
-                + coalesce(col("b_al"), lit(0L))).as("alarms"))
-        merged.write.mode("overwrite").parquet(s"$stateBase/v$batchId")
-        version = batchId
+    foldState(stream, workDir) { (batch, prev) =>
+      val w = Window.partitionBy("event_type").orderBy("event_id")
+      val base = prev.fold(batch
+          .withColumn("o_n", lit(0L))
+          .withColumn("o_s", lit(0L))
+          .withColumn("o_q", lit(0L).cast(big38))) { st =>
+        val offsets = st.select(col("event_type"), col("n").as("o_n"),
+          col("s").as("o_s"), col("q").as("o_q"))
+        batch.join(broadcast(offsets), Seq("event_type"), "left")
+          .withColumn("o_n", coalesce(col("o_n"), lit(0L)))
+          .withColumn("o_s", coalesce(col("o_s"), lit(0L)))
+          .withColumn("o_q", coalesce(col("o_q"), lit(0L).cast(big38)))
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(s"$stateBase/v$version")
+      val vb = col("v6").cast(big38)
+      val seeded = base
+        .withColumn("np",
+          col("o_n") + row_number().over(w).cast(LongType) - 1L)
+        .withColumn("sp", (col("o_s").cast(big38)
+          + sum(col("v6")).over(w).cast(big38) - vb).cast(big38))
+        .withColumn("qp", (col("o_q")
+          + sum((vb * vb).cast(big38)).over(w)
+          - (vb * vb).cast(big38)).cast(big38))
+      val dev = (vb * col("np").cast(big38) - col("sp")).cast(big38)
+      val alarm = col("np") >= 30L &&
+        (dev * dev).cast(big38) >
+          (lit(9).cast(big38) * (col("np").cast(big38) * col("qp")
+            - col("sp") * col("sp"))).cast(big38)
+      val partial = seeded.groupBy("event_type").agg(
+        count(lit(1)).as("b_n"),
+        sum(col("v6")).as("b_s"),
+        sum((vb * vb).cast(big38)).cast(big38).as("b_q"),
+        sum(when(alarm, 1L).otherwise(0L)).as("b_al"))
+      prev.fold(partial.select(col("event_type"), col("b_n").as("n"),
+          col("b_s").as("s"), col("b_q").as("q"),
+          col("b_al").as("alarms")))(_
+        .join(partial, Seq("event_type"), "full_outer")
+        .select(col("event_type"),
+          (coalesce(col("n"), lit(0L))
+            + coalesce(col("b_n"), lit(0L))).as("n"),
+          (coalesce(col("s"), lit(0L))
+            + coalesce(col("b_s"), lit(0L))).as("s"),
+          (coalesce(col("q"), lit(0L).cast(big38))
+            + coalesce(col("b_q"), lit(0L).cast(big38)))
+            .cast(big38).as("q"),
+          (coalesce(col("alarms"), lit(0L))
+            + coalesce(col("b_al"), lit(0L))).as("alarms")))
+    }
   }
 
   /** Corpus rollup of a per-user session ledger: one bounded row. */

@@ -2,15 +2,18 @@ package graft
 
 import breeze.linalg.{DenseMatrix, DenseVector}
 import graft.ml.{AlsEngine, Antidote, Metric}
-import org.apache.spark.ml.recommendation.ToyAlsModel
+import org.apache.spark.ml.recommendation.{ALSModel, ToyAlsModel}
 
-/** The Alg. 1 unfairness gradients against first principles. At toy
-  * scale (20 users × 15 items, rank 3, three antidote users) the user
-  * factors U are fixed and the item factors are the item-side ridge
-  * closed form V(X) = M_j⁻¹(Σ_{i∈Ω_j} R_ij u_i + Σ_a X_aj u_a), the ALS
-  * stage the step linearizes. `Antidote.step`'s gradient for U_ind
-  * (Var_u ℓ_u) and for U_grp ((ℓ̄_A − ℓ̄_B)², the form it descends) must
-  * equal central differences of that objective, cell by cell. */
+/** The Alg. 1 gradients against first principles. At toy scale (20
+  * users × 15 items, rank 3, three antidote users) the user factors U
+  * are fixed and the item factors are the item-side ridge closed form
+  * V(X) = M_j⁻¹(Σ_{i∈Ω_j} R_ij u_i + Σ_a X_aj u_a), the ALS stage the
+  * step linearizes. `Antidote.step`'s gradient for U_ind (Var_u ℓ_u) and
+  * for U_grp ((ℓ̄_A − ℓ̄_B)², the form it descends) must equal central
+  * differences of that objective, cell by cell. For polarization the
+  * step linearizes the other ALS stage: V and the real users' factors
+  * are fixed and the antidote users' factors are the user-side ridge
+  * closed form u_a = (VᵀV + λmI)⁻¹Vᵀx_a. */
 class GradientSpec extends SparkTestBase {
   import GradientSpec._
 
@@ -85,17 +88,55 @@ class GradientSpec extends SparkTestBase {
     }
   }
 
+  /** Fixed item factors for the polarization case, as ALS's floats. */
+  private val vPol: Seq[Array[Float]] = {
+    val r = new scala.util.Random(13)
+    Seq.fill(nI)(Array.fill(k)(0.2f + r.nextFloat()))
+  }
+
+  private def vp(j: Int): DenseVector[Double] =
+    DenseVector(vPol(j).map(_.toDouble))
+
+  /** The antidote users' factors u_a = (VᵀV + λmI)⁻¹Vᵀx_a under vPol. */
+  private def antidoteFactors(x: DenseMatrix[Double])
+      : Seq[DenseVector[Double]] = {
+    val a = DenseMatrix.eye[Double](k) * (lam * nI)
+    for (j <- 0 until nI) { val v = vp(j); a += v * v.t }
+    (0 until kT).map { r =>
+      val t = DenseVector.zeros[Double](k)
+      for (j <- 0 until nI) t += vp(j) * x(r, j)
+      a \ t
+    }
+  }
+
+  /** (1/m)Σ_i[v_iᵀSv_i − (ūᵀv_i)²], S and ū over the real users' fixed
+    * factors and the antidote users' closed form. */
+  private def polarization(x: DenseMatrix[Double]): Double = {
+    val users = (1 to nU).map(uv) ++ antidoteFactors(x)
+    val uBar = users.reduce(_ + _) / users.size.toDouble
+    val s = users.map(f => f * f.t).reduce(_ + _) / users.size.toDouble
+    (0 until nI).map { j =>
+      val v = vp(j)
+      (v dot (s * v)) - math.pow(uBar dot v, 2)
+    }.sum / nI
+  }
+
+  private def toyModel(users: Seq[(Int, Array[Float])],
+      items: Seq[Array[Float]]): ALSModel = {
+    val s = spark
+    import s.implicits._
+    ToyAlsModel(k,
+      users.map { case (i, f) => (i, f.toSeq) }.toDF("id", "features"),
+      items.zipWithIndex.map { case (f, j) => (j + 1, f.toSeq) }
+        .toDF("id", "features"))
+  }
+
   /** The step's gradient, read back off X_{t+1} = round(X − η·grad, 6)
     * with η chosen so no cell reaches the [1, 5] box. */
-  private def stepGradient(metric: Metric, scale: Double)
+  private def stepGradient(metric: Metric, scale: Double, model: ALSModel)
       : DenseMatrix[Double] = {
     val s = spark
     import s.implicits._
-    val v = itemFactors(x0)
-    val model = ToyAlsModel(k,
-      u.toSeq.map { case (i, f) => (i, f.toSeq) }.toDF("id", "features"),
-      (1 to nI).map(j => (j, v(j - 1).toArray.map(_.toFloat).toSeq))
-        .toDF("id", "features"))
     val ratings = cells.map { case (i, j, r) => (i.toLong, j.toLong, r) }
       .toDF("user_id", "item_id", "rating")
     val x = (for (a <- 0 until kT; j <- 1 to nI)
@@ -116,16 +157,30 @@ class GradientSpec extends SparkTestBase {
     g
   }
 
-  for ((label, objective, metric) <- Seq(
-      ("U_ind", uInd _, () => Metric.IndividualUnfairness),
+  /** The unfairness cases' model: U and V(x0), as ALS's floats. */
+  private def unfairnessModel(): ALSModel =
+    toyModel(u.toSeq, itemFactors(x0).map(_.toArray.map(_.toFloat)))
+
+  /** The polarization case's model: the real users' U, the antidote
+    * users' closed form at x0, and vPol. */
+  private def polarizationModel(): ALSModel =
+    toyModel((1 to nU).map(i => i -> u(i)) ++
+      antidoteFactors(x0).zipWithIndex.map { case (f, a) =>
+        (nU + 1 + a) -> f.toArray.map(_.toFloat) }, vPol)
+
+  for ((label, objective, metric, model) <- Seq(
+      ("U_ind", uInd _, () => Metric.IndividualUnfairness,
+        unfairnessModel _),
       ("U_grp", uGrp _, () => Metric.GroupUnfairness(
         spark.createDataFrame(grp.toSeq.map { case (i, g) => (i.toLong, g) })
-          .toDF("user_id", "grp"), "A", "B")))) {
+          .toDF("user_id", "grp"), "A", "B"), unfairnessModel _),
+      ("Polarization", polarization _, () => Metric.Polarization,
+        polarizationModel _))) {
     test(s"$label: the step's gradient equals central differences of its objective") {
       val want = centralDiff(objective)
       val scale = breeze.linalg.max(breeze.numerics.abs(want))
       assert(scale > 0)
-      val got = stepGradient(metric(), scale)
+      val got = stepGradient(metric(), scale, model())
       assertClose(got, want, 1e-4 * scale)
     }
   }

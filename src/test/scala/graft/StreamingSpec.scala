@@ -403,6 +403,28 @@ class StreamingSpec extends SparkTestBase {
     assert(versions != null && versions.count(_.startsWith("v")) >= 2)
   }
 
+  test("a 2-batch re-run in a 4-batch run's workDir returns the fresh-dir " +
+      "result") {
+    // Bench's best-of-2 and repeated Verify runs reuse their stream
+    // workDirs: the re-run must rewrite v0, v1 and never read the stale
+    // v2, v3 the longer run left (an additive and an offset-seeded
+    // maintainer, so a stale read would change the counts).
+    def tmp(): String = java.nio.file.Files
+      .createTempDirectory("stream_rerun").toString
+    for ((name, run) <- Seq[(String, (String, Int) => org.apache.spark.sql.DataFrame)](
+        "moments" -> ((d, n) => StreamOps.incrementalMoments(spark, sf, d, n)),
+        "zalarm" -> ((d, n) => StreamOps.incrementalZAlarm(spark, sf, d, n)))) {
+      val used = tmp()
+      run(used, 4)
+      assert(new java.io.File(s"$used/state/v3").isDirectory, name)
+      val again = run(used, 2)
+      val fresh = run(tmp(), 2)
+      assert(fresh.count() > 0, name)
+      assert(again.exceptAll(fresh).isEmpty && fresh.exceptAll(again).isEmpty,
+        s"$name: re-run in a used workDir differs from a fresh run")
+    }
+  }
+
   test("incrementalQuantiles matches the one-shot histogram quantiles") {
     val out = StreamOps.incrementalQuantiles(spark, sf, "target/test_quant")
     val direct = StreamOps.histogramQuantiles(
