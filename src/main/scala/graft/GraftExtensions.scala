@@ -1,37 +1,25 @@
 package graft
 
-import graft.functions.{BloomMightContain, CosineSimilarity, DotProduct, L2SquaredDistance}
+import graft.functions.{ArrayPair, BloomMightContain, PairOp}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Session extension installing graft's native functions; activate with
-  * `spark.sql.extensions=graft.GraftExtensions`. Operators fall back to
-  * equivalent HOF formulations when the extension is absent, so the
-  * library works either way — the extension is the fast path.
-  */
+  * `spark.sql.extensions=graft.GraftExtensions`. The functions are
+  * required, not a fast path: the vector kernels and Bloom pruning call
+  * them by name and have no HOF or UDF fallback, so every session that
+  * runs graft operators must install this extension. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        DotProduct(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        CosineSimilarity(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_l2sq"),
-      new ExpressionInfo(classOf[L2SquaredDistance].getName, "graft_l2sq"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        L2SquaredDistance(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_might_contain"),
-      new ExpressionInfo(classOf[BloomMightContain].getName,
-        "graft_might_contain"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        BloomMightContain(children(0), children(1))))
-  }
+  private val natives: Seq[(String, Class[_], Seq[Expression] => Expression)] =
+    PairOp.all.map(op => (op.sqlName, classOf[ArrayPair],
+      (c: Seq[Expression]) => ArrayPair(op, c(0), c(1)): Expression)) :+
+    (("graft_might_contain", classOf[BloomMightContain],
+      (c: Seq[Expression]) => BloomMightContain(c(0), c(1))))
+
+  override def apply(ext: SparkSessionExtensions): Unit =
+    natives.foreach { case (name, cls, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
+    }
 }

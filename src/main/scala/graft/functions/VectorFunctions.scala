@@ -1,41 +1,21 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.call_function
 
-/** Vector kernels. `dot` dispatches to the native codegen'd DotProduct
-  * when GraftExtensions is installed, else to the bit-identical HOF
-  * formulation — callers (cosine, sim-search, dedup) never notice.
-  */
+/** Vector kernels as Columns: each calls its native [[ArrayPair]] op,
+  * which `graft.GraftExtensions` registers (every session must install
+  * it; there is no fallback). */
 object VectorFunctions {
 
-  private def nativeAvailable(name: String): Boolean =
-    SparkSession.getActiveSession.exists(
-      _.sessionState.functionRegistry
-        .functionExists(FunctionIdentifier(name)))
+  def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
-  def dot(a: Column, b: Column): Column =
-    if (nativeAvailable("graft_dot")) call_function("graft_dot", a, b)
-    else aggregate(
-      zip_with(a, b, (x, y) => x.cast(DoubleType) * y.cast(DoubleType)),
-      lit(0.0), (acc, v) => acc + v)
-
-  /** Fused one-pass native cosine when installed (one array walk instead
-    * of three dots); composed form otherwise — bit-equal either way. */
+  /** Fused one-pass cosine, bit-equal to dot(a,b)/sqrt(a·a)/sqrt(b·b). */
   def cosine(a: Column, b: Column): Column =
-    if (nativeAvailable("graft_cosine")) call_function("graft_cosine", a, b)
-    else dot(a, b) / sqrt(dot(a, a)) / sqrt(dot(b, b))
+    call_function("graft_cosine", a, b)
 
-  /** Squared L2 distance, one array walk (native) or the bit-equal HOF
-    * fold. NOT interchangeable with the three-dot expansion used where an
-    * `list_inner_product` oracle requires it — different rounding. */
-  def l2sq(a: Column, b: Column): Column =
-    if (nativeAvailable("graft_l2sq")) call_function("graft_l2sq", a, b)
-    else aggregate(
-      zip_with(a, b, (x, y) =>
-        (x.cast(DoubleType) - y.cast(DoubleType)) *
-          (x.cast(DoubleType) - y.cast(DoubleType))),
-      lit(0.0), (acc, v) => acc + v)
+  /** Squared L2 distance in one walk. NOT interchangeable with the
+    * three-dot expansion used where a `list_inner_product` oracle
+    * requires it — different rounding. */
+  def l2sq(a: Column, b: Column): Column = call_function("graft_l2sq", a, b)
 }

@@ -52,18 +52,44 @@ object Clustering {
     * k × dim groups; no vector ever reaches the driver. Empty clusters
     * drop out (standard Lloyd behaviour). */
   def updateCentroids(points: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame): DataFrame = {
-    val assigned = assign(points.select(col(idCol), col(vecCol)),
-      vecCol, centroids)
-      .join(points.select(col(idCol), col(vecCol)), idCol)
+      centroids: DataFrame): DataFrame =
+    meanUpdate(assign(points.select(col(idCol), col(vecCol)), vecCol,
+      centroids).join(points.select(col(idCol), col(vecCol)), idCol), vecCol)
+
+  /** The Lloyd mean update over `assigned` rows (`groups`…, cluster,
+    * `vecCol`): per (groups, cluster) the elementwise mean, collected in
+    * position order as (groups…, cid, cvec). The shuffle after the
+    * posexplode is bounded by groups × k × dim cells. */
+  private def meanUpdate(assigned: DataFrame, vecCol: String,
+      groups: Seq[String] = Nil): DataFrame =
     assigned
-      .select(col("cluster"), posexplode(col(vecCol)).as(Seq("pos", "x")))
-      .groupBy("cluster", "pos")
+      .select(groups.map(col) ++ Seq(col("cluster"),
+        posexplode(col(vecCol)).as(Seq("pos", "x"))): _*)
+      .groupBy((groups ++ Seq("cluster", "pos")).map(col): _*)
       .agg(avg(col("x").cast(DoubleType)).as("m"))
-      .groupBy(col("cluster").as("cid"))
+      .groupBy(groups.map(col) :+ col("cluster").as("cid"): _*)
       .agg(transform(
         array_sort(collect_list(struct(col("pos"), col("m")))),
         e => e.getField("m")).as("cvec"))
+
+  /** Nearest centroid of `v` among `cs` (sorted by id) by squared L2
+    * rounded at 1e-6 (math.rint, half-even); ties keep the lowest id.
+    * Returns (cid, rounded d2). */
+  private def nearest(cs: Array[(Long, Array[Double])], v: Array[Double])
+      : (Long, Double) = {
+    var best = Long.MaxValue; var bestD = Double.MaxValue
+    var ci = 0
+    while (ci < cs.length) {
+      val c = cs(ci)._2
+      var d = 0.0; var j = 0
+      while (j < v.length) {
+        val diff = v(j) - c(j); d += diff * diff; j += 1
+      }
+      val d6 = math.rint(d * 1e6) / 1e6
+      if (d6 < bestD) { bestD = d6; best = cs(ci)._1 }
+      ci += 1
+    }
+    (best, bestD)
   }
 
   /** Fixed-iteration Lloyd k-means with deterministic lowest-id seeding.
@@ -113,19 +139,7 @@ object Clustering {
       .mapPartitions { it =>
         val bks = bc.value
         it.map { case (id, g, v) =>
-          val cs = bks(g)
-          var best = Long.MaxValue; var bestD = Double.MaxValue
-          var ci = 0
-          while (ci < cs.length) {
-            val c = cs(ci)._2
-            var d = 0.0; var j = 0
-            while (j < v.length) {
-              val diff = v(j) - c(j); d += diff * diff; j += 1
-            }
-            val d6 = math.rint(d * 1e6) / 1e6
-            if (d6 < bestD) { bestD = d6; best = cs(ci)._1 }
-            ci += 1
-          }
+          val (best, bestD) = nearest(bks(g), v)
           (id, g, best, bestD)
         }
       }
@@ -150,18 +164,10 @@ object Clustering {
       .select(col(gCol), col(idCol).as("cid"), col(vecCol).as("cvec"))
     var i = 0
     while (i < iterations) {
-      cents = assignGroupedGemm(points.select(col(idCol), col(gCol),
-          col(vecCol)), idCol, gCol, vecCol, cents)
+      cents = meanUpdate(assignGroupedGemm(points.select(col(idCol),
+          col(gCol), col(vecCol)), idCol, gCol, vecCol, cents)
         .join(points.select(col(idCol), col(gCol), col(vecCol)),
-          Seq(idCol, gCol))
-        .select(col(gCol), col("cluster"),
-          posexplode(col(vecCol)).as(Seq("pos", "x")))
-        .groupBy(gCol, "cluster", "pos")
-        .agg(avg(col("x").cast(DoubleType)).as("m"))
-        .groupBy(col(gCol), col("cluster").as("cid"))
-        .agg(transform(
-          array_sort(collect_list(struct(col("pos"), col("m")))),
-          e => e.getField("m")).as("cvec"))
+          Seq(idCol, gCol)), vecCol, Seq(gCol))
       i += 1
     }
     cents
@@ -196,18 +202,7 @@ object Clustering {
       .mapPartitions { it =>
         val cs = bc.value
         it.map { case (id, v) =>
-          var best = Long.MaxValue; var bestD = Double.MaxValue
-          var ci = 0
-          while (ci < cs.length) {
-            val c = cs(ci)._2
-            var d = 0.0; var j = 0
-            while (j < v.length) {
-              val diff = v(j) - c(j); d += diff * diff; j += 1
-            }
-            val d6 = math.rint(d * 1e6) / 1e6
-            if (d6 < bestD) { bestD = d6; best = cs(ci)._1 }
-            ci += 1
-          }
+          val (best, bestD) = nearest(cs, v)
           (id, best, bestD)
         }
       }
@@ -236,15 +231,8 @@ object Clustering {
     var cents = seedCentroids(sample, idCol, vecCol, k)
     var i = 0
     while (i < iterations) {
-      cents = assignGemm(sample, idCol, vecCol, cents)
-        .join(sample, idCol)
-        .select(col("cluster"), posexplode(col(vecCol)).as(Seq("pos", "x")))
-        .groupBy("cluster", "pos")
-        .agg(avg(col("x").cast(DoubleType)).as("m"))
-        .groupBy(col("cluster").as("cid"))
-        .agg(transform(
-          array_sort(collect_list(struct(col("pos"), col("m")))),
-          e => e.getField("m")).as("cvec"))
+      cents = meanUpdate(assignGemm(sample, idCol, vecCol, cents)
+        .join(sample, idCol), vecCol)
       i += 1
     }
     cents

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.functions.VectorFunctions
 import org.apache.spark.ml.feature.{HashingTF, MinHashLSH}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -241,7 +242,34 @@ object Dedup {
   /** Exact Jaccard over RARE shingles (global doc-frequency ≤ maxDf) for
     * pairs sharing at least one; near-dup pairs above the threshold. */
   def rareShingleJaccard(shingles: DataFrame, maxDf: Long = 10,
-      minJaccard: Double = 0.3): DataFrame = {
+      minJaccard: Double = 0.3): DataFrame =
+    rareShinglePairs(shingles, maxDf)
+      .withColumn("jaccard", round(col("inter").cast(DoubleType) /
+        (col("sz_a") + col("sz_b") - col("inter")), 4))
+      .filter(col("jaccard") >= minJaccard)
+      .select("doc_a", "doc_b", "inter", "jaccard")
+
+  /** Containment (asymmetric Jaccard) over rare-shingle-blocked pairs:
+    * C(A→B) = |A∩B| / |A| — the doc-INSIDE-doc detector symmetric Jaccard
+    * misses (a 120-char excerpt of a 500-char doc has Jaccard ≈ 0.25 but
+    * containment ≈ 1.0). Same blocked skeleton as [[rareShingleJaccard]]
+    * (df-filtered shingles, candidate pairs share a rare shingle, never
+    * all-pairs); reports both directions, filtered on the max. */
+  def rareShingleContainment(shingles: DataFrame, maxDf: Long = 10,
+      minCont: Double = 0.9): DataFrame =
+    rareShinglePairs(shingles, maxDf)
+      .withColumn("cont_a", round(col("inter").cast(DoubleType) / col("sz_a"), 4))
+      .withColumn("cont_b", round(col("inter").cast(DoubleType) / col("sz_b"), 4))
+      .filter(greatest(col("cont_a"), col("cont_b")) >= minCont)
+      .select("doc_a", "doc_b", "inter", "cont_a", "cont_b")
+
+  /** The rare-shingle blocking skeleton: every doc pair (doc_a < doc_b)
+    * sharing a shingle of global doc-frequency ≤ maxDf, with its count of
+    * shared rare shingles (`inter`) and each doc's rare-shingle count
+    * (`sz_a`, `sz_b`). Candidates come from the rare shingles' self-join,
+    * never all-pairs. */
+  private def rareShinglePairs(shingles: DataFrame, maxDf: Long)
+      : DataFrame = {
     // df via groupBy + semi-join, not count() OVER (PARTITION BY shingle):
     // the window form materializes a per-row count over every hot common
     // shingle's partition; the aggregate collapses each shingle to one row
@@ -264,41 +292,6 @@ object Dedup {
     inter
       .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sz_a")), "doc_a")
       .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("sz_b")), "doc_b")
-      .withColumn("jaccard", round(col("inter").cast(DoubleType) /
-        (col("sz_a") + col("sz_b") - col("inter")), 4))
-      .filter(col("jaccard") >= minJaccard)
-      .select("doc_a", "doc_b", "inter", "jaccard")
-  }
-
-  /** Containment (asymmetric Jaccard) over rare-shingle-blocked pairs:
-    * C(A→B) = |A∩B| / |A| — the doc-INSIDE-doc detector symmetric Jaccard
-    * misses (a 120-char excerpt of a 500-char doc has Jaccard ≈ 0.25 but
-    * containment ≈ 1.0). Same blocked skeleton as [[rareShingleJaccard]]
-    * (df-filtered shingles, candidate pairs share a rare shingle, never
-    * all-pairs); reports both directions, filtered on the max. */
-  def rareShingleContainment(shingles: DataFrame, maxDf: Long = 10,
-      minCont: Double = 0.9): DataFrame = {
-    val rareKeys = shingles.groupBy("shingle")
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDf)
-      .select("shingle")
-    // same three-consumer fence as rareShingleJaccard
-    val rare = shingles.join(rareKeys, "shingle")
-      .select("doc_id", "shingle")
-      .localCheckpoint()
-    val sizes = rare.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    val inter = rare.as("a")
-      .join(rare.as("b"), col("a.shingle") === col("b.shingle") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sz_a")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("sz_b")), "doc_b")
-      .withColumn("cont_a", round(col("inter").cast(DoubleType) / col("sz_a"), 4))
-      .withColumn("cont_b", round(col("inter").cast(DoubleType) / col("sz_b"), 4))
-      .filter(greatest(col("cont_a"), col("cont_b")) >= minCont)
-      .select("doc_a", "doc_b", "inter", "cont_a", "cont_b")
   }
 
   /** Data-growing simhash detector parameters (lanes, bitsPerLane,
@@ -469,11 +462,6 @@ object Dedup {
       when(element_at(e, i + 1) > 0, lit(1 << i)).otherwise(lit(0))
     }.reduce(_ + _)
 
-  /** Cosine over the native codegen'd dot product (HOF fallback when the
-    * extension isn't installed — bit-identical either way). */
-  def cosine(a: Column, b: Column): Column =
-    graft.functions.VectorFunctions.cosine(a, b)
-
   /** Seeded random-hyperplane directions: `bits` Gaussian vectors over all
     * `dims` dimensions (deterministic per seed; driver-side constant of
     * bits×dims doubles — broadcast as literals). */
@@ -490,11 +478,9 @@ object Dedup {
     * the N²/2⁸ ceiling of the fixed scheme. */
   def hyperplaneBucket(e: Column, planes: Array[Array[Float]]): Column =
     planes.zipWithIndex.map { case (p, i) =>
-      when(cosSafeDot(e, p) > 0, lit(1L << i)).otherwise(lit(0L))
+      when(VectorFunctions.dot(e, typedLit(p.toSeq)) > 0, lit(1L << i))
+        .otherwise(lit(0L))
     }.reduce(_ + _)
-
-  private def cosSafeDot(e: Column, plane: Array[Float]): Column =
-    graft.functions.VectorFunctions.dot(e, typedLit(plane.toSeq))
 
   /** Scalable embedding near-dup pairs: L independent hyperplane tables of
     * `bits` bits each (candidate recall 1−(1−p^bits)^tables for per-bit
@@ -517,7 +503,7 @@ object Dedup {
     val eb = embs.select(col("vec_id").as("vec_b"), col("embedding").as("eb"))
     cand.join(ea, "vec_a").join(eb, "vec_b")
       .select(col("vec_a"), col("vec_b"),
-        round(cosine(col("ea"), col("eb")), 4).as("cos"))
+        round(VectorFunctions.cosine(col("ea"), col("eb")), 4).as("cos"))
       .filter(col("cos") >= minCos)
   }
 
@@ -530,7 +516,7 @@ object Dedup {
         col("a.bucket") === col("b.bucket") &&
           col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        round(cosine(col("a.embedding"), col("b.embedding")), 4).as("cos"))
+        round(VectorFunctions.cosine(col("a.embedding"), col("b.embedding")), 4).as("cos"))
       .filter(col("cos") >= minCos)
   }
 }

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.functions.VectorFunctions
 import graft.functions.VectorFunctions.dot
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -16,16 +17,24 @@ object SimSearch {
 
   /** Exact top-k by cosine to the embedding of `probeId` (probe excluded;
     * scores rounded before ordering so ranking is cross-engine-stable). */
-  def cosineTopK(embs: DataFrame, probeId: Long, k: Int): DataFrame = {
-    val probe = embs.filter(col("vec_id") === probeId)
+  def cosineTopK(embs: DataFrame, probeId: Long, k: Int): DataFrame =
+    cosineTop(embs.filter(col("vec_id") =!= probeId)
+      .crossJoin(broadcast(probeOf(embs, probeId))), k)
+
+  /** The one-row probe frame (`probe_e`) every single-probe search joins. */
+  private def probeOf(embs: DataFrame, probeId: Long): DataFrame =
+    embs.filter(col("vec_id") === probeId)
       .select(col("embedding").as("probe_e"))
-    embs.filter(col("vec_id") =!= probeId)
-      .crossJoin(broadcast(probe))
-      .select(col("vec_id"),
-        round(Dedup.cosine(col("embedding"), col("probe_e")), 4).as("score"))
+
+  /** The exact re-rank every cosine top-k ends in: candidates joined to
+    * `probe_e`, scored by cosine rounded at 1e-4, best k by
+    * (score DESC, vec_id ASC). */
+  private def cosineTop(cand: DataFrame, k: Int): DataFrame =
+    cand.select(col("vec_id"),
+        round(VectorFunctions.cosine(col("embedding"), col("probe_e")), 4)
+          .as("score"))
       .orderBy(col("score").desc, col("vec_id"))
       .limit(k)
-  }
 
   /** IVF-style approximate top-k: search only the probe's sign bucket. */
   def bucketedTopK(embs: DataFrame, probeId: Long, k: Int): DataFrame = {
@@ -33,12 +42,8 @@ object SimSearch {
       Dedup.signBucket(col("embedding")).as("bucket"))
     val probe = withBucket.filter(col("vec_id") === probeId)
       .select(col("embedding").as("probe_e"), col("bucket").as("probe_b"))
-    withBucket.filter(col("vec_id") =!= probeId)
-      .join(broadcast(probe), col("bucket") === col("probe_b"))
-      .select(col("vec_id"),
-        round(Dedup.cosine(col("embedding"), col("probe_e")), 4).as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
+    cosineTop(withBucket.filter(col("vec_id") =!= probeId)
+      .join(broadcast(probe), col("bucket") === col("probe_b")), k)
   }
 
   /** Multi-probe IVF top-k over the scalable hyperplane LSH: compute the
@@ -61,15 +66,9 @@ object SimSearch {
       .map { case (_, i) => base ^ (1L << i) }.toSeq
     val withBucket = embs.select(col("vec_id"), col("embedding"),
       Dedup.hyperplaneBucket(col("embedding"), planes).as("bucket"))
-    val probe = embs.filter(col("vec_id") === probeId)
-      .select(col("embedding").as("probe_e"))
-    withBucket
+    cosineTop(withBucket
       .filter(col("bucket").isin(probeBuckets: _*) && col("vec_id") =!= probeId)
-      .crossJoin(broadcast(probe))
-      .select(col("vec_id"),
-        round(Dedup.cosine(col("embedding"), col("probe_e")), 4).as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
+      .crossJoin(broadcast(probeOf(embs, probeId))), k)
   }
 
   /** Trained-IVF top-k — the standard IVF index (a k-means coarse
@@ -89,9 +88,7 @@ object SimSearch {
   def trainedIvfTopK(embs: DataFrame, probeId: Long, k: Int,
       nLists: Int = 16, nProbe: Int = 4, lloydIters: Int = 2): DataFrame = {
     val index = buildIvfIndex(embs, nLists, lloydIters)
-    val probe = embs.filter(col("vec_id") === probeId)
-      .select(col("embedding").as("probe_e"))
-    ivfTopK(index, probe, k, nProbe, exclude = Some(probeId))
+    ivfTopK(index, probeOf(embs, probeId), k, nProbe, exclude = Some(probeId))
   }
 
   /** A built trained-IVF index: the nLists×dim centroid table and the
@@ -158,20 +155,23 @@ object SimSearch {
     * nProbe list ids — then exact cosine only within those lists. */
   def ivfTopK(index: IvfIndex, probe: DataFrame, k: Int, nProbe: Int,
       exclude: Option[Long] = None): DataFrame = {
-    val lists = index.centroids.crossJoin(broadcast(probe))
+    val cand = index.assigned
+      .filter(col("cluster").isin(nearestLists(index, probe, nProbe): _*))
+    cosineTop(exclude.fold(cand)(id => cand.filter(col("vec_id") =!= id))
+      .crossJoin(broadcast(probe)), k)
+  }
+
+  /** The ids of the `nProbe` lists whose centroids are nearest (squared
+    * L2, cid tie-break) to the one-row `probe` frame: a bounded driver
+    * collect of the nLists × dim centroid table's ranking. */
+  private def nearestLists(index: IvfIndex, probe: DataFrame,
+      nProbe: Int): Seq[Any] =
+    index.centroids.crossJoin(broadcast(probe))
       .select(col("cid"),
         Clustering.sqDist(col("cvec"), col("probe_e")).as("d2"))
       .orderBy(col("d2"), col("cid"))
       .limit(nProbe)
       .collect().map(_.get(0)).toSeq
-    val cand = index.assigned.filter(col("cluster").isin(lists: _*))
-    exclude.fold(cand)(id => cand.filter(col("vec_id") =!= id))
-      .crossJoin(broadcast(probe))
-      .select(col("vec_id"),
-        round(Dedup.cosine(col("embedding"), col("probe_e")), 4).as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
-  }
 
   /** Batch IVF search: top-k for EVERY probe row in one distributed
     * plan — the all-users serving pass of a recommender / retrieval
@@ -304,6 +304,48 @@ object SimSearch {
       nProbe: Int, excludeSelf: Boolean = true): DataFrame =
     gemmTopKAll(index, probes, k, nProbe, cosine = true, excludeSelf)
 
+  /** The (score DESC, id ASC) order of every gemm top-k: does
+    * (score, id) rank before `o`? */
+  private def before(score: Double, id: Long, o: (Double, Long)): Boolean =
+    score > o._1 || (score == o._1 && id < o._2)
+
+  /** Offer (score, id) to the bounded top-k `best`, whose first `filled`
+    * slots hold the survivors so far in [[before]] order: insert it in
+    * place if it beats the last survivor or a slot is free. Returns the
+    * new fill. */
+  private def offer(best: Array[(Double, Long)], filled: Int, score: Double,
+      id: Long): Int = {
+    val cap = best.length
+    if (filled == cap && !before(score, id, best(cap - 1))) return filled
+    var b = math.min(filled, cap - 1)
+    best(b) = (score, id)
+    while (b > 0 && before(best(b)._1, best(b)._2, best(b - 1))) {
+      val t = best(b); best(b) = best(b - 1); best(b - 1) = t
+      b -= 1
+    }
+    math.min(filled + 1, cap)
+  }
+
+  /** Merge two [[before]]-ordered top-k lists into the best `k`. */
+  private def mergeTopK(a: Array[(Double, Long)], b: Array[(Double, Long)],
+      k: Int): Array[(Double, Long)] = {
+    val out = new Array[(Double, Long)](math.min(k, a.length + b.length))
+    var (i, j, n) = (0, 0, 0)
+    while (n < out.length) {
+      val takeA = j >= b.length ||
+        (i < a.length && before(a(i)._1, a(i)._2, b(j)))
+      if (takeA) { out(n) = a(i); i += 1 } else { out(n) = b(j); j += 1 }
+      n += 1
+    }
+    out
+  }
+
+  private def norm(v: Array[Double]): Double = {
+    var s = 0.0; var j = 0
+    while (j < v.length) { s += v(j) * v(j); j += 1 }
+    math.sqrt(s)
+  }
+
   private def gemmTopKAll(index: IvfIndex, probes: DataFrame, k: Int,
       nProbe: Int, cosine: Boolean, excludeSelf: Boolean): DataFrame = {
     val spark = probes.sparkSession
@@ -336,28 +378,7 @@ object SimSearch {
             } else {
               while (j < uf.length) { d += uf(j) * c(j); j += 1 }
             }
-            val cand = (d, cs(ci)._1)
-            if (filled < np) {
-              best(filled) = cand; filled += 1
-              var b = filled - 1 // keep sorted desc by (d, then asc cid)
-              while (b > 0 && (best(b)._1 > best(b - 1)._1 ||
-                  (best(b)._1 == best(b - 1)._1 &&
-                    best(b)._2 < best(b - 1)._2))) {
-                val t = best(b); best(b) = best(b - 1); best(b - 1) = t
-                b -= 1
-              }
-            } else if (cand._1 > best(np - 1)._1 ||
-                (cand._1 == best(np - 1)._1 &&
-                  cand._2 < best(np - 1)._2)) {
-              best(np - 1) = cand
-              var b = np - 1
-              while (b > 0 && (best(b)._1 > best(b - 1)._1 ||
-                  (best(b)._1 == best(b - 1)._1 &&
-                    best(b)._2 < best(b - 1)._2))) {
-                val t = best(b); best(b) = best(b - 1); best(b - 1) = t
-                b -= 1
-              }
-            }
+            filled = offer(best, filled, d, cs(ci)._1)
             ci += 1
           }
           (0 until filled).iterator.map(i => (best(i)._2, (uid, uf)))
@@ -371,35 +392,14 @@ object SimSearch {
       .as[(Long, Long, Array[Double])].rdd
       .map { case (cid, iid, f) => (cid, (iid, f)) }
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    def mergeTopK(a: Array[(Double, Long)],
-        b: Array[(Double, Long)]): Array[(Double, Long)] = {
-      val out = new Array[(Double, Long)](math.min(k, a.length + b.length))
-      var (i, j, n) = (0, 0, 0)
-      while (n < out.length) {
-        val takeA = j >= b.length || (i < a.length &&
-          (a(i)._1 > b(j)._1 ||
-            (a(i)._1 == b(j)._1 && a(i)._2 < b(j)._2)))
-        if (takeA) { out(n) = a(i); i += 1 } else { out(n) = b(j); j += 1 }
-        n += 1
-      }
-      out
-    }
     val top = probeRdd.cogroup(itemRdd, parts).flatMap {
       case (_, (us, is)) =>
         val items = is.toArray.sortBy(_._1) // ascending id: fixed order
         // per-block item norms, computed once (cosine mode only)
-        val norms = if (!cosine) null else items.map { case (_, f) =>
-          var s = 0.0; var j = 0
-          while (j < f.length) { s += f(j) * f(j); j += 1 }
-          math.sqrt(s)
-        }
+        val norms = if (!cosine) null else items.map(t => norm(t._2))
         if (items.isEmpty) Iterator.empty
         else us.iterator.map { case (uid, uf) =>
-          val un = if (!cosine) 0.0 else {
-            var s = 0.0; var j = 0
-            while (j < uf.length) { s += uf(j) * uf(j); j += 1 }
-            math.sqrt(s)
-          }
+          val un = if (!cosine) 0.0 else norm(uf)
           val kk = math.min(k, items.length)
           val best = new Array[(Double, Long)](kk)
           var filled = 0
@@ -416,25 +416,12 @@ object SimSearch {
                     else math.rint(d / den * 1e4) / 1e4
               }
             } else d = Double.NegativeInfinity // self: never selected
-            if (d != Double.NegativeInfinity && (filled < kk ||
-                d > best(kk - 1)._1 ||
-                (d == best(kk - 1)._1 && iid < best(kk - 1)._2))) {
-              val at = if (filled < kk) { filled += 1; filled - 1 }
-                       else kk - 1
-              best(at) = (d, iid)
-              var b = at
-              while (b > 0 && (best(b)._1 > best(b - 1)._1 ||
-                  (best(b)._1 == best(b - 1)._1 &&
-                    best(b)._2 < best(b - 1)._2))) {
-                val t = best(b); best(b) = best(b - 1); best(b - 1) = t
-                b -= 1
-              }
-            }
+            if (d != Double.NegativeInfinity) filled = offer(best, filled, d, iid)
             ii += 1
           }
           (uid, best.take(filled))
         }
-    }.reduceByKey(mergeTopK(_, _), parts)
+    }.reduceByKey(mergeTopK(_, _, k), parts)
     top.flatMap { case (uid, recs) =>
       recs.iterator.zipWithIndex.map { case ((score, iid), i) =>
         (uid, i + 1, score, iid)
@@ -458,7 +445,7 @@ object SimSearch {
     * the unit sphere) — without this, vectors with large norms crowd the
     * codebooks and the shortlist diverges from the cosine top-k. */
   private def unitNorm(e: Column): Column = {
-    val n = sqrt(graft.functions.VectorFunctions.dot(e, e))
+    val n = sqrt(dot(e, e))
     transform(e, v => when(n > 0, v / n).otherwise(lit(0.0)))
   }
 
@@ -525,26 +512,27 @@ object SimSearch {
     * re-ranked with exact cosine on the raw embeddings (the standard
     * recall repair: only `rerank` vectors are ever decompressed). */
   def pqTopK(index: PqIndex, embs: DataFrame, probeId: Long, k: Int,
-      rerank: Int = 50): DataFrame = {
-    val probe = embs.filter(col("vec_id") === probeId)
-      .select(col("embedding").as("probe_e"))
+      rerank: Int = 50): DataFrame =
+    adcRerank(index, index.codes, embs, probeId, k, rerank)
+
+  /** The ADC shortlist and its exact re-rank: the `rerank` rows of
+    * `codes` (probe excluded) with the least approximate distance
+    * (vec_id tie-break), then [[cosineTop]] over their raw embeddings. */
+  private def adcRerank(pq: PqIndex, codes: DataFrame, embs: DataFrame,
+      probeId: Long, k: Int, rerank: Int): DataFrame = {
+    val probe = probeOf(embs, probeId)
     // ADC runs in the same normalized space the codebooks were trained in
-    val tables = adcTables(index,
+    val tables = adcTables(pq,
       probe.select(unitNorm(col("probe_e")).as("probe_e")))
-    val approx = (0 until index.m).map { j =>
+    val approx = (0 until pq.m).map { j =>
       element_at(typedLit(tables(j)), col(s"c$j"))
     }.reduce(_ + _)
-    val cand = index.codes
+    val cand = codes
       .filter(col("vec_id") =!= probeId)
       .select(col("vec_id"), approx.as("approx_d2"))
       .orderBy(col("approx_d2"), col("vec_id"))
       .limit(rerank)
-    cand.join(embs, "vec_id")
-      .crossJoin(broadcast(probe))
-      .select(col("vec_id"),
-        round(Dedup.cosine(col("embedding"), col("probe_e")), 4).as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
+    cosineTop(cand.join(embs, "vec_id").crossJoin(broadcast(probe)), k)
   }
 
   /** IVF×PQ composition — the standard large-scale ANN architecture
@@ -558,49 +546,23 @@ object SimSearch {
     * and the bytes touched per candidate shrink multiplicatively. */
   def ivfPqTopK(ivf: IvfIndex, pq: PqIndex, embs: DataFrame, probeId: Long,
       k: Int, nProbe: Int = 4, rerank: Int = 50): DataFrame = {
-    val probe = embs.filter(col("vec_id") === probeId)
-      .select(col("embedding").as("probe_e"))
-    val lists = ivf.centroids.crossJoin(broadcast(probe))
-      .select(col("cid"),
-        Clustering.sqDist(col("cvec"), col("probe_e")).as("d2"))
-      .orderBy(col("d2"), col("cid"))
-      .limit(nProbe)
-      .collect().map(_.get(0)).toSeq
+    val lists = nearestLists(ivf, probeOf(embs, probeId), nProbe)
     val inLists = ivf.assigned.filter(col("cluster").isin(lists: _*))
       .select("vec_id")
-    val tables = adcTables(pq,
-      probe.select(unitNorm(col("probe_e")).as("probe_e")))
-    val approx = (0 until pq.m).map { j =>
-      element_at(typedLit(tables(j)), col(s"c$j"))
-    }.reduce(_ + _)
-    val cand = pq.codes.join(inLists, "vec_id")
-      .filter(col("vec_id") =!= probeId)
-      .select(col("vec_id"), approx.as("approx_d2"))
-      .orderBy(col("approx_d2"), col("vec_id"))
-      .limit(rerank)
-    cand.join(embs, "vec_id")
-      .crossJoin(broadcast(probe))
-      .select(col("vec_id"),
-        round(Dedup.cosine(col("embedding"), col("probe_e")), 4).as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
+    adcRerank(pq, pq.codes.join(inLists, "vec_id"), embs, probeId, k, rerank)
   }
 
   /** Exact top-k by squared L2 distance to `probeId`'s embedding, on the
-    * fused one-walk `graft_l2sq` kernel (HOF fallback bit-equal). Same
-    * shape as [[cosineTopK]]: broadcast probe, TakeOrderedAndProject —
-    * no global sort, no shuffle of the embedding table. */
-  def l2TopK(embs: DataFrame, probeId: Long, k: Int): DataFrame = {
-    val probe = embs.filter(col("vec_id") === probeId)
-      .select(col("embedding").as("probe_e"))
+    * fused one-walk `graft_l2sq` kernel. Same shape as [[cosineTopK]]:
+    * broadcast probe, TakeOrderedAndProject — no global sort, no shuffle
+    * of the embedding table. */
+  def l2TopK(embs: DataFrame, probeId: Long, k: Int): DataFrame =
     embs.filter(col("vec_id") =!= probeId)
-      .crossJoin(broadcast(probe))
-      .select(col("vec_id"),
-        round(graft.functions.VectorFunctions.l2sq(
+      .crossJoin(broadcast(probeOf(embs, probeId)))
+      .select(col("vec_id"), round(VectorFunctions.l2sq(
           col("embedding"), col("probe_e")), 4).as("dist"))
       .orderBy(col("dist"), col("vec_id"))
       .limit(k)
-  }
 
   /** Per-label centroids via posexplode + (label, dim) aggregation. */
   def labelCentroids(embs: DataFrame): DataFrame =

@@ -464,7 +464,7 @@ object CurationQueries {
       col("lang").as("lb"), col("v").as("vb"))
     a.join(b, Seq("cluster"))
       .filter(col("ida") < col("idb") && col("la") =!= col("lb"))
-      .filter(round(graft.llm.Dedup.cosine(col("va"), col("vb")), 4)
+      .filter(round(graft.functions.VectorFunctions.cosine(col("va"), col("vb")), 4)
         >= 0.99)
       .select(least(col("la"), col("lb")).as("lang_a"),
         greatest(col("la"), col("lb")).as("lang_b"))

@@ -279,7 +279,7 @@ object EvalQueries {
     val scored = embs
       .join(broadcast(queries), col("vec_id") =!= col("qid"))
       .select(col("qid"), col("q_label"), col("label"), col("vec_id"),
-        round(graft.llm.Dedup.cosine(col("embedding"), col("q_e")), 4)
+        round(graft.functions.VectorFunctions.cosine(col("embedding"), col("q_e")), 4)
           .as("score"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy("qid")
       .orderBy(col("score").desc, col("vec_id"))
@@ -397,7 +397,7 @@ object EvalQueries {
       .join(broadcast(queries), col("vec_id") =!= col("qid"))
       .select(col("qid"), col("q_label"), col("vec_id"),
         when(col("label") === col("q_label"), 1).otherwise(0).as("is_rel"),
-        round(graft.llm.Dedup.cosine(col("embedding"), col("q_e")), 4)
+        round(graft.functions.VectorFunctions.cosine(col("embedding"), col("q_e")), 4)
           .as("score"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy("qid")
       .orderBy(col("score").desc, col("vec_id"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Q
 import graft.Dsl._
+import graft.functions.VectorFunctions
 import graft.llm.{Bpe, Clustering, Dedup, Multimodal, ShingleStore, SimSearch, TextOps}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -601,7 +602,7 @@ object LlmQueries {
     val pr = e.join(broadcast(p), col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"),
         when(col("bucket") === col("qb"), 1).otherwise(0).as("inb"),
-        round(graft.functions.VectorFunctions.cosine(col("v"),
+        round(VectorFunctions.cosine(col("v"),
           col("qv")), 4).as("score"))
     val wa = org.apache.spark.sql.expressions.Window.partitionBy("qid")
       .orderBy(col("score").desc, col("vec_id"))
@@ -1959,17 +1960,11 @@ object LlmQueries {
       round((num / denx) * (num / deny), 6).as("r_sq"))
   }
 
-  /** BM25 relevance ranking of the corpus against a fixed term set — the
-    * lexical-retrieval half of a RAG/eval pipeline (the embedding half is
-    * the q_sim_* family). One token scan feeds doc lengths, per-term df,
-    * and the query-term tf; idf/avglen are a ≤|query|-row broadcast. The
-    * per-document score sums ≤|query| double contributions, so it is
-    * quantize-then-summed at 10⁻⁹ and the top-20 ranks on the exact
-    * INTEGER quantized score (deterministic under any reduction order);
-    * k1 = 1.2, b = 0.75. */
-  val qBm25 = Q(
-    "q_bm25",
-    """WITH toks AS (
+  /** The BM25 term CTEs (toks … tf) of q_bm25, q_rrf_fusion and
+    * q_rank_overlap: doc lengths, the four query terms' df and idf, and
+    * their per-doc tf. */
+  private val bm25TermsSql =
+    """toks AS (
       |  SELECT doc_id, unnest(string_split(text, ' ')) AS term
       |  FROM documents),
       |len AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id),
@@ -1986,7 +1981,48 @@ object LlmQueries {
       |  FROM df CROSS JOIN stats),
       |tf AS (
       |  SELECT doc_id, term, count(*) AS tf FROM toks
-      |  WHERE term IN (SELECT term FROM qt) GROUP BY doc_id, term),
+      |  WHERE term IN (SELECT term FROM qt) GROUP BY doc_id, term)""".stripMargin
+
+  /** The two rankings q_rrf_fusion and q_rank_overlap compare: the
+    * lexical BM25 rank (`lex`, over `scored`) and the cosine rank to
+    * vec_id 0 (`emb`). Follows [[bm25TermsSql]]. */
+  private val lexEmbSql =
+    """scored AS (
+      |  SELECT tf.doc_id,
+      |    sum(CAST(ROUND(idf.idf * tf.tf * 2.2
+      |      / (tf.tf + 1.2 * (0.25 + 0.75 * len.dl / idf.avgdl))
+      |      * 1000000000) AS HUGEINT)) AS score9
+      |  FROM tf JOIN idf USING (term) JOIN len USING (doc_id)
+      |  GROUP BY tf.doc_id),
+      |lex AS (
+      |  SELECT doc_id,
+      |    CAST(row_number() OVER (ORDER BY score9 DESC, doc_id) AS BIGINT)
+      |      AS rk
+      |  FROM scored),
+      |emb AS (
+      |  SELECT e.vec_id AS doc_id,
+      |    CAST(row_number() OVER (ORDER BY
+      |      ROUND(list_inner_product(CAST(e.embedding AS DOUBLE[]), p.pe)
+      |        / sqrt(list_inner_product(CAST(e.embedding AS DOUBLE[]),
+      |                                  CAST(e.embedding AS DOUBLE[])))
+      |        / sqrt(list_inner_product(p.pe, p.pe)), 4) DESC, e.vec_id)
+      |      AS BIGINT) AS rk
+      |  FROM embeddings e,
+      |    (SELECT CAST(embedding AS DOUBLE[]) AS pe FROM embeddings
+      |     WHERE vec_id = 0) p
+      |  WHERE e.vec_id <> 0)""".stripMargin
+
+  /** BM25 relevance ranking of the corpus against a fixed term set — the
+    * lexical-retrieval half of a RAG/eval pipeline (the embedding half is
+    * the q_sim_* family). One token scan feeds doc lengths, per-term df,
+    * and the query-term tf; idf/avglen are a ≤|query|-row broadcast. The
+    * per-document score sums ≤|query| double contributions, so it is
+    * quantize-then-summed at 10⁻⁹ and the top-20 ranks on the exact
+    * INTEGER quantized score (deterministic under any reduction order);
+    * k1 = 1.2, b = 0.75. */
+  val qBm25 = Q(
+    "q_bm25",
+    s"""WITH $bm25TermsSql,
       |scored AS (
       |  SELECT tf.doc_id,
       |    sum(CAST(ROUND(idf.idf * tf.tf * 2.2
@@ -2233,7 +2269,7 @@ object LlmQueries {
     val scored = embs
       .join(broadcast(queries), col("label") =!= col("q_label"))
       .select(col("qid"), col("vec_id"), col("label"),
-        round(Dedup.cosine(col("embedding"), col("q_e")), 4).as("score"))
+        round(VectorFunctions.cosine(col("embedding"), col("q_e")), 4).as("score"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy("qid")
       .orderBy(col("score").desc, col("vec_id"))
     scored.withColumn("rk", row_number().over(w).cast(LongType))
@@ -2448,7 +2484,7 @@ object LlmQueries {
       |    AS n_zero
       |FROM n""".stripMargin) { (s, d) =>
     val big38 = DecimalType(38, 0)
-    val dot = graft.functions.VectorFunctions.dot(col("embedding"),
+    val dot = VectorFunctions.dot(col("embedding"),
       col("embedding"))
     val n = t(s, d, "embeddings").select(
       size(col("embedding")).as("dim"),
@@ -3364,48 +3400,8 @@ object LlmQueries {
     * single-partition window is a constant-size post-agg step. */
   val qRrfFusion = Q(
     "q_rrf_fusion",
-    """WITH toks AS (
-      |  SELECT doc_id, unnest(string_split(text, ' ')) AS term
-      |  FROM documents),
-      |len AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id),
-      |stats AS (
-      |  SELECT CAST(count(*) AS DOUBLE) AS n,
-      |    CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl
-      |  FROM len),
-      |qt AS (SELECT unnest(['hash', 'vector', 'stream', 'spark']) AS term),
-      |df AS (
-      |  SELECT term, count(DISTINCT doc_id) AS df FROM toks
-      |  WHERE term IN (SELECT term FROM qt) GROUP BY term),
-      |idf AS (
-      |  SELECT term, ln(1 + (n - df + 0.5) / (df + 0.5)) AS idf, avgdl
-      |  FROM df CROSS JOIN stats),
-      |tf AS (
-      |  SELECT doc_id, term, count(*) AS tf FROM toks
-      |  WHERE term IN (SELECT term FROM qt) GROUP BY doc_id, term),
-      |scored AS (
-      |  SELECT tf.doc_id,
-      |    sum(CAST(ROUND(idf.idf * tf.tf * 2.2
-      |      / (tf.tf + 1.2 * (0.25 + 0.75 * len.dl / idf.avgdl))
-      |      * 1000000000) AS HUGEINT)) AS score9
-      |  FROM tf JOIN idf USING (term) JOIN len USING (doc_id)
-      |  GROUP BY tf.doc_id),
-      |lex AS (
-      |  SELECT doc_id,
-      |    CAST(row_number() OVER (ORDER BY score9 DESC, doc_id) AS BIGINT)
-      |      AS rk
-      |  FROM scored),
-      |emb AS (
-      |  SELECT e.vec_id AS doc_id,
-      |    CAST(row_number() OVER (ORDER BY
-      |      ROUND(list_inner_product(CAST(e.embedding AS DOUBLE[]), p.pe)
-      |        / sqrt(list_inner_product(CAST(e.embedding AS DOUBLE[]),
-      |                                  CAST(e.embedding AS DOUBLE[])))
-      |        / sqrt(list_inner_product(p.pe, p.pe)), 4) DESC, e.vec_id)
-      |      AS BIGINT) AS rk
-      |  FROM embeddings e,
-      |    (SELECT CAST(embedding AS DOUBLE[]) AS pe FROM embeddings
-      |     WHERE vec_id = 0) p
-      |  WHERE e.vec_id <> 0),
+    s"""WITH $bm25TermsSql,
+      |$lexEmbSql,
       |fused AS (
       |  SELECT doc_id, count(*) AS n_systems, min(rk) AS best_rank,
       |    sum(1000000000 // (60 + rk)) AS rrf9
@@ -3452,7 +3448,7 @@ object LlmQueries {
     embs.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(probe))
       .select(col("vec_id").as("doc_id"),
-        round(Dedup.cosine(col("embedding"), col("pe")), 4).as("score"))
+        round(VectorFunctions.cosine(col("embedding"), col("pe")), 4).as("score"))
       .orderBy(col("score").desc, col("doc_id")).limit(50)
       .select(col("doc_id"),
         row_number().over(Window.orderBy(col("score").desc, col("doc_id")))
@@ -3526,7 +3522,7 @@ object LlmQueries {
       col("v").as("vb"))
     val removed = a.join(b, Seq("cluster"))
       .filter(col("ida") < col("idb"))
-      .filter(round(Dedup.cosine(col("va"), col("vb")), 4) >= 0.99)
+      .filter(round(VectorFunctions.cosine(col("va"), col("vb")), 4) >= 0.99)
       .select(col("idb").as("vec_id")).distinct()
     asg.join(removed.withColumn("is_rem", lit(1)), Seq("vec_id"), "left")
       .groupBy("cluster")
@@ -3589,48 +3585,8 @@ object LlmQueries {
     * corpus. */
   val qRankOverlap = Q(
     "q_rank_overlap",
-    """WITH toks AS (
-      |  SELECT doc_id, unnest(string_split(text, ' ')) AS term
-      |  FROM documents),
-      |len AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id),
-      |stats AS (
-      |  SELECT CAST(count(*) AS DOUBLE) AS n,
-      |    CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl
-      |  FROM len),
-      |qt AS (SELECT unnest(['hash', 'vector', 'stream', 'spark']) AS term),
-      |df AS (
-      |  SELECT term, count(DISTINCT doc_id) AS df FROM toks
-      |  WHERE term IN (SELECT term FROM qt) GROUP BY term),
-      |idf AS (
-      |  SELECT term, ln(1 + (n - df + 0.5) / (df + 0.5)) AS idf, avgdl
-      |  FROM df CROSS JOIN stats),
-      |tf AS (
-      |  SELECT doc_id, term, count(*) AS tf FROM toks
-      |  WHERE term IN (SELECT term FROM qt) GROUP BY doc_id, term),
-      |scored AS (
-      |  SELECT tf.doc_id,
-      |    sum(CAST(ROUND(idf.idf * tf.tf * 2.2
-      |      / (tf.tf + 1.2 * (0.25 + 0.75 * len.dl / idf.avgdl))
-      |      * 1000000000) AS HUGEINT)) AS score9
-      |  FROM tf JOIN idf USING (term) JOIN len USING (doc_id)
-      |  GROUP BY tf.doc_id),
-      |lex AS (
-      |  SELECT doc_id,
-      |    CAST(row_number() OVER (ORDER BY score9 DESC, doc_id) AS BIGINT)
-      |      AS rk
-      |  FROM scored),
-      |emb AS (
-      |  SELECT e.vec_id AS doc_id,
-      |    CAST(row_number() OVER (ORDER BY
-      |      ROUND(list_inner_product(CAST(e.embedding AS DOUBLE[]), p.pe)
-      |        / sqrt(list_inner_product(CAST(e.embedding AS DOUBLE[]),
-      |                                  CAST(e.embedding AS DOUBLE[])))
-      |        / sqrt(list_inner_product(p.pe, p.pe)), 4) DESC, e.vec_id)
-      |      AS BIGINT) AS rk
-      |  FROM embeddings e,
-      |    (SELECT CAST(embedding AS DOUBLE[]) AS pe FROM embeddings
-      |     WHERE vec_id = 0) p
-      |  WHERE e.vec_id <> 0),
+    s"""WITH $bm25TermsSql,
+      |$lexEmbSql,
       |shared AS (
       |  SELECT l.doc_id, GREATEST(l.rk, e.rk) AS md
       |  FROM (SELECT * FROM lex WHERE rk <= 50) l
@@ -4049,7 +4005,7 @@ object LlmQueries {
     val te = asg.filter(col("is_train") === 0)
       .select(col("cluster"), col("vec_id").as("te_id"), col("v").as("vte"))
     val hits = tr.join(te, Seq("cluster"))
-      .filter(round(Dedup.cosine(col("vtr"), col("vte")), 4) >= 0.99)
+      .filter(round(VectorFunctions.cosine(col("vtr"), col("vte")), 4) >= 0.99)
       .select(col("te_id")).distinct()
     val counts = asg.agg(
       sum(col("is_train")).cast(LongType).as("n_train"),
@@ -4154,7 +4110,7 @@ object LlmQueries {
         transform(col("embedding"), x => x.cast(DoubleType)).as("v"))
     val probe = embs.filter(col("vec_id") === 0).select(col("v").as("pv"))
     def sim4(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      round(round(Dedup.cosine(a, b), 4) * 10000).cast(LongType)
+      round(round(VectorFunctions.cosine(a, b), 4) * 10000).cast(LongType)
     val pool = embs.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(probe))
       .select(col("vec_id"), col("v"), sim4(col("v"), col("pv")).as("rel4"))

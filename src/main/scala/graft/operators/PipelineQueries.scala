@@ -1588,20 +1588,9 @@ object PipelineQueries {
       .orderBy("segment")
   }
 
-  /** Watermark sizing plan per event type: the lateness distribution
-    * (event time vs the per-user arrival-order running max — the
-    * q_disorder_audit derivation) folded into power-of-two second
-    * buckets, with the P50/P99 bucket bounds and the recommended
-    * `withWatermark` delay = the P99 bound. The fixture replays in
-    * perfect event-time order (q_disorder_audit measures 0), so the
-    * canonical late-arrival pattern is PLANTED deterministically: every
-    * 10th event (seeded md5 pick) carries an event time pushed up to
-    * a day behind its arrival slot — the jitter a real ingest exhibits
-    * and the sizing logic must absorb. Pure integer bucket compares on
-    * a ≤14-row per-type panel; this is the query that turns §2.I's
-    * watermark PARAMETER into a measured decision. */
-  val qWatermarkPlan = Q(
-    "q_watermark_plan",
+  /** q_watermark_plan's oracle, shared with q_stream_watermark (whose
+    * maintained state must finalize to this whole-history recompute). */
+  private[operators] val watermarkPlanSql =
     """WITH e0 AS (
       |  SELECT event_id, user_id, event_type, epoch_us(ts) AS us
       |  FROM events),
@@ -1651,7 +1640,21 @@ object PipelineQueries {
       |    AS BIGINT) AS p99_bound_s,
       |  CAST(min(CASE WHEN cc * 100 >= 99 * n THEN bucket_s END)
       |    AS BIGINT) AS watermark_s
-      |FROM cum GROUP BY event_type ORDER BY event_type""".stripMargin) {
+      |FROM cum GROUP BY event_type ORDER BY event_type""".stripMargin
+
+  /** Watermark sizing plan per event type: the lateness distribution
+    * (event time vs the per-user arrival-order running max — the
+    * q_disorder_audit derivation) folded into power-of-two second
+    * buckets, with the P50/P99 bucket bounds and the recommended
+    * `withWatermark` delay = the P99 bound. The fixture replays in
+    * perfect event-time order (q_disorder_audit measures 0), so the
+    * canonical late-arrival pattern is PLANTED deterministically: every
+    * 10th event (seeded md5 pick) carries an event time pushed up to
+    * a day behind its arrival slot — the jitter a real ingest exhibits
+    * and the sizing logic must absorb. Pure integer bucket compares on
+    * a ≤14-row per-type panel; this is the query that turns §2.I's
+    * watermark PARAMETER into a measured decision. */
+  val qWatermarkPlan = Q("q_watermark_plan", watermarkPlanSql) {
     (s, d) =>
     import graft.streaming.StreamOps
     val r0 = StreamOps.plannedLatenessEvents(s, d)

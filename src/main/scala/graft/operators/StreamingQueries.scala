@@ -494,58 +494,8 @@ object StreamingQueries {
     * so the maintained histogram is batch-boundary-independent and the
     * finalized plan equals this whole-history recompute (the
     * q_watermark_plan semantics with the same planted jitter). */
-  val qStreamWatermark = Q(
-    "q_stream_watermark",
-    """WITH e0 AS (
-      |  SELECT event_id, user_id, event_type, epoch_us(ts) AS us
-      |  FROM events),
-      |e AS (
-      |  SELECT event_id, user_id, event_type,
-      |    us - CASE WHEN CAST(concat('0x',
-      |        substr(md5(concat(event_id, ':l')), 1, 15)) AS BIGINT)
-      |        % 10 = 0
-      |      THEN (CAST(concat('0x',
-      |        substr(md5(concat(event_id, ':d')), 1, 15)) AS BIGINT)
-      |        % 86400) * 1000000
-      |      ELSE 0 END AS us
-      |  FROM e0),
-      |r AS (
-      |  SELECT event_type, us,
-      |    max(us) OVER (PARTITION BY user_id ORDER BY event_id
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prevmax
-      |  FROM e),
-      |late AS (
-      |  SELECT event_type, (prevmax - us) // 1000000 AS lat_s
-      |  FROM r WHERE prevmax IS NOT NULL AND us < prevmax),
-      |b AS (
-      |  SELECT event_type,
-      |    CASE WHEN lat_s < 1 THEN 1 WHEN lat_s < 2 THEN 2
-      |      WHEN lat_s < 4 THEN 4 WHEN lat_s < 8 THEN 8
-      |      WHEN lat_s < 16 THEN 16 WHEN lat_s < 32 THEN 32
-      |      WHEN lat_s < 64 THEN 64 WHEN lat_s < 128 THEN 128
-      |      WHEN lat_s < 256 THEN 256 WHEN lat_s < 512 THEN 512
-      |      WHEN lat_s < 1024 THEN 1024 WHEN lat_s < 2048 THEN 2048
-      |      WHEN lat_s < 4096 THEN 4096 WHEN lat_s < 8192 THEN 8192
-      |      WHEN lat_s < 16384 THEN 16384 WHEN lat_s < 32768 THEN 32768
-      |      WHEN lat_s < 65536 THEN 65536 ELSE 131072 END AS bucket_s
-      |  FROM late),
-      |g AS (
-      |  SELECT event_type, bucket_s, count(*) AS c
-      |  FROM b GROUP BY 1, 2),
-      |tot AS (SELECT event_type, sum(c) AS n FROM g GROUP BY 1),
-      |cum AS (
-      |  SELECT g.event_type, bucket_s, tot.n,
-      |    sum(c) OVER (PARTITION BY g.event_type ORDER BY bucket_s)
-      |      AS cc
-      |  FROM g JOIN tot ON g.event_type = tot.event_type)
-      |SELECT event_type, CAST(max(n) AS BIGINT) AS n_late,
-      |  CAST(min(CASE WHEN cc * 2 >= n THEN bucket_s END) AS BIGINT)
-      |    AS p50_bound_s,
-      |  CAST(min(CASE WHEN cc * 100 >= 99 * n THEN bucket_s END)
-      |    AS BIGINT) AS p99_bound_s,
-      |  CAST(min(CASE WHEN cc * 100 >= 99 * n THEN bucket_s END)
-      |    AS BIGINT) AS watermark_s
-      |FROM cum GROUP BY event_type ORDER BY event_type""".stripMargin) {
+  val qStreamWatermark = Q("q_stream_watermark",
+      PipelineQueries.watermarkPlanSql) {
     (s, d) =>
     StreamOps.incrementalWatermark(s, d,
       s"target/stream_wm_${math.abs(d.hashCode)}")

@@ -30,27 +30,15 @@ object BloomPrune {
       s"BloomPrune requires an integral key (got $kt): a lossy cast would " +
         "drop probe rows and break the no-false-negative contract")
     val bf = build.stat.bloomFilter(buildKey, expectedItems, fpp)
-    val spark = probe.sparkSession
-    val native = spark.sessionState.functionRegistry.functionExists(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_might_contain"))
-    if (native) {
-      // codegen'd membership probe (functions.BloomMightContain): the
-      // serialized filter rides the plan as a foldable binary literal
-      // (the same mechanism Spark's runtime bloom rewrite uses) and is
-      // deserialized once per executor, so the pre-shuffle filter stays
-      // inside WholeStageCodegen instead of breaking the span with a UDF.
-      val bos = new java.io.ByteArrayOutputStream()
-      bf.writeTo(bos)
-      probe.filter(call_function("graft_might_contain",
-        lit(bos.toByteArray), probeKey.cast("long")))
-    } else {
-      // extension absent: black-box UDF fallback, same row semantics
-      // (NULL key → dropped; bit set → kept)
-      val bc = spark.sparkContext.broadcast(bf)
-      val might = udf((k: java.lang.Long) =>
-        k != null && bc.value.mightContainLong(k))
-      probe.filter(might(probeKey.cast("long")))
-    }
+    // codegen'd membership probe (functions.BloomMightContain): the
+    // serialized filter rides the plan as a foldable binary literal (the
+    // same mechanism Spark's runtime bloom rewrite uses) and is
+    // deserialized once per executor, so the pre-shuffle filter stays
+    // inside WholeStageCodegen instead of breaking the span with a UDF.
+    val bos = new java.io.ByteArrayOutputStream()
+    bf.writeTo(bos)
+    probe.filter(call_function("graft_might_contain",
+      lit(bos.toByteArray), probeKey.cast("long")))
   }
 
   /** Bloom-pruned inner equi-join: prune the big probe side, then join

@@ -1,6 +1,7 @@
 package graft
 
 import graft.llm.Clustering
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -12,19 +13,30 @@ class ClusteringSpec extends SparkTestBase {
   private def points = Tables.load(spark, sf, "embeddings")
     .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
 
-  test("assign matches brute-force argmin (distance, then centroid id)") {
-    val cents = Clustering.seedCentroids(points, "vec_id", "v", 8)
-    val got = Clustering.assign(points, "v", cents)
-      .select("vec_id", "cluster")
-    val w = Window.partitionBy("vec_id")
-      .orderBy(col("d2"), col("cid"))
-    val want = points.crossJoin(broadcast(cents))
-      .withColumn("d2", Clustering.sqDist(col("v"), col("cvec")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1)
-      .select(col("vec_id"), col("cid").as("cluster"))
-    assert(got.except(want).isEmpty && want.except(got).isEmpty)
-  }
+  // (name, assignment as (vec_id, cluster)): the crossJoin form, the
+  // broadcast-matrix form and the grouped form with one constant group
+  private val assigners: Seq[(String, DataFrame => DataFrame)] = Seq(
+    "assign" -> (cents => Clustering.assign(points, "v", cents)),
+    "assignGemm" -> (cents =>
+      Clustering.assignGemm(points, "vec_id", "v", cents)),
+    "assignGroupedGemm" -> (cents => Clustering.assignGroupedGemm(
+      points.select(col("vec_id"), lit(0).as("g"), col("v")), "vec_id", "g",
+      "v", cents.select(lit(0).as("g"), col("cid"), col("cvec")))))
+
+  for ((name, assignFn) <- assigners)
+    test(s"$name matches brute-force argmin (distance, then centroid id)") {
+      val cents = Clustering.seedCentroids(points, "vec_id", "v", 8)
+      val got = assignFn(cents).select("vec_id", "cluster")
+      val w = Window.partitionBy("vec_id")
+        .orderBy(col("d2"), col("cid"))
+      val want = points.crossJoin(broadcast(cents))
+        .withColumn("d2", Clustering.sqDist(col("v"), col("cvec")))
+        .withColumn("rk", row_number().over(w))
+        .filter(col("rk") === 1)
+        .select(col("vec_id"), col("cid").as("cluster"))
+      assert(got.count() == points.count())
+      assert(got.except(want).isEmpty && want.except(got).isEmpty)
+    }
 
   test("updateCentroids is the per-cluster elementwise mean") {
     val cents = Clustering.seedCentroids(points, "vec_id", "v", 4)

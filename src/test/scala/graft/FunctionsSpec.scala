@@ -1,19 +1,36 @@
 package graft
 
 import graft.functions.VectorFunctions
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
-/** Native DotProduct expression vs the HOF fallback: must be bit-equal
-  * (same left-to-right double accumulation), SQL-callable, and codegen'd. */
+/** The native array-pair kernels (graft_dot, graft_cosine, graft_l2sq)
+  * and graft_might_contain vs their inline HOF and UDF references: must
+  * be bit-equal (same left-to-right double accumulation), SQL-callable,
+  * and codegen'd. */
 class FunctionsSpec extends SparkTestBase {
+
+  private def hofDot(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x.cast(DoubleType) * y.cast(DoubleType)),
+      lit(0.0), (acc, v) => acc + v)
+
+  private def hofL2sq(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) =>
+        (x.cast(DoubleType) - y.cast(DoubleType)) *
+          (x.cast(DoubleType) - y.cast(DoubleType))),
+      lit(0.0), (acc, v) => acc + v)
+
+  // each kernel next to its inline HOF reference
+  private val kernels: Seq[(String, (Column, Column) => Column)] = Seq(
+    "graft_dot" -> hofDot,
+    "graft_cosine" -> ((a, b) => hofDot(a, b) / sqrt(hofDot(a, a)) /
+      sqrt(hofDot(b, b))),
+    "graft_l2sq" -> hofL2sq)
 
   test("native graft_dot is bit-equal to the HOF formulation") {
     val embs = Tables.load(spark, sf, "embeddings")
-    val hof = aggregate(
-      zip_with(col("embedding"), col("embedding"),
-        (x, y) => x.cast(DoubleType) * y.cast(DoubleType)),
-      lit(0.0), (acc, v) => acc + v)
+    val hof = hofDot(col("embedding"), col("embedding"))
     val both = embs.select(
       call_function("graft_dot", col("embedding"), col("embedding"))
         .as("native"), hof.as("hof"))
@@ -23,36 +40,63 @@ class FunctionsSpec extends SparkTestBase {
 
   test("graft_dot is registered for SQL via GraftExtensions") {
     Tables.load(spark, sf, "embeddings").createOrReplaceTempView("emb_t")
-    val v = spark.sql(
-      "SELECT graft_dot(embedding, embedding) AS d FROM emb_t ORDER BY vec_id LIMIT 1")
-      .head().getDouble(0)
-    assert(v > 0)
+    val r = spark.sql(
+      "SELECT graft_dot(embedding, embedding) AS d, " +
+        "graft_cosine(embedding, embedding) AS c, " +
+        "graft_l2sq(embedding, embedding) AS l " +
+        "FROM emb_t ORDER BY vec_id LIMIT 1")
+      .head()
+    assert(r.getDouble(0) > 0)
+    assert(math.abs(r.getDouble(1) - 1.0) < 1e-9)
+    assert(r.getDouble(2) == 0.0)
   }
 
-  test("graft_dot matches the HOF on unequal lengths and null elements") {
-    import spark.implicits._
-    val df = Seq(
-      (1L, Seq(1.0f, 2.0f), Seq(3.0f, 4.0f)),          // normal
-      (2L, Seq(1.0f, 2.0f, 3.0f), Seq(1.0f, 1.0f)),    // unequal length
-      (3L, Seq(1.0f), Seq(1.0f))                        // singleton
-    ).toDF("id", "a", "b")
-      // inject a null element for id 3 (Seq of Option doesn't encode cleanly)
-      .withColumn("a", when(col("id") === 3,
-        array(lit(null).cast("float"))).otherwise(col("a")))
-    val hof = aggregate(
-      zip_with(col("a"), col("b"),
-        (x, y) => x.cast(DoubleType) * y.cast(DoubleType)),
-      lit(0.0), (acc, v) => acc + v)
-    val rows = df.select(col("id"),
-        call_function("graft_dot", col("a"), col("b")).as("native"),
-        hof.as("hof"))
-      .orderBy("id").collect()
-    rows.foreach { r =>
-      assert(r.isNullAt(1) == r.isNullAt(2), s"null mismatch: $r")
-      if (!r.isNullAt(1)) assert(r.getDouble(1) == r.getDouble(2), s"$r")
+  for ((name, hof) <- kernels)
+    test(s"$name matches the HOF on unequal lengths and null elements") {
+      import spark.implicits._
+      val df = Seq(
+        (1L, Seq(1.0f, 2.0f), Seq(3.0f, 4.0f)),          // normal
+        (2L, Seq(1.0f, 2.0f, 3.0f), Seq(1.0f, 1.0f)),    // unequal length
+        (3L, Seq(1.0f), Seq(1.0f)),                       // null element
+        (4L, Seq(2.0f), Seq(3.0f))                        // singleton
+      ).toDF("id", "a", "b")
+        // inject a null element for id 3 (Seq of Option doesn't encode cleanly)
+        .withColumn("a", when(col("id") === 3,
+          array(lit(null).cast("float"))).otherwise(col("a")))
+      val rows = df.select(col("id"),
+          call_function(name, col("a"), col("b")).as("native"),
+          hof(col("a"), col("b")).as("hof"))
+        .orderBy("id").collect()
+      rows.foreach { r =>
+        assert(r.isNullAt(1) == r.isNullAt(2), s"null mismatch: $r")
+        if (!r.isNullAt(1)) assert(r.getDouble(1) == r.getDouble(2), s"$r")
+      }
+      assert(!rows(0).isNullAt(1) && !rows(3).isNullAt(1))
+      assert(rows(1).isNullAt(1), "unequal lengths must be NULL")
+      assert(rows(2).isNullAt(1), "null element must poison to NULL")
     }
-    assert(rows(1).isNullAt(1), "unequal lengths must be NULL")
-    assert(rows(2).isNullAt(1), "null element must poison to NULL")
+
+  test("a non-array argument fails analysis and names the kernel") {
+    val embs = Tables.load(spark, sf, "embeddings")
+    for ((name, _) <- kernels) {
+      val err = intercept[org.apache.spark.sql.AnalysisException] {
+        embs.select(call_function(name, lit(1.0), col("embedding"))).head()
+      }
+      assert(err.getMessage.contains(s"$name expects float/double arrays"),
+        err.getMessage)
+    }
+  }
+
+  test("native graft_l2sq is bit-equal to the HOF fold") {
+    val embs = Tables.load(spark, sf, "embeddings").limit(200)
+    val shifted = embs.select(col("vec_id"),
+      col("embedding"),
+      expr("transform(embedding, x -> CAST(x * 1.5 AS FLOAT))").as("other"))
+    val both = shifted.select(
+      call_function("graft_l2sq", col("embedding"), col("other")).as("native"),
+      hofL2sq(col("embedding"), col("other")).as("hof"))
+    assert(both.filter(col("native") =!= col("hof")).count() == 0)
+    assert(both.filter(col("native").isNull).count() == 0)
   }
 
   test("fused graft_cosine is bit-equal to the composed three-dot form") {
@@ -60,9 +104,6 @@ class FunctionsSpec extends SparkTestBase {
     val shifted = embs.select(col("vec_id"), col("embedding"),
       expr("transform(embedding, x -> CAST(x * 0.9 + 0.01 AS FLOAT))")
         .as("other"))
-    def hofDot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      aggregate(zip_with(a, b, (x, y) => x.cast(DoubleType) * y.cast(DoubleType)),
-        lit(0.0), (acc, v) => acc + v)
     val composed = hofDot(col("embedding"), col("other")) /
       sqrt(hofDot(col("embedding"), col("embedding"))) /
       sqrt(hofDot(col("other"), col("other")))

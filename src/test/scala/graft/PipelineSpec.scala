@@ -59,7 +59,7 @@ class PipelineSpec extends SparkTestBase {
       .select(col("vec_id").as("probe_id"), col("embedding").as("probe_e"))
     val row = graft.llm.SimSearch.ivfTopKAll(index, probes, k = 10,
         nProbe = 3, mips = false,
-        scoreOf = (p, e) => round(graft.llm.Dedup.cosine(p, e), 4),
+        scoreOf = (p, e) => round(graft.functions.VectorFunctions.cosine(p, e), 4),
         excludeSelf = true)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(3)))
     val gemm = graft.llm.SimSearch.cosineGemmTopKAll(index, probes,
@@ -191,28 +191,6 @@ class PipelineSpec extends SparkTestBase {
     orders.unpersist()
   }
 
-  test("native graft_l2sq is bit-equal to the HOF fold and handles nulls") {
-    val embs = Tables.load(spark, sf, "embeddings").limit(200)
-    val shifted = embs.select(col("vec_id"),
-      col("embedding"),
-      expr("transform(embedding, x -> CAST(x * 1.5 AS FLOAT))").as("other"))
-    val hof = aggregate(
-      zip_with(col("embedding"), col("other"), (x, y) =>
-        (x.cast(DoubleType) - y.cast(DoubleType)) *
-          (x.cast(DoubleType) - y.cast(DoubleType))),
-      lit(0.0), (acc, v) => acc + v)
-    val both = shifted.select(
-      call_function("graft_l2sq", col("embedding"), col("other")).as("native"),
-      hof.as("hof"))
-    assert(both.filter(col("native") =!= col("hof")).count() == 0)
-    assert(both.filter(col("native").isNull).count() == 0)
-    // unequal lengths -> NULL (matches zip_with padding semantics)
-    import spark.implicits._
-    val bad = Seq((Seq(1.0f, 2.0f), Seq(1.0f))).toDF("a", "b")
-      .select(call_function("graft_l2sq", col("a"), col("b")).as("d"))
-    assert(bad.filter(col("d").isNull).count() == 1)
-  }
-
   test("q_dup_spans counts are real: recounting a reported span matches") {
     val spans = PipelineQueries.qDupSpans.run(spark, sf).limit(5).collect()
     assert(spans.nonEmpty)
@@ -283,14 +261,18 @@ class PipelineSpec extends SparkTestBase {
     val embs = Tables.load(spark, sf, "embeddings")
     val out = graft.llm.SimSearch.l2TopK(embs, probeId = 7L, k = 10).collect()
     assert(out.length == 10)
-    // brute-force ground truth with the same rounding + tiebreak
+    // brute-force ground truth (the inline HOF fold, not the kernel under
+    // test) with the same rounding + tiebreak
     val probe = embs.filter(col("vec_id") === 7L)
       .select(col("embedding").as("probe_e"))
     val brute = embs.filter(col("vec_id") =!= 7L)
       .crossJoin(broadcast(probe))
       .select(col("vec_id"),
-        round(graft.functions.VectorFunctions.l2sq(
-          col("embedding"), col("probe_e")), 4).as("dist"))
+        round(aggregate(
+          zip_with(col("embedding"), col("probe_e"), (x, y) =>
+            (x.cast(DoubleType) - y.cast(DoubleType)) *
+              (x.cast(DoubleType) - y.cast(DoubleType))),
+          lit(0.0), (acc, v) => acc + v), 4).as("dist"))
       .orderBy(col("dist"), col("vec_id"))
       .limit(10).collect()
     assert(out.map(r => (r.getLong(0), r.getDouble(1))).toSeq ==
