@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType,
+  TimestampType}
 
 /** Table-loading conventions for the graft engine.
   *
@@ -18,10 +19,23 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = parquet(spark, s"$sfDir/$name.parquet")
     if (name == "events" && df.schema.fieldNames.contains("ts")) tsAsNtz(df)
     else df
   }
+
+  private val schemas = SharedBuild[(SparkSession, String), StructType]()()
+
+  /** A parquet file (or directory of them) read with its schema, which is
+    * inferred once per (session, path) and memoized: inference reads the
+    * footers in a one-task job on every `spark.read.parquet`, and a read
+    * with the schema given runs none. Same contract as [[countCached]]:
+    * the files under a path do not change for the session's lifetime. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+
+  def schemaOf(spark: SparkSession, path: String): StructType =
+    schemas((spark, path))(spark.read.parquet(path).schema)
 
   private val counts = SharedBuild[(SparkSession, String, String), Long]()()
 

@@ -1,7 +1,7 @@
 package graft.ml
 
 import org.apache.spark.ml.recommendation.{ALS, ALSModel}
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.catalyst.expressions.{CurrentDate,
   CurrentTimestampLike, LocalTimestamp}
 import org.apache.spark.sql.functions._
@@ -46,9 +46,10 @@ object AlsEngine {
     models((spark, sfDir, cfg)) {
       // built here, not through the train memo: this memo alone owns the
       // base model's two factor checkpoints, so the train memo's cap can
-      // never free them under a live entry
+      // never free them under a live entry. The view's digest row is also
+      // R's half of every [R; X] train key.
       val view = Ratings.viewCached(spark, sfDir)
-      val (_, n) = digestBounds(view, "train")
+      val n = checked(half(view, keyTypes(view)), "train")
       val m = fit(view, cfg, None, n)
       // the unfenced model and its train shuffles are now dead
       // references — reclaim the scratch before the next consumer
@@ -85,12 +86,17 @@ object AlsEngine {
   private val trains =
     graft.SharedBuild[TrainKey, ALSModel](cap = 16)(factorBlocks)
 
-  /** The [[digestBounds]] row each trained frame was first keyed by,
-    * found by the frame's analyzed plan (a semantic-hash bucket, then
-    * `sameSemantics`). A frame whose plan is here and whose train entry
-    * is still in [[trains]] gets its fenced model with no Spark job: the
-    * Alg. 1 trace re-trains [R; X₀] and [R; X₁] the α-sweep already
-    * trained, over the same cached view and the step memo's X₁.
+  /** [[digestBounds]] rows by frame: keyed by the frame's analyzed plan
+    * (a semantic-hash bucket, then `sameSemantics`) and the types its key
+    * columns are read as. Two kinds of frame file rows here:
+    *  - a frame [[train]] keyed, under its own types. A later train of an
+    *    equal plan whose train entry is still in [[trains]] gets its
+    *    fenced model with no Spark job.
+    *  - a half of an Alg. 1 [R; X] train ([[trainAugmented]]), under the
+    *    union's types. R's row is computed once per view and serves every
+    *    budget and iteration; each X's is observed by the job that
+    *    materialized X ([[keyedCheckpoint]]) or else computed by one pass
+    *    over X alone. A half's row serves every train that pairs it.
     *
     * Why a plan hit cannot be false: equal analyzed plans read the same
     * sources through the same expressions. The sources are immutable
@@ -107,8 +113,8 @@ object AlsEngine {
     * the other plans, and a hit whose train entry the cap has evicted,
     * on the digest pass with its id-range and empty-input checks. The
     * entries hold analyzed plans and digest rows only, no blocks. */
-  private val digests =
-    graft.SharedBuild[graft.SharedBuild.SamePlan, Row](cap = 16)()
+  private val digests = graft.SharedBuild[
+    (graft.SharedBuild.SamePlan, Seq[DataType]), Row](cap = 16)()
 
   /** Whether a rerun of the frame's plan must yield its rows again: no
     * nondeterministic expression (`rand()`, `monotonically_increasing_id`,
@@ -135,28 +141,39 @@ object AlsEngine {
   private def sizedBlocks(n: Long): Int =
     math.max(10, math.min(256, (n / 2000000L).toInt))
 
-  /** The two content-digest columns of [[digestBounds]]: independent
-    * 64-bit hash streams over the CANONICAL cell types (long ids, float
-    * rating — what ALS actually consumes), summed as DECIMAL(38,0) so
-    * the fold is order-independent and can never overflow. */
-  private def digestCols: Seq[Column] = {
+  /** The columns a train key reads. */
+  private val keyCols = Seq("user_id", "item_id", "rating")
+
+  private def keyTypes(df: DataFrame): Seq[DataType] =
+    keyCols.map(c => df.schema(c).dataType)
+
+  private val digestNames = Seq("max_user", "max_item", "n", "h1", "h2")
+
+  /** A frame's digest aggregates, its key columns read as `types` (a
+    * union's output types when the frame is one of its halves): the id
+    * bounds and count (the range and empty-input checks) plus two
+    * independent 64-bit hash streams over the CANONICAL cell types (long
+    * ids, float rating — what ALS actually consumes), summed as
+    * DECIMAL(38,0) so the fold is order-independent and can never
+    * overflow. */
+  private def digestAggs(types: Seq[DataType]): Seq[Column] = {
     val dec38 = DecimalType(38, 0)
-    val u = col("user_id").cast(LongType)
-    val i = col("item_id").cast(LongType)
-    val r = col("rating").cast(FloatType)
-    Seq(sum(xxhash64(u, i, r).cast(dec38)),
+    val Seq(u, i, r) = keyCols.zip(types).zip(Seq(LongType, LongType,
+      FloatType)).map { case ((c, t), canon) => col(c).cast(t).cast(canon) }
+    Seq(max(abs(u)), max(abs(i)), count(lit(1)),
+      sum(xxhash64(u, i, r).cast(dec38)),
       sum(xxhash64(lit(1L), r, i, u).cast(dec38)))
+      .zip(digestNames).map { case (c, name) => c.as(name) }
   }
 
-  /** One pass over the input: id bounds + count (the preexisting range
-    * check) plus the two train-memo digest sums. */
-  private def digestBounds(ratings: DataFrame, what: String)
-      : (Row, Long) = {
-    val aggCols = Seq(
-      max(abs(col("user_id").cast(LongType))),
-      max(abs(col("item_id").cast(LongType))),
-      count(lit(1))) ++ digestCols
-    val bounds = ratings.agg(aggCols.head, aggCols.tail: _*).head()
+  /** One pass over the frame: its digest row. */
+  private[graft] def digestBounds(df: DataFrame, types: Seq[DataType]): Row = {
+    val aggs = digestAggs(types)
+    df.agg(aggs.head, aggs.tail: _*).head()
+  }
+
+  /** The empty-input and id-range checks on a digest row; its count. */
+  private def checked(bounds: Row, what: String): Long = {
     // max over zero rows is SQL NULL — getLong(0) would NPE with a
     // message pointing nowhere; fail with the actual problem instead.
     require(bounds.getLong(2) > 0, s"AlsEngine.$what: empty ratings input")
@@ -164,7 +181,19 @@ object AlsEngine {
       bounds.getLong(1) <= Int.MaxValue,
       s"ids exceed Int range (user ${bounds.getLong(0)}, item " +
         s"${bounds.getLong(1)}) — use AlsEngine.trainCompacted")
-    (bounds, bounds.getLong(2))
+    bounds.getLong(2)
+  }
+
+  /** The digest row of a union from its halves' rows: the count and the
+    * exact DECIMAL hash sums add, the id bounds take the larger; an empty
+    * half's bounds and sums are NULL. */
+  private def combine(a: Row, b: Row): Row = {
+    def present[T](i: Int, get: Row => T): Seq[T] =
+      Seq(a, b).filterNot(_.isNullAt(i)).map(get)
+    def bound(i: Int) = present(i, _.getLong(i)).maxOption.map(Long.box)
+    def hashSum(i: Int) = present(i, _.getDecimal(i)).reduceOption(_ add _)
+    Row(bound(0).orNull, bound(1).orNull, a.getLong(2) + b.getLong(2),
+      hashSum(3).orNull, hashSum(4).orNull)
   }
 
   private def memoKey(ratings: DataFrame, bounds: Row,
@@ -197,11 +226,12 @@ object AlsEngine {
       implicitAlpha: Option[Double]): ALSModel = {
     val kind = implicitAlpha.fold("explicit")(a => s"implicit:$a")
     val plan = Option.when(replayable(ratings))(
-      new graft.SharedBuild.SamePlan(ratings))
+      (new graft.SharedBuild.SamePlan(ratings), keyTypes(ratings)))
     plan.flatMap(digests.get)
       .flatMap(b => trains.get(memoKey(ratings, b, kind, cfg)))
       .getOrElse {
-        val (bounds, n) = digestBounds(ratings,
+        val bounds = digestBounds(ratings, keyTypes(ratings))
+        val n = checked(bounds,
           implicitAlpha.fold("train")(_ => "trainImplicit"))
         plan.foreach(p => digests(p)(bounds))
         trains(memoKey(ratings, bounds, kind, cfg))(
@@ -209,15 +239,64 @@ object AlsEngine {
       }
   }
 
+  /** A half's digest row, read as `types`: from [[digests]], or one pass
+    * over the half that files it there. */
+  private def half(df: DataFrame, types: Seq[DataType]): Row =
+    if (replayable(df))
+      digests((new graft.SharedBuild.SamePlan(df), types))(
+        digestBounds(df, types))
+    else digestBounds(df, types)
+
+  /** `ratings.unionByName(x)` and its digest row, combined from the two
+    * halves' rows: no pass over the union. */
+  private[graft] def unionDigest(ratings: DataFrame, x: DataFrame)
+      : (DataFrame, Row) = {
+    val union = ratings.unionByName(x)
+    val types = keyTypes(union)
+    (union, combine(half(ratings, types), half(x, types)))
+  }
+
+  /** Explicit ALS on [R; X] = `ratings.unionByName(x)`, the train every
+    * Alg. 1 iteration runs: the same checks, memo and fit as [[train]] of
+    * the union, keyed by [[unionDigest]], so a train whose halves are
+    * known runs no digest job. */
+  private[graft] def trainAugmented(ratings: DataFrame, x: DataFrame,
+      cfg: Config): ALSModel = {
+    val (union, bounds) = unionDigest(ratings, x)
+    val n = checked(bounds, "train")
+    trains(memoKey(union, bounds, "explicit", cfg))(fit(union, cfg, None, n))
+  }
+
+  /** `df.localCheckpoint()`, whose one job also observes `df`'s digest row
+    * (`Dataset.observe`) and files it in [[digests]] under the checkpoint's
+    * plan, so a later [[trainAugmented]] with the checkpoint as X runs no
+    * pass over it. */
+  private[graft] def keyedCheckpoint(df: DataFrame): DataFrame = {
+    val types = keyTypes(df)
+    val aggs = digestAggs(types)
+    val seen = new Observation()
+    val cp = df.observe(seen, aggs.head, aggs.tail: _*).localCheckpoint()
+    val observed = seen.get
+    digests((new graft.SharedBuild.SamePlan(cp), types))(
+      Row.fromSeq(digestNames.map(observed)))
+    cp
+  }
+
   /** The seeded ALS fit of `n` ratings, lineage-fenced. */
   private def fit(ratings: DataFrame, cfg: Config,
       implicitAlpha: Option[Double], n: Long): ALSModel = {
     val blocks = sizedBlocks(n)
-    // ALS's iterative lineage needs periodic checkpoints (checkpointInterval
-    // is silently a no-op without a checkpoint dir) — without this, deep
-    // iteration counts overflow task stacks on serialization.
+    // MLlib checkpoints the item factors at every iteration divisible by
+    // checkpointInterval, counting from 0 (explicit) or 1 (implicit). At
+    // the default interval of 10 and maxIter <= 10 that is the explicit
+    // fit's iteration 0, with no lineage yet to cut, or the implicit
+    // fit's last: a count job and a reliable write that nothing reads.
+    // Deeper fits keep the default so their lineage stays bounded (a
+    // checkpoint interval is a no-op without a checkpoint dir).
+    val deep = cfg.maxIter > 10
     val sc = ratings.sparkSession.sparkContext
-    if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir("target/checkpoints")
+    if (deep && sc.getCheckpointDir.isEmpty)
+      sc.setCheckpointDir("target/checkpoints")
     val prepared = ratings.select(
       col("user_id").cast(IntegerType).as("user"),
       col("item_id").cast(IntegerType).as("item"),
@@ -230,6 +309,10 @@ object AlsEngine {
       .setNumUserBlocks(blocks).setNumItemBlocks(blocks)
       .setUserCol("user").setItemCol("item").setRatingCol("rating")
       .setColdStartStrategy("drop")
+      .setCheckpointInterval(if (deep) 10 else -1)
+      // the fence materializes both factor frames; MLlib's own final count
+      // of each would compute them once more
+      .setFinalStorageLevel("NONE")
     org.apache.spark.ml.recommendation.GraftAlsLineage.fence(
       implicitAlpha.fold(als)(a => als.setImplicitPrefs(true).setAlpha(a))
         .fit(prepared))

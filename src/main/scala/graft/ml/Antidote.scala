@@ -147,17 +147,35 @@ object Antidote {
   def factorMoments(model: ALSModel): Moments =
     momentsMemo(model)(factorMomentsUncached(model))
 
-  private def factorMomentsUncached(model: ALSModel): Moments = {
+  private def factorMomentsUncached(model: ALSModel): Moments =
+    momentsOf(momentSums(model).head(), model.rank)
+
+  /** The one-row aggregate [[Moments]] reads over the user factors
+    * (id INT, features ARRAY<FLOAT>): the count, then each coordinate's
+    * sum and each upper-triangle product's sum. */
+  private def momentSums(model: ALSModel): DataFrame = {
     val k = model.rank
-    val uf = model.userFactors // (id INT, features ARRAY<FLOAT>)
-    val sums = uf.select(
+    def e(i: Int): Column =
+      element_at(col("features"), i + 1).cast(DoubleType)
+    model.userFactors.select(
       (Seq(count(lit(1)).cast(DoubleType).as("n")) ++
-        (0 until k).map(i =>
-          sum(element_at(col("features"), i + 1).cast(DoubleType)).as(s"m$i")) ++
+        (0 until k).map(i => sum(e(i)).as(s"m$i")) ++
         (for (i <- 0 until k; j <- i until k) yield
-          sum(element_at(col("features"), i + 1).cast(DoubleType) *
-            element_at(col("features"), j + 1).cast(DoubleType)).as(s"s${i}_$j"))): _*)
-      .head()
+          sum(e(i) * e(j)).as(s"s${i}_$j"))): _*)
+  }
+
+  /** The model's [[Moments]], summed in one action with `other`, a
+    * one-row aggregate (a union of the two aggregates, each summing as it
+    * does alone), and filed in the memo; with `other`'s row. */
+  private def factorMomentsWith(model: ALSModel, other: DataFrame)
+      : (Moments, Row) = {
+    val rows = momentSums(model)
+      .unionByName(other, allowMissingColumns = true).collect()
+    val (others, sums) = rows.partition(r => r.isNullAt(r.fieldIndex("n")))
+    (momentsMemo(model)(momentsOf(sums.head, model.rank)), others.head)
+  }
+
+  private def momentsOf(sums: Row, k: Int): Moments = {
     val n = sums.getDouble(0)
     val uBar = DenseVector.tabulate(k)(i => sums.getDouble(1 + i) / n)
     val s = DenseMatrix.zeros[Double](k, k)
@@ -205,13 +223,17 @@ object Antidote {
   /** All three societal metrics + RMSE from ONE action over the known
     * cells (plus polarization's constant-size factor-moment reduction) —
     * what a metric-vs-budget sweep should call instead of three separate
-    * `evaluate`s re-deriving predictions each time. */
+    * `evaluate`s re-deriving predictions each time. The loss action and
+    * polarization share nothing but the model, so they run as concurrent
+    * jobs. */
   def evaluateAll(model: ALSModel, ratings: DataFrame, groups: DataFrame,
       a: String, b: String): Map[String, TracePoint] = {
     val lu = losses(AlsEngine.predictKnown(model, ratings))
       .join(groups, Seq("user_id"), "left")
-    val ls = evaluateLosses(lu, Some((a, b)), None)
-    val pol = polarization(model)
+    val Seq(Left(ls), Right(pol)) = graft.Concurrently(2)(
+      Seq[() => Either[LossStats, Double]](
+        () => Left(evaluateLosses(lu, Some((a, b)), None)),
+        () => Right(polarization(model))))
     Map(
       "polarization" -> TracePoint(pol, ls.rmse),
       "ind_unfairness" -> TracePoint(ls.indUnfairness, ls.rmse),
@@ -340,7 +362,7 @@ object Antidote {
     var x = x0.cache()
     val trace = Seq.newBuilder[TracePoint]
     for (t <- 0 to steps) {
-      val model = AlsEngine.train(ratings.unionByName(x), cfg)
+      val model = AlsEngine.trainAugmented(ratings, x, cfg)
       if (t == steps) trace += evaluate(model, ratings, metric)
       else {
         val next = metric match {
@@ -426,14 +448,15 @@ object Antidote {
     * the step materialized as a local checkpoint, which also fences the
     * step's lineage (which holds a whole ALS train) out of the next
     * train's, so the two trains' shuffle files are never referenced at
-    * the same time. The cached per-user loss frame is freed once the new
-    * rows are materialized. */
+    * the same time. The checkpoint's job also observes X_{t+1}'s half of
+    * the next train's key ([[AlsEngine.keyedCheckpoint]]). The cached
+    * per-user loss frame is freed once the new rows are materialized. */
   private def stepEvaluated(ratings: DataFrame, x: DataFrame,
       cfg: AlsEngine.Config, eta: Double, metric: Metric,
       model: ALSModel, maxUserId: Long): (TracePoint, DataFrame) = {
     val ev = evaluateModel(model, ratings, metric, Some(maxUserId))
-    try (ev.point, unfairnessStep(x, cfg, eta, metric, model, ev)
-      .localCheckpoint())
+    try (ev.point, AlsEngine.keyedCheckpoint(
+      unfairnessStep(x, cfg, eta, metric, model, ev)))
     finally ev.unpersist()
   }
 
@@ -453,19 +476,23 @@ object Antidote {
     import spark.implicits._
     val k = cfg.rank
 
-    // n (the user-factor count) rides on the memoized moments, m on the
-    // Gram reduction: no separate count actions.
-    val Moments(nTot, uBar, _) = factorMoments(model)
-
     // B = VᵀV — k×k reduction over item factors via the typed Gram
-    // aggregator (partial-aggregates map-side; merges associatively).
+    // aggregator (partial-aggregates map-side; merges associatively). n
+    // (the user-factor count) rides on the moments, m on the Gram
+    // reduction: no separate count actions, and moments the memo lacks
+    // are summed in the Gram's action.
     val f = col("features")
     val gram = udaf(new graft.functions.GramAggregator(k),
       ExpressionEncoder[Seq[Float]]())
-    val gm = model.itemFactors.agg(gram(f).as("g"), count(lit(1)).as("m"))
-      .head()
-    val tri = gm.getSeq[Double](0)
-    val m = gm.getLong(1).toDouble
+    val gramSums = model.itemFactors.agg(gram(f).as("g"),
+      count(lit(1)).as("m"))
+    val (moments, gm) = momentsMemo.get(model) match {
+      case Some(known) => (known, gramSums.head())
+      case None => factorMomentsWith(model, gramSums)
+    }
+    val Moments(nTot, uBar, _) = moments
+    val tri = gm.getSeq[Double](gm.fieldIndex("g"))
+    val m = gm.getAs[Long]("m").toDouble
     val b = DenseMatrix.zeros[Double](k, k)
     var idx = 0
     for (i <- 0 until k; j <- i until k) {

@@ -356,13 +356,12 @@ object MfQueries {
     val stats = Antidote.userStatsCached(s, d)
     // X₀ materialized once: the train, the step's pass over X₀ and the
     // result all read it, where its plan re-derives the item list on
-    // every read
-    val x0 = Antidote.init(s, ratings, 0.01, stats).localCheckpoint()
-    // 5 ALS sweeps are plenty for the V the gradient linearizes around;
-    // [R; X₀] is cached for the train's digest pass and its fit
+    // every read. The checkpoint's job also observes X₀'s half of the
+    // train key, so with R's half known the train runs no digest pass.
+    val x0 = AlsEngine.keyedCheckpoint(Antidote.init(s, ratings, 0.01, stats))
+    // 5 ALS sweeps are plenty for the V the gradient linearizes around
     val cfg = AlsEngine.Config(maxIter = 5)
-    val aug = ratings.unionByName(x0).cache()
-    val model = try AlsEngine.train(aug, cfg) finally aug.unpersist()
+    val model = AlsEngine.trainAugmented(ratings, x0, cfg)
     Antidote.step(s, ratings, x0, model, stats, cfg)
       .orderBy("user_id", "item_id")
   }
@@ -424,12 +423,14 @@ object MfQueries {
     val stats = Antidote.userStatsCached(s, d)
     val r = col("rating")
     val umB = ratings.groupBy("user_id").agg(avg(r).as("mu"))
+    // one row per rated item, with its item residue si
     val base = ratings.join(umB, "user_id")
       .groupBy("item_id")
       .agg(count(lit(1)).as("n"), sum(r).as("sr"), sum(r * r).as("sr2"),
         sum(col("mu")).as("smu"), sum(col("mu") * col("mu")).as("smu2"),
         sum(r * col("mu")).as("srmu"))
-      .localCheckpoint() // fence: both budgets reuse it without a re-scan
+      .withColumn("si", col("item_id") * 40503L % 1000)
+      .localCheckpoint() // fence: the histogram and the final sums read it
     // Antidote-side sums in CLOSED FORM — O(items), independent of the
     // k̃×m synthetic matrix: x_ai = round6(1 + 4·((a·C₁ + i·C₂) mod
     // 1000)/999) depends only on the RESIDUE PAIR (r_a, s_i) mod 1000,
@@ -438,37 +439,17 @@ object MfQueries {
     // exact micro-integer cell table g6 (no .5 rounding boundaries
     // exist: (999+4m)·10⁶/999 has fractional part k/999, never 1/2).
     // At 100 TB this turns the evaluation's dominant term from α·n·m
-    // synthetic cells into one ≤1000-row broadcast join per budget.
-    val nUsers = stats.nUsers
-    val g6 = (0 until 1000).map(m =>
-      (2L * (999 + 4 * m) * 1000000L + 999) / 1998) // round6(·)·10⁶ exact
-    val items = ratings.select("item_id").distinct()
-      .select(col("item_id"), (col("item_id") * 40503L % 1000).as("si"))
-      .localCheckpoint()
-    val mItems = stats.nItems
+    // synthetic cells into one ≤1000-row broadcast join for all budgets.
     val hI = new Array[Long](1000)
-    items.groupBy("si").count().collect()
+    base.groupBy("si").count().collect()
       .foreach(row => hI(row.getLong(0).toInt) = row.getLong(1))
-    val after = Seq(0.01, 0.05).map { alpha =>
-      val kT = math.ceil(alpha * nUsers).toLong
-      // user residues r_a for the k̃ synthetic ids (distributed count,
-      // ≤1000-row result) — then the whole residue algebra on the driver
-      val hU = new Array[Long](1000)
-      s.range(1, kT + 1)
-        .select(((col("id") + stats.maxUserId) * 2654435761L % 1000).as("ra"))
-        .groupBy("ra").count().collect()
-        .foreach(row => hU(row.getLong(0).toInt) = row.getLong(1))
-      // mu_a by user residue: mean over the item-residue histogram
-      val muR = new Array[Double](1000)
-      for (ra <- 0 until 1000) {
-        var acc = BigInt(0)
-        for (si <- 0 until 1000 if hI(si) > 0)
-          acc += BigInt(hI(si)) * g6((ra + si) % 1000)
-        muR(ra) = (BigDecimal(acc) / (BigDecimal(mItems) * 1000000))
-          .toDouble
-      }
+    val muR = residueMeans(hI, stats.nItems)
+    val budgets = Seq(0.01, 0.05)
+    val antRows = budgets.flatMap { alpha =>
+      val kT = math.ceil(alpha * stats.nUsers).toLong
+      val hU = userResidues(kT, stats.maxUserId)
       // per-item-residue antidote sums over all k̃ users
-      val rows = (0 until 1000).map { si =>
+      (0 until 1000).map { si =>
         var sx6 = BigInt(0); var sx12 = BigInt(0)
         var smua = 0.0; var smua2 = 0.0; var sxmua6 = 0.0
         for (ra <- 0 until 1000 if hU(ra) > 0) {
@@ -479,39 +460,78 @@ object MfQueries {
           smua2 += hU(ra) * muR(ra) * muR(ra)
           sxmua6 += hU(ra) * g.toDouble * muR(ra)
         }
-        (si.toLong, BigDecimal(sx6).toDouble / 1e6,
+        (alpha, kT, si.toLong, BigDecimal(sx6).toDouble / 1e6,
           BigDecimal(sx12).toDouble / 1e12, smua, smua2, sxmua6 / 1e6)
       }
-      val spark0 = s
-      import spark0.implicits._
-      val antBySi = broadcast(rows.toDF(
-        "asi", "sx", "sx2", "smua", "smua2", "sxmua"))
-      val ant = items.join(antBySi, col("si") === col("asi"))
-        .select(col("item_id"), lit(kT).as("ka"), col("sx"), col("sx2"),
-          col("smua"), col("smua2"), col("sxmua"))
-      val nAll = col("n") + col("ka")
-      val mi = (col("sr") + col("sx")) / nAll
-      val sp = (col("smu") + col("smua") + nAll * mi) / 2
-      val sp2 = (col("smu2") + col("smua2")
-        + lit(2) * mi * (col("smu") + col("smua")) + nAll * mi * mi) / 4
-      val se = (col("sr2") - col("srmu") - mi * col("sr")
-          + (col("smu2") + lit(2) * mi * col("smu") + col("n") * mi * mi) / 4) +
-        (col("sx2") - col("sxmua") - mi * col("sx")
-          + (col("smua2") + lit(2) * mi * col("smua") + col("ka") * mi * mi) / 4)
-      val row = base.join(ant, "item_id")
-        .select((sp2 / nAll - (sp / nAll) * (sp / nAll)).as("v"),
-          se.as("se"), nAll.as("n_all"))
-        .agg(round(avg(col("v")), 6).as("pol"),
-          round(sqrt(sum(col("se")) / sum(col("n_all"))), 6).as("rmse"))
-        .head()
-      (alpha, row.getDouble(0), row.getDouble(1))
     }
     val spark = s
     import spark.implicits._
-    after.map { case (alpha, polA, rmseA) =>
+    val ant = broadcast(antRows.toDF(
+      "alpha", "ka", "asi", "sx", "sx2", "smua", "smua2", "sxmua"))
+    val nAll = col("n") + col("ka")
+    val mi = (col("sr") + col("sx")) / nAll
+    val sp = (col("smu") + col("smua") + nAll * mi) / 2
+    val sp2 = (col("smu2") + col("smua2")
+      + lit(2) * mi * (col("smu") + col("smua")) + nAll * mi * mi) / 4
+    val se = (col("sr2") - col("srmu") - mi * col("sr")
+        + (col("smu2") + lit(2) * mi * col("smu") + col("n") * mi * mi) / 4) +
+      (col("sx2") - col("sxmua") - mi * col("sx")
+        + (col("smua2") + lit(2) * mi * col("smua") + col("ka") * mi * mi) / 4)
+    // both budgets' final sums in one aggregate grouped by α
+    val after = base.join(ant, col("si") === col("asi"))
+      .select(col("alpha"), (sp2 / nAll - (sp / nAll) * (sp / nAll)).as("v"),
+        se.as("se"), nAll.as("n_all"))
+      .groupBy("alpha")
+      .agg(round(avg(col("v")), 6).as("pol"),
+        round(sqrt(sum(col("se")) / sum(col("n_all"))), 6).as("rmse"))
+      .collect()
+      .map(row => row.getDouble(0) -> (row.getDouble(1), row.getDouble(2)))
+      .toMap
+    budgets.map { alpha =>
+      val (polA, rmseA) = after(alpha)
       (alpha, polB, polA, rmseB, rmseA)
     }.toDF("alpha", "pol_before", "pol_after", "rmse_before", "rmse_after")
       .orderBy("alpha")
+  }
+
+  /** round6(1 + 4·m/999)·10⁶ for each cell residue m, exactly. */
+  private val g6 = (0 until 1000).map(m =>
+    (2L * (999 + 4 * m) * 1000000L + 999) / 1998)
+
+  /** The histogram of the synthetic users' residues
+    * r_a = ((id + maxUserId)·2654435761) mod 1000 over ids 1..k̃, with
+    * no Spark job. r_a has period 1000 in the id, so each of ids 1..1000 stands
+    * for ⌊k̃/1000⌋ full periods plus one more when it is among the first
+    * k̃ mod 1000. The products use Long arithmetic that fails on overflow,
+    * as ANSI Spark's does, and (id + maxUserId)·C is largest in magnitude
+    * at an end of the id range. */
+  private[graft] def userResidues(kT: Long, maxUserId: Long): Array[Long] = {
+    val c = 2654435761L
+    Seq(1L, kT).foreach(id =>
+      Math.multiplyExact(Math.addExact(id, maxUserId), c))
+    val (full, rest) = (kT / 1000, kT % 1000)
+    val hU = new Array[Long](1000)
+    for (id <- 1L to math.min(kT, 1000L)) {
+      val ra = ((id + maxUserId) * c % 1000).toInt
+      hU(ra) += full + (if (id <= rest) 1 else 0)
+    }
+    hU
+  }
+
+  /** mu_a by user residue: the synthetic user's mean rating over the
+    * item-residue histogram `hI` of `mItems` items. Each residue's sum
+    * Σ_si hI(si)·g6(·) is at most mItems·5·10⁶, so it is exact in Long;
+    * the division stays in BigDecimal. */
+  private[graft] def residueMeans(hI: Array[Long], mItems: Long)
+      : Array[Double] = {
+    val div = BigDecimal(mItems) * 1000000
+    Array.tabulate(1000) { ra =>
+      var acc = 0L
+      for (si <- 0 until 1000 if hI(si) > 0)
+        acc = Math.addExact(acc,
+          Math.multiplyExact(hI(si), g6((ra + si) % 1000)))
+      (BigDecimal(acc) / div).toDouble
+    }
   }
 
   /** The reference's native ingestion path: ::-separated MovieLens-style
@@ -616,13 +636,13 @@ object MfQueries {
             // the uncapped sweep there), top-M-items support beyond, so
             // the α=0.05 branch's ALS input stays bounded at sf1+.
             val cap = Antidote.autoCap(stats, alpha, Antidote.maxAntidoteCells)
-            // cached once, as optimize caches its X₀: the train's digest
-            // pass, its fit and the step all read it
+            // cached once, as optimize caches its X₀: the digest pass over
+            // X₀, the train's fit and the step all read it
             val x0 = Antidote.initHeuristic(s, ratings, alpha, stats, cap)
               .cache()
-            // Train [R; X0] explicitly (content-digest memoized +
-            // lineage-fenced inside AlsEngine.train) and hand the step
-            // that model, mirroring optimize's iteration shape. The step
+            // Train [R; X0] explicitly (content-digest memoized and
+            // lineage-fenced inside AlsEngine.trainAugmented) and hand the
+            // step that model, mirroring optimize's iteration shape. The step
             // returns a local checkpoint, which fences the GD step's
             // lineage (which holds a whole ALS train) out of the FINAL
             // train's — without it both trains' shuffle files stay
@@ -632,7 +652,7 @@ object MfQueries {
             // scratch (> 64 GB) because consumed shuffles of earlier
             // trains stayed live.
             val x1 = try {
-              val model0 = AlsEngine.train(ratings.unionByName(x0), cfg)
+              val model0 = AlsEngine.trainAugmented(ratings, x0, cfg)
               Antidote.step(s, ratings, x0, model0, stats, cfg, eta = 1e4,
                 metric = gap)
             } finally x0.unpersist()
@@ -646,11 +666,11 @@ object MfQueries {
             // (ScratchGc): at bench rungs the pause costs more than
             // the MBs it frees.
             graft.ScratchGc.maybe(nRatings)
-            // The final train memoizes + fences inside AlsEngine.train
+            // The final train memoizes + fences inside trainAugmented
             // (evaluation then runs against MB-sized checkpointed
             // factors while the train's shuffles are already
             // reclaimable — peak scratch stays "one live train").
-            val m = AlsEngine.train(ratings.unionByName(x1), cfg)
+            val m = AlsEngine.trainAugmented(ratings, x1, cfg)
             graft.ScratchGc.maybe(nRatings)
             m
           }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -26,7 +26,7 @@ object StreamOps {
     // The file stream source wants a directory; point it at sfDir with a
     // glob filter so only the events file is replayed.
     val raw = spark.readStream
-      .schema(spark.read.parquet(s"$sfDir/events.parquet").schema)
+      .schema(graft.Tables.schemaOf(spark, s"$sfDir/events.parquet"))
       .option("pathGlobFilter", "events.parquet")
       .parquet(sfDir)
     graft.Tables.tsAsTimestamp(raw)
@@ -236,19 +236,24 @@ object StreamOps {
       step: (DataFrame, Option[DataFrame]) => DataFrame): DataFrame = {
     val spark = stream.sparkSession
     def state(v: Long): String = s"$workDir/state/v$v"
+    // each version is read back with the schema it was written with: a
+    // read that infers it runs a footer job per version
     @volatile var version = -1L
+    @volatile var written: StructType = null
+    def read(v: Long): DataFrame = spark.read.schema(written).parquet(state(v))
     stream.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val prev =
-          if (version < 0) None else Some(spark.read.parquet(state(version)))
-        step(batch, prev).write.mode("overwrite").parquet(state(batchId))
+        val prev = if (version < 0) None else Some(read(version))
+        val next = step(batch, prev)
+        next.write.mode("overwrite").parquet(state(batchId))
         version = batchId
+        written = next.schema
       }
       .trigger(Trigger.AvailableNow())
       .start()
       .awaitTermination()
-    spark.read.parquet(state(version))
+    read(version)
   }
 
   /** Streaming incremental aggregate maintenance: replay the events table
@@ -588,7 +593,7 @@ object StreamOps {
     }
     // Probe: every ingested id (must all hit — OR-merge loses nothing)
     // plus a disjoint offset set measuring the false-positive rate.
-    val ids = spark.read.parquet(src).select(col("event_id"))
+    val ids = graft.Tables.parquet(spark, src).select(col("event_id"))
     val probes = ids.select(col("event_id").as("id"), lit(1).as("is_member"))
       .unionByName(ids.select((col("event_id") + 2000000000L).as("id"),
         lit(0).as("is_member")))
@@ -669,7 +674,7 @@ object StreamOps {
     val delay = when(h(concat(eid, lit(":l"))) % 10 === 0,
       (h(concat(eid, lit(":d"))) % 86400) * 1000000L).otherwise(0L)
     graft.Tables.tsAsTimestamp(
-        spark.read.parquet(s"$sfDir/events.parquet"))
+        graft.Tables.parquet(spark, s"$sfDir/events.parquet"))
       .select(col("event_id"), col("user_id"), col("event_type"),
         (unix_micros(col("ts")) - delay).as("us"))
   }
@@ -791,7 +796,8 @@ object StreamOps {
       sfDir.replaceAll("[^A-Za-z0-9._-]", "_") + s"_$digest/n$nBatches"
     writeOrderedSlices(
       graft.Tables.tsAsTimestamp(
-        spark.read.parquet(s"$sfDir/events.parquet")), dir, nBatches)
+        graft.Tables.parquet(spark, s"$sfDir/events.parquet")),
+      dir, nBatches)
     dir
   }
 
@@ -801,7 +807,7 @@ object StreamOps {
       nBatches: Int): (DataFrame, String) = {
     val src = orderedSliceDir(spark, sfDir, nBatches)
     (spark.readStream
-      .schema(spark.read.parquet(src).schema)
+      .schema(graft.Tables.schemaOf(spark, src))
       .option("maxFilesPerTrigger", "1")
       .parquet(src), src)
   }
@@ -832,6 +838,11 @@ object StreamOps {
         (unix_micros(col("ts")) - delay).as("us"))
     val stateBase = s"$workDir/state"
     @volatile var version = -1L
+    // each part is read back with the schema it was written with, as in
+    // `foldState`: a read that infers it runs a footer job per version
+    @volatile var written = Map.empty[String, StructType]
+    def read(v: Long, part: String): DataFrame =
+      spark.read.schema(written(part)).parquet(s"$stateBase/v$v/$part")
     val q = stream.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -841,9 +852,7 @@ object StreamOps {
         val joined =
           if (version < 0) withPrev.withColumn("smax",
             lit(null).cast(LongType))
-          else withPrev.join(
-            spark.read.parquet(s"$stateBase/v$version/umax"),
-            Seq("user_id"), "left")
+          else withPrev.join(read(version, "umax"), Seq("user_id"), "left")
         val prevmax = greatest(
           coalesce(col("bprev"), lit(Long.MinValue)),
           coalesce(col("smax"), lit(Long.MinValue)))
@@ -856,7 +865,7 @@ object StreamOps {
           .agg(count(lit(1)).as("c"))
         val mergedHist =
           if (version < 0) partialHist
-          else spark.read.parquet(s"$stateBase/v$version/hist")
+          else read(version, "hist")
             .unionByName(partialHist)
             .groupBy("event_type", "bucket_s")
             .agg(sum(col("c")).cast(LongType).as("c"))
@@ -864,7 +873,7 @@ object StreamOps {
           .agg(max(col("us")).as("smax"))
         val mergedMax =
           if (version < 0) partialMax
-          else spark.read.parquet(s"$stateBase/v$version/umax")
+          else read(version, "umax")
             .unionByName(partialMax)
             .groupBy("user_id").agg(max(col("smax")).as("smax"))
         mergedHist.write.mode("overwrite")
@@ -872,12 +881,12 @@ object StreamOps {
         mergedMax.write.mode("overwrite")
           .parquet(s"$stateBase/v$batchId/umax")
         version = batchId
+        written = Map("hist" -> mergedHist.schema, "umax" -> mergedMax.schema)
       }
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    watermarkPlanFromHistogram(
-      spark.read.parquet(s"$stateBase/v$version/hist"))
+    watermarkPlanFromHistogram(read(version, "hist"))
   }
 
   /** Incremental sessionization maintainer (13th incremental

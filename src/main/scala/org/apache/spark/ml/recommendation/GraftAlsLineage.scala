@@ -3,7 +3,6 @@ package org.apache.spark.ml.recommendation
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{ExternalRDD, LogicalRDD}
-import org.apache.spark.storage.StorageLevel
 
 /** Lineage fence for a trained [[ALSModel]] — graft's one
   * private[ml]-package shim (the ALSModel constructor is private[ml],
@@ -35,8 +34,11 @@ import org.apache.spark.storage.StorageLevel
   * (`predictKnown`, the Alg. 1 steps) from
   * `spark.sql.autoBroadcastJoinThreshold` like any other table:
   * broadcast while the factors are small, shuffle joins once they are
-  * not. The cache is dropped as soon as the checkpoint exists, and so
-  * are the factor RDDs the fit itself left persisted, so a fenced model
+  * not. The checkpoints are the one materialization of the factors
+  * (`AlsEngine.fit` sets MLlib's final storage level to NONE, so its fit
+  * counts neither factor RDD). The cache is dropped as soon as the
+  * checkpoint exists, and so are the RDDs the fit itself left registered
+  * (its rating and in/out blocks and factor RDDs), so a fenced model
   * holds exactly its two checkpoints.
   *
   * Memos read the checkpoint blocks a fenced model owns off its factor
@@ -44,7 +46,7 @@ import org.apache.spark.storage.StorageLevel
 object GraftAlsLineage {
 
   def fence(m: ALSModel): ALSModel = {
-    val fitBlocks = alsPersisted(m.userFactors) ++ alsPersisted(m.itemFactors)
+    val fitBlocks = alsPersisted(m.userFactors, m.itemFactors)
     val uf = measuredCheckpoint(m.userFactors)
     val itf = measuredCheckpoint(m.itemFactors)
     fitBlocks.foreach(_.unpersist(blocking = false))
@@ -68,23 +70,28 @@ object GraftAlsLineage {
     cp
   }
 
-  /** The RDDs ALS's fit left persisted behind a factor frame: its final
-    * `userFactors` / `itemFactors` and the last checkpointed
-    * `itemFactors-<iter>` iterate, found on the frame's lineage by the
-    * names ALS gives them (the same lineage also reaches the training
-    * input, whose caches are not ALS's to drop). Empty for a model that
-    * is already fenced. */
-  private def alsPersisted(df: DataFrame): Seq[RDD[_]] = {
-    val named = "(user|item)Factors(-\\d+)?".r
+  private val alsNames =
+    "ratingBlocks|(user|item)(In|Out)Blocks|(user|item)Factors(-\\d+)?".r
+
+  /** The RDDs ALS's fit left registered for persistence behind the factor
+    * frames, found on their lineage by the names ALS gives them: the
+    * rating blocks, the user and item in/out blocks, the last checkpointed
+    * `itemFactors-<iter>` iterate, and the final `userFactors` /
+    * `itemFactors`, which a fit at final storage level NONE registers
+    * but never stores (and so leaves for the fence to free). The same
+    * lineage also reaches the training input, whose caches are not ALS's
+    * to drop. Empty for a model that is already fenced. */
+  private def alsPersisted(dfs: DataFrame*): Seq[RDD[_]] = {
+    val registered = dfs.head.sparkSession.sparkContext.getPersistentRDDs
     val seen = scala.collection.mutable.Set.empty[Int]
     def walk(r: RDD[_]): Seq[RDD[_]] =
       if (!seen.add(r.id)) Nil
-      else (if (r.getStorageLevel != StorageLevel.NONE &&
-          Option(r.name).exists(named.matches)) Seq(r) else Nil) ++
+      else (if (registered.contains(r.id) &&
+          Option(r.name).exists(alsNames.matches)) Seq(r) else Nil) ++
         r.dependencies.flatMap(d => walk(d.rdd))
-    df.queryExecution.analyzed.collect {
+    dfs.flatMap(_.queryExecution.analyzed.collect {
       case e: ExternalRDD[_] => e.rdd
       case l: LogicalRDD => l.rdd
-    }.flatMap(walk)
+    }).flatMap(walk)
   }
 }

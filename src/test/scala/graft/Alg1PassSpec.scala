@@ -134,10 +134,51 @@ class Alg1PassSpec extends SparkTestBase {
     val aug = ratings.unionByName(Antidote.init(spark, ratings, 0.02,
       Antidote.userStats(ratings)))
     val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    val m = AlsEngine.train(aug, AlsEngine.Config(maxIter = 2, seed = 7L))
-    val added = sc.getPersistentRDDs.keySet.toSet -- before
-    assert(added == factorIds(m), s"added $added, factors ${factorIds(m)}")
-    assert(added.forall(SharedBuild.owns), s"$added not owned by a memo")
+    def cfg(iters: Int) = AlsEngine.Config(maxIter = iters, seed = 7L)
+    // explicit fits on both sides of the checkpoint rule (MLlib's
+    // checkpoints stay on past 10 iterations), and an implicit fit, which
+    // persists its own per-iteration factors
+    val fits: Seq[(String, () => ALSModel)] = Seq(
+      "explicit, 2 iterations" -> (() => AlsEngine.train(aug, cfg(2))),
+      "explicit, 12 iterations" -> (() => AlsEngine.train(aug, cfg(12))),
+      "implicit, 2 iterations" -> (() => AlsEngine.trainImplicit(aug, cfg(2))))
+    for ((label, fit) <- fits) {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val m = fit()
+      val added = sc.getPersistentRDDs.keySet.toSet -- before
+      assert(added == factorIds(m),
+        s"$label: added $added, factors ${factorIds(m)}")
+      assert(added.forall(SharedBuild.owns), s"$label: $added not owned")
+    }
+  }
+
+  test("factors equal a default-configured MLlib fit bit for bit") {
+    val sc = spark.sparkContext
+    // a checkpoint dir, so the reference checkpoints at its default
+    // interval as MLlib does once one is set
+    if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir("target/checkpoints")
+    val prepared = ratings.select(col("user_id").cast("int").as("user"),
+      col("item_id").cast("int").as("item"),
+      col("rating").cast("float").as("rating"))
+    def bits(f: DataFrame): Seq[(Int, Seq[Int])] = f.collect().toSeq
+      .map(r => (r.getInt(0),
+        r.getSeq[Float](1).map(java.lang.Float.floatToRawIntBits)))
+      .sortBy(_._1)
+    for (iters <- Seq(3, 12)) {
+      val cfg = AlsEngine.Config(maxIter = iters, seed = 11L)
+      val m = AlsEngine.train(ratings, cfg)
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val ref = new org.apache.spark.ml.recommendation.ALS()
+        .setRank(cfg.rank).setRegParam(cfg.regParam).setMaxIter(iters)
+        .setSeed(cfg.seed)
+        .setUserCol("user").setItemCol("item").setRatingCol("rating")
+        .setColdStartStrategy("drop")
+        .fit(prepared)
+      try {
+        assert(bits(m.userFactors) == bits(ref.userFactors), s"$iters")
+        assert(bits(m.itemFactors) == bits(ref.itemFactors), s"$iters")
+      } finally (sc.getPersistentRDDs.keySet.toSet -- before).foreach(id =>
+        sc.getPersistentRDDs.get(id).foreach(_.unpersist()))
+    }
   }
 }

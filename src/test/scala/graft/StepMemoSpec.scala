@@ -1,17 +1,9 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import scala.collection.concurrent.TrieMap
-
 import graft.ml.{AlsEngine, Antidote, Metric, Ratings}
 import org.apache.spark.ml.recommendation.ALSModel
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
-  SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 /** The unfairness step memo: a hit replays the stepped iteration bit for
@@ -29,44 +21,8 @@ class StepMemoSpec extends SparkTestBase {
   private def x0: DataFrame =
     Antidote.initHeuristic(spark, ratings, 0.01, stats, None)
 
-  /** Spark jobs run by `f` whose call site holds `frame` — read off the
-    * job's own call site, or, for adaptive stages submitted from a pool
-    * thread, off its SQL execution's. */
-  private def jobsUnder(frame: String)(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val execSites = TrieMap.empty[String, String]
-    val hits = new AtomicInteger
-    val sentinel = new CountDownLatch(1)
-    val group = "step-memo-sentinel-" + System.nanoTime()
-    val l = new SparkListener {
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case x: SparkListenerSQLExecutionStart =>
-          execSites(x.executionId.toString) = x.details
-        case _ => ()
-      }
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val props = Option(e.properties)
-        if (props.exists(_.getProperty("spark.jobGroup.id") == group))
-          sentinel.countDown()
-        val own = e.stageInfos.headOption.map(_.details).getOrElse("")
-        val exec = props.flatMap(p =>
-          Option(p.getProperty("spark.sql.execution.id")))
-        if ((own + exec.flatMap(execSites.get).getOrElse("")).contains(frame))
-          hits.incrementAndGet()
-      }
-    }
-    sc.addSparkListener(l)
-    try {
-      f
-      // events reach a listener in order: once the sentinel job's start
-      // is seen, every job `f` ran has been counted
-      sc.setJobGroup(group, "sentinel")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.clearJobGroup()
-      assert(sentinel.await(60, TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(l)
-    hits.get()
-  }
+  private def jobsUnder(frame: String)(f: => Unit): Int =
+    JobCount.jobsUnder(spark, frame)(f)
 
   private val stepFrame = "Antidote$.stepEvaluated"
 
