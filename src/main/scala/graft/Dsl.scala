@@ -29,6 +29,28 @@ object Dsl {
   def avg6(c: Column): Column =
     round(sum(dec2(c)).cast(DoubleType) / count(lit(1)), 6)
 
+  /** Two-sided normal p-value of `z` as an integer p9 = round(p·10⁹):
+    * 2·φ(z)·poly(t), t = 1/(1 + 0.2316419·|z|), the Zelen–Severo
+    * (A&S 26.2.17) tail polynomial, in [[pValue9Sql]]'s op order so the
+    * doubles are bit-identical. Quantized before any ranking or
+    * threshold, so multiple-testing procedures compare integers. */
+  def pValue9(z: Column): Column = {
+    val az = abs(z)
+    val t = lit(1) / (lit(1) + lit(0.2316419) * az)
+    round(lit(2) * (exp(-az * az / 2) * lit(0.3989422804014327)
+      * ((((lit(1.330274429) * t - lit(1.821255978)) * t
+        + lit(1.781477937)) * t - lit(0.356563782)) * t
+        + lit(0.319381530)) * t) * 1000000000L).cast(LongType)
+  }
+
+  /** DuckDB twin of [[pValue9]] over the SQL expression `z`. */
+  def pValue9Sql(z: String): String = {
+    val t = s"(1 / (1 + 0.2316419 * abs($z)))"
+    s"CAST(ROUND(2 * (exp(-abs($z) * abs($z) / 2) * 0.3989422804014327" +
+      s" * ((((1.330274429 * $t - 1.821255978) * $t + 1.781477937) * $t" +
+      s" - 0.356563782) * $t + 0.319381530) * $t) * 1000000000) AS BIGINT)"
+  }
+
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
     Tables.load(spark, sfDir, name)
 

@@ -24,6 +24,20 @@ object Clustering {
   def sqDist(a: Column, b: Column): Column =
     round(dot(a, a) - lit(2) * dot(a, b) + dot(b, b), 6)
 
+  /** DuckDB twin of [[sqDist]] over the SQL list expressions `a`, `b`. */
+  def sqDistSql(a: String, b: String): String =
+    s"ROUND(list_inner_product($a, $a) - 2 * list_inner_product($a, $b)" +
+      s" + list_inner_product($b, $b), 6)"
+
+  /** DuckDB CTE `name` (vec_id, `extra`…, cid, d2): [[sqDistSql]] from
+    * every point of `e` (vec_id, v) to every centroid of `c` (cid, cv);
+    * `extra` lists more `e` columns, each followed by ", ". */
+  def sqDistCte(name: String, extra: String = ""): String =
+    s"""$name AS (
+       |  SELECT e.vec_id, ${extra}c.cid,
+       |    ${sqDistSql("e.v", "c.cv")} AS d2
+       |  FROM e CROSS JOIN c)""".stripMargin
+
   /** Nearest-centroid assignment. `points` must carry (`idCol`, `vecCol`)
     * plus any pass-through columns; `centroids` carries (`cid`, `cvec`).
     * Returns the points' non-vector columns plus (`cluster`, `d2`).

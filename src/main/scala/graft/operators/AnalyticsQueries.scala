@@ -837,43 +837,16 @@ object AnalyticsQueries {
     * join references it three times. */
   val qTriangleCount = Q(
     "q_triangle_count",
-    """WITH li AS (
-      |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-      |e AS (
-      |  SELECT pa AS src, pb AS dst FROM (
-      |    SELECT a.pk AS pa, b.pk AS pb, count(*) AS n_co
-      |    FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-      |    GROUP BY 1, 2) c
-      |  WHERE n_co >= 2),
-      |tri AS (
-      |  SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
-      |  FROM e e1 JOIN e e2 ON e1.dst = e2.src
-      |    JOIN e e3 ON e3.src = e1.src AND e3.dst = e2.dst),
-      |pern AS (
-      |  SELECT v, count(*) AS n_tri FROM (
-      |    SELECT a AS v FROM tri
-      |    UNION ALL SELECT b FROM tri
-      |    UNION ALL SELECT c FROM tri) u
-      |  GROUP BY v)
+    s"""WITH ${PairStore.edgeCte()},
+      |${PairStore.triangleCte}
       |SELECT v, n_tri, tot.total_triangles
       |FROM pern, (SELECT CAST(sum(n_tri) / 3 AS BIGINT)
       |            AS total_triangles FROM pern) tot
       |ORDER BY n_tri DESC, v LIMIT 20""".stripMargin) { (s, d) =>
-    // support ≥ 2 edges off the shared PairStore (n_dist = the distinct
-    // co-occurrence count this query's CTE derives); the store frame is
-    // already checkpoint-backed, so the triple self-reference below
-    // re-reads blocks, not the fact join
-    val e = PairStore.pairStats(s, d)
-      .filter(col("n_dist") >= 2)
-      .select("src", "dst")
-    val tri = e.select(col("src").as("a"), col("dst").as("b"))
-      .join(e.select(col("src").as("b"), col("dst").as("c")), Seq("b"))
-      .join(e.select(col("src").as("a"), col("dst").as("c")), Seq("a", "c"))
-      .localCheckpoint()
-    val pern = tri.select(col("a").as("v"))
-      .unionByName(tri.select(col("b").as("v")))
-      .unionByName(tri.select(col("c").as("v")))
-      .groupBy("v").agg(count(lit(1)).as("n_tri"))
+    // the store frame is already checkpoint-backed, so the triangles'
+    // triple self-reference re-reads blocks, not the fact join
+    val pern = PairStore.triangleCounts(
+      PairStore.triangles(PairStore.edges(s, d)).localCheckpoint())
     pern.crossJoin(pern.agg((sum(col("n_tri")) / 3).cast(LongType)
         .as("total_triangles")))
       .orderBy(col("n_tri").desc, col("v"))
@@ -1139,14 +1112,7 @@ object AnalyticsQueries {
     * a bounded post-aggregation domain), never over vertices. */
   val qDegreeHist = Q(
     "q_degree_hist",
-    """WITH li AS (
-      |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-      |e AS (
-      |  SELECT pa AS src, pb AS dst FROM (
-      |    SELECT a.pk AS pa, b.pk AS pb, count(*) AS n_co
-      |    FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-      |    GROUP BY 1, 2) c
-      |  WHERE n_co >= 2),
+    s"""WITH ${PairStore.edgeCte()},
       |deg AS (
       |  SELECT v, count(*) AS degree FROM (
       |    SELECT src AS v FROM e UNION ALL SELECT dst FROM e) u
@@ -1157,9 +1123,7 @@ object AnalyticsQueries {
       |FROM hist ORDER BY degree""".stripMargin) { (s, d) =>
     // support ≥ 2 edges off the shared PairStore (n_dist = this CTE's
     // distinct co-occurrence count)
-    val e = PairStore.pairStats(s, d)
-      .filter(col("n_dist") >= 2)
-      .select("src", "dst")
+    val e = PairStore.edges(s, d)
     val deg = e.select(col("src").as("v"))
       .unionByName(e.select(col("dst").as("v")))
       .groupBy("v").agg(count(lit(1)).as("degree"))
@@ -1829,28 +1793,29 @@ object AnalyticsQueries {
       .orderBy("first_touch", "last_touch")
   }
 
-  /** One-way ANOVA F-test across ALL market segments on order totals —
-    * the k-group generalization of q_ttest_welch (does ANY segment's mean
-    * differ?). Per-group moment sums (n, Σcents, Σcents²) are exact
-    * DECIMAL(38)/HUGEINT; SSB/SSW are sums of k per-group double terms,
-    * which is reduction-order-sensitive, so each term keeps an EXACT
-    * integer numerator (n·q−s² and s² never leave decimal) with one
-    * division, then quantize-then-sum (round to the integer cent² unit —
-    * the terms are O(10¹⁴), so unit quantization sits far below double
-    * epsilon, let alone the round-6 output). One fact scan, one broadcast
-    * dim join, one bounded-domain (k=|segments|) aggregate. */
-  val qAnova = Q(
-    "q_anova",
-    """WITH x AS (
-      |  SELECT c_mktsegment AS seg,
-      |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-      |  FROM orders JOIN customer ON o_custkey = c_custkey),
-      |g AS (
-      |  SELECT seg, CAST(count(*) AS HUGEINT) AS ng,
-      |    CAST(sum(CAST(cents AS HUGEINT)) AS HUGEINT) AS sg,
-      |    sum(CAST(cents AS HUGEINT) * cents) AS qg
-      |  FROM x GROUP BY seg),
-      |tot AS (
+  /** One-way ANOVA sums (k, n, ssb, ssw) from per-group exact moments
+    * `g` (ng = count, sg = Σx, qg = Σx², DECIMAL(38)): each group's
+    * between and within term keeps an exact integer numerator, is divided
+    * once and quantized to an integer before the cross-group sum, so the
+    * sums are reduction-order-proof. Oracle twin: [[anovaSumsSql]]. */
+  private[operators] def anovaSums(g: DataFrame): DataFrame = {
+    val big38 = DecimalType(38, 0)
+    g.agg(count(lit(1)).as("k"),
+      sum(col("ng")).as("n"), sum(col("sg")).as("s"),
+      sum(round((col("sg") * col("sg")).cast(DoubleType)
+        / col("ng").cast(DoubleType)).cast(big38)).as("ssb_part"),
+      sum(round((col("ng") * col("qg") - col("sg") * col("sg"))
+        .cast(DoubleType) / col("ng").cast(DoubleType)).cast(big38)).as("ssw"))
+      .select(col("k"), col("n"),
+        (col("ssb_part").cast(DoubleType)
+          - col("s").cast(DoubleType) * col("s").cast(DoubleType)
+            / col("n").cast(DoubleType)).as("ssb"),
+        col("ssw").cast(DoubleType).as("ssw"))
+  }
+
+  /** DuckDB twin of [[anovaSums]]: the tot and f CTEs over `g`. */
+  private[operators] val anovaSumsSql =
+    """tot AS (
       |  SELECT count(*) AS k, sum(ng) AS n, sum(sg) AS s,
       |    sum(CAST(ROUND(CAST(sg * sg AS DOUBLE) / CAST(ng AS DOUBLE))
       |        AS HUGEINT)) AS ssb_part,
@@ -1863,7 +1828,30 @@ object AnalyticsQueries {
       |      - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / CAST(n AS DOUBLE)
       |      AS ssb,
       |    CAST(ssw AS DOUBLE) AS ssw
-      |  FROM tot)
+      |  FROM tot)""".stripMargin
+
+  /** One-way ANOVA F-test across ALL market segments on order totals —
+    * the k-group generalization of q_ttest_welch (does ANY segment's mean
+    * differ?). Per-group moment sums (n, Σcents, Σcents²) are exact
+    * DECIMAL(38)/HUGEINT; SSB/SSW are sums of k per-group double terms,
+    * which is reduction-order-sensitive, so each term keeps an EXACT
+    * integer numerator (n·q−s² and s² never leave decimal) with one
+    * division, then quantize-then-sum (round to the integer cent² unit —
+    * the terms are O(10¹⁴), so unit quantization sits far below double
+    * epsilon, let alone the round-6 output). One fact scan, one broadcast
+    * dim join, one bounded-domain (k=|segments|) aggregate. */
+  val qAnova = Q(
+    "q_anova",
+    s"""WITH x AS (
+      |  SELECT c_mktsegment AS seg,
+      |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+      |  FROM orders JOIN customer ON o_custkey = c_custkey),
+      |g AS (
+      |  SELECT seg, CAST(count(*) AS HUGEINT) AS ng,
+      |    CAST(sum(CAST(cents AS HUGEINT)) AS HUGEINT) AS sg,
+      |    sum(CAST(cents AS HUGEINT) * cents) AS qg
+      |  FROM x GROUP BY seg),
+      |$anovaSumsSql
       |SELECT CAST(k AS INT) AS k, CAST(n AS BIGINT) AS n,
       |  ROUND(ssb / (k - 1) / (ssw / (n - k)), 6) AS f_stat,
       |  ROUND(ssb / (ssb + ssw), 6) AS eta_sq
@@ -1878,17 +1866,7 @@ object AnalyticsQueries {
       count(lit(1)).cast(big38).as("ng"),
       sum(col("cents").cast(big38)).as("sg"),
       sum(col("cents").cast(big38) * col("cents")).as("qg"))
-    val tot = g.agg(count(lit(1)).as("k"),
-      sum(col("ng")).as("n"), sum(col("sg")).as("s"),
-      sum(round((col("sg") * col("sg")).cast(DoubleType)
-        / col("ng").cast(DoubleType)).cast(big38)).as("ssb_part"),
-      sum(round((col("ng") * col("qg") - col("sg") * col("sg"))
-        .cast(DoubleType) / col("ng").cast(DoubleType)).cast(big38)).as("ssw"))
-    val f = tot.select(col("k"), col("n"),
-      (col("ssb_part").cast(DoubleType)
-        - col("s").cast(DoubleType) * col("s").cast(DoubleType)
-          / col("n").cast(DoubleType)).as("ssb"),
-      col("ssw").cast(DoubleType).as("ssw"))
+    val f = anovaSums(g)
     f.select(col("k").cast(IntegerType).as("k"),
       col("n").cast(LongType).as("n"),
       round(col("ssb") / (col("k") - 1) / (col("ssw") / (col("n") - col("k"))), 6)
@@ -2054,14 +2032,7 @@ object AnalyticsQueries {
     * sparsification q_cc_labelprop documents. */
   val qGraph2hop = Q(
     "q_graph_2hop",
-    """WITH li AS (
-      |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-      |e AS (
-      |  SELECT pa AS src, pb AS dst FROM (
-      |    SELECT a.pk AS pa, b.pk AS pb, count(*) AS n_co
-      |    FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-      |    GROUP BY 1, 2) c
-      |  WHERE n_co >= 2),
+    s"""WITH ${PairStore.edgeCte()},
       |sym AS (SELECT src, dst FROM e UNION ALL SELECT dst, src FROM e),
       |hop2 AS (
       |  SELECT s1.src AS a, s2.dst AS b, count(DISTINCT s1.dst) AS n_via
@@ -2073,9 +2044,7 @@ object AnalyticsQueries {
     // support ≥ 2 edges off the shared PairStore; the store frame is
     // checkpoint-backed, so the three references below (two wedge sides
     // + anti) re-read blocks, not the fact join
-    val e = PairStore.pairStats(s, d)
-      .filter(col("n_dist") >= 2)
-      .select("src", "dst")
+    val e = PairStore.edges(s, d)
     val sym = e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
     val hop2 = sym.as("s1").join(sym.as("s2"),
         col("s1.dst") === col("s2.src") && col("s1.src") < col("s2.dst"))
@@ -2098,19 +2067,7 @@ object AnalyticsQueries {
     * window; at 100 TB the series is still tiny. */
   val qDecompose = Q(
     "q_decompose",
-    """WITH series AS (
-      |  SELECT CAST(o_orderdate AS DATE) AS day,
-      |    isodow(CAST(o_orderdate AS DATE)) AS dow,
-      |    sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
-      |      AS cents
-      |  FROM orders GROUP BY 1, 2),
-      |tr AS (
-      |  SELECT day, dow, cents,
-      |    sum(cents) OVER (ORDER BY day ROWS BETWEEN 3 PRECEDING
-      |      AND 3 FOLLOWING) AS tsum,
-      |    count(*) OVER (ORDER BY day ROWS BETWEEN 3 PRECEDING
-      |      AND 3 FOLLOWING) AS tn
-      |  FROM series),
+    s"""WITH ${DiagQueries.dowTrendSql},
       |full7 AS (
       |  SELECT day, dow, cents, tsum, 7 * cents - tsum AS det7
       |  FROM tr WHERE tn = 7),
@@ -2580,6 +2537,45 @@ object AnalyticsQueries {
       .orderBy("qty_bucket", "disc_pct")
   }
 
+  /** Each customer's first and last order date (o_custkey, first_d,
+    * last_d), and the latest last_d over all customers as a one-row frame
+    * (m): the activity span the survival queries measure. */
+  private[operators] def custSpans(s: SparkSession, d: String)
+      : (DataFrame, DataFrame) = {
+    val cust = t(s, d, "orders")
+      .groupBy("o_custkey")
+      .agg(min(col("o_orderdate").cast(DateType)).as("first_d"),
+        max(col("o_orderdate").cast(DateType)).as("last_d"))
+    (cust, cust.agg(max(col("last_d")).as("m")))
+  }
+
+  /** DuckDB twin of [[custSpans]]: the cust and mx CTEs. */
+  private[operators] val custSpansCte =
+    """cust AS (
+      |  SELECT o_custkey, MIN(CAST(o_orderdate AS DATE)) AS first_d,
+      |    MAX(CAST(o_orderdate AS DATE)) AS last_d
+      |  FROM orders GROUP BY 1),
+      |mx AS (SELECT MAX(last_d) AS m FROM cust)""".stripMargin
+
+  /** Per customer (t, ev): the days from first to last order, and 1 when
+    * the last order is more than 60 days before the latest one (churned),
+    * 0 when it is within them (right-censored). */
+  private def durations(s: SparkSession, d: String): DataFrame = {
+    val (cust, mx) = custSpans(s, d)
+    cust.crossJoin(broadcast(mx))
+      .select(datediff(col("last_d"), col("first_d")).as("t"),
+        when(datediff(col("m"), col("last_d")) > 60, 1L).otherwise(0L)
+          .as("ev"))
+  }
+
+  /** DuckDB twin of [[durations]]: [[custSpansCte]] and the durs CTE. */
+  private val durationsCte =
+    s"""$custSpansCte,
+       |durs AS (
+       |  SELECT datediff('day', first_d, last_d) AS t,
+       |    CASE WHEN datediff('day', last_d, m) > 60 THEN 1 ELSE 0 END AS ev
+       |  FROM cust, mx)""".stripMargin
+
   /** Kaplan–Meier survival over customer activity lifetimes: duration =
     * days between a customer's first and last order; customers whose last
     * order is within 60 days of the global max date are right-censored
@@ -2594,15 +2590,7 @@ object AnalyticsQueries {
     * DuckDB's is -inf) is emitted as survival 0 directly. */
   val qKaplanMeier = Q(
     "q_kaplan_meier",
-    """WITH cust AS (
-      |  SELECT o_custkey, MIN(CAST(o_orderdate AS DATE)) AS first_d,
-      |    MAX(CAST(o_orderdate AS DATE)) AS last_d
-      |  FROM orders GROUP BY 1),
-      |mx AS (SELECT MAX(last_d) AS m FROM cust),
-      |durs AS (
-      |  SELECT datediff('day', first_d, last_d) AS t,
-      |    CASE WHEN datediff('day', last_d, m) > 60 THEN 1 ELSE 0 END AS ev
-      |  FROM cust, mx),
+    s"""WITH $durationsCte,
       |g AS (
       |  SELECT t, sum(ev) AS d, sum(1 - ev) AS c, count(*) AS nrow
       |  FROM durs GROUP BY t),
@@ -2623,15 +2611,7 @@ object AnalyticsQueries {
       |  CASE WHEN d >= at_risk THEN 0.0 ELSE ROUND(exp(lsum), 6) END
       |    AS survival
       |FROM sv WHERE d > 0 ORDER BY t_days""".stripMargin) { (s, d) =>
-    val cust = t(s, d, "orders")
-      .groupBy("o_custkey")
-      .agg(min(col("o_orderdate").cast(DateType)).as("first_d"),
-        max(col("o_orderdate").cast(DateType)).as("last_d"))
-    val mx = cust.agg(max(col("last_d")).as("m"))
-    val durs = cust.crossJoin(broadcast(mx))
-      .select(datediff(col("last_d"), col("first_d")).as("t"),
-        when(datediff(col("m"), col("last_d")) > 60, 1L).otherwise(0L)
-          .as("ev"))
+    val durs = durations(s, d)
     val g = durs.groupBy("t")
       .agg(sum(col("ev")).as("d"), count(lit(1)).as("nrow"))
     // Bounded post-aggregation table (≤ distinct day-durations): the
@@ -2895,15 +2875,7 @@ object AnalyticsQueries {
     * tie-break. */
   val qJaccardNeighbors = Q(
     "q_jaccard_neighbors",
-    """WITH pairs AS (
-      |  SELECT a.l_partkey AS pa, b.l_partkey AS pb
-      |  FROM lineitem a JOIN lineitem b
-      |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-      |edges AS (
-      |  SELECT pa, pb FROM pairs GROUP BY pa, pb HAVING count(*) >= 2),
-      |adj AS (
-      |  SELECT pa AS node, pb AS nbr FROM edges
-      |  UNION ALL SELECT pb, pa FROM edges),
+    s"""WITH ${PairStore.rawAdjCte},
       |deg AS (SELECT node, count(*) AS d FROM adj GROUP BY node),
       |wedge AS (
       |  SELECT x.node AS a, y.node AS b, count(*) AS common
@@ -2914,14 +2886,7 @@ object AnalyticsQueries {
       |    / CAST(da.d + db.d - common AS DOUBLE), 6) AS jaccard
       |FROM wedge JOIN deg da ON a = da.node JOIN deg db ON b = db.node
       |ORDER BY jaccard DESC, a, b LIMIT 50""".stripMargin) { (s, d) =>
-    // raw line-pair-multiplicity ≥ 2 edges off the shared PairStore
-    // (n_raw = this query's non-distinct self-join count); the store is
-    // checkpoint-backed, so every consumer below re-reads blocks
-    val edges = PairStore.pairStats(s, d)
-      .filter(col("n_raw") >= 2)
-      .select(col("src").as("pa"), col("dst").as("pb"))
-    val adj = edges.select(col("pa").as("node"), col("pb").as("nbr"))
-      .unionByName(edges.select(col("pb").as("node"), col("pa").as("nbr")))
+    val adj = PairStore.rawAdjacency(s, d)
     val deg = adj.groupBy("node").agg(count(lit(1)).as("d"))
     val wedge = adj.select(col("node").as("a"), col("nbr"))
       .join(adj.select(col("node").as("b"), col("nbr").as("nbr2")),
@@ -3188,15 +3153,7 @@ object AnalyticsQueries {
     * table broadcasts. */
   val qAdamicAdar = Q(
     "q_adamic_adar",
-    """WITH pairs AS (
-      |  SELECT a.l_partkey AS pa, b.l_partkey AS pb
-      |  FROM lineitem a JOIN lineitem b
-      |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-      |edges AS (
-      |  SELECT pa, pb FROM pairs GROUP BY pa, pb HAVING count(*) >= 2),
-      |adj AS (
-      |  SELECT pa AS node, pb AS nbr FROM edges
-      |  UNION ALL SELECT pb, pa FROM edges),
+    s"""WITH ${PairStore.rawAdjCte},
       |deg AS (SELECT node, count(*) AS d FROM adj GROUP BY node),
       |aa AS (
       |  SELECT x.node AS a, y.node AS b, count(*) AS common,
@@ -3209,14 +3166,7 @@ object AnalyticsQueries {
       |  ROUND(CAST(aa9 AS DOUBLE) / 1000000000, 6) AS adamic_adar
       |FROM aa ORDER BY adamic_adar DESC, a, b LIMIT 50""".stripMargin) {
     (s, d) =>
-    // raw line-pair-multiplicity ≥ 2 edges off the shared PairStore
-    // (n_raw = this query's non-distinct self-join count); the store is
-    // checkpoint-backed, so every consumer below re-reads blocks
-    val edges = PairStore.pairStats(s, d)
-      .filter(col("n_raw") >= 2)
-      .select(col("src").as("pa"), col("dst").as("pb"))
-    val adj = edges.select(col("pa").as("node"), col("pb").as("nbr"))
-      .unionByName(edges.select(col("pb").as("node"), col("pa").as("nbr")))
+    val adj = PairStore.rawAdjacency(s, d)
     val deg = adj.groupBy("node").agg(count(lit(1)).as("d"))
     val term9 = round(lit(1000000000L)
       / log(col("d").cast(DoubleType))).cast(LongType)
@@ -3378,47 +3328,23 @@ object AnalyticsQueries {
     * top-25 by coefficient with total tiebreak. */
   val qClusteringCoeff = Q(
     "q_clustering_coeff",
-    """WITH li AS (
-      |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-      |e AS (
-      |  SELECT pa AS src, pb AS dst FROM (
-      |    SELECT a.pk AS pa, b.pk AS pb, count(*) AS n_co
-      |    FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-      |    GROUP BY 1, 2) c
-      |  WHERE n_co >= 2),
+    s"""WITH ${PairStore.edgeCte()},
       |adj AS (
       |  SELECT src AS node, dst AS nbr FROM e
       |  UNION ALL SELECT dst, src FROM e),
       |deg AS (SELECT node, count(*) AS d FROM adj GROUP BY node),
-      |tri AS (
-      |  SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
-      |  FROM e e1 JOIN e e2 ON e1.dst = e2.src
-      |    JOIN e e3 ON e3.src = e1.src AND e3.dst = e2.dst),
-      |pern AS (
-      |  SELECT v, count(*) AS n_tri FROM (
-      |    SELECT a AS v FROM tri
-      |    UNION ALL SELECT b FROM tri
-      |    UNION ALL SELECT c FROM tri) u
-      |  GROUP BY v)
+      |${PairStore.triangleCte}
       |SELECT p.v, p.n_tri, g.d,
       |  ROUND(2.0 * p.n_tri / (g.d * (g.d - 1)), 6) AS coeff
       |FROM pern p JOIN deg g ON p.v = g.node
       |WHERE g.d >= 2
       |ORDER BY coeff DESC, p.v LIMIT 25""".stripMargin) { (s, d) =>
     // support ≥ 2 edges off the shared, checkpoint-backed PairStore
-    val e = PairStore.pairStats(s, d)
-      .filter(col("n_dist") >= 2)
-      .select("src", "dst")
+    val e = PairStore.edges(s, d)
     val adj = e.select(col("src").as("node"), col("dst").as("nbr"))
       .unionByName(e.select(col("dst").as("node"), col("src").as("nbr")))
     val deg = adj.groupBy("node").agg(count(lit(1)).as("d"))
-    val tri = e.select(col("src").as("a"), col("dst").as("b"))
-      .join(e.select(col("src").as("b"), col("dst").as("c")), Seq("b"))
-      .join(e.select(col("src").as("a"), col("dst").as("c")), Seq("a", "c"))
-    val pern = tri.select(col("a").as("v"))
-      .unionByName(tri.select(col("b").as("v")))
-      .unionByName(tri.select(col("c").as("v")))
-      .groupBy("v").agg(count(lit(1)).as("n_tri"))
+    val pern = PairStore.triangleCounts(PairStore.triangles(e))
     pern.join(broadcast(deg), col("v") === col("node"))
       .filter(col("d") >= 2)
       .select(col("v"), col("n_tri"), col("d"),
@@ -3437,15 +3363,7 @@ object AnalyticsQueries {
     * table only. */
   val qHazardRate = Q(
     "q_hazard_rate",
-    """WITH cust AS (
-      |  SELECT o_custkey, MIN(CAST(o_orderdate AS DATE)) AS first_d,
-      |    MAX(CAST(o_orderdate AS DATE)) AS last_d
-      |  FROM orders GROUP BY 1),
-      |mx AS (SELECT MAX(last_d) AS m FROM cust),
-      |durs AS (
-      |  SELECT datediff('day', first_d, last_d) AS t,
-      |    CASE WHEN datediff('day', last_d, m) > 60 THEN 1 ELSE 0 END AS ev
-      |  FROM cust, mx),
+    s"""WITH $durationsCte,
       |g AS (
       |  SELECT t, CAST(sum(ev) AS BIGINT) AS d, count(*) AS nrow
       |  FROM durs GROUP BY t),
@@ -3465,15 +3383,7 @@ object AnalyticsQueries {
       |    AS hazard,
       |  ROUND(CAST(ch9 AS DOUBLE) / 1000000000, 6) AS cum_hazard
       |FROM ha WHERE d > 0 ORDER BY t_days""".stripMargin) { (s, d) =>
-    val cust = t(s, d, "orders")
-      .groupBy("o_custkey")
-      .agg(min(col("o_orderdate").cast(DateType)).as("first_d"),
-        max(col("o_orderdate").cast(DateType)).as("last_d"))
-    val mx = cust.agg(max(col("last_d")).as("m"))
-    val durs = cust.crossJoin(broadcast(mx))
-      .select(datediff(col("last_d"), col("first_d")).as("t"),
-        when(datediff(col("m"), col("last_d")) > 60, 1L).otherwise(0L)
-          .as("ev"))
+    val durs = durations(s, d)
     val g = durs.groupBy("t")
       .agg(sum(col("ev")).cast(LongType).as("d"), count(lit(1)).as("nrow"))
     // Bounded post-agg duration domain: single-partition windows are fine.
@@ -4289,6 +4199,58 @@ object AnalyticsQueries {
           / (col("v9").cast(DoubleType) / 1e9), 6).as("chi2"))
   }
 
+  /** The per-nation urgent-share z-test panel that q_fdr_bh,
+    * q_holm_bonferroni and q_benjamini_yekutieli correct: per nation
+    * (n_name) its order count n1 and urgent count u1, the totals nt and
+    * ut, the two-proportion z of the nation against all other orders,
+    * and its [[graft.Dsl.pValue9]] p9. Counts are exact; z is one double
+    * per bounded nation row. */
+  private[operators] def urgentZ(s: SparkSession, d: String): DataFrame = {
+    val o = t(s, d, "orders")
+      .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
+      .join(broadcast(t(s, d, "nation")),
+        col("c_nationkey") === col("n_nationkey"))
+      .select(col("n_name"),
+        when(col("o_orderpriority") === "1-URGENT", 1L).otherwise(0L)
+          .as("u"))
+    val pern = o.groupBy("n_name")
+      .agg(count(lit(1)).as("n1"), sum(col("u")).as("u1"))
+    val tot = o.agg(count(lit(1)).as("nt"), sum(col("u")).as("ut"))
+    pern.crossJoin(broadcast(tot))
+      .withColumn("z",
+        (col("u1").cast(DoubleType) / col("n1")
+          - (col("ut") - col("u1")).cast(DoubleType)
+            / (col("nt") - col("n1")))
+        / sqrt(col("ut").cast(DoubleType) / col("nt")
+          * (lit(1) - col("ut").cast(DoubleType) / col("nt"))
+          * (lit(1.0) / col("n1") + lit(1.0) / (col("nt") - col("n1")))))
+      .withColumn("p9", pValue9(col("z")))
+  }
+
+  /** DuckDB twin of [[urgentZ]]: the o, pern, tot, zt and pv CTEs, pv
+    * being (n_name, n1, u1, z, p9); `ztCols` are zt's leading columns. */
+  private[operators] def urgentZCte(ztCols: String = "n_name, n1, u1")
+      : String =
+    s"""o AS (
+       |  SELECT n.n_name,
+       |    CASE WHEN o.o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS u
+       |  FROM orders o
+       |  JOIN customer c ON o.o_custkey = c.c_custkey
+       |  JOIN nation n ON c.c_nationkey = n.n_nationkey),
+       |pern AS (
+       |  SELECT n_name, count(*) AS n1, sum(u) AS u1 FROM o GROUP BY 1),
+       |tot AS (SELECT count(*) AS nt, sum(u) AS ut FROM o),
+       |zt AS (
+       |  SELECT $ztCols,
+       |    (CAST(u1 AS DOUBLE) / n1 - CAST(ut - u1 AS DOUBLE) / (nt - n1))
+       |      / sqrt(CAST(ut AS DOUBLE) / nt * (1 - CAST(ut AS DOUBLE) / nt)
+       |        * (1.0 / n1 + 1.0 / (nt - n1))) AS z
+       |  FROM pern, tot),
+       |pv AS (
+       |  SELECT n_name, n1, u1, z,
+       |    ${pValue9Sql("z")} AS p9
+       |  FROM zt)""".stripMargin
+
   /** Benjamini-Hochberg FDR correction over the per-nation urgent-share
     * z-tests — the multiple-comparisons discipline q_abtest_ztest lacks
     * when run 25× at once. Counts are exact; z and the normal tail
@@ -4299,31 +4261,7 @@ object AnalyticsQueries {
     * |nation| table. */
   val qFdrBh = Q(
     "q_fdr_bh",
-    """WITH o AS (
-      |  SELECT n.n_name,
-      |    CASE WHEN o.o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS u
-      |  FROM orders o
-      |  JOIN customer c ON o.o_custkey = c.c_custkey
-      |  JOIN nation n ON c.c_nationkey = n.n_nationkey),
-      |pern AS (
-      |  SELECT n_name, count(*) AS n1, sum(u) AS u1 FROM o GROUP BY 1),
-      |tot AS (SELECT count(*) AS nt, sum(u) AS ut FROM o),
-      |zt AS (
-      |  SELECT n_name, n1, u1, nt - n1 AS n2, ut - u1 AS u2,
-      |    (CAST(u1 AS DOUBLE) / n1 - CAST(ut - u1 AS DOUBLE) / (nt - n1))
-      |      / sqrt(CAST(ut AS DOUBLE) / nt * (1 - CAST(ut AS DOUBLE) / nt)
-      |        * (1.0 / n1 + 1.0 / (nt - n1))) AS z
-      |  FROM pern, tot),
-      |pv AS (
-      |  SELECT n_name, n1, u1, z,
-      |    CAST(ROUND(2 * (exp(-abs(z) * abs(z) / 2) * 0.3989422804014327
-      |      * ((((1.330274429 * (1 / (1 + 0.2316419 * abs(z)))
-      |        - 1.821255978) * (1 / (1 + 0.2316419 * abs(z)))
-      |        + 1.781477937) * (1 / (1 + 0.2316419 * abs(z)))
-      |        - 0.356563782) * (1 / (1 + 0.2316419 * abs(z)))
-      |        + 0.319381530) * (1 / (1 + 0.2316419 * abs(z))))
-      |      * 1000000000) AS BIGINT) AS p9
-      |  FROM zt),
+    s"""WITH ${urgentZCte("n_name, n1, u1, nt - n1 AS n2, ut - u1 AS u2")},
       |rk AS (
       |  SELECT *, row_number() OVER (ORDER BY p9, n_name) AS rank,
       |    count(*) OVER () AS m
@@ -4338,34 +4276,7 @@ object AnalyticsQueries {
       |  CAST(rank AS BIGINT) AS p_rank,
       |  CASE WHEN rank <= max_rank THEN 1 ELSE 0 END AS rejected
       |FROM cut ORDER BY p_rank, n_name""".stripMargin) { (s, d) =>
-    val o = t(s, d, "orders")
-      .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(t(s, d, "nation")),
-        col("c_nationkey") === col("n_nationkey"))
-      .select(col("n_name"),
-        when(col("o_orderpriority") === "1-URGENT", 1L).otherwise(0L)
-          .as("u"))
-    val pern = o.groupBy("n_name")
-      .agg(count(lit(1)).as("n1"), sum(col("u")).as("u1"))
-    val tot = o.agg(count(lit(1)).as("nt"), sum(col("u")).as("ut"))
-    val zt = pern.crossJoin(broadcast(tot))
-      .withColumn("z",
-        (col("u1").cast(DoubleType) / col("n1")
-          - (col("ut") - col("u1")).cast(DoubleType)
-            / (col("nt") - col("n1")))
-        / sqrt(col("ut").cast(DoubleType) / col("nt")
-          * (lit(1) - col("ut").cast(DoubleType) / col("nt"))
-          * (lit(1.0) / col("n1") + lit(1.0) / (col("nt") - col("n1")))))
-    // Zelen–Severo A&S 26.2.17 upper-tail polynomial; op order matches
-    // the oracle string exactly so the doubles are bit-identical.
-    val tcol = lit(1) / (lit(1) + lit(0.2316419) * abs(col("z")))
-    val tail = exp(-abs(col("z")) * abs(col("z")) / 2)
-      .multiply(lit(0.3989422804014327))
-      .multiply(((((lit(1.330274429) * tcol - lit(1.821255978)) * tcol
-        + lit(1.781477937)) * tcol - lit(0.356563782)) * tcol
-        + lit(0.319381530)) * tcol)
-    val pv = zt.withColumn("p9",
-      round(lit(2) * tail * 1000000000L).cast(LongType))
+    val pv = urgentZ(s, d)
     val wRank = Window.orderBy("p9", "n_name")
     val wAll = Window.partitionBy()
     val rk = pv
@@ -4631,14 +4542,7 @@ object AnalyticsQueries {
     * sweeps only remove. The oracle unrolls the three sweeps as CTEs. */
   val qKcore = Q(
     "q_kcore",
-    """WITH li AS (
-      |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-      |e0 AS (
-      |  SELECT pa AS src, pb AS dst FROM (
-      |    SELECT a.pk AS pa, b.pk AS pb, count(*) AS n_co
-      |    FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-      |    GROUP BY 1, 2) c
-      |  WHERE n_co >= 2),
+    s"""WITH ${PairStore.edgeCte("e0")},
       |d1 AS (SELECT v, count(*) AS deg FROM (
       |    SELECT src AS v FROM e0 UNION ALL SELECT dst FROM e0) u
       |  GROUP BY v),
@@ -4669,9 +4573,7 @@ object AnalyticsQueries {
       |FROM df, tot
       |ORDER BY core_deg DESC, node LIMIT 50""".stripMargin) { (s, d) =>
     // support ≥ 2 edges off the shared, checkpoint-backed PairStore
-    var e = PairStore.pairStats(s, d)
-      .filter(col("n_dist") >= 2)
-      .select("src", "dst")
+    var e = PairStore.edges(s, d)
     var i = 0
     while (i < 3) {
       val deg = e.select(col("src").as("v"))
@@ -5130,15 +5032,7 @@ object AnalyticsQueries {
     * never facts); crossings are conditional mins over that table. */
   val qSurvivalMedian = Q(
     "q_survival_median",
-    """WITH cust AS (
-      |  SELECT o_custkey, MIN(CAST(o_orderdate AS DATE)) AS first_d,
-      |    MAX(CAST(o_orderdate AS DATE)) AS last_d
-      |  FROM orders GROUP BY 1),
-      |mx AS (SELECT MAX(last_d) AS m FROM cust),
-      |durs AS (
-      |  SELECT datediff('day', first_d, last_d) AS t,
-      |    CASE WHEN datediff('day', last_d, m) > 60 THEN 1 ELSE 0 END AS ev
-      |  FROM cust, mx),
+    s"""WITH $durationsCte,
       |g AS (
       |  SELECT t, sum(ev) AS d, count(*) AS nrow FROM durs GROUP BY t),
       |ar AS (
@@ -5162,15 +5056,7 @@ object AnalyticsQueries {
       |  CAST(min(CASE WHEN s <= 0.25 THEN t END) AS BIGINT) AS t_q25,
       |  CAST(max(t) AS BIGINT) AS t_max
       |FROM ev""".stripMargin) { (s, d) =>
-    val cust = t(s, d, "orders")
-      .groupBy("o_custkey")
-      .agg(min(col("o_orderdate").cast(DateType)).as("first_d"),
-        max(col("o_orderdate").cast(DateType)).as("last_d"))
-    val mx = cust.agg(max(col("last_d")).as("m"))
-    val durs = cust.crossJoin(broadcast(mx))
-      .select(datediff(col("last_d"), col("first_d")).as("t"),
-        when(datediff(col("m"), col("last_d")) > 60, 1L).otherwise(0L)
-          .as("ev"))
+    val durs = durations(s, d)
     val g = durs.groupBy("t")
       .agg(sum(col("ev")).as("d"), count(lit(1)).as("nrow"))
     val wAr = Window.orderBy("t")
@@ -5281,15 +5167,7 @@ object AnalyticsQueries {
     * with (score DESC, a, b). */
   val qPrefAttach = Q(
     "q_pref_attach",
-    """WITH pairs AS (
-      |  SELECT a.l_partkey AS pa, b.l_partkey AS pb
-      |  FROM lineitem a JOIN lineitem b
-      |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-      |edges AS (
-      |  SELECT pa, pb FROM pairs GROUP BY pa, pb HAVING count(*) >= 2),
-      |adj AS (
-      |  SELECT pa AS node, pb AS nbr FROM edges
-      |  UNION ALL SELECT pb, pa FROM edges),
+    s"""WITH ${PairStore.rawAdjCte},
       |deg AS (SELECT node, CAST(count(*) AS BIGINT) AS d
       |        FROM adj GROUP BY node),
       |cand AS (
@@ -5300,14 +5178,7 @@ object AnalyticsQueries {
       |FROM cand JOIN deg da ON cand.a = da.node
       |          JOIN deg db ON cand.b = db.node
       |ORDER BY pa_score DESC, a, b LIMIT 30""".stripMargin) { (s, d) =>
-    // raw line-pair-multiplicity ≥ 2 edges off the shared PairStore
-    // (n_raw = this query's non-distinct self-join count); the store is
-    // checkpoint-backed, so every consumer below re-reads blocks
-    val edges = PairStore.pairStats(s, d)
-      .filter(col("n_raw") >= 2)
-      .select(col("src").as("pa"), col("dst").as("pb"))
-    val adj = edges.select(col("pa").as("node"), col("pb").as("nbr"))
-      .unionByName(edges.select(col("pb").as("node"), col("pa").as("nbr")))
+    val adj = PairStore.rawAdjacency(s, d)
     val deg = adj.groupBy("node").agg(count(lit(1)).cast(LongType).as("d"))
     val cand = adj.select(col("node").as("a"), col("nbr"))
       .join(adj.select(col("node").as("b"), col("nbr").as("nbr2")),
@@ -5333,15 +5204,7 @@ object AnalyticsQueries {
     * division per output row. */
   val qAvgNbrDegree = Q(
     "q_avg_nbr_degree",
-    """WITH pairs AS (
-      |  SELECT a.l_partkey AS pa, b.l_partkey AS pb
-      |  FROM lineitem a JOIN lineitem b
-      |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-      |edges AS (
-      |  SELECT pa, pb FROM pairs GROUP BY pa, pb HAVING count(*) >= 2),
-      |adj AS (
-      |  SELECT pa AS node, pb AS nbr FROM edges
-      |  UNION ALL SELECT pb, pa FROM edges),
+    s"""WITH ${PairStore.rawAdjCte},
       |deg AS (SELECT node, CAST(count(*) AS BIGINT) AS d
       |        FROM adj GROUP BY node),
       |nbrdeg AS (
@@ -5354,14 +5217,7 @@ object AnalyticsQueries {
       |    AS knn
       |FROM nbrdeg GROUP BY k ORDER BY k""".stripMargin) { (s, d) =>
     val big38 = DecimalType(38, 0)
-    // raw line-pair-multiplicity ≥ 2 edges off the shared PairStore
-    // (n_raw = this query's non-distinct self-join count); the store is
-    // checkpoint-backed, so every consumer below re-reads blocks
-    val edges = PairStore.pairStats(s, d)
-      .filter(col("n_raw") >= 2)
-      .select(col("src").as("pa"), col("dst").as("pb"))
-    val adj = edges.select(col("pa").as("node"), col("pb").as("nbr"))
-      .unionByName(edges.select(col("pb").as("node"), col("pa").as("nbr")))
+    val adj = PairStore.rawAdjacency(s, d)
     val deg = adj.groupBy("node").agg(count(lit(1)).cast(LongType).as("d"))
     // |V|-sized degree table: vertex-keyed SMJs, not broadcasts
     val nbrdeg = adj

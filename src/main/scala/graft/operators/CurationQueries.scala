@@ -408,7 +408,7 @@ object CurationQueries {
     * end-to-end; output is the per-language-pair dup count. */
   val qCrosslingualDups = Q(
     "q_crosslingual_dups",
-    """WITH e0 AS (
+    s"""WITH e0 AS (
       |  SELECT e.vec_id, d.lang,
       |    list_transform(e.embedding, x -> CAST(x AS DOUBLE)) AS v
       |  FROM embeddings e JOIN documents d ON e.vec_id = d.doc_id),
@@ -418,12 +418,7 @@ object CurationQueries {
       |  SELECT vec_id + 2000000, 'xx', list_transform(v, x -> x * 1.05)
       |  FROM e0 WHERE vec_id % 40 = 0),
       |c AS (SELECT vec_id AS cid, v AS cv FROM e0 WHERE vec_id < 64),
-      |dist AS (
-      |  SELECT e.vec_id, c.cid,
-      |    ROUND(list_inner_product(e.v, e.v)
-      |      - 2 * list_inner_product(e.v, c.cv)
-      |      + list_inner_product(c.cv, c.cv), 6) AS d2
-      |  FROM e CROSS JOIN c),
+      |${graft.llm.Clustering.sqDistCte("dist")},
       |a0 AS (
       |  SELECT vec_id, cid,
       |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rk

@@ -875,79 +875,6 @@ object DiagQueries {
         1).otherwise(0).as("level_stationary"))
   }
 
-  /** Raw periodogram of the standardized monthly revenue series: for each
-    * Fourier frequency k = 1..n/2, the power share
-    * P_k = S_c² + S_s² with S_c = Σ_t z_t·cos(2πkt/n). The series is
-    * standardized and ·10⁶-quantized ONCE (μ, σ from exact moments; the
-    * per-row double ops are order-identical on both engines), the cos/sin
-    * weights are ·10⁶-quantized per (k,t), so every S_c/S_s is an EXACT
-    * integer sum and power shares are exact-int ratios — merge-order-proof
-    * and scale-free (standardization kills the cents magnitude). The
-    * (k × t) expansion is ≤ 42·84 rows at any SF. The k=12-month peak is
-    * the seasonality detector q_seasonality reads off directly. */
-  val qPeriodogram = Q(
-    "q_periodogram",
-    s"""WITH $monthlySql,
-      |st AS (
-      |  SELECT count(*) AS n, sum(CAST(cents AS HUGEINT)) AS s,
-      |    sum(CAST(cents AS HUGEINT) * cents) AS sq
-      |  FROM ser),
-      |mz AS (
-      |  SELECT n, CAST(s AS DOUBLE) / n AS mu,
-      |    sqrt((CAST(sq AS DOUBLE)
-      |      - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / n) / n) AS sd
-      |  FROM st),
-      |z AS (
-      |  SELECT row_number() OVER (ORDER BY mth) - 1 AS tt,
-      |    CAST(round((CAST(cents AS DOUBLE) - mu) / sd * 1000000)
-      |      AS HUGEINT) AS z6, n
-      |  FROM ser, mz),
-      |k AS (SELECT tt + 1 AS k FROM z WHERE tt + 1 <= n // 2),
-      |sp AS (
-      |  SELECT k.k,
-      |    sum(z.z6 * CAST(round(cos(2 * pi() * k.k * z.tt
-      |      / CAST(z.n AS DOUBLE)) * 1000000) AS HUGEINT)) AS sc,
-      |    sum(z.z6 * CAST(round(sin(2 * pi() * k.k * z.tt
-      |      / CAST(z.n AS DOUBLE)) * 1000000) AS HUGEINT)) AS ss
-      |  FROM k, z GROUP BY k.k),
-      |pw AS (
-      |  SELECT k, sc * sc + ss * ss AS p,
-      |    sum(sc * sc + ss * ss) OVER () AS ptot,
-      |    max(n) OVER () AS n
-      |  FROM sp, (SELECT max(n) AS n FROM z))
-      |SELECT CAST(k AS BIGINT) AS k,
-      |  ROUND(CAST(n AS DOUBLE) / k, 2) AS period_months,
-      |  ROUND(CAST(p AS DOUBLE) / CAST(ptot AS DOUBLE), 6) AS power_share
-      |FROM pw ORDER BY k""".stripMargin) { (s, d) =>
-    val (zDf, _) = standardizedMonthly(s, d)
-    val kDf = zDf.filter(col("tt") + 1 <= expr("n DIV 2"))
-      .select((col("tt") + 1).as("k"))
-    // broadcast the months-bounded panel explicitly: at sf1 the
-    // estimator-driven broadcast of this post-agg frame silently
-    // demoted to CartesianProduct (the round-9 regression class,
-    // one decade up) -- the panel is <= n_months rows by construction
-    val sp = kDf.crossJoin(broadcast(zDf))
-      .groupBy("k")
-      .agg(
-        sum(col("z6") * round(cos(lit(2) * lit(math.Pi) * col("k")
-          * col("tt") / col("n").cast(DoubleType)) * 1000000)
-          .cast(big38)).as("sc"),
-        sum(col("z6") * round(sin(lit(2) * lit(math.Pi) * col("k")
-          * col("tt") / col("n").cast(DoubleType)) * 1000000)
-          .cast(big38)).as("ss"))
-    val nDf = zDf.agg(max(col("n")).as("n"))
-    val pRaw = sp.crossJoin(broadcast(nDf))
-      .select(col("k"), (col("sc") * col("sc") + col("ss") * col("ss"))
-        .as("p"), col("n"))
-    val ptot = pRaw.agg(sum(col("p")).as("ptot"))
-    val pw = pRaw.crossJoin(broadcast(ptot))
-    pw.select(col("k").cast(LongType).as("k"),
-        round(col("n").cast(DoubleType) / col("k"), 2).as("period_months"),
-        round(col("p").cast(DoubleType) / col("ptot").cast(DoubleType), 6)
-          .as("power_share"))
-      .orderBy("k")
-  }
-
   /** Standardized, ·10⁶-quantized monthly series shared by the spectral
     * queries: (tt 0-based month index, z6 BIGINT, n). */
   private def standardizedMonthly(
@@ -969,6 +896,91 @@ object DiagQueries {
     (z, mz)
   }
 
+  /** DuckDB twin of [[standardizedMonthly]] and [[fourierSums]]: the ser,
+    * st, mz and z CTEs, then k and sp (k, sc, ss). */
+  private val fourierSql =
+    s"""$monthlySql,
+       |st AS (
+       |  SELECT count(*) AS n, sum(CAST(cents AS HUGEINT)) AS s,
+       |    sum(CAST(cents AS HUGEINT) * cents) AS sq
+       |  FROM ser),
+       |mz AS (
+       |  SELECT n, CAST(s AS DOUBLE) / n AS mu,
+       |    sqrt((CAST(sq AS DOUBLE)
+       |      - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / n) / n) AS sd
+       |  FROM st),
+       |z AS (
+       |  SELECT row_number() OVER (ORDER BY mth) - 1 AS tt,
+       |    CAST(round((CAST(cents AS DOUBLE) - mu) / sd * 1000000)
+       |      AS HUGEINT) AS z6, n
+       |  FROM ser, mz),
+       |k AS (SELECT tt + 1 AS k FROM z WHERE tt + 1 <= n // 2),
+       |sp AS (
+       |  SELECT k.k,
+       |    sum(z.z6 * CAST(round(cos(2 * pi() * k.k * z.tt
+       |      / CAST(z.n AS DOUBLE)) * 1000000) AS HUGEINT)) AS sc,
+       |    sum(z.z6 * CAST(round(sin(2 * pi() * k.k * z.tt
+       |      / CAST(z.n AS DOUBLE)) * 1000000) AS HUGEINT)) AS ss
+       |  FROM k, z GROUP BY k.k)""".stripMargin
+
+  /** Per Fourier frequency k = 1..n/2 of the standardized series `z`
+    * (tt, z6, n), the ·10⁶-quantized cosine and sine sums (k, sc, ss):
+    * exact integer sums over the (k × t) panel, ≤ 42·84 rows at any SF. */
+  private def fourierSums(z: DataFrame): DataFrame = {
+    val kDf = z.filter(col("tt") + 1 <= expr("n DIV 2"))
+      .select((col("tt") + 1).as("k"))
+    // broadcast the months-bounded panel explicitly: at sf1 the
+    // estimator-driven broadcast of this post-agg frame silently
+    // demoted to CartesianProduct (the round-9 regression class,
+    // one decade up) -- the panel is <= n_months rows by construction
+    kDf.crossJoin(broadcast(z))
+      .groupBy("k")
+      .agg(
+        sum(col("z6") * round(cos(lit(2) * lit(math.Pi) * col("k")
+          * col("tt") / col("n").cast(DoubleType)) * 1000000)
+          .cast(big38)).as("sc"),
+        sum(col("z6") * round(sin(lit(2) * lit(math.Pi) * col("k")
+          * col("tt") / col("n").cast(DoubleType)) * 1000000)
+          .cast(big38)).as("ss"))
+  }
+
+  /** Raw periodogram of the standardized monthly revenue series: for each
+    * Fourier frequency k = 1..n/2, the power share
+    * P_k = S_c² + S_s² with S_c = Σ_t z_t·cos(2πkt/n). The series is
+    * standardized and ·10⁶-quantized ONCE (μ, σ from exact moments; the
+    * per-row double ops are order-identical on both engines), the cos/sin
+    * weights are ·10⁶-quantized per (k,t), so every S_c/S_s is an EXACT
+    * integer sum and power shares are exact-int ratios — merge-order-proof
+    * and scale-free (standardization kills the cents magnitude). The
+    * (k × t) expansion is ≤ 42·84 rows at any SF. The k=12-month peak is
+    * the seasonality detector q_seasonality reads off directly. */
+  val qPeriodogram = Q(
+    "q_periodogram",
+    s"""WITH $fourierSql,
+      |pw AS (
+      |  SELECT k, sc * sc + ss * ss AS p,
+      |    sum(sc * sc + ss * ss) OVER () AS ptot,
+      |    max(n) OVER () AS n
+      |  FROM sp, (SELECT max(n) AS n FROM z))
+      |SELECT CAST(k AS BIGINT) AS k,
+      |  ROUND(CAST(n AS DOUBLE) / k, 2) AS period_months,
+      |  ROUND(CAST(p AS DOUBLE) / CAST(ptot AS DOUBLE), 6) AS power_share
+      |FROM pw ORDER BY k""".stripMargin) { (s, d) =>
+    val (zDf, _) = standardizedMonthly(s, d)
+    val sp = fourierSums(zDf)
+    val nDf = zDf.agg(max(col("n")).as("n"))
+    val pRaw = sp.crossJoin(broadcast(nDf))
+      .select(col("k"), (col("sc") * col("sc") + col("ss") * col("ss"))
+        .as("p"), col("n"))
+    val ptot = pRaw.agg(sum(col("p")).as("ptot"))
+    val pw = pRaw.crossJoin(broadcast(ptot))
+    pw.select(col("k").cast(LongType).as("k"),
+        round(col("n").cast(DoubleType) / col("k"), 2).as("period_months"),
+        round(col("p").cast(DoubleType) / col("ptot").cast(DoubleType), 6)
+          .as("power_share"))
+      .orderBy("k")
+  }
+
   /** Spectral entropy of the q_periodogram power distribution — one
     * number for "how concentrated is the series' energy": ~0 means one
     * dominant cycle (strong seasonality ⇒ forecastable), ~1 (normalized)
@@ -977,29 +989,7 @@ object DiagQueries {
     * (the q_bartlett ln idiom), so the sum is merge-order-proof. */
   val qSpectralEntropy = Q(
     "q_spectral_entropy",
-    s"""WITH $monthlySql,
-      |st AS (
-      |  SELECT count(*) AS n, sum(CAST(cents AS HUGEINT)) AS s,
-      |    sum(CAST(cents AS HUGEINT) * cents) AS sq
-      |  FROM ser),
-      |mz AS (
-      |  SELECT n, CAST(s AS DOUBLE) / n AS mu,
-      |    sqrt((CAST(sq AS DOUBLE)
-      |      - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / n) / n) AS sd
-      |  FROM st),
-      |z AS (
-      |  SELECT row_number() OVER (ORDER BY mth) - 1 AS tt,
-      |    CAST(round((CAST(cents AS DOUBLE) - mu) / sd * 1000000)
-      |      AS HUGEINT) AS z6, n
-      |  FROM ser, mz),
-      |k AS (SELECT tt + 1 AS k FROM z WHERE tt + 1 <= n // 2),
-      |sp AS (
-      |  SELECT k.k,
-      |    sum(z.z6 * CAST(round(cos(2 * pi() * k.k * z.tt
-      |      / CAST(z.n AS DOUBLE)) * 1000000) AS HUGEINT)) AS sc,
-      |    sum(z.z6 * CAST(round(sin(2 * pi() * k.k * z.tt
-      |      / CAST(z.n AS DOUBLE)) * 1000000) AS HUGEINT)) AS ss
-      |  FROM k, z GROUP BY k.k),
+    s"""WITH $fourierSql,
       |pw AS (
       |  SELECT k, sc * sc + ss * ss AS p,
       |    sum(sc * sc + ss * ss) OVER () AS ptot
@@ -1015,22 +1005,7 @@ object DiagQueries {
       |  ROUND(-CAST(c12 AS DOUBLE) / 1e12 / ln(CAST(nf AS DOUBLE)), 6)
       |    AS entropy_norm
       |FROM terms""".stripMargin) { (s, d) =>
-    val (zDf, _) = standardizedMonthly(s, d)
-    val kDf = zDf.filter(col("tt") + 1 <= expr("n DIV 2"))
-      .select((col("tt") + 1).as("k"))
-    // broadcast the months-bounded panel explicitly: at sf1 the
-    // estimator-driven broadcast of this post-agg frame silently
-    // demoted to CartesianProduct (the round-9 regression class,
-    // one decade up) -- the panel is <= n_months rows by construction
-    val sp = kDf.crossJoin(broadcast(zDf))
-      .groupBy("k")
-      .agg(
-        sum(col("z6") * round(cos(lit(2) * lit(math.Pi) * col("k")
-          * col("tt") / col("n").cast(DoubleType)) * 1000000)
-          .cast(big38)).as("sc"),
-        sum(col("z6") * round(sin(lit(2) * lit(math.Pi) * col("k")
-          * col("tt") / col("n").cast(DoubleType)) * 1000000)
-          .cast(big38)).as("ss"))
+    val sp = fourierSums(standardizedMonthly(s, d)._1)
     val pRaw = sp
       .select((col("sc") * col("sc") + col("ss") * col("ss")).as("p"))
     val ptot = pRaw.agg(sum(col("p")).as("ptot"))
@@ -1299,17 +1274,11 @@ object DiagQueries {
       when(abs(z) > 1.96, 1).otherwise(0).as("significant"))
   }
 
-  /** Hyndman trend/seasonal STRENGTH of the daily revenue series — the
-    * one-number "is this series forecastable, and by what" summary over
-    * the q_decompose components: F = max(0, 1 − Var(R)/Var(X+R)). The
-    * decomposition stays EXACT end-to-end: det7 = 7·y − Σ₇y is integer,
-    * the per-dow seasonal is quantized to one integer per dow (the
-    * q_anova ssw idiom), so the residual series is integer and all three
-    * variances come from exact DECIMAL(38) moments; the two F ratios are
-    * one-row double expressions. */
-  val qDecompStrength = Q(
-    "q_decomp_strength",
-    """WITH series AS (
+  /** DuckDB daily revenue series with its ISO day of week and centered
+    * 7-day trend: series (day, dow, cents) and tr (…, tsum, tn), tn < 7
+    * at the ends. Shared by the seasonal-decomposition oracles. */
+  private[operators] val dowTrendSql =
+    """series AS (
       |  SELECT CAST(o_orderdate AS DATE) AS day,
       |    isodow(CAST(o_orderdate AS DATE)) AS dow,
       |    sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
@@ -1321,15 +1290,56 @@ object DiagQueries {
       |      AND 3 FOLLOWING) AS tsum,
       |    count(*) OVER (ORDER BY day ROWS BETWEEN 3 PRECEDING
       |      AND 3 FOLLOWING) AS tn
-      |  FROM series),
-      |full7 AS (
-      |  SELECT day, dow, cents, 7 * cents - tsum AS det7
-      |  FROM tr WHERE tn = 7),
-      |seas AS (
-      |  SELECT dow,
-      |    CAST(round(CAST(sum(det7) AS DOUBLE) / count(*)) AS BIGINT)
-      |      AS s7q
-      |  FROM full7 GROUP BY dow),
+      |  FROM series)""".stripMargin
+
+  /** The full-window days (day, dow, cents, det7 = 7·cents − trend sum)
+    * and the integer seasonal index per dow (dow, s7q = round(mean
+    * det7)): the exact-integer detrending q_decomp_strength and
+    * q_residual_outliers share. Oracle twin: [[detrend7Sql]]. */
+  private def detrend7(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val series = t(s, d, "orders")
+      .groupBy(col("o_orderdate").cast(DateType).as("day"),
+        dayofweek(col("o_orderdate")).as("dowRaw"))
+      .agg((sum(dec2(col("o_totalprice")) * 100)).cast(LongType)
+        .as("cents"))
+      // isodow: Mon=1..Sun=7; Spark dayofweek: Sun=1..Sat=7
+      .withColumn("dow", when(col("dowRaw") === 1, 7)
+        .otherwise(col("dowRaw") - 1))
+    val wTr = Window.orderBy("day").rowsBetween(-3, 3)
+    val full7 = series
+      .withColumn("tsum", sum(col("cents")).over(wTr))
+      .withColumn("tn", count(lit(1)).over(wTr))
+      .filter(col("tn") === 7)
+      .select(col("day"), col("dow"), col("cents"),
+        (lit(7) * col("cents") - col("tsum")).as("det7"))
+    (full7, full7.groupBy("dow")
+      .agg(round(sum(col("det7")).cast(DoubleType) / count(lit(1)))
+        .cast(LongType).as("s7q")))
+  }
+
+  /** DuckDB twin of [[detrend7]]: [[dowTrendSql]], full7 and seas. */
+  private val detrend7Sql =
+    s"""$dowTrendSql,
+       |full7 AS (
+       |  SELECT day, dow, cents, 7 * cents - tsum AS det7
+       |  FROM tr WHERE tn = 7),
+       |seas AS (
+       |  SELECT dow,
+       |    CAST(round(CAST(sum(det7) AS DOUBLE) / count(*)) AS BIGINT)
+       |      AS s7q
+       |  FROM full7 GROUP BY dow)""".stripMargin
+
+  /** Hyndman trend/seasonal STRENGTH of the daily revenue series — the
+    * one-number "is this series forecastable, and by what" summary over
+    * the q_decompose components: F = max(0, 1 − Var(R)/Var(X+R)). The
+    * decomposition stays EXACT end-to-end: det7 = 7·y − Σ₇y is integer,
+    * the per-dow seasonal is quantized to one integer per dow (the
+    * q_anova ssw idiom), so the residual series is integer and all three
+    * variances come from exact DECIMAL(38) moments; the two F ratios are
+    * one-row double expressions. */
+  val qDecompStrength = Q(
+    "q_decomp_strength",
+    s"""WITH $detrend7Sql,
       |r AS (
       |  SELECT f.det7 - s.s7q AS r700, f.det7,
       |    7 * f.cents - s.s7q AS tr700
@@ -1355,24 +1365,7 @@ object DiagQueries {
       |      - CAST(sd AS DOUBLE) * sd / CAST(n AS DOUBLE))), 6)
       |    AS seasonal_strength
       |FROM mo""".stripMargin) { (s, d) =>
-    val series = t(s, d, "orders")
-      .groupBy(col("o_orderdate").cast(DateType).as("day"),
-        dayofweek(col("o_orderdate")).as("dowRaw"))
-      .agg((sum(dec2(col("o_totalprice")) * 100)).cast(LongType)
-        .as("cents"))
-      // isodow: Mon=1..Sun=7; Spark dayofweek: Sun=1..Sat=7
-      .withColumn("dow", when(col("dowRaw") === 1, 7)
-        .otherwise(col("dowRaw") - 1))
-    val wTr = Window.orderBy("day").rowsBetween(-3, 3)
-    val tr = series
-      .withColumn("tsum", sum(col("cents")).over(wTr))
-      .withColumn("tn", count(lit(1)).over(wTr))
-    val full7 = tr.filter(col("tn") === 7)
-      .select(col("day"), col("dow"), col("cents"),
-        (lit(7) * col("cents") - col("tsum")).as("det7"))
-    val seas = full7.groupBy("dow")
-      .agg(round(sum(col("det7")).cast(DoubleType) / count(lit(1)))
-        .cast(LongType).as("s7q"))
+    val (full7, seas) = detrend7(s, d)
     val r = full7.join(broadcast(seas.withColumnRenamed("dow", "sdow")),
         col("dow") === col("sdow"))
       .select((col("det7") - col("s7q")).as("r700"), col("det7"),
@@ -1458,27 +1451,7 @@ object DiagQueries {
     * the flag compare (r700−μ700q)² > 9σ² runs on quantized integers. */
   val qResidualOutliers = Q(
     "q_residual_outliers",
-    """WITH series AS (
-      |  SELECT CAST(o_orderdate AS DATE) AS day,
-      |    isodow(CAST(o_orderdate AS DATE)) AS dow,
-      |    sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
-      |      AS cents
-      |  FROM orders GROUP BY 1, 2),
-      |tr AS (
-      |  SELECT day, dow, cents,
-      |    sum(cents) OVER (ORDER BY day ROWS BETWEEN 3 PRECEDING
-      |      AND 3 FOLLOWING) AS tsum,
-      |    count(*) OVER (ORDER BY day ROWS BETWEEN 3 PRECEDING
-      |      AND 3 FOLLOWING) AS tn
-      |  FROM series),
-      |full7 AS (
-      |  SELECT day, dow, cents, 7 * cents - tsum AS det7
-      |  FROM tr WHERE tn = 7),
-      |seas AS (
-      |  SELECT dow,
-      |    CAST(round(CAST(sum(det7) AS DOUBLE) / count(*)) AS BIGINT)
-      |      AS s7q
-      |  FROM full7 GROUP BY dow),
+    s"""WITH $detrend7Sql,
       |r AS (
       |  SELECT f.day, f.cents, f.det7 - s.s7q AS r700
       |  FROM full7 f JOIN seas s ON f.dow = s.dow),
@@ -1497,23 +1470,7 @@ object DiagQueries {
       |FROM r, mo
       |WHERE abs(r700 - muq) > 3 * sdq
       |ORDER BY day""".stripMargin) { (s, d) =>
-    val series = t(s, d, "orders")
-      .groupBy(col("o_orderdate").cast(DateType).as("day"),
-        dayofweek(col("o_orderdate")).as("dowRaw"))
-      .agg((sum(dec2(col("o_totalprice")) * 100)).cast(LongType)
-        .as("cents"))
-      .withColumn("dow", when(col("dowRaw") === 1, 7)
-        .otherwise(col("dowRaw") - 1))
-    val wTr = Window.orderBy("day").rowsBetween(-3, 3)
-    val full7 = series
-      .withColumn("tsum", sum(col("cents")).over(wTr))
-      .withColumn("tn", count(lit(1)).over(wTr))
-      .filter(col("tn") === 7)
-      .select(col("day"), col("dow"), col("cents"),
-        (lit(7) * col("cents") - col("tsum")).as("det7"))
-    val seas = full7.groupBy("dow")
-      .agg(round(sum(col("det7")).cast(DoubleType) / count(lit(1)))
-        .cast(LongType).as("s7q"))
+    val (full7, seas) = detrend7(s, d)
     val r = full7.join(broadcast(seas.withColumnRenamed("dow", "sdow")),
         col("dow") === col("sdow"))
       .select(col("day"), col("cents"),

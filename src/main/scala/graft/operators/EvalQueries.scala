@@ -26,6 +26,65 @@ object EvalQueries {
       (dec2(col("o_totalprice")) * 100).cast(LongType).as("cents"),
       when(col("o_orderpriority") === "1-URGENT", 1).otherwise(0).as("label"))
 
+  /** Per score decile, highest scores first (decile 1 = the top 10 %
+    * by cents, ties by order key): (decile, n_rows, n_pos). The global
+    * row number comes from GlobalRank, which also counts the table, so
+    * no second fact aggregate runs. Oracle twin: [[topDecilesSql]]. */
+  private def topDeciles(s: SparkSession, d: String): DataFrame = {
+    val (ranked, nTotal) = graft.plans.GlobalRank.withGlobalRowNumber(
+      scored(s, d).withColumn("negc", -col("cents")), "rn", 32,
+      col("negc"), col("o_orderkey"))
+    ranked
+      .select(
+        (expr(s"(rn - 1) * 10 DIV ${nTotal}L").cast(IntegerType) + 1)
+          .as("decile"),
+        col("label"))
+      .groupBy("decile")
+      .agg(count(lit(1)).as("n_rows"), sum(col("label")).as("n_pos"))
+  }
+
+  /** DuckDB twin of [[topDeciles]]: the x and d CTEs. */
+  private val topDecilesSql =
+    """x AS (
+      |  SELECT CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END
+      |      AS label,
+      |    row_number() OVER (ORDER BY
+      |      -CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT),
+      |      o_orderkey) AS rn,
+      |    count(*) OVER () AS n
+      |  FROM orders),
+      |d AS (
+      |  SELECT CAST((rn - 1) * 10 // n AS INT) + 1 AS decile,
+      |    count(*) AS n_rows, sum(label) AS n_pos
+      |  FROM x GROUP BY 1)""".stripMargin
+
+  /** Each order's predicted probability as an integer ppm of the largest
+    * order total, and its probability decile (label, p_ppm, bin): exact
+    * integer arithmetic, so binning and every sum over it are exact.
+    * Oracle twin: [[ppmBinsSql]]. */
+  private def ppmBins(s: SparkSession, d: String): DataFrame = {
+    val x = scored(s, d)
+    val mx = x.agg(max(col("cents")).as("maxc"))
+    x.crossJoin(broadcast(mx))
+      .select(col("label"),
+        expr("cents * 1000000 DIV maxc").as("p_ppm"),
+        least(expr("cents * 1000000 DIV maxc * 10 DIV 1000000"), lit(9L))
+          .as("bin"))
+  }
+
+  /** DuckDB twin of [[ppmBins]]: the x, mx and p CTEs. */
+  private val ppmBinsSql =
+    """x AS (
+      |  SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+      |      AS cents,
+      |    CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS label
+      |  FROM orders),
+      |mx AS (SELECT max(cents) AS maxc FROM x),
+      |p AS (
+      |  SELECT label, cents * 1000000 // maxc AS p_ppm,
+      |    LEAST(cents * 1000000 // maxc * 10 // 1000000, 9) AS bin
+      |  FROM x CROSS JOIN mx)""".stripMargin
+
   /** ROC AUC via the rank-sum (Mann–Whitney) identity: AUC =
     * (R₁ − n₁(n₁+1)/2) / (n₁n₀) where R₁ is the positive class's rank sum
     * under a TOTAL order (score, then key — the q_mannwhitney row-number
@@ -74,18 +133,7 @@ object EvalQueries {
     * The campaign-targeting / ranking-quality readout. */
   val qLiftDeciles = Q(
     "q_lift_deciles",
-    """WITH x AS (
-      |  SELECT CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END
-      |      AS label,
-      |    row_number() OVER (ORDER BY
-      |      -CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT),
-      |      o_orderkey) AS rn,
-      |    count(*) OVER () AS n
-      |  FROM orders),
-      |d AS (
-      |  SELECT CAST((rn - 1) * 10 // n AS INT) + 1 AS decile,
-      |    count(*) AS n_rows, sum(label) AS n_pos
-      |  FROM x GROUP BY 1),
+    s"""WITH $topDecilesSql,
       |tot AS (SELECT sum(n_rows) AS n, sum(n_pos) AS pos FROM d),
       |c AS (
       |  SELECT decile, n_rows, n_pos,
@@ -97,17 +145,7 @@ object EvalQueries {
       |  ROUND(CAST(cum_pos AS DOUBLE) / CAST(cum_rows AS DOUBLE)
       |    / (CAST(pos AS DOUBLE) / CAST(n AS DOUBLE)), 6) AS cum_lift
       |FROM c CROSS JOIN tot ORDER BY decile""".stripMargin) { (s, d) =>
-    val (ranked, nTotal) = graft.plans.GlobalRank.withGlobalRowNumber(
-      scored(s, d).withColumn("negc", -col("cents")), "rn", 32,
-      col("negc"), col("o_orderkey"))
-    // GlobalRank already counted the table — no second fact aggregate
-    val dec = ranked
-      .select(
-        (expr(s"(rn - 1) * 10 DIV ${nTotal}L").cast(IntegerType) + 1)
-          .as("decile"),
-        col("label"))
-      .groupBy("decile")
-      .agg(count(lit(1)).as("n_rows"), sum(col("label")).as("n_pos"))
+    val dec = topDeciles(s, d)
     val tot = dec.agg(sum("n_rows").as("n"), sum("n_pos").as("pos"))
     // 10-row bounded domain: an unpartitioned window here is free
     val w = org.apache.spark.sql.expressions.Window.orderBy("decile")
@@ -191,16 +229,7 @@ object EvalQueries {
     * post-aggregation. */
   val qCalibration = Q(
     "q_calibration",
-    """WITH x AS (
-      |  SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-      |      AS cents,
-      |    CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS label
-      |  FROM orders),
-      |mx AS (SELECT max(cents) AS maxc FROM x),
-      |p AS (
-      |  SELECT label, cents * 1000000 // maxc AS p_ppm,
-      |    LEAST(cents * 1000000 // maxc * 10 // 1000000, 9) AS bin
-      |  FROM x CROSS JOIN mx),
+    s"""WITH $ppmBinsSql,
       |b AS (
       |  SELECT bin, count(*) AS n, CAST(sum(label) AS BIGINT) AS n_pos,
       |    sum(CAST(p_ppm AS HUGEINT)) AS sum_ppm,
@@ -215,13 +244,7 @@ object EvalQueries {
       |    AS brier
       |FROM b ORDER BY bin""".stripMargin) { (s, d) =>
     val big38 = DecimalType(38, 0)
-    val x = scored(s, d)
-    val mx = x.agg(max(col("cents")).as("maxc"))
-    val p = x.crossJoin(broadcast(mx))
-      .select(col("label"),
-        expr("cents * 1000000 DIV maxc").as("p_ppm"),
-        least(expr("cents * 1000000 DIV maxc * 10 DIV 1000000"), lit(9L))
-          .as("bin"))
+    val p = ppmBins(s, d)
     val dev = (col("p_ppm") - col("label") * 1000000L).cast(big38)
     p.groupBy("bin")
       .agg(count(lit(1)).as("n"),
@@ -339,6 +362,31 @@ object EvalQueries {
           / col("n_out").cast(DoubleType), 6).as("ips_value"))
   }
 
+  /** MAP, precision and recall at 10 of a ranked retrieval panel
+    * `ranked` (qid, q_label, rk ≤ 10, is_rel, hits = relevant results up
+    * to rk) against the per-label relevant counts `nl` (label, n_label):
+    * per-query integer ·10⁹ terms, one final division per metric. R is
+    * guarded to ≥ 1, so a singleton-label query scores an explicit 0. */
+  private def mapAt10(ranked: DataFrame, nl: DataFrame): DataFrame =
+    ranked
+      .join(broadcast(nl.withColumnRenamed("label", "nl_label")),
+        col("q_label") === col("nl_label"))
+      .groupBy("qid")
+      .agg(
+        sum(when(col("is_rel") === 1,
+          expr("(hits * 1000000000) DIV rk")).otherwise(0L)).as("ap9_num"),
+        max(col("hits")).as("hits10"),
+        least(greatest(max(col("n_label")) - 1, lit(1)), lit(10))
+          .as("r10"))
+      .agg(
+        count(lit(1)).as("n_queries"),
+        round(sum(expr("ap9_num DIV r10")).cast(DoubleType)
+          / count(lit(1)) / 1000000000L, 6).as("map_at_10"),
+        round(sum(col("hits10")).cast(DoubleType) / count(lit(1)) / 10, 6)
+          .as("precision_at_10"),
+        round(sum(expr("(hits10 * 1000000000) DIV r10")).cast(DoubleType)
+          / count(lit(1)) / 1000000000L, 6).as("recall_at_10"))
+
   /** Mean average precision / precision / recall at k=10 over the same
     * label-relevance retrieval panel as q_mrr (every 25th vector queries
     * the corpus, same-label = relevant). AP@10 sums hits@i/i at each
@@ -406,24 +454,7 @@ object EvalQueries {
     val top10 = scored.withColumn("rk", row_number().over(w).cast(LongType))
       .filter(col("rk") <= 10)
       .withColumn("hits", sum(col("is_rel")).over(cum))
-    val perq = top10
-      .join(broadcast(nl.withColumnRenamed("label", "nl_label")),
-        col("q_label") === col("nl_label"))
-      .groupBy("qid")
-      .agg(
-        sum(when(col("is_rel") === 1,
-          expr("(hits * 1000000000) DIV rk")).otherwise(0L)).as("ap9_num"),
-        max(col("hits")).as("hits10"),
-        least(greatest(max(col("n_label")) - 1, lit(1)), lit(10))
-          .as("r10"))
-    perq.agg(
-      count(lit(1)).as("n_queries"),
-      round(sum(expr("ap9_num DIV r10")).cast(DoubleType)
-        / count(lit(1)) / 1000000000L, 6).as("map_at_10"),
-      round(sum(col("hits10")).cast(DoubleType) / count(lit(1)) / 10, 6)
-        .as("precision_at_10"),
-      round(sum(expr("(hits10 * 1000000000) DIV r10")).cast(DoubleType)
-        / count(lit(1)) / 1000000000L, 6).as("recall_at_10"))
+    mapAt10(top10, nl)
   }
 
   /** MAP / precision / recall at k=10 over the SAME retrieval panel as
@@ -474,24 +505,7 @@ object EvalQueries {
         col("rk").cast(LongType).as("rk"),
         when(col("label") === col("q_label"), 1).otherwise(0).as("is_rel"))
       .withColumn("hits", sum(col("is_rel")).over(cum))
-    val perq = ranked
-      .join(broadcast(nl.withColumnRenamed("label", "nl_label")),
-        col("q_label") === col("nl_label"))
-      .groupBy("qid")
-      .agg(
-        sum(when(col("is_rel") === 1,
-          expr("(hits * 1000000000) DIV rk")).otherwise(0L)).as("ap9_num"),
-        max(col("hits")).as("hits10"),
-        least(greatest(max(col("n_label")) - 1, lit(1)), lit(10))
-          .as("r10"))
-    perq.agg(
-      count(lit(1)).as("n_queries"),
-      round(sum(expr("ap9_num DIV r10")).cast(DoubleType)
-        / count(lit(1)) / 1000000000L, 6).as("map_at_10"),
-      round(sum(col("hits10")).cast(DoubleType) / count(lit(1)) / 10, 6)
-        .as("precision_at_10"),
-      round(sum(expr("(hits10 * 1000000000) DIV r10")).cast(DoubleType)
-        / count(lit(1)) / 1000000000L, 6).as("recall_at_10"))
+    mapAt10(ranked, nl)
   }
 
   /** Feature screening: point-biserial correlation of each candidate
@@ -725,18 +739,7 @@ object EvalQueries {
     * algebraically 2PR/(P+R), but in the integer-sum form). */
   val qPrCurve = Q(
     "q_pr_curve",
-    """WITH x AS (
-      |  SELECT CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END
-      |      AS label,
-      |    row_number() OVER (ORDER BY
-      |      -CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT),
-      |      o_orderkey) AS rn,
-      |    count(*) OVER () AS n
-      |  FROM orders),
-      |d AS (
-      |  SELECT CAST((rn - 1) * 10 // n AS INT) + 1 AS decile,
-      |    count(*) AS n_rows, sum(label) AS n_pos
-      |  FROM x GROUP BY 1),
+    s"""WITH $topDecilesSql,
       |tot AS (SELECT sum(n_pos) AS pos FROM d),
       |c AS (
       |  SELECT decile, n_rows,
@@ -751,16 +754,7 @@ object EvalQueries {
       |  ROUND(2 * CAST(tp AS DOUBLE) / CAST(cum_rows + pos AS DOUBLE), 6)
       |    AS f1
       |FROM c CROSS JOIN tot ORDER BY decile""".stripMargin) { (s, d) =>
-    val (ranked, nTotal) = graft.plans.GlobalRank.withGlobalRowNumber(
-      scored(s, d).withColumn("negc", -col("cents")), "rn", 32,
-      col("negc"), col("o_orderkey"))
-    val dec = ranked
-      .select(
-        (expr(s"(rn - 1) * 10 DIV ${nTotal}L").cast(IntegerType) + 1)
-          .as("decile"),
-        col("label"))
-      .groupBy("decile")
-      .agg(count(lit(1)).as("n_rows"), sum(col("label")).as("n_pos"))
+    val dec = topDeciles(s, d)
     val tot = dec.agg(sum("n_pos").as("pos"))
     val w = org.apache.spark.sql.expressions.Window.orderBy("decile")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
@@ -843,16 +837,7 @@ object EvalQueries {
     * just honest" split a single Brier number can't answer. */
   val qBrierDecomp = Q(
     "q_brier_decomp",
-    """WITH x AS (
-      |  SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-      |      AS cents,
-      |    CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS label
-      |  FROM orders),
-      |mx AS (SELECT max(cents) AS maxc FROM x),
-      |p AS (
-      |  SELECT label, cents * 1000000 // maxc AS p_ppm,
-      |    LEAST(cents * 1000000 // maxc * 10 // 1000000, 9) AS bin
-      |  FROM x CROSS JOIN mx),
+    s"""WITH $ppmBinsSql,
       |tot AS (
       |  SELECT CAST(count(*) AS HUGEINT) AS n,
       |    CAST(sum(label) AS HUGEINT) AS npos
@@ -891,13 +876,7 @@ object EvalQueries {
       |      / CAST((SELECT n FROM tot) AS DOUBLE)), 6) AS uncertainty
       |FROM agg""".stripMargin) { (s, d) =>
     val big38 = DecimalType(38, 0)
-    val x = scored(s, d)
-    val mx = x.agg(max(col("cents")).as("maxc"))
-    val p = x.crossJoin(broadcast(mx))
-      .select(col("label"),
-        expr("cents * 1000000 DIV maxc").as("p_ppm"),
-        least(expr("cents * 1000000 DIV maxc * 10 DIV 1000000"), lit(9L))
-          .as("bin"))
+    val p = ppmBins(s, d)
     val tot = p.agg(count(lit(1)).cast(big38).as("n"),
       sum(col("label")).cast(big38).as("npos"))
     val b = p.groupBy("bin")

@@ -71,9 +71,10 @@ object LlmQueries {
     simhashCands(s, d); ()
   }
 
-  /** The six consumers' common planted-copy corpus (same construction in
-    * each query's oracle SQL — doc_id is int64, so the int/long literal
-    * variants at the old call sites produced this same schema). */
+  /** The planted near-dup corpus (doc_id, text): the documents plus, for
+    * every 50th document, a copy at doc_id + 10⁶ without its first 10
+    * characters. The simhash store and every near-dup query that plants
+    * these copies read it. Oracle twin: [[ngramDocs2]]. */
   private[graft] def simhashAugDocs(s: SparkSession, d: String): DataFrame = {
     val docs = t(s, d, "documents")
     docs.select("doc_id", "text").unionByName(
@@ -81,6 +82,14 @@ object LlmQueries {
         .select((col("doc_id") + 1000000L).as("doc_id"),
           expr("substr(text, 11)").as("text")))
   }
+
+  /** DuckDB twin of [[simhashAugDocs]]: the docs2 CTE. */
+  private val ngramDocs2 =
+    """docs2 AS (
+      |  SELECT doc_id, text FROM documents
+      |  UNION ALL
+      |  SELECT doc_id + 1000000 AS doc_id, substr(text, 11) AS text
+      |  FROM documents WHERE doc_id % 50 = 0)""".stripMargin
 
   /** (reported detector threshold, sweep grid max) for the corpus. */
   private def simhashThrGrid(s: SparkSession, d: String): (Int, Int) = {
@@ -227,13 +236,6 @@ object LlmQueries {
     Dedup.simhash(t(s, d, "documents"))
       .orderBy("doc_id").limit(200)
   }
-
-  private val ngramDocs2 =
-    """docs2 AS (
-      |  SELECT doc_id, text FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 1000000 AS doc_id, substr(text, 11) AS text
-      |  FROM documents WHERE doc_id % 50 = 0)""".stripMargin
 
   /** Containment dedup (asymmetric Jaccard) over docs ∪ planted TRUNCATED
     * copies (120-char prefixes): C(A→B) = |A∩B|/|A| on rare-shingle-
@@ -412,22 +414,14 @@ object LlmQueries {
        |  round(neq / CAST(k AS DOUBLE), 4) AS est_jaccard
        |FROM agree, pp WHERE 2 * neq >= k
        |ORDER BY doc_a, doc_b""".stripMargin) { (s, d) =>
-    val docs = t(s, d, "documents")
-    val withDups = docs.select("doc_id", "text").unionByName(
-      docs.filter(col("doc_id") % 50 === 0)
-        .select((col("doc_id") + 1000000).as("doc_id"),
-          expr("substr(text, 11)").as("text")))
+    val withDups = simhashAugDocs(s, d)
     val (k, bandSize) = Dedup.minhashParamsFor(withDups.count())
     Dedup.minhashDetPairs(withDups, k, bandSize, maxShingles = 2000)
       .orderBy("doc_a", "doc_b")
   }
 
   val qDedupMinhash = Q.noOracle("q_dedup_minhash") { (s, d) =>
-    val docs = t(s, d, "documents")
-    val withDups = docs.select("doc_id", "text").unionByName(
-      docs.filter(col("doc_id") % 50 === 0)
-        .select((col("doc_id") + 1000000).as("doc_id"),
-          expr("substr(text, 11)").as("text")))
+    val withDups = simhashAugDocs(s, d)
     Dedup.minhashPairs(withDups)
       .orderBy("doc_a", "doc_b")
       .limit(500)
@@ -684,11 +678,7 @@ object LlmQueries {
        |FROM cnt ca JOIN cnt cb ON ca.det < cb.det
        |LEFT JOIN ix ON ix.da = ca.det AND ix.db = cb.det
        |ORDER BY det_a, det_b""".stripMargin) { (s, d) =>
-    val docs = t(s, d, "documents")
-    val docs2 = docs.select("doc_id", "text").unionByName(
-      docs.filter(col("doc_id") % 50 === 0)
-        .select((col("doc_id") + 1000000).as("doc_id"),
-          expr("substr(text, 11)").as("text")))
+    val docs2 = simhashAugDocs(s, d)
     def removable(key: Column): DataFrame = {
       val w = org.apache.spark.sql.expressions.Window.partitionBy(key)
       docs2.withColumn("k", min(col("doc_id")).over(w))
@@ -1025,17 +1015,12 @@ object LlmQueries {
     * Lloyd iteration lives in llm/Clustering.scala (ClusteringSpec). */
   val qKmeansAssign = Q(
     "q_kmeans_assign",
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
       |    CAST(embedding[1] AS DOUBLE) AS dim1
       |  FROM embeddings),
       |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
-      |d AS (
-      |  SELECT e.vec_id, e.dim1, c.cid,
-      |    ROUND(list_inner_product(e.v, e.v)
-      |      - 2 * list_inner_product(e.v, c.cv)
-      |      + list_inner_product(c.cv, c.cv), 6) AS d2
-      |  FROM e CROSS JOIN c),
+      |${Clustering.sqDistCte("d", "e.dim1, ")},
       |a AS (
       |  SELECT vec_id, dim1, cid, d2,
       |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rk
@@ -1656,11 +1641,7 @@ object LlmQueries {
        |  count(*) AS n_survivors,
        |  CAST(sum(doc_id) AS BIGINT) AS survivor_sum
        |FROM surv""".stripMargin) { (s, d) =>
-    val docs = t(s, d, "documents").select("doc_id", "text")
-    val withDups = docs.unionByName(
-      docs.filter(col("doc_id") % 50 === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"),
-          expr("substr(text, 11)").as("text")))
+    val withDups = simhashAugDocs(s, d)
     val pairs = simhashCands(s, d)
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
     val labels = graft.plans.LabelProp.iterate(pairs, 3)
@@ -2540,11 +2521,7 @@ object LlmQueries {
        |    / CAST(count(*) AS DOUBLE), 6) AS dup_rate
        |FROM attributed a JOIN documents s ON a.orig_id = s.doc_id
        |GROUP BY s.source ORDER BY s.source""".stripMargin) { (s, d) =>
-    val docs = t(s, d, "documents")
-    val withDups = docs.select("doc_id", "text").unionByName(
-      docs.filter(col("doc_id") % 50 === 0)
-        .select((col("doc_id") + 1000000).as("doc_id"),
-          expr("substr(text, 11)").as("text")))
+    val withDups = simhashAugDocs(s, d)
     val pairs = simhashCands(s, d)
     val dupIds = pairs.select(col("doc_a").as("doc_id"))
       .unionByName(pairs.select(col("doc_b").as("doc_id"))).distinct()
@@ -2554,8 +2531,8 @@ object LlmQueries {
         .otherwise(col("doc_id")).as("orig_id"),
         coalesce(col("is_dup"), lit(false)).as("is_dup"))
     attributed
-      .join(docs.select(col("doc_id").as("orig_id"), col("source")),
-        Seq("orig_id"))
+      .join(t(s, d, "documents")
+        .select(col("doc_id").as("orig_id"), col("source")), Seq("orig_id"))
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("is_dup"), 1).otherwise(0)).cast(LongType)
@@ -3469,7 +3446,7 @@ object LlmQueries {
     * across engines. */
   val qSemdedup = Q(
     "q_semdedup",
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT vec_id,
       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
       |  FROM embeddings
@@ -3478,12 +3455,7 @@ object LlmQueries {
       |    list_transform(embedding, x -> CAST(x AS DOUBLE) * 1.1) AS v
       |  FROM embeddings WHERE vec_id % 50 = 0),
       |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 64),
-      |dist AS (
-      |  SELECT e.vec_id, c.cid,
-      |    ROUND(list_inner_product(e.v, e.v)
-      |      - 2 * list_inner_product(e.v, c.cv)
-      |      + list_inner_product(c.cv, c.cv), 6) AS d2
-      |  FROM e CROSS JOIN c),
+      |${Clustering.sqDistCte("dist")},
       |a AS (
       |  SELECT vec_id, cid,
       |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rk
@@ -3638,15 +3610,10 @@ object LlmQueries {
     * before the per-cluster mean so the aggregation is exact. */
   val qSilhouette = Q(
     "q_silhouette",
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
       |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
-      |dist AS (
-      |  SELECT e.vec_id, c.cid,
-      |    ROUND(list_inner_product(e.v, e.v)
-      |      - 2 * list_inner_product(e.v, c.cv)
-      |      + list_inner_product(c.cv, c.cv), 6) AS d2
-      |  FROM e CROSS JOIN c),
+      |${Clustering.sqDistCte("dist")},
       |r AS (
       |  SELECT vec_id, cid, d2,
       |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rk
@@ -3943,7 +3910,7 @@ object LlmQueries {
     * end-to-end. */
   val qDecontaminateEmbed = Q(
     "q_decontaminate_embed",
-    """WITH base AS (
+    s"""WITH base AS (
       |  SELECT vec_id,
       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
       |    CASE WHEN vec_id % 10 < 8 THEN 1 ELSE 0 END AS is_train
@@ -3955,12 +3922,7 @@ object LlmQueries {
       |    list_transform(v, x -> x * 1.05) AS v, 0 AS is_train
       |  FROM base WHERE is_train = 1 AND vec_id % 40 = 0),
       |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 64),
-      |dist AS (
-      |  SELECT e.vec_id, c.cid,
-      |    ROUND(list_inner_product(e.v, e.v)
-      |      - 2 * list_inner_product(e.v, c.cv)
-      |      + list_inner_product(c.cv, c.cv), 6) AS d2
-      |  FROM e CROSS JOIN c),
+      |${Clustering.sqDistCte("dist")},
       |a AS (
       |  SELECT vec_id, cid,
       |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rk
@@ -4805,16 +4767,11 @@ object LlmQueries {
     * one-row select) so the result is reduction-order-proof. */
   val qClusterPurity = Q(
     "q_cluster_purity",
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
       |  FROM embeddings),
       |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
-      |dd AS (
-      |  SELECT e.vec_id, e.label, c.cid,
-      |    ROUND(list_inner_product(e.v, e.v)
-      |      - 2 * list_inner_product(e.v, c.cv)
-      |      + list_inner_product(c.cv, c.cv), 6) AS d2
-      |  FROM e CROSS JOIN c),
+      |${Clustering.sqDistCte("dd", "e.label, ")},
       |a AS (
       |  SELECT vec_id, label, cid,
       |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rk

@@ -226,6 +226,39 @@ object MfQueries {
         t(s, d, "customer"), "BUILDING", "MACHINERY")
   }
 
+  /** Each user's top-3 observed items under the baseline predictor
+    * (user_id, item_id), ranked by item mean, then item id: the
+    * baseline score (user_mean + item_mean) / 2 shifts all of one user's
+    * items by the same constant, so the item mean alone ranks them. */
+  private def baselineTop3(ratings: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val itemScore = ratings.groupBy("item_id").agg(
+      (sum(col("rating").cast(DecimalType(9, 6))).cast(DoubleType) /
+        count(lit(1))).as("item_mean"))
+    val w = Window.partitionBy("user_id")
+      .orderBy(col("item_mean").desc, col("item_id"))
+    ratings.join(itemScore, "item_id")
+      .withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= 3)
+      .select("user_id", "item_id")
+  }
+
+  /** DuckDB twin of [[baselineTop3]]: the im and recs CTEs over the
+    * `ratings` CTE. */
+  private val baselineTop3Cte =
+    """im AS (
+      |  SELECT item_id,
+      |    CAST(SUM(CAST(rating AS DECIMAL(9,6))) AS DOUBLE) / count(*)
+      |      AS item_mean
+      |  FROM ratings GROUP BY 1),
+      |recs AS (
+      |  SELECT user_id, item_id FROM (
+      |    SELECT r.user_id, r.item_id,
+      |      row_number() OVER (PARTITION BY r.user_id
+      |        ORDER BY im.item_mean DESC, r.item_id) AS rk
+      |    FROM ratings r JOIN im ON r.item_id = im.item_id) z
+      |  WHERE rk <= 3)""".stripMargin
+
   /** Recommendation-quality profile of the baseline predictor: each user's
     * top-3 OBSERVED items re-ranked by predicted score, then catalog
     * coverage and top-10 concentration of the recommended slots — the
@@ -241,18 +274,7 @@ object MfQueries {
   val qRecCoverage = Q(
     "q_rec_coverage",
     s"""WITH ${Ratings.cte},
-       |im AS (
-       |  SELECT item_id,
-       |    CAST(SUM(CAST(rating AS DECIMAL(9,6))) AS DOUBLE) / count(*)
-       |      AS item_mean
-       |  FROM ratings GROUP BY 1),
-       |recs AS (
-       |  SELECT user_id, item_id FROM (
-       |    SELECT r.user_id, r.item_id,
-       |      row_number() OVER (PARTITION BY r.user_id
-       |        ORDER BY im.item_mean DESC, r.item_id) AS rk
-       |    FROM ratings r JOIN im ON r.item_id = im.item_id) z
-       |  WHERE rk <= 3),
+       |$baselineTop3Cte,
        |cat AS (SELECT CAST(count(DISTINCT item_id) AS BIGINT) AS n_catalog,
        |               CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
        |        FROM ratings),
@@ -266,15 +288,7 @@ object MfQueries {
        |  ROUND(CAST(top10_slots AS DOUBLE) / n_slots, 6) AS top10_share
        |FROM cat, ri, t10""".stripMargin) { (s, d) =>
     val r = Ratings.view(s, d)
-    val itemScore = r.groupBy("item_id").agg(
-      (sum(col("rating").cast(DecimalType(9, 6))).cast(DoubleType) /
-        count(lit(1))).as("item_mean"))
-    val w = Window.partitionBy("user_id")
-      .orderBy(col("item_mean").desc, col("item_id"))
-    val recs = r.join(itemScore, "item_id")
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 3)
-      .select("user_id", "item_id")
+    val recs = baselineTop3(r)
     val cat = r.agg(countDistinct(col("item_id")).as("n_catalog"),
       countDistinct(col("user_id")).as("n_users"))
     val ri = recs.agg(countDistinct(col("item_id")).as("n_rec_items"),
@@ -788,17 +802,13 @@ object MfQueries {
       Metric.IndividualUnfairness)
   }
 
-  private val segmentGaps = graft.SharedBuild[
-    (org.apache.spark.sql.SparkSession, String), Metric.GroupUnfairness]()()
-
   /** The antidote family's groups: market segments BUILDING vs MACHINERY
-    * of the customers (the ratings' users). One frame per (session, dir):
-    * loading the parquet file runs a footer-reading job each time. */
+    * of the customers (the ratings' users). */
   private def segmentGap(s: org.apache.spark.sql.SparkSession,
       d: String): Metric.GroupUnfairness =
-    segmentGaps((s, d))(Metric.GroupUnfairness(t(s, d, "customer")
+    Metric.GroupUnfairness(t(s, d, "customer")
       .select(col("c_custkey").as("user_id"), col("c_mktsegment").as("grp")),
-      "BUILDING", "MACHINERY"))
+      "BUILDING", "MACHINERY")
 
   /** An Alg. 1 trace from `x0` as rows (iter, objective, rmse): `steps`
     * projected-GD iterations at 3 ALS sweeps per train and η = 10⁴. */
@@ -1267,18 +1277,7 @@ object MfQueries {
   val qIldRecs = Q(
     "q_ild_recs",
     s"""WITH ${Ratings.cte},
-       |im AS (
-       |  SELECT item_id,
-       |    CAST(SUM(CAST(rating AS DECIMAL(9,6))) AS DOUBLE) / count(*)
-       |      AS item_mean
-       |  FROM ratings GROUP BY 1),
-       |recs AS (
-       |  SELECT user_id, item_id FROM (
-       |    SELECT r.user_id, r.item_id,
-       |      row_number() OVER (PARTITION BY r.user_id
-       |        ORDER BY im.item_mean DESC, r.item_id) AS rk
-       |    FROM ratings r JOIN im ON r.item_id = im.item_id) z
-       |  WHERE rk <= 3),
+       |$baselineTop3Cte,
        |ri AS (
        |  SELECT recs.user_id, recs.item_id, p_brand, p_type
        |  FROM recs JOIN part ON recs.item_id = p_partkey),
@@ -1298,15 +1297,7 @@ object MfQueries {
        |    AS n_monoculture
        |FROM pu""".stripMargin) { (s, d) =>
     val r = Ratings.view(s, d)
-    val itemScore = r.groupBy("item_id").agg(
-      (sum(col("rating").cast(DecimalType(9, 6))).cast(DoubleType) /
-        count(lit(1))).as("item_mean"))
-    val w = Window.partitionBy("user_id")
-      .orderBy(col("item_mean").desc, col("item_id"))
-    val recs = r.join(itemScore, "item_id")
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 3)
-      .select("user_id", "item_id")
+    val recs = baselineTop3(r)
     val ri = recs.join(broadcast(t(s, d, "part")
         .select(col("p_partkey"), col("p_brand"), col("p_type"))),
         col("item_id") === col("p_partkey"))

@@ -59,6 +59,79 @@ object PairStore {
         col("n_raw").as("w")))
   }
 
+  /** (src, dst): the co-purchase graph's edges, part pairs src < dst
+    * that share at least 2 orders (n_dist ≥ 2) — the edge list of the
+    * whole part-graph family. Its oracle twin is [[edgeCte]]. */
+  def edges(s: SparkSession, d: String): DataFrame =
+    pairStats(s, d)
+      .filter(col("n_dist") >= 2)
+      .select("src", "dst")
+
+  /** DuckDB twin of [[edges]]: the `li` basket CTE and the edge CTE
+    * `name` (src, dst), for an oracle's WITH list. */
+  def edgeCte(name: String = "e"): String =
+    s"""li AS (
+       |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
+       |$name AS (
+       |  SELECT pa AS src, pb AS dst FROM (
+       |    SELECT a.pk AS pa, b.pk AS pb, count(*) AS n_co
+       |    FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
+       |    GROUP BY 1, 2) c
+       |  WHERE n_co >= 2)""".stripMargin
+
+  /** (node, nbr): the raw-multiplicity co-purchase graph, part pairs
+    * whose line pairs co-occur at least twice (n_raw ≥ 2), each edge
+    * listed both ways. The store is checkpoint-backed, so each use
+    * re-reads its blocks, not the fact join. Oracle twin: [[rawAdjCte]]. */
+  def rawAdjacency(s: SparkSession, d: String): DataFrame = {
+    val edges = pairStats(s, d)
+      .filter(col("n_raw") >= 2)
+      .select(col("src").as("pa"), col("dst").as("pb"))
+    edges.select(col("pa").as("node"), col("pb").as("nbr"))
+      .unionByName(edges.select(col("pb").as("node"), col("pa").as("nbr")))
+  }
+
+  /** DuckDB twin of [[rawAdjacency]]: the pairs, edges and adj CTEs. */
+  val rawAdjCte: String =
+    """pairs AS (
+      |  SELECT a.l_partkey AS pa, b.l_partkey AS pb
+      |  FROM lineitem a JOIN lineitem b
+      |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+      |edges AS (
+      |  SELECT pa, pb FROM pairs GROUP BY pa, pb HAVING count(*) >= 2),
+      |adj AS (
+      |  SELECT pa AS node, pb AS nbr FROM edges
+      |  UNION ALL SELECT pb, pa FROM edges)""".stripMargin
+
+  /** (a, b, c), a < b < c: the triangles of the edge list `e` (src <
+    * dst), each a wedge a–b–c closed by the edge a–c — equi-joins on
+    * the edge list, never all node triples. */
+  def triangles(e: DataFrame): DataFrame =
+    e.select(col("src").as("a"), col("dst").as("b"))
+      .join(e.select(col("src").as("b"), col("dst").as("c")), Seq("b"))
+      .join(e.select(col("src").as("a"), col("dst").as("c")), Seq("a", "c"))
+
+  /** (v, n_tri): per node, the number of `tri` triangles it is in. */
+  def triangleCounts(tri: DataFrame): DataFrame =
+    tri.select(col("a").as("v"))
+      .unionByName(tri.select(col("b").as("v")))
+      .unionByName(tri.select(col("c").as("v")))
+      .groupBy("v").agg(count(lit(1)).as("n_tri"))
+
+  /** DuckDB twin of [[triangles]] and [[triangleCounts]] over the edge
+    * CTE `e`: the tri and pern CTEs. */
+  val triangleCte: String =
+    """tri AS (
+      |  SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
+      |  FROM e e1 JOIN e e2 ON e1.dst = e2.src
+      |    JOIN e e3 ON e3.src = e1.src AND e3.dst = e2.dst),
+      |pern AS (
+      |  SELECT v, count(*) AS n_tri FROM (
+      |    SELECT a AS v FROM tri
+      |    UNION ALL SELECT b FROM tri
+      |    UNION ALL SELECT c FROM tri) u
+      |  GROUP BY v)""".stripMargin
+
   private def build(s: SparkSession, d: String): Store = stores((s, d)) {
     val li = t(s, d, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))

@@ -328,11 +328,9 @@ object PipelineQueries {
     * probe + TakeOrderedAndProject — no global sort. */
   val qSimL2 = Q(
     "q_sim_l2",
-    """SELECT vec_id, d2 FROM (
+    s"""SELECT vec_id, d2 FROM (
       |  SELECT e.vec_id,
-      |    ROUND(list_inner_product(e.v, e.v)
-      |      - 2 * list_inner_product(e.v, p.pv)
-      |      + list_inner_product(p.pv, p.pv), 6) AS d2
+      |    ${graft.llm.Clustering.sqDistSql("e.v", "p.pv")} AS d2
       |  FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
       |        FROM embeddings) e,
       |       (SELECT CAST(embedding AS DOUBLE[]) AS pv FROM embeddings
@@ -360,15 +358,10 @@ object PipelineQueries {
     * 8 dimensions of each updated centroid, mean rounded 6. */
   val qKmeansUpdate = Q(
     "q_kmeans_update",
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
       |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
-      |d AS (
-      |  SELECT e.vec_id, c.cid,
-      |    ROUND(list_inner_product(e.v, e.v)
-      |      - 2 * list_inner_product(e.v, c.cv)
-      |      + list_inner_product(c.cv, c.cv), 6) AS d2
-      |  FROM e CROSS JOIN c),
+      |${graft.llm.Clustering.sqDistCte("d")},
       |a AS (
       |  SELECT vec_id, cid,
       |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rk

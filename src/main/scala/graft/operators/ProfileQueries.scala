@@ -27,11 +27,7 @@ object ProfileQueries {
     * on customers; ties in risk score half (the standard convention). */
   val qCIndex = Q(
     "q_c_index",
-    """WITH cust AS (
-      |  SELECT o_custkey, MIN(CAST(o_orderdate AS DATE)) AS first_d,
-      |    MAX(CAST(o_orderdate AS DATE)) AS last_d
-      |  FROM orders GROUP BY 1),
-      |mx AS (SELECT MAX(last_d) AS m FROM cust),
+    s"""WITH ${AnalyticsQueries.custSpansCte},
       |risk AS (
       |  SELECT c_custkey,
       |    ntile(10) OVER (ORDER BY CAST(CAST(c_acctbal AS DECIMAL(18,2))
@@ -59,11 +55,7 @@ object ProfileQueries {
       |  ROUND((CAST(conc AS DOUBLE) + 0.5 * CAST(tied AS DOUBLE))
       |    / CAST(usable AS DOUBLE), 6) AS c_index
       |FROM pairs""".stripMargin) { (s, d) =>
-    val cust = t(s, d, "orders")
-      .groupBy("o_custkey")
-      .agg(min(col("o_orderdate").cast(DateType)).as("first_d"),
-        max(col("o_orderdate").cast(DateType)).as("last_d"))
-    val mx = cust.agg(max(col("last_d")).as("m"))
+    val (cust, mx) = AnalyticsQueries.custSpans(s, d)
     // GlobalRank takes plain ascending sort columns — DESC rides in as
     // the negated metric (the q_rfm convention)
     val (rankedRisk, nCust) = graft.plans.GlobalRank.withGlobalRowNumber(

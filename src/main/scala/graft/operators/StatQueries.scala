@@ -123,7 +123,7 @@ object StatQueries {
     * runs before trusting its own F-tests. */
   val qLevene = Q(
     "q_levene",
-    """-- ORACLE-SCALE SEMANTICS ONLY: past ApproxGate.pctRowThreshold base
+    s"""-- ORACLE-SCALE SEMANTICS ONLY: past ApproxGate.pctRowThreshold base
       |-- rows the Spark side switches to a mergeable approx_percentile
       |-- sketch; this exact form is what's compared at oracle scales.
       |WITH x AS (
@@ -138,20 +138,7 @@ object StatQueries {
       |    sum(CAST(z AS HUGEINT)) AS sg,
       |    sum(CAST(z AS HUGEINT) * z) AS qg
       |  FROM z GROUP BY prio),
-      |tot AS (
-      |  SELECT count(*) AS k, sum(ng) AS n, sum(sg) AS s,
-      |    sum(CAST(ROUND(CAST(sg * sg AS DOUBLE) / CAST(ng AS DOUBLE))
-      |        AS HUGEINT)) AS ssb_part,
-      |    sum(CAST(ROUND(CAST(ng * qg - sg * sg AS DOUBLE)
-      |        / CAST(ng AS DOUBLE)) AS HUGEINT)) AS ssw
-      |  FROM g),
-      |f AS (
-      |  SELECT k, n,
-      |    CAST(ssb_part AS DOUBLE)
-      |      - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / CAST(n AS DOUBLE)
-      |      AS ssb,
-      |    CAST(ssw AS DOUBLE) AS ssw
-      |  FROM tot)
+      |${AnalyticsQueries.anovaSumsSql}
       |SELECT CAST(k AS INT) AS k, CAST(n AS BIGINT) AS n,
       |  ROUND(ssb / (k - 1) / (ssw / (n - k)), 6) AS f_stat
       |FROM f""".stripMargin) { (s, d) =>
@@ -171,17 +158,7 @@ object StatQueries {
       count(lit(1)).cast(big38).as("ng"),
       sum(col("z").cast(big38)).as("sg"),
       sum(col("z").cast(big38) * col("z")).as("qg"))
-    val tot = g.agg(count(lit(1)).as("k"),
-      sum(col("ng")).as("n"), sum(col("sg")).as("s"),
-      sum(round((col("sg") * col("sg")).cast(DoubleType)
-        / col("ng").cast(DoubleType)).cast(big38)).as("ssb_part"),
-      sum(round((col("ng") * col("qg") - col("sg") * col("sg"))
-        .cast(DoubleType) / col("ng").cast(DoubleType)).cast(big38)).as("ssw"))
-    val f = tot.select(col("k"), col("n"),
-      (col("ssb_part").cast(DoubleType)
-        - col("s").cast(DoubleType) * col("s").cast(DoubleType)
-          / col("n").cast(DoubleType)).as("ssb"),
-      col("ssw").cast(DoubleType).as("ssw"))
+    val f = AnalyticsQueries.anovaSums(g)
     f.select(col("k").cast(IntegerType).as("k"),
       col("n").cast(LongType).as("n"),
       round(col("ssb") / (col("k") - 1)
@@ -406,14 +383,9 @@ object StatQueries {
       .orderBy("grp")
   }
 
-  /** Calendar-completeness audit per event type: expected days between
-    * the type's first and last event vs days actually observed — the
-    * "did ingestion silently skip days?" freshness check that catches
-    * holes a row-count monitor can't see. One scan, two exact date
-    * aggregates; no day-grid explode is needed because only the COUNT
-    * of missing days is reported, not the days themselves. */
-  val qMissingDays = Q(
-    "q_missing_days",
+  /** The q_missing_days oracle, also the oracle of its incremental
+    * twin q_stream_days. */
+  private[operators] val missingDaysSql =
     """WITH g AS (
       |  SELECT event_type, CAST(min(CAST(ts AS DATE)) AS DATE) AS d_min,
       |    CAST(max(CAST(ts AS DATE)) AS DATE) AS d_max,
@@ -427,22 +399,23 @@ object StatQueries {
       |  ROUND(CAST(days_observed AS DOUBLE)
       |    / CAST(date_diff('day', d_min, d_max) + 1 AS DOUBLE), 6)
       |    AS coverage
-      |FROM g ORDER BY event_type""".stripMargin) { (s, d) =>
+      |FROM g ORDER BY event_type""".stripMargin
+
+  /** Calendar-completeness audit per event type: expected days between
+    * the type's first and last event vs days actually observed — the
+    * "did ingestion silently skip days?" freshness check that catches
+    * holes a row-count monitor can't see. One scan, two exact date
+    * aggregates; no day-grid explode is needed because only the COUNT
+    * of missing days is reported, not the days themselves. */
+  val qMissingDays = Q(
+    "q_missing_days",
+    missingDaysSql) { (s, d) =>
     val g = t(s, d, "events")
       .select(col("event_type"), to_date(col("ts")).as("day"))
       .groupBy("event_type")
       .agg(min(col("day")).as("d_min"), max(col("day")).as("d_max"),
         countDistinct(col("day")).as("days_observed"))
-    g.select(col("event_type"), col("d_min"), col("d_max"),
-      (datediff(col("d_max"), col("d_min")) + 1).cast(LongType)
-        .as("days_expected"),
-      col("days_observed"),
-      ((datediff(col("d_max"), col("d_min")) + 1).cast(LongType)
-        - col("days_observed")).as("days_missing"),
-      round(col("days_observed").cast(DoubleType)
-        / (datediff(col("d_max"), col("d_min")) + 1).cast(DoubleType), 6)
-        .as("coverage"))
-      .orderBy("event_type")
+    graft.streaming.StreamOps.dayCoverage(g)
   }
 
   /** Degree assortativity of the thresholded co-purchase graph (the
@@ -454,14 +427,7 @@ object StatQueries {
     * cascade, and whether degree-based sampling is biased. */
   val qAssortativity = Q(
     "q_assortativity",
-    """WITH li AS (
-      |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-      |e AS (
-      |  SELECT pa AS src, pb AS dst FROM (
-      |    SELECT a.pk AS pa, b.pk AS pb, count(*) AS n_co
-      |    FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-      |    GROUP BY 1, 2) c
-      |  WHERE n_co >= 2),
+    s"""WITH ${PairStore.edgeCte()},
       |deg AS (
       |  SELECT v, count(*) AS deg FROM (
       |    SELECT src AS v FROM e UNION ALL SELECT dst FROM e) u
@@ -486,9 +452,7 @@ object StatQueries {
     // support ≥ 2 edges off the shared, checkpoint-backed PairStore
     // (n_dist = this query's distinct co-occurrence count); e feeds deg
     // (×2) and de (×2), each re-reading store blocks, not the fact join
-    val e = graft.operators.PairStore.pairStats(s, d)
-      .filter(col("n_dist") >= 2)
-      .select("src", "dst")
+    val e = PairStore.edges(s, d)
     val deg = e.select(col("src").as("v"))
       .unionByName(e.select(col("dst").as("v")))
       .groupBy("v").agg(count(lit(1)).as("deg"))
@@ -1616,38 +1580,13 @@ object StatQueries {
   /** Holm–Bonferroni step-DOWN correction over the same 25 per-nation
     * urgent-share z-tests as q_fdr_bh (FWER control vs BH's FDR — the
     * stricter family-wise guarantee for launch-blocking decisions).
-    * The panel repeats q_fdr_bh's construction: exact counts, one
-    * Zelen–Severo tail polynomial with identical op order, p quantized
-    * to integer p9 BEFORE ranking. Holm's stop-at-first-failure is the
+    * It reads q_fdr_bh's panel (`AnalyticsQueries.urgentZ`): exact
+    * counts, p quantized to integer p9 BEFORE ranking. Holm's stop-at-first-failure is the
     * running MIN of the per-rank flag p9·(m−rank+1) ≤ α·10⁹ over the
     * bounded 25-row panel — integer comparisons throughout. */
   val qHolmBonferroni = Q(
     "q_holm_bonferroni",
-    """WITH o AS (
-      |  SELECT n.n_name,
-      |    CASE WHEN o.o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS u
-      |  FROM orders o
-      |  JOIN customer c ON o.o_custkey = c.c_custkey
-      |  JOIN nation n ON c.c_nationkey = n.n_nationkey),
-      |pern AS (
-      |  SELECT n_name, count(*) AS n1, sum(u) AS u1 FROM o GROUP BY 1),
-      |tot AS (SELECT count(*) AS nt, sum(u) AS ut FROM o),
-      |zt AS (
-      |  SELECT n_name, n1, u1,
-      |    (CAST(u1 AS DOUBLE) / n1 - CAST(ut - u1 AS DOUBLE) / (nt - n1))
-      |      / sqrt(CAST(ut AS DOUBLE) / nt * (1 - CAST(ut AS DOUBLE) / nt)
-      |        * (1.0 / n1 + 1.0 / (nt - n1))) AS z
-      |  FROM pern, tot),
-      |pv AS (
-      |  SELECT n_name, n1, u1, z,
-      |    CAST(ROUND(2 * (exp(-abs(z) * abs(z) / 2) * 0.3989422804014327
-      |      * ((((1.330274429 * (1 / (1 + 0.2316419 * abs(z)))
-      |        - 1.821255978) * (1 / (1 + 0.2316419 * abs(z)))
-      |        + 1.781477937) * (1 / (1 + 0.2316419 * abs(z)))
-      |        - 0.356563782) * (1 / (1 + 0.2316419 * abs(z)))
-      |        + 0.319381530) * (1 / (1 + 0.2316419 * abs(z))))
-      |      * 1000000000) AS BIGINT) AS p9
-      |  FROM zt),
+    s"""WITH ${AnalyticsQueries.urgentZCte()},
       |rk AS (
       |  SELECT *, row_number() OVER (ORDER BY p9, n_name) AS rank,
       |    count(*) OVER () AS m
@@ -1663,32 +1602,7 @@ object StatQueries {
       |  CAST(min(ok) OVER (ORDER BY rank
       |    ROWS UNBOUNDED PRECEDING) AS INT) AS rejected
       |FROM fl ORDER BY p_rank, n_name""".stripMargin) { (s, d) =>
-    val o = t(s, d, "orders")
-      .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(t(s, d, "nation")),
-        col("c_nationkey") === col("n_nationkey"))
-      .select(col("n_name"),
-        when(col("o_orderpriority") === "1-URGENT", 1L).otherwise(0L)
-          .as("u"))
-    val pern = o.groupBy("n_name")
-      .agg(count(lit(1)).as("n1"), sum(col("u")).as("u1"))
-    val tot = o.agg(count(lit(1)).as("nt"), sum(col("u")).as("ut"))
-    val zt = pern.crossJoin(broadcast(tot))
-      .withColumn("z",
-        (col("u1").cast(DoubleType) / col("n1")
-          - (col("ut") - col("u1")).cast(DoubleType)
-            / (col("nt") - col("n1")))
-        / sqrt(col("ut").cast(DoubleType) / col("nt")
-          * (lit(1) - col("ut").cast(DoubleType) / col("nt"))
-          * (lit(1.0) / col("n1") + lit(1.0) / (col("nt") - col("n1")))))
-    val tcol = lit(1) / (lit(1) + lit(0.2316419) * abs(col("z")))
-    val tail = exp(-abs(col("z")) * abs(col("z")) / 2)
-      .multiply(lit(0.3989422804014327))
-      .multiply(((((lit(1.330274429) * tcol - lit(1.821255978)) * tcol
-        + lit(1.781477937)) * tcol - lit(0.356563782)) * tcol
-        + lit(0.319381530)) * tcol)
-    val pv = zt.withColumn("p9",
-      round(lit(2) * tail * 1000000000L).cast(LongType))
+    val pv = AnalyticsQueries.urgentZ(s, d)
     val wRank = org.apache.spark.sql.expressions.Window
       .orderBy("p9", "n_name")
     val wAll = org.apache.spark.sql.expressions.Window.partitionBy()
@@ -2002,14 +1916,7 @@ object StatQueries {
     * φ is one final division per k row. */
   val qRichClub = Q(
     "q_rich_club",
-    """WITH li AS (
-      |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-      |e AS (
-      |  SELECT pa AS src, pb AS dst FROM (
-      |    SELECT a.pk AS pa, b.pk AS pb, count(*) AS n_co
-      |    FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-      |    GROUP BY 1, 2) c
-      |  WHERE n_co >= 2),
+    s"""WITH ${PairStore.edgeCte()},
       |deg AS (
       |  SELECT v, count(*) AS deg FROM (
       |    SELECT src AS v FROM e UNION ALL SELECT dst FROM e) u
@@ -2032,9 +1939,7 @@ object StatQueries {
       |FROM nk LEFT JOIN ek ON nk.k = ek.k
       |ORDER BY nk.k""".stripMargin) { (s, d) =>
     // support ≥ 2 edges off the shared, checkpoint-backed PairStore
-    val e = PairStore.pairStats(s, d)
-      .filter(col("n_dist") >= 2)
-      .select("src", "dst")
+    val e = PairStore.edges(s, d)
     val deg = e.select(col("src").as("v"))
       .unionByName(e.select(col("dst").as("v")))
       .groupBy("v").agg(count(lit(1)).as("deg"))
@@ -2183,7 +2088,7 @@ object StatQueries {
     * bounded split row; the rejection rate is an exact fraction. */
   val qAaCalibration = Q(
     "q_aa_calibration",
-    """WITH sp AS (SELECT unnest(range(0, 50)) AS r),
+    s"""WITH sp AS (SELECT unnest(range(0, 50)) AS r),
       |x AS (
       |  SELECT sp.r,
       |    CAST(concat('0x', substr(md5(concat(o_orderkey, ':', sp.r)),
@@ -2206,13 +2111,7 @@ object StatQueries {
       |  FROM g),
       |pv AS (
       |  SELECT r, z,
-      |    CAST(ROUND(2 * (exp(-abs(z) * abs(z) / 2) * 0.3989422804014327
-      |      * ((((1.330274429 * (1 / (1 + 0.2316419 * abs(z)))
-      |        - 1.821255978) * (1 / (1 + 0.2316419 * abs(z)))
-      |        + 1.781477937) * (1 / (1 + 0.2316419 * abs(z)))
-      |        - 0.356563782) * (1 / (1 + 0.2316419 * abs(z)))
-      |        + 0.319381530) * (1 / (1 + 0.2316419 * abs(z))))
-      |      * 1000000000) AS BIGINT) AS p9
+      |    ${pValue9Sql("z")} AS p9
       |  FROM zt)
       |SELECT count(*) AS n_splits,
       |  CAST(sum(CASE WHEN p9 < 50000000 THEN 1 ELSE 0 END) AS BIGINT)
@@ -2245,14 +2144,7 @@ object StatQueries {
           * (lit(1) - (col("ua") + col("ub")).cast(DoubleType)
             / (col("na") + col("nb")))
           * (lit(1.0) / col("na") + lit(1.0) / col("nb")))).as("z"))
-    val tcol = lit(1) / (lit(1) + lit(0.2316419) * abs(col("z")))
-    val tail = exp(-abs(col("z")) * abs(col("z")) / 2)
-      .multiply(lit(0.3989422804014327))
-      .multiply(((((lit(1.330274429) * tcol - lit(1.821255978)) * tcol
-        + lit(1.781477937)) * tcol - lit(0.356563782)) * tcol
-        + lit(0.319381530)) * tcol)
-    val pv = zt.withColumn("p9",
-      round(lit(2) * tail * 1000000000L).cast(LongType))
+    val pv = zt.withColumn("p9", pValue9(col("z")))
     pv.agg(count(lit(1)).as("n_splits"),
         sum(when(col("p9") < 50000000L, 1L).otherwise(0L)).as("nr"),
         sum(round(abs(col("z")) * 1000000L).cast(LongType)).as("az6"))
@@ -2513,11 +2405,7 @@ object StatQueries {
     * nA·nB·Σc·s²/(n(n−1)), one final z. */
   val qGehanWilcoxon = Q(
     "q_gehan_wilcoxon",
-    """WITH cust AS (
-      |  SELECT o_custkey, MIN(CAST(o_orderdate AS DATE)) AS first_d,
-      |    MAX(CAST(o_orderdate AS DATE)) AS last_d
-      |  FROM orders GROUP BY 1),
-      |mx AS (SELECT MAX(last_d) AS m FROM cust),
+    s"""WITH ${AnalyticsQueries.custSpansCte},
       |obs AS (
       |  SELECT datediff('day', first_d, last_d) // 30 AS tm,
       |    CASE WHEN datediff('day', last_d, m) > 60 THEN 1 ELSE 0 END
@@ -2554,11 +2442,7 @@ object StatQueries {
       |      / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1)))) > 1.96
       |    THEN 1 ELSE 0 END AS significant
       |FROM ag""".stripMargin) { (s, d) =>
-    val cust = t(s, d, "orders")
-      .groupBy("o_custkey")
-      .agg(min(col("o_orderdate").cast(DateType)).as("first_d"),
-        max(col("o_orderdate").cast(DateType)).as("last_d"))
-    val mx = cust.agg(max(col("last_d")).as("m"))
+    val (cust, mx) = AnalyticsQueries.custSpans(s, d)
     val obs = cust
       .join(broadcast(t(s, d, "customer")
         .select("c_custkey", "c_mktsegment")),
@@ -2752,31 +2636,7 @@ object StatQueries {
     * DECIMAL(38) integers (c9 itself is an exact Σ(10⁹ DIV i) sum). */
   val qBenjaminiYekutieli = Q(
     "q_benjamini_yekutieli",
-    """WITH o AS (
-      |  SELECT n.n_name,
-      |    CASE WHEN o.o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS u
-      |  FROM orders o
-      |  JOIN customer c ON o.o_custkey = c.c_custkey
-      |  JOIN nation n ON c.c_nationkey = n.n_nationkey),
-      |pern AS (
-      |  SELECT n_name, count(*) AS n1, sum(u) AS u1 FROM o GROUP BY 1),
-      |tot AS (SELECT count(*) AS nt, sum(u) AS ut FROM o),
-      |zt AS (
-      |  SELECT n_name, n1, u1,
-      |    (CAST(u1 AS DOUBLE) / n1 - CAST(ut - u1 AS DOUBLE) / (nt - n1))
-      |      / sqrt(CAST(ut AS DOUBLE) / nt * (1 - CAST(ut AS DOUBLE) / nt)
-      |        * (1.0 / n1 + 1.0 / (nt - n1))) AS z
-      |  FROM pern, tot),
-      |pv AS (
-      |  SELECT n_name, n1, u1, z,
-      |    CAST(ROUND(2 * (exp(-abs(z) * abs(z) / 2) * 0.3989422804014327
-      |      * ((((1.330274429 * (1 / (1 + 0.2316419 * abs(z)))
-      |        - 1.821255978) * (1 / (1 + 0.2316419 * abs(z)))
-      |        + 1.781477937) * (1 / (1 + 0.2316419 * abs(z)))
-      |        - 0.356563782) * (1 / (1 + 0.2316419 * abs(z)))
-      |        + 0.319381530) * (1 / (1 + 0.2316419 * abs(z))))
-      |      * 1000000000) AS BIGINT) AS p9
-      |  FROM zt),
+    s"""WITH ${AnalyticsQueries.urgentZCte()},
       |rk AS (
       |  SELECT *, row_number() OVER (ORDER BY p9, n_name) AS rank,
       |    count(*) OVER () AS m
@@ -2795,32 +2655,7 @@ object StatQueries {
       |  CAST(rank AS BIGINT) AS p_rank,
       |  CASE WHEN rank <= max_rank THEN 1 ELSE 0 END AS rejected_by
       |FROM cut ORDER BY p_rank, n_name""".stripMargin) { (s, d) =>
-    val o = t(s, d, "orders")
-      .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(t(s, d, "nation")),
-        col("c_nationkey") === col("n_nationkey"))
-      .select(col("n_name"),
-        when(col("o_orderpriority") === "1-URGENT", 1L).otherwise(0L)
-          .as("u"))
-    val pern = o.groupBy("n_name")
-      .agg(count(lit(1)).as("n1"), sum(col("u")).as("u1"))
-    val tot = o.agg(count(lit(1)).as("nt"), sum(col("u")).as("ut"))
-    val zt = pern.crossJoin(broadcast(tot))
-      .withColumn("z",
-        (col("u1").cast(DoubleType) / col("n1")
-          - (col("ut") - col("u1")).cast(DoubleType)
-            / (col("nt") - col("n1")))
-          / sqrt(col("ut").cast(DoubleType) / col("nt")
-            * (lit(1) - col("ut").cast(DoubleType) / col("nt"))
-            * (lit(1.0) / col("n1") + lit(1.0)
-              / (col("nt") - col("n1")))))
-    val az = abs(col("z"))
-    val tAs = lit(1) / (lit(1) + lit(0.2316419) * az)
-    val pv = zt.withColumn("p9",
-      round(lit(2) * (exp(-az * az / 2) * lit(0.3989422804014327)
-        * ((((lit(1.330274429) * tAs - lit(1.821255978)) * tAs
-          + lit(1.781477937)) * tAs - lit(0.356563782)) * tAs
-          + lit(0.319381530)) * tAs) * 1000000000L).cast(LongType))
+    val pv = AnalyticsQueries.urgentZ(s, d)
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("p9"), col("n_name"))
     val rk = pv

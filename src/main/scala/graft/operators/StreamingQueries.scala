@@ -431,20 +431,7 @@ object StreamingQueries {
     * whole-history recompute (the q_missing_days oracle shape). */
   val qStreamDays = Q(
     "q_stream_days",
-    """WITH g AS (
-      |  SELECT event_type, CAST(min(CAST(ts AS DATE)) AS DATE) AS d_min,
-      |    CAST(max(CAST(ts AS DATE)) AS DATE) AS d_max,
-      |    count(DISTINCT CAST(ts AS DATE)) AS days_observed
-      |  FROM events GROUP BY event_type)
-      |SELECT event_type, d_min, d_max,
-      |  date_diff('day', d_min, d_max) + 1 AS days_expected,
-      |  days_observed,
-      |  date_diff('day', d_min, d_max) + 1 - days_observed
-      |    AS days_missing,
-      |  ROUND(CAST(days_observed AS DOUBLE)
-      |    / CAST(date_diff('day', d_min, d_max) + 1 AS DOUBLE), 6)
-      |    AS coverage
-      |FROM g ORDER BY event_type""".stripMargin) { (s, d) =>
+    StatQueries.missingDaysSql) { (s, d) =>
     StreamOps.incrementalDayCoverage(s, d,
       s"target/stream_days_${math.abs(d.hashCode)}")
   }

@@ -522,18 +522,23 @@ object StreamOps {
   /** q_missing_days finalization off a (event_type, day, cnt) state
     * table: bounded |types|×|days| domain, exact date arithmetic. */
   def dayCoverageFromState(state: DataFrame): DataFrame =
-    state.groupBy("event_type")
+    dayCoverage(state.groupBy("event_type")
       .agg(min(col("day")).as("d_min"), max(col("day")).as("d_max"),
-        count(lit(1)).as("days_observed"))
-      .select(col("event_type"), col("d_min"), col("d_max"),
-        (datediff(col("d_max"), col("d_min")) + 1).cast(LongType)
-          .as("days_expected"),
-        col("days_observed"),
-        ((datediff(col("d_max"), col("d_min")) + 1).cast(LongType)
-          - col("days_observed")).as("days_missing"),
-        round(col("days_observed").cast(DoubleType)
-          / (datediff(col("d_max"), col("d_min")) + 1).cast(DoubleType), 6)
-          .as("coverage"))
+        count(lit(1)).as("days_observed")))
+
+  /** Per event type (event_type, d_min, d_max, days_observed), the
+    * calendar coverage q_missing_days reports: expected days, missing
+    * days and the observed share, ordered by event type. */
+  def dayCoverage(g: DataFrame): DataFrame =
+    g.select(col("event_type"), col("d_min"), col("d_max"),
+      (datediff(col("d_max"), col("d_min")) + 1).cast(LongType)
+        .as("days_expected"),
+      col("days_observed"),
+      ((datediff(col("d_max"), col("d_min")) + 1).cast(LongType)
+        - col("days_observed")).as("days_missing"),
+      round(col("days_observed").cast(DoubleType)
+        / (datediff(col("d_max"), col("d_min")) + 1).cast(DoubleType), 6)
+        .as("coverage"))
       .orderBy("event_type")
 
   /** Incremental first-seen attribution per user: the state is each
@@ -821,9 +826,9 @@ object StreamOps {
     * running-max state composes exactly and the maintained histogram is
     * batch-boundary-independent, equal to the one-shot recompute (the
     * q_watermark_plan semantics). A 100 TB feed keeps its watermark
-    * sizing current digesting only each day's tail. Its state has two
-    * parts per version (v<id>/hist, v<id>/umax), so it runs its own copy
-    * of the `foldState` loop. */
+    * sizing current digesting only each day's tail. One state version
+    * holds both parts: histogram rows (event_type, bucket_s, c) and
+    * per-user max rows (user_id, smax), the latter with a null `c`. */
   def incrementalWatermark(spark: SparkSession, sfDir: String,
       workDir: String, nBatches: Int = 4): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -836,23 +841,18 @@ object StreamOps {
     val stream = sliceStream(spark, sfDir, nBatches)._1
       .select(col("event_id"), col("user_id"), col("event_type"),
         (unix_micros(col("ts")) - delay).as("us"))
-    val stateBase = s"$workDir/state"
-    @volatile var version = -1L
-    // each part is read back with the schema it was written with, as in
-    // `foldState`: a read that infers it runs a footer job per version
-    @volatile var written = Map.empty[String, StructType]
-    def read(v: Long, part: String): DataFrame =
-      spark.read.schema(written(part)).parquet(s"$stateBase/v$v/$part")
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    def hist(state: DataFrame): DataFrame =
+      state.filter(col("c").isNotNull).select("event_type", "bucket_s", "c")
+    def umax(state: DataFrame): DataFrame =
+      state.filter(col("c").isNull).select("user_id", "smax")
+    watermarkPlanFromHistogram(hist(foldState(stream, workDir) {
+      (batch, prev) =>
         val bw = Window.partitionBy("user_id").orderBy("event_id")
           .rowsBetween(Window.unboundedPreceding, -1)
         val withPrev = batch.withColumn("bprev", max(col("us")).over(bw))
-        val joined =
-          if (version < 0) withPrev.withColumn("smax",
-            lit(null).cast(LongType))
-          else withPrev.join(read(version, "umax"), Seq("user_id"), "left")
+        val joined = prev.fold(withPrev.withColumn("smax",
+          lit(null).cast(LongType)))(p =>
+          withPrev.join(umax(p), Seq("user_id"), "left"))
         val prevmax = greatest(
           coalesce(col("bprev"), lit(Long.MinValue)),
           coalesce(col("smax"), lit(Long.MinValue)))
@@ -863,30 +863,17 @@ object StreamOps {
             latenessBucket(expr("(pm - us) DIV 1000000")).as("bucket_s"))
         val partialHist = late.groupBy("event_type", "bucket_s")
           .agg(count(lit(1)).as("c"))
-        val mergedHist =
-          if (version < 0) partialHist
-          else read(version, "hist")
-            .unionByName(partialHist)
-            .groupBy("event_type", "bucket_s")
-            .agg(sum(col("c")).cast(LongType).as("c"))
         val partialMax = batch.groupBy("user_id")
           .agg(max(col("us")).as("smax"))
-        val mergedMax =
-          if (version < 0) partialMax
-          else read(version, "umax")
-            .unionByName(partialMax)
-            .groupBy("user_id").agg(max(col("smax")).as("smax"))
-        mergedHist.write.mode("overwrite")
-          .parquet(s"$stateBase/v$batchId/hist")
-        mergedMax.write.mode("overwrite")
-          .parquet(s"$stateBase/v$batchId/umax")
-        version = batchId
-        written = Map("hist" -> mergedHist.schema, "umax" -> mergedMax.schema)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    watermarkPlanFromHistogram(read(version, "hist"))
+        val mergedHist = prev.fold(partialHist)(p => hist(p)
+          .unionByName(partialHist)
+          .groupBy("event_type", "bucket_s")
+          .agg(sum(col("c")).cast(LongType).as("c")))
+        val mergedMax = prev.fold(partialMax)(p => umax(p)
+          .unionByName(partialMax)
+          .groupBy("user_id").agg(max(col("smax")).as("smax")))
+        mergedHist.unionByName(mergedMax, allowMissingColumns = true)
+    }))
   }
 
   /** Incremental sessionization maintainer (13th incremental

@@ -320,6 +320,52 @@ class MfSpec extends SparkTestBase {
     val g2 = Baseline.groupUnfairness(pred, cust, "MACHINERY", "BUILDING")
       .head().getDouble(0)
     assert(g1 == g2) // symmetric under group swap
+
+    // The §3 metrics on a small fully observed matrix, 3 users × 2 items,
+    // scored by a rank-1 model with user factors (1, 2, 3) and item
+    // factors (1, 2), so p(u, i) = u·v:
+    //   user  ratings  predictions  squared errors  ℓ_u  group
+    //   1     (1, 3)   (1, 2)       (0, 1)          1/2  BUILDING
+    //   2     (2, 4)   (2, 4)       (0, 0)          0    BUILDING
+    //   3     (5, 6)   (3, 6)       (4, 0)          2    MACHINERY
+    // RMSE = √((0 + 1 + 0 + 0 + 4 + 0) / 6) = √(5/6) ≈ 0.912871.
+    // Polarization = mean over items of the across-user variance of p:
+    //   item 1: var(1, 2, 3) = 2/3; item 2: var(2, 4, 6) = 8/3; mean 5/3.
+    // U_ind = var(1/2, 0, 2) = (1/4 + 0 + 4)/3 − (5/6)² = 13/18.
+    // U_grp = |mean(1/2, 0) − mean(2)| = |1/4 − 2| = 7/4.
+    // Every cell is observed, so the known-cell polarization (Baseline)
+    // and the all-pairs closed form (Antidote) agree.
+    val (rmse, pol, uInd, uGrp) =
+      (math.sqrt(5.0 / 6), 5.0 / 3, 13.0 / 18, 7.0 / 4)
+    def round6(x: Double): Double =
+      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val ratings = Seq((1L, 1L, 1.0), (1L, 2L, 3.0), (2L, 1L, 2.0),
+      (2L, 2L, 4.0), (3L, 1L, 5.0), (3L, 2L, 6.0))
+      .toDF("user_id", "item_id", "rating")
+    val model = org.apache.spark.ml.recommendation.ToyAlsModel(1,
+      Seq((1, Seq(1f)), (2, Seq(2f)), (3, Seq(3f))).toDF("id", "features"),
+      Seq((1, Seq(1f)), (2, Seq(2f))).toDF("id", "features"))
+    val segs = Seq((1L, "BUILDING"), (2L, "BUILDING"), (3L, "MACHINERY"))
+    val scored = AlsEngine.predictKnown(model, ratings)
+    def one(df: org.apache.spark.sql.DataFrame): Double =
+      df.head().getDouble(0)
+    assert(one(Baseline.rmse(scored)) == round6(rmse))
+    assert(one(Baseline.polarization(scored)) == round6(pol))
+    assert(one(Baseline.individualUnfairness(scored)) == round6(uInd))
+    assert(one(Baseline.groupUnfairness(scored,
+      segs.toDF("c_custkey", "c_mktsegment"), "BUILDING", "MACHINERY"))
+      == round6(uGrp))
+
+    val loss = Antidote.evaluateModel(model, ratings,
+      Metric.GroupUnfairness(segs.toDF("user_id", "grp"),
+        "BUILDING", "MACHINERY"), None).loss
+    assert(math.abs(loss.rmse - rmse) < 1e-12, s"rmse ${loss.rmse}")
+    assert(loss.rmse6 == round6(rmse))
+    assert(math.abs(loss.indUnfairness - uInd) < 1e-12,
+      s"U_ind ${loss.indUnfairness}")
+    assert(math.abs(loss.grpUnfairness - uGrp) < 1e-12,
+      s"U_grp ${loss.grpUnfairness}")
+    assert(math.abs(Antidote.polarization(model) - pol) < 1e-9)
   }
 
   test("antidote rating formula lands in [1,5] for any non-negative ids") {
