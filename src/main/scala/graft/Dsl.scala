@@ -14,6 +14,20 @@ object Dsl {
     * At 100 TB this is also what makes partial/final agg merge exact. */
   def dec2(c: Column): Column = c.cast(DecimalType(18, 2))
 
+  /** A price in exact integer cents: DECIMAL(18,2) × 100 as BIGINT. */
+  def priceCents(price: Column): Column = (dec2(price) * 100).cast(LongType)
+
+  /** DuckDB twin of [[priceCents]] over the SQL column `price`. */
+  def priceCentsSql(price: String): String =
+    s"CAST(CAST($price AS DECIMAL(18,2)) * 100 AS BIGINT)"
+
+  /** Total `o_totalprice` in cents: the exact decimal sum, cast once. */
+  def sumCents: Column = sum(dec2(col("o_totalprice")) * 100).cast(LongType)
+
+  /** DuckDB twin of [[sumCents]]. */
+  val sumCentsSql: String =
+    "CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)"
+
   /** Final-output form of an exact decimal aggregate: the math stays
     * decimal (exact, merge-order-independent) but the OUTPUT column is
     * DOUBLE. The round-1 driver hashed DECIMAL output columns differently

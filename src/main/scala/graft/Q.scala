@@ -20,6 +20,12 @@ object Q {
       run: (SparkSession, String) => DataFrame): Q =
     Q(name, run, Some(oracle))
 
+  /** A SQL-only surface (ROLLUP with GROUPING, GROUPING SETS, LATERAL,
+    * correlated subqueries): Spark runs the oracle text itself over the
+    * registered tables, so one string serves both engines. */
+  def sql(name: String, text: String): Q =
+    Q(name, text) { (s, d) => Tables.registerAll(s, d); s.sql(text) }
+
   /** Non-SQL-expressible operator: rows-only check by the driver, semantic
     * coverage lives in the ScalaTest suite instead. */
   def noOracle(name: String)(run: (SparkSession, String) => DataFrame): Q =

@@ -38,6 +38,15 @@ object Clustering {
        |    ${sqDistSql("e.v", "c.cv")} AS d2
        |  FROM e CROSS JOIN c)""".stripMargin
 
+  /** DuckDB twin of [[assign]]'s argmin: the CTE `name` (vec_id, `keep`
+    * columns, rk) ranking the centroids of the [[sqDistCte]] `dist` per
+    * point by (d2, cid), so rk = 1 is the point's cluster. */
+  def nearestCte(name: String, dist: String, keep: String): String =
+    s"""$name AS (
+       |  SELECT vec_id, $keep,
+       |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rk
+       |  FROM $dist)""".stripMargin
+
   /** Nearest-centroid assignment. `points` must carry (`idCol`, `vecCol`)
     * plus any pass-through columns; `centroids` carries (`cid`, `cvec`).
     * Returns the points' non-vector columns plus (`cluster`, `d2`).
@@ -53,6 +62,18 @@ object Clustering {
       .select(keep :+ col("m").getField("cid").as("cluster") :+
         col("m").getField("graft_d2").as("d2"): _*)
   }
+
+  /** The points of `points` (vec_id, v) with vec_id < k as centroids
+    * (cid, cvec): the fixed seeds the one-pass k-means queries assign
+    * to. */
+  def lowIdCentroids(points: DataFrame, k: Int): DataFrame =
+    points.filter(col("vec_id") < k)
+      .select(col("vec_id").as("cid"), col("v").as("cvec"))
+
+  /** DuckDB twin of [[lowIdCentroids]]: the CTE `c` (cid, cv) over the
+    * relation `src` (vec_id, v). */
+  def lowIdCentroidsCte(src: String, k: Int): String =
+    s"c AS (SELECT vec_id AS cid, v AS cv FROM $src WHERE vec_id < $k)"
 
   /** Deterministic seed centroids: the k lowest-id points. */
   def seedCentroids(points: DataFrame, idCol: String, vecCol: String,

@@ -503,7 +503,7 @@ object Dedup {
     val eb = embs.select(col("vec_id").as("vec_b"), col("embedding").as("eb"))
     cand.join(ea, "vec_a").join(eb, "vec_b")
       .select(col("vec_a"), col("vec_b"),
-        round(VectorFunctions.cosine(col("ea"), col("eb")), 4).as("cos"))
+        VectorFunctions.cosine4(col("ea"), col("eb")).as("cos"))
       .filter(col("cos") >= minCos)
   }
 
@@ -516,7 +516,7 @@ object Dedup {
         col("a.bucket") === col("b.bucket") &&
           col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        round(VectorFunctions.cosine(col("a.embedding"), col("b.embedding")), 4).as("cos"))
+        VectorFunctions.cosine4(col("a.embedding"), col("b.embedding")).as("cos"))
       .filter(col("cos") >= minCos)
   }
 }

@@ -116,6 +116,13 @@ object ShingleStore {
     spark.table(table)
   }
 
+  /** DuckDB twin of [[distinct]] over the SQL relation `src` (doc_id,
+    * text): the distinct k-char shingles at positions 1 … maxPos. */
+  def distinctSql(src: String, k: Int, maxPos: Int): String =
+    s"""SELECT DISTINCT doc_id, substr(text, p, $k) AS shingle
+       |  FROM $src, generate_series(1, $maxPos) t(p)
+       |  WHERE p <= greatest(length(text) - ${k - 1}, 1)""".stripMargin
+
   /** Distinct (doc_id, shingle) pairs — the counted frame minus `c`. */
   def distinct(spark: SparkSession, sfDir: String, k: Int,
       maxPos: Int): DataFrame =

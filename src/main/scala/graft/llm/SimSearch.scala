@@ -3,6 +3,7 @@ package graft.llm
 import graft.functions.VectorFunctions
 import graft.functions.VectorFunctions.dot
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -31,10 +32,29 @@ object SimSearch {
     * (score DESC, vec_id ASC). */
   private def cosineTop(cand: DataFrame, k: Int): DataFrame =
     cand.select(col("vec_id"),
-        round(VectorFunctions.cosine(col("embedding"), col("probe_e")), 4)
+        VectorFunctions.cosine4(col("embedding"), col("probe_e"))
           .as("score"))
       .orderBy(col("score").desc, col("vec_id"))
       .limit(k)
+
+  /** The probe rows `keep` selects from `embs`, as (qid, q_label, q_e):
+    * the panel a many-probe retrieval evaluation scores the corpus
+    * against. */
+  def probePanel(embs: DataFrame, keep: Column): DataFrame =
+    embs.filter(keep)
+      .select(col("vec_id").as("qid"), col("label").as("q_label"),
+        col("embedding").as("q_e"))
+
+  /** Each probe's candidates in rank order: the 4-dp cosine `score`
+    * descending, then vec_id. */
+  def byScore: WindowSpec =
+    Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id"))
+
+  /** DuckDB twin of `row_number()` over [[byScore]], for probes `q` and
+    * candidates `e` with vectors `v`. */
+  def probeRankSql: String =
+    s"""row_number() OVER (PARTITION BY q.vec_id
+       |      ORDER BY ${VectorFunctions.cosine4Sql("q.v", "e.v")} DESC, e.vec_id)""".stripMargin
 
   /** IVF-style approximate top-k: search only the probe's sign bucket. */
   def bucketedTopK(embs: DataFrame, probeId: Long, k: Int): DataFrame = {

@@ -37,6 +37,18 @@ object TextOps {
       .when(vr > 0.28, "de").otherwise("zh")
   }
 
+  /** DuckDB twin of [[predictedLang]] as a query: (lang, predicted) per
+    * document. */
+  val predictedLangSql: String =
+    """SELECT lang,
+      |    CASE WHEN vr > 0.34 THEN 'es' WHEN vr > 0.32 THEN 'en'
+      |         WHEN vr > 0.30 THEN 'fr' WHEN vr > 0.28 THEN 'de'
+      |         ELSE 'zh' END AS predicted
+      |  FROM (SELECT lang,
+      |          CAST(length(text) - length(translate(text, 'aeiou', ''))
+      |               AS DOUBLE) / length(text) AS vr
+      |        FROM documents) v""".stripMargin
+
   /** Confusion counts of the heuristic vs the labeled lang column. */
   def langIdConfusion(docs: DataFrame): DataFrame =
     docs.select(col("lang"), predictedLang(col("text")).as("predicted"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.Q
 import graft.Dsl._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -86,7 +86,11 @@ object Aggregates {
       .orderBy("c_mktsegment")
   }
 
-  val qAggRollup = Q(
+  /** ROLLUP with GROUPING(): the DataFrame-API rollup + grouping() trips
+    * Spark's ambiguous-self-join heuristic on the Expand output; the SQL
+    * form builds the identical plan (Expand + HashAggregate) and
+    * resolves cleanly. */
+  val qAggRollup = Q.sql(
     "q_agg_rollup",
     """SELECT r_name, n_name,
       |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
@@ -97,26 +101,7 @@ object Aggregates {
       |JOIN nation ON c_nationkey = n_nationkey
       |JOIN region ON n_regionkey = r_regionkey
       |GROUP BY ROLLUP(r_name, n_name)
-      |ORDER BY g_r, g_n, r_name NULLS FIRST, n_name NULLS FIRST""".stripMargin) {
-    (s, d) => {
-      // DataFrame-API rollup + grouping() trips Spark's ambiguous-self-join
-      // heuristic on the Expand output; the SQL form builds the identical
-      // plan (Expand + HashAggregate) and resolves cleanly.
-      Tables.registerAll(s, d)
-      s.sql("""SELECT r_name, n_name,
-              |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-              |    AS revenue,
-              |  CAST(GROUPING(r_name) AS INT) AS g_r,
-              |  CAST(GROUPING(n_name) AS INT) AS g_n
-              |FROM orders
-              |JOIN customer ON o_custkey = c_custkey
-              |JOIN nation ON c_nationkey = n_nationkey
-              |JOIN region ON n_regionkey = r_regionkey
-              |GROUP BY ROLLUP(r_name, n_name)
-              |ORDER BY g_r, g_n, r_name NULLS FIRST, n_name NULLS FIRST
-              |""".stripMargin)
-    }
-  }
+      |ORDER BY g_r, g_n, r_name NULLS FIRST, n_name NULLS FIRST""".stripMargin)
 
   val qAggCube = Q(
     "q_agg_cube",
@@ -273,7 +258,7 @@ object Aggregates {
 
   /** GROUPING SETS (beyond rollup/cube): SQL-only surface in Spark, same
     * Expand-based plan. */
-  val qAggGroupingSets = Q(
+  val qAggGroupingSets = Q.sql(
     "q_agg_grouping_sets",
     """SELECT o_orderstatus, o_orderpriority, count(*) AS cnt,
       |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
@@ -283,22 +268,11 @@ object Aggregates {
       |FROM orders
       |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
       |ORDER BY g_s, g_p, o_orderstatus NULLS FIRST,
-      |  o_orderpriority NULLS FIRST""".stripMargin) { (s, d) =>
-    Tables.registerAll(s, d)
-    s.sql("""SELECT o_orderstatus, o_orderpriority, count(*) AS cnt,
-            |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-            |    AS revenue,
-            |  CAST(GROUPING(o_orderstatus) AS INT) AS g_s,
-            |  CAST(GROUPING(o_orderpriority) AS INT) AS g_p
-            |FROM orders
-            |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-            |ORDER BY g_s, g_p, o_orderstatus NULLS FIRST,
-            |  o_orderpriority NULLS FIRST""".stripMargin)
-  }
+      |  o_orderpriority NULLS FIRST""".stripMargin)
 
   /** Correlated scalar subquery — Catalyst decorrelates it into a join
     * (RewriteCorrelatedScalarSubquery), so execution stays set-based. */
-  val qSubqueryScalar = Q(
+  val qSubqueryScalar = Q.sql(
     "q_subquery_scalar",
     """SELECT o_orderkey, o_totalprice, cust_avg FROM (
       |  SELECT o_orderkey, o_totalprice,
@@ -307,31 +281,15 @@ object Aggregates {
       |     FROM orders o2 WHERE o2.o_custkey = o1.o_custkey) AS cust_avg
       |  FROM orders o1) q
       |WHERE o_totalprice > 1.5 * cust_avg
-      |ORDER BY o_orderkey""".stripMargin) { (s, d) =>
-    Tables.registerAll(s, d)
-    s.sql("""SELECT o_orderkey, o_totalprice, cust_avg FROM (
-            |  SELECT o_orderkey, o_totalprice,
-            |    (SELECT ROUND(CAST(SUM(CAST(o2.o_totalprice AS DECIMAL(18,2)))
-            |                       AS DOUBLE) / count(*), 6)
-            |     FROM orders o2 WHERE o2.o_custkey = o1.o_custkey) AS cust_avg
-            |  FROM orders o1) q
-            |WHERE o_totalprice > 1.5 * cust_avg
-            |ORDER BY o_orderkey""".stripMargin)
-  }
+      |ORDER BY o_orderkey""".stripMargin)
 
   /** IN-subquery — rewritten to a left-semi join (RewritePredicateSubquery). */
-  val qSubqueryIn = Q(
+  val qSubqueryIn = Q.sql(
     "q_subquery_in",
     """SELECT c_custkey, c_name FROM customer
       |WHERE c_custkey IN
       |  (SELECT o_custkey FROM orders WHERE o_totalprice > 300000)
-      |ORDER BY c_custkey""".stripMargin) { (s, d) =>
-    Tables.registerAll(s, d)
-    s.sql("""SELECT c_custkey, c_name FROM customer
-            |WHERE c_custkey IN
-            |  (SELECT o_custkey FROM orders WHERE o_totalprice > 300000)
-            |ORDER BY c_custkey""".stripMargin)
-  }
+      |ORDER BY c_custkey""".stripMargin)
 
   val qOrderbyLimit = Q(
     "q_orderby_limit",

@@ -268,14 +268,7 @@ object AnalyticsQueries {
     * init, rounded 6 at the very end. */
   val qPagerank = Q(
     "q_pagerank",
-    """WITH e AS (
-      |  SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
-      |    CAST(count(*) AS DOUBLE) AS w
-      |  FROM lineitem l
-      |  JOIN orders o ON l.l_orderkey = o.o_orderkey
-      |  JOIN customer c ON o.o_custkey = c.c_custkey
-      |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      |  GROUP BY 1, 2),
+    s"""WITH ${TradeGraph.edgesSql("CAST(count(*) AS DOUBLE)")},
       |ow AS (SELECT src, sum(w) AS outw FROM e GROUP BY 1),
       |nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nation),
       |r0 AS (SELECT n_nationkey AS id, 1.0 / nn.n AS pr
@@ -710,16 +703,6 @@ object AnalyticsQueries {
         (-col("s.negt")).cast(LongType).as("at_us"))
   }
 
-  /** One unrolled min-label CC sweep for the oracle (see
-    * `plans.LabelProp.iterate` for the Spark side). */
-  private def ccSweepSql(prev: String, cur: String): String =
-    s"""$cur AS (
-       |  SELECT l.v, least(l.lbl, coalesce(m.nmin, l.lbl)) AS lbl
-       |  FROM $prev l LEFT JOIN (
-       |    SELECT s.src AS v, min(x.lbl) AS nmin
-       |    FROM sym s JOIN $prev x ON s.dst = x.v
-       |    GROUP BY s.src) m ON l.v = m.v)""".stripMargin
-
   /** Connected components under the oracle gate: min-label propagation
     * (`plans.LabelProp`) on a deterministically sparsified part
     * co-occurrence graph (parts sharing an order, ~5% of edges kept by
@@ -739,10 +722,7 @@ object AnalyticsQueries {
        |           AS BIGINT) % 20) = 0),
        |sym AS (SELECT src, dst FROM e
        |        UNION ALL SELECT dst AS src, src AS dst FROM e),
-       |l0 AS (SELECT DISTINCT src AS v, src AS lbl FROM sym),
-       |${ccSweepSql("l0", "l1")},
-       |${ccSweepSql("l1", "l2")},
-       |${ccSweepSql("l2", "l3")}
+       |${graft.plans.LabelProp.iterateSql(3)}
        |SELECT v, CAST(lbl AS BIGINT) AS lbl FROM l3 ORDER BY v""".stripMargin) {
     (s, d) =>
       // distinct co-purchase pairs = the shared PairStore's key set (the
@@ -1456,6 +1436,50 @@ object AnalyticsQueries {
       .orderBy("seg")
   }
 
+  /** AUTOMOBILE-segment (grp 1) vs other orders in exact cents: the
+    * two-group frame of q_ttest_welch and q_tost. */
+  private[operators] def autoVsRest(s: SparkSession, d: String): DataFrame =
+    t(s, d, "orders").select("o_custkey", "o_totalprice")
+      .join(broadcast(t(s, d, "customer").select("c_custkey", "c_mktsegment")),
+        col("o_custkey") === col("c_custkey"))
+      .select(when(col("c_mktsegment") === "AUTOMOBILE", 1).otherwise(0)
+        .as("grp"),
+        priceCents(col("o_totalprice")).as("cents"))
+
+  /** DuckDB twin of [[autoVsRest]]. */
+  private[operators] def autoVsRestSql: String =
+    s"""SELECT CASE WHEN c_mktsegment = 'AUTOMOBILE' THEN 1 ELSE 0 END
+       |      AS grp,
+       |    ${priceCentsSql("o_totalprice")}
+       |      AS cents
+       |  FROM orders JOIN customer ON o_custkey = c_custkey""".stripMargin
+
+  /** Exact per-group cent sums s1, s2 and square sums q1, q2 of a
+    * (grp, cents) frame, as DECIMAL(38) aggregates: cents are widened
+    * before squaring, so the squares never overflow. */
+  private[operators] def centMoments: Seq[Column] = {
+    val big38 = DecimalType(38, 0)
+    Seq(sum(when(col("grp") === 1, col("cents")).otherwise(0L).cast(big38))
+        .as("s1"),
+      sum(when(col("grp") === 0, col("cents")).otherwise(0L).cast(big38))
+        .as("s2"),
+      sum(when(col("grp") === 1, col("cents").cast(big38) * col("cents"))
+        .otherwise(lit(0).cast(big38))).as("q1"),
+      sum(when(col("grp") === 0, col("cents").cast(big38) * col("cents"))
+        .otherwise(lit(0).cast(big38))).as("q2"))
+  }
+
+  /** DuckDB twin of [[centMoments]], HUGEINT sums. */
+  private[operators] def centMomentsSql: String =
+    """sum(CASE WHEN grp = 1 THEN CAST(cents AS HUGEINT)
+      |        ELSE CAST(0 AS HUGEINT) END) AS s1,
+      |    sum(CASE WHEN grp = 0 THEN CAST(cents AS HUGEINT)
+      |        ELSE CAST(0 AS HUGEINT) END) AS s2,
+      |    sum(CASE WHEN grp = 1 THEN CAST(cents AS HUGEINT) * cents
+      |        ELSE CAST(0 AS HUGEINT) END) AS q1,
+      |    sum(CASE WHEN grp = 0 THEN CAST(cents AS HUGEINT) * cents
+      |        ELSE CAST(0 AS HUGEINT) END) AS q2""".stripMargin
+
   /** Welch's unequal-variance t-test (segment vs rest on order totals):
     * the parametric counterpart of q_mannwhitney's rank test. All moment
     * sums (n, Σcents, Σcents²) are exact DECIMAL(38)/HUGEINT — cents² is
@@ -1465,21 +1489,12 @@ object AnalyticsQueries {
     * One fact scan, one broadcast dim join, one global aggregate. */
   val qTtestWelch = Q(
     "q_ttest_welch",
-    """WITH x AS (
-      |  SELECT CASE WHEN c_mktsegment = 'AUTOMOBILE' THEN 1 ELSE 0 END AS grp,
-      |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-      |  FROM orders JOIN customer ON o_custkey = c_custkey),
+    s"""WITH x AS (
+      |  $autoVsRestSql),
       |m AS (
       |  SELECT CAST(sum(grp) AS HUGEINT) AS n1,
       |    CAST(sum(1 - grp) AS HUGEINT) AS n2,
-      |    sum(CASE WHEN grp = 1 THEN CAST(cents AS HUGEINT)
-      |        ELSE CAST(0 AS HUGEINT) END) AS s1,
-      |    sum(CASE WHEN grp = 0 THEN CAST(cents AS HUGEINT)
-      |        ELSE CAST(0 AS HUGEINT) END) AS s2,
-      |    sum(CASE WHEN grp = 1 THEN CAST(cents AS HUGEINT) * cents
-      |        ELSE CAST(0 AS HUGEINT) END) AS q1,
-      |    sum(CASE WHEN grp = 0 THEN CAST(cents AS HUGEINT) * cents
-      |        ELSE CAST(0 AS HUGEINT) END) AS q2
+      |    $centMomentsSql
       |  FROM x),
       |se AS (
       |  SELECT n1, n2,
@@ -1498,20 +1513,10 @@ object AnalyticsQueries {
       |     + se2 * se2 / CAST(n2 - 1 AS DOUBLE)), 6) AS df
       |FROM se""".stripMargin) { (s, d) =>
     val big38 = DecimalType(38, 0)
-    val x = t(s, d, "orders").select("o_custkey", "o_totalprice")
-      .join(broadcast(t(s, d, "customer").select("c_custkey", "c_mktsegment")),
-        col("o_custkey") === col("c_custkey"))
-      .select(when(col("c_mktsegment") === "AUTOMOBILE", 1).otherwise(0).as("grp"),
-        (dec2(col("o_totalprice")) * 100).cast(LongType).as("cents"))
-    val m = x.agg(
+    val m = autoVsRest(s, d).agg(
       sum(col("grp")).cast(big38).as("n1"),
-      sum(lit(1) - col("grp")).cast(big38).as("n2"),
-      sum(when(col("grp") === 1, col("cents")).otherwise(0L).cast(big38)).as("s1"),
-      sum(when(col("grp") === 0, col("cents")).otherwise(0L).cast(big38)).as("s2"),
-      sum(when(col("grp") === 1, col("cents").cast(big38) * col("cents"))
-        .otherwise(lit(0).cast(big38))).as("q1"),
-      sum(when(col("grp") === 0, col("cents").cast(big38) * col("cents"))
-        .otherwise(lit(0).cast(big38))).as("q2"))
+      sum(lit(1) - col("grp")).cast(big38).as("n2") +:
+        centMoments: _*)
     val se = m.select(col("n1"), col("n2"),
       (col("s1").cast(DoubleType) / col("n1").cast(DoubleType)).as("m1c"),
       (col("s2").cast(DoubleType) / col("n2").cast(DoubleType)).as("m2c"),
@@ -1608,6 +1613,47 @@ object AnalyticsQueries {
           .as("v"))
   }
 
+  /** Mutual information of a contingency panel `marg` (o, r, c, n per
+    * cell, with row total r, column total c and grand total n): one row
+    * (n, mi9), each cell's (o/n)·ln(n·o/(r·c)) rounded to 10⁻⁹ units
+    * before the exact sum, so no double is ever summed. */
+  private[operators] def mutualInfo9(marg: DataFrame): DataFrame =
+    marg.agg(max("n").as("n"),
+      sum(round(col("o").cast(DoubleType) / col("n").cast(DoubleType)
+        * log(col("n").cast(DoubleType) * col("o").cast(DoubleType)
+          / (col("r").cast(DoubleType) * col("c").cast(DoubleType)))
+        * 1000000000).cast(DecimalType(38, 0))).as("mi9"))
+
+  /** DuckDB twin of [[mutualInfo9]]: the CTE `mi` over a CTE `marg`. */
+  private[operators] def mutualInfo9Sql: String =
+    """mi AS (
+      |  SELECT max(n) AS n, sum(CAST(ROUND(
+      |    CAST(o AS DOUBLE) / CAST(n AS DOUBLE)
+      |      * ln(CAST(n AS DOUBLE) * CAST(o AS DOUBLE)
+      |           / (CAST(r AS DOUBLE) * CAST(c AS DOUBLE)))
+      |    * 1000000000) AS HUGEINT)) AS mi9
+      |  FROM marg)""".stripMargin
+
+  /** The entropy h9 (10⁻⁹ units, quantized per term) of one margin of
+    * `marg`: its key column and that margin's count column. */
+  private[operators] def marginalEntropy9(marg: DataFrame, keyCol: String,
+      cntCol: String): DataFrame =
+    marg.select(col(keyCol), col(cntCol), col("n")).distinct()
+      .agg(sum(round(-(col(cntCol).cast(DoubleType)
+          / col("n").cast(DoubleType))
+        * log(col(cntCol).cast(DoubleType) / col("n").cast(DoubleType))
+        * 1000000000).cast(DecimalType(38, 0))).as("h9"))
+
+  /** DuckDB twin of [[marginalEntropy9]] as the CTE `name`. */
+  private[operators] def marginalEntropy9Sql(name: String, keyCol: String,
+      cntCol: String): String =
+    s"""$name AS (
+       |  SELECT sum(CAST(ROUND(
+       |    -(CAST($cntCol AS DOUBLE) / CAST(n AS DOUBLE))
+       |      * ln(CAST($cntCol AS DOUBLE) / CAST(n AS DOUBLE))
+       |    * 1000000000) AS HUGEINT)) AS h9
+       |  FROM (SELECT DISTINCT $keyCol, $cntCol, n FROM marg))""".stripMargin
+
   /** Mutual information (nats) between market segment and order priority,
     * with the marginal entropies and normalized MI — the feature-
     * selection / redundancy screen for categorical columns. Same
@@ -1617,25 +1663,9 @@ object AnalyticsQueries {
   val qMutualInfo = Q(
     "q_mutual_info",
     s"""WITH $contingencySql,
-      |mi AS (
-      |  SELECT max(n) AS n, sum(CAST(ROUND(
-      |    CAST(o AS DOUBLE) / CAST(n AS DOUBLE)
-      |      * ln(CAST(n AS DOUBLE) * CAST(o AS DOUBLE)
-      |           / (CAST(r AS DOUBLE) * CAST(c AS DOUBLE)))
-      |    * 1000000000) AS HUGEINT)) AS mi9
-      |  FROM marg),
-      |hs AS (
-      |  SELECT sum(CAST(ROUND(
-      |    -(CAST(r AS DOUBLE) / CAST(n AS DOUBLE))
-      |      * ln(CAST(r AS DOUBLE) / CAST(n AS DOUBLE))
-      |    * 1000000000) AS HUGEINT)) AS h9
-      |  FROM (SELECT DISTINCT seg, r, n FROM marg)),
-      |hp AS (
-      |  SELECT sum(CAST(ROUND(
-      |    -(CAST(c AS DOUBLE) / CAST(n AS DOUBLE))
-      |      * ln(CAST(c AS DOUBLE) / CAST(n AS DOUBLE))
-      |    * 1000000000) AS HUGEINT)) AS h9
-      |  FROM (SELECT DISTINCT prio, c, n FROM marg))
+      |$mutualInfo9Sql,
+      |${marginalEntropy9Sql("hs", "seg", "r")},
+      |${marginalEntropy9Sql("hp", "prio", "c")}
       |SELECT CAST(mi.n AS BIGINT) AS n,
       |  ROUND(CAST(mi.mi9 AS DOUBLE) / 1000000000, 6) AS mi,
       |  ROUND(CAST(hs.h9 AS DOUBLE) / 1000000000, 6) AS h_seg,
@@ -1644,21 +1674,10 @@ object AnalyticsQueries {
       |    / sqrt(CAST(hs.h9 AS DOUBLE) / 1000000000
       |         * (CAST(hp.h9 AS DOUBLE) / 1000000000)), 6) AS nmi
       |FROM mi, hs, hp""".stripMargin) { (s, d) =>
-    val big38 = DecimalType(38, 0)
     val full = contingency(s, d)
-    val mi = full.agg(max("n").as("n"),
-      sum(round(col("o").cast(DoubleType) / col("n").cast(DoubleType)
-        * log(col("n").cast(DoubleType) * col("o").cast(DoubleType)
-          / (col("r").cast(DoubleType) * col("c").cast(DoubleType)))
-        * 1000000000).cast(big38)).as("mi9"))
-    def marginalH(keyCol: String, cntCol: String): DataFrame =
-      full.select(col(keyCol), col(cntCol), col("n")).distinct()
-        .agg(sum(round(-(col(cntCol).cast(DoubleType) / col("n").cast(DoubleType))
-          * log(col(cntCol).cast(DoubleType) / col("n").cast(DoubleType))
-          * 1000000000).cast(big38)).as("h9"))
-    val hs = marginalH("seg", "r")
-    val hp = marginalH("prio", "c")
-    mi.crossJoin(broadcast(hs.select(col("h9").as("hs9"))))
+    val hs = marginalEntropy9(full, "seg", "r")
+    val hp = marginalEntropy9(full, "prio", "c")
+    mutualInfo9(full).crossJoin(broadcast(hs.select(col("h9").as("hs9"))))
       .crossJoin(broadcast(hp.select(col("h9").as("hp9"))))
       .select(col("n").cast(LongType).as("n"),
         round(col("mi9").cast(DoubleType) / 1000000000, 6).as("mi"),
@@ -1681,9 +1700,9 @@ object AnalyticsQueries {
     * no quantile approximation and no second pass. */
   val qPareto = Q(
     "q_pareto",
-    """WITH pc AS (
+    s"""WITH pc AS (
       |  SELECT o_custkey,
-      |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
+      |    CAST(sum(${priceCentsSql("o_totalprice")})
       |      AS BIGINT) AS cents
       |  FROM orders GROUP BY 1),
       |r AS (
@@ -1707,7 +1726,7 @@ object AnalyticsQueries {
     val big38 = DecimalType(38, 0)
     val pc = t(s, d, "orders")
       .groupBy("o_custkey")
-      .agg(sum((dec2(col("o_totalprice")) * 100).cast(LongType))
+      .agg(sum(priceCents(col("o_totalprice")))
         .cast(LongType).as("cents"))
     // GlobalRank buckets on the leading sort key's VALUE (it casts it to
     // double), so descending revenue is expressed as ascending -cents.
@@ -1844,7 +1863,7 @@ object AnalyticsQueries {
     "q_anova",
     s"""WITH x AS (
       |  SELECT c_mktsegment AS seg,
-      |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+      |    ${priceCentsSql("o_totalprice")} AS cents
       |  FROM orders JOIN customer ON o_custkey = c_custkey),
       |g AS (
       |  SELECT seg, CAST(count(*) AS HUGEINT) AS ng,
@@ -1861,7 +1880,7 @@ object AnalyticsQueries {
       .join(broadcast(t(s, d, "customer").select("c_custkey", "c_mktsegment")),
         col("o_custkey") === col("c_custkey"))
       .select(col("c_mktsegment").as("seg"),
-        (dec2(col("o_totalprice")) * 100).cast(LongType).as("cents"))
+        priceCents(col("o_totalprice")).as("cents"))
     val g = x.groupBy("seg").agg(
       count(lit(1)).cast(big38).as("ng"),
       sum(col("cents").cast(big38)).as("sg"),
@@ -1885,15 +1904,15 @@ object AnalyticsQueries {
     * from the same sums. One fact scan + one custkey-keyed join. */
   val qCuped = Q(
     "q_cuped",
-    """WITH per AS (
+    s"""WITH per AS (
       |  SELECT o_custkey AS ck,
       |    sum(CASE WHEN o_orderdate >= DATE '1995-01-01'
       |        AND o_orderdate < DATE '1996-01-01'
-      |      THEN CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+      |      THEN ${priceCentsSql("o_totalprice")}
       |      ELSE 0 END) AS x,
       |    sum(CASE WHEN o_orderdate >= DATE '1996-01-01'
       |        AND o_orderdate < DATE '1997-01-01'
-      |      THEN CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+      |      THEN ${priceCentsSql("o_totalprice")}
       |      ELSE 0 END) AS y
       |  FROM orders GROUP BY o_custkey),
       |u AS (
@@ -1934,7 +1953,7 @@ object AnalyticsQueries {
     val big38 = DecimalType(38, 0)
     def yearCents(lo: String, hi: String): Column =
       sum(when(col("o_orderdate") >= lit(lo) && col("o_orderdate") < lit(hi),
-        (dec2(col("o_totalprice")) * 100).cast(LongType)).otherwise(0L))
+        priceCents(col("o_totalprice"))).otherwise(0L))
     val per = t(s, d, "orders").select("o_custkey", "o_orderdate", "o_totalprice")
       .groupBy(col("o_custkey").as("ck"))
       .agg(yearCents("1995-01-01", "1996-01-01").as("x"),
@@ -2083,7 +2102,7 @@ object AnalyticsQueries {
     val series = t(s, d, "orders")
       .groupBy(col("o_orderdate").cast(DateType).as("day"),
         (weekday(col("o_orderdate").cast(DateType)) + 1).as("dow"))
-      .agg(sum((dec2(col("o_totalprice")) * 100).cast(LongType)).as("cents"))
+      .agg(sum(priceCents(col("o_totalprice"))).as("cents"))
     val w = Window.orderBy("day").rowsBetween(-3, 3)
     val tr = series
       .withColumn("tsum", sum(col("cents")).over(w))
@@ -2226,9 +2245,9 @@ object AnalyticsQueries {
     * nation) into a total order. */
   val qRollingZscore = Q(
     "q_rolling_zscore",
-    """WITH series AS (
+    s"""WITH series AS (
       |  SELECT n_name, CAST(o_orderdate AS DATE) AS day,
-      |    sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
+      |    sum(${priceCentsSql("o_totalprice")})
       |      AS cents
       |  FROM orders JOIN customer ON o_custkey = c_custkey
       |  JOIN nation ON c_nationkey = n_nationkey
@@ -2258,7 +2277,7 @@ object AnalyticsQueries {
         .join(broadcast(t(s, d, "nation").select("n_nationkey", "n_name")),
           col("c_nationkey") === col("n_nationkey"))
         .groupBy(col("n_name"), col("o_orderdate").cast(DateType).as("day"))
-        .agg(sum((dec2(col("o_totalprice")) * 100).cast(LongType)).as("cents"))
+        .agg(sum(priceCents(col("o_totalprice"))).as("cents"))
       val fr = Window.partitionBy("n_name").orderBy("day")
         .rowsBetween(-28, -1)
       val w = series
@@ -2319,6 +2338,33 @@ object AnalyticsQueries {
       .orderBy("week_start")
   }
 
+  /** Per-user next-event transitions of an events frame (user_id,
+    * event_id, event_type, us): `pairs` (src, dst, n) and each src's
+    * total `tot` (src, tn) — the user-journey Markov chain's counts. */
+  private[operators] def markovPairs(ev: DataFrame)
+      : (DataFrame, DataFrame) = {
+    val seqW = Window.partitionBy("user_id").orderBy("us", "event_id")
+    val pairs = ev
+      .select(col("event_type").as("src"),
+        lead(col("event_type"), 1).over(seqW).as("dst"))
+      .filter(col("dst").isNotNull)
+      .groupBy("src", "dst").agg(count(lit(1)).as("n"))
+    (pairs, pairs.groupBy("src").agg(sum(col("n")).as("tn")))
+  }
+
+  /** DuckDB twin of [[markovPairs]] over `events`: the CTEs `seq`,
+    * `pairs` and `tot`. */
+  private[operators] def markovPairsSql: String =
+    """seq AS (
+      |  SELECT event_type AS src,
+      |    lead(event_type) OVER (PARTITION BY user_id
+      |      ORDER BY epoch_us(ts), event_id) AS dst
+      |  FROM events),
+      |pairs AS (
+      |  SELECT src, dst, count(*) AS n FROM seq
+      |  WHERE dst IS NOT NULL GROUP BY 1, 2),
+      |tot AS (SELECT src, sum(n) AS tn FROM pairs GROUP BY 1)""".stripMargin
+
   /** First-order Markov transition matrix over the per-user event stream:
     * (src → dst) counts from each user's time-ordered event sequence
     * (lead within the user partition — one shuffle key, no global sort),
@@ -2328,26 +2374,12 @@ object AnalyticsQueries {
     * aggregate (≤ |event_type|² rows) broadcast back onto the pairs. */
   val qMarkovTransitions = Q(
     "q_markov_transitions",
-    """WITH seq AS (
-      |  SELECT event_type AS src,
-      |    lead(event_type) OVER (PARTITION BY user_id
-      |      ORDER BY epoch_us(ts), event_id) AS dst
-      |  FROM events),
-      |pairs AS (
-      |  SELECT src, dst, count(*) AS n FROM seq
-      |  WHERE dst IS NOT NULL GROUP BY 1, 2),
-      |tot AS (SELECT src, sum(n) AS tn FROM pairs GROUP BY 1)
+    s"""WITH $markovPairsSql
       |SELECT p.src, p.dst, p.n,
       |  ROUND(CAST(p.n AS DOUBLE) / tn, 6) AS prob
       |FROM pairs p JOIN tot USING (src)
       |ORDER BY src, dst""".stripMargin) { (s, d) =>
-    val seqW = Window.partitionBy("user_id").orderBy("us", "event_id")
-    val pairs = eventsUs(s, d)
-      .select(col("event_type").as("src"),
-        lead(col("event_type"), 1).over(seqW).as("dst"))
-      .filter(col("dst").isNotNull)
-      .groupBy("src", "dst").agg(count(lit(1)).as("n"))
-    val tot = pairs.groupBy("src").agg(sum(col("n")).as("tn"))
+    val (pairs, tot) = markovPairs(eventsUs(s, d))
     pairs.join(broadcast(tot), Seq("src"))
       .select(col("src"), col("dst"), col("n"),
         round(col("n").cast(DoubleType) / col("tn"), 6).as("prob"))
@@ -2363,7 +2395,7 @@ object AnalyticsQueries {
     * onto orders. */
   val qCohortLtv = Q(
     "q_cohort_ltv",
-    """WITH first_o AS (
+    s"""WITH first_o AS (
       |  SELECT o_custkey,
       |    date_trunc('month', MIN(CAST(o_orderdate AS DATE))) AS cohort
       |  FROM orders GROUP BY 1),
@@ -2371,7 +2403,7 @@ object AnalyticsQueries {
       |  SELECT f.cohort,
       |    datediff('month', f.cohort,
       |      date_trunc('month', CAST(o.o_orderdate AS DATE))) AS age,
-      |    sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
+      |    sum(${priceCentsSql("o_totalprice")})
       |      AS cents,
       |    count(*) AS orders
       |  FROM orders o JOIN first_o f ON o.o_custkey = f.o_custkey
@@ -2392,7 +2424,7 @@ object AnalyticsQueries {
       .groupBy(col("cohort"),
         months_between(date_trunc("month", col("o_orderdate").cast(DateType)),
           col("cohort")).cast(LongType).as("age"))
-      .agg(sum((dec2(col("o_totalprice")) * 100).cast(LongType)).as("cents"),
+      .agg(sum(priceCents(col("o_totalprice"))).as("cents"),
         count(lit(1)).as("orders"))
     val cum = Window.partitionBy("cohort").orderBy("age")
     rev.select(col("cohort").cast(DateType).as("cohort_month"),
@@ -2576,6 +2608,43 @@ object AnalyticsQueries {
        |    CASE WHEN datediff('day', last_d, m) > 60 THEN 1 ELSE 0 END AS ev
        |  FROM cust, mx)""".stripMargin
 
+  /** Per distinct [[durations]] value t: the churned count d and the
+    * row count nrow. A bounded post-aggregation table (≤ distinct
+    * day-durations), so windows over it run over ≤ ~10³ rows, never
+    * facts. */
+  private def durationCounts(s: SparkSession, d: String): DataFrame =
+    durations(s, d).groupBy("t")
+      .agg(sum(col("ev")).as("d"), count(lit(1)).as("nrow"))
+
+  /** `g` (t, d, nrow) with the reverse-cumulative at_risk count. */
+  private def atRisk(g: DataFrame): DataFrame =
+    g.withColumn("at_risk", sum(col("nrow")).over(Window.orderBy("t")
+      .rowsBetween(Window.currentRow, Window.unboundedFollowing)))
+
+  /** DuckDB twin of [[atRisk]]: the CTE `ar` over a CTE `g`. */
+  private val atRiskSql =
+    """ar AS (
+      |  SELECT t, d,
+      |    sum(nrow) OVER (ORDER BY t
+      |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS at_risk
+      |  FROM g)""".stripMargin
+
+  /** Running Σ ln((at_risk − d)/at_risk) over t of an [[atRisk]] table:
+    * the log of the Kaplan–Meier survival. */
+  private def kmLogSum: Column =
+    sum(when(col("d") < col("at_risk"),
+      log((col("at_risk") - col("d")).cast(DoubleType)
+        / col("at_risk").cast(DoubleType))).otherwise(lit(0.0)))
+      .over(Window.orderBy("t")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+
+  /** DuckDB twin of [[kmLogSum]]. */
+  private val kmLogSumSql =
+    """sum(CASE WHEN d < at_risk
+      |      THEN ln(CAST(at_risk - d AS DOUBLE) / CAST(at_risk AS DOUBLE))
+      |      ELSE 0 END) OVER (ORDER BY t
+      |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""".stripMargin
+
   /** Kaplan–Meier survival over customer activity lifetimes: duration =
     * days between a customer's first and last order; customers whose last
     * order is within 60 days of the global max date are right-censored
@@ -2594,37 +2663,17 @@ object AnalyticsQueries {
       |g AS (
       |  SELECT t, sum(ev) AS d, sum(1 - ev) AS c, count(*) AS nrow
       |  FROM durs GROUP BY t),
-      |ar AS (
-      |  SELECT t, d,
-      |    sum(nrow) OVER (ORDER BY t
-      |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS at_risk
-      |  FROM g),
+      |$atRiskSql,
       |sv AS (
       |  SELECT t, d, at_risk,
-      |    sum(CASE WHEN d < at_risk
-      |      THEN ln(CAST(at_risk - d AS DOUBLE) / CAST(at_risk AS DOUBLE))
-      |      ELSE 0 END) OVER (ORDER BY t
-      |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS lsum
+      |    $kmLogSumSql AS lsum
       |  FROM ar)
       |SELECT CAST(t AS BIGINT) AS t_days, CAST(at_risk AS BIGINT) AS at_risk,
       |  CAST(d AS BIGINT) AS churned,
       |  CASE WHEN d >= at_risk THEN 0.0 ELSE ROUND(exp(lsum), 6) END
       |    AS survival
       |FROM sv WHERE d > 0 ORDER BY t_days""".stripMargin) { (s, d) =>
-    val durs = durations(s, d)
-    val g = durs.groupBy("t")
-      .agg(sum(col("ev")).as("d"), count(lit(1)).as("nrow"))
-    // Bounded post-aggregation table (≤ distinct day-durations): the
-    // single-partition windows below run over ≤ ~10³ rows, never facts.
-    val wAr = Window.orderBy("t")
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    val wSv = Window.orderBy("t")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ar = g.withColumn("at_risk", sum(col("nrow")).over(wAr))
-    val sv = ar.withColumn("lsum",
-      sum(when(col("d") < col("at_risk"),
-        log((col("at_risk") - col("d")).cast(DoubleType)
-          / col("at_risk").cast(DoubleType))).otherwise(lit(0.0))).over(wSv))
+    val sv = atRisk(durationCounts(s, d)).withColumn("lsum", kmLogSum)
     sv.filter(col("d") > 0)
       .select(col("t").cast(LongType).as("t_days"),
         col("at_risk").cast(LongType).as("at_risk"),
@@ -2826,10 +2875,10 @@ object AnalyticsQueries {
     * deterministic on both engines. */
   val qTheilSen = Q(
     "q_theil_sen",
-    """WITH m AS (
+    s"""WITH m AS (
       |  SELECT (CAST(year(CAST(o_orderdate AS DATE)) AS BIGINT) * 12
       |      + CAST(month(CAST(o_orderdate AS DATE)) AS BIGINT)) AS mo,
-      |    sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
+      |    sum(${priceCentsSql("o_totalprice")})
       |      AS cents
       |  FROM orders GROUP BY 1),
       |pairs AS (
@@ -2847,7 +2896,7 @@ object AnalyticsQueries {
     val m = t(s, d, "orders")
       .groupBy((year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
         .cast(LongType).as("mo"))
-      .agg(sum((dec2(col("o_totalprice")) * 100).cast(LongType)).as("cents"))
+      .agg(sum(priceCents(col("o_totalprice"))).as("cents"))
     val a = m.select(col("mo").as("mo_a"), col("cents").as("c_a"))
     val b = m.select(col("mo").as("mo_b"), col("cents").as("c_b"))
     val pairs = a.join(b, col("mo_b") > col("mo_a"))
@@ -2959,9 +3008,9 @@ object AnalyticsQueries {
     * expression is the final tau-b. */
   val qKendallTau = Q(
     "q_kendall_tau",
-    """WITH m AS (
+    s"""WITH m AS (
       |  SELECT date_trunc('month', o_orderdate) AS mth, count(*) AS x,
-      |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
+      |    ${sumCentsSql}
       |      AS y
       |  FROM orders GROUP BY 1),
       |p AS (
@@ -2986,7 +3035,7 @@ object AnalyticsQueries {
     val m = t(s, d, "orders")
       .groupBy(date_trunc("month", col("o_orderdate")).as("mth"))
       .agg(count(lit(1)).as("x"),
-        sum(dec2(col("o_totalprice")) * 100).cast(LongType).as("y"))
+        sumCents.as("y"))
     val p = m.select(col("mth"), col("x").as("x1"), col("y").as("y1"))
       .join(broadcast(m.select(col("mth").as("mth2"), col("x").as("x2"),
         col("y").as("y2"))), col("mth") < col("mth2"))
@@ -3069,12 +3118,12 @@ object AnalyticsQueries {
     * DiD estimate are one fixed-op-order double expression each. */
   val qDiffInDiff = Q(
     "q_diff_in_diff",
-    """WITH o AS (
+    s"""WITH o AS (
       |  SELECT CASE WHEN c.c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END
       |      AS treat,
       |    CASE WHEN o.o_orderdate >= TIMESTAMP '1998-01-01' THEN 1 ELSE 0
       |      END AS post,
-      |    CAST(CAST(o.o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+      |    ${priceCentsSql("o.o_totalprice")}
       |      AS cents
       |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey)
       |SELECT
@@ -3124,7 +3173,7 @@ object AnalyticsQueries {
       .select(col("treat"),
         when(col("o_orderdate") >= ts("1998-01-01"), 1).otherwise(0)
           .as("post"),
-        (dec2(col("o_totalprice")) * 100).cast(LongType).as("cents"))
+        priceCents(col("o_totalprice")).as("cents"))
     def nCell(tr: Int, po: Int) =
       sum(when(col("treat") === tr && col("post") === po, 1).otherwise(0))
     def sCell(tr: Int, po: Int) =
@@ -3266,9 +3315,9 @@ object AnalyticsQueries {
     * fixed-op-order double expression. */
   val qRunsTest = Q(
     "q_runs_test",
-    """WITH m AS (
+    s"""WITH m AS (
       |  SELECT date_trunc('month', o_orderdate) AS mth,
-      |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
+      |    ${sumCentsSql}
       |      AS rev
       |  FROM orders GROUP BY 1),
       |d AS (SELECT mth, rev - lag(rev) OVER (ORDER BY mth) AS chg FROM m),
@@ -3296,7 +3345,7 @@ object AnalyticsQueries {
       |FROM c""".stripMargin) { (s, d) =>
     val m = t(s, d, "orders")
       .groupBy(date_trunc("month", col("o_orderdate")).as("mth"))
-      .agg(sum(dec2(col("o_totalprice")) * 100).cast(LongType).as("rev"))
+      .agg(sumCents.as("rev"))
     val wm = Window.orderBy("mth")
     val sgn = m.select(col("mth"),
         (col("rev") - lag(col("rev"), 1).over(wm)).as("chg"))
@@ -3367,11 +3416,7 @@ object AnalyticsQueries {
       |g AS (
       |  SELECT t, CAST(sum(ev) AS BIGINT) AS d, count(*) AS nrow
       |  FROM durs GROUP BY t),
-      |ar AS (
-      |  SELECT t, d,
-      |    sum(nrow) OVER (ORDER BY t
-      |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS at_risk
-      |  FROM g),
+      |$atRiskSql,
       |ha AS (
       |  SELECT t, d, at_risk,
       |    sum((d * 1000000000) // at_risk) OVER (ORDER BY t
@@ -3387,11 +3432,9 @@ object AnalyticsQueries {
     val g = durs.groupBy("t")
       .agg(sum(col("ev")).cast(LongType).as("d"), count(lit(1)).as("nrow"))
     // Bounded post-agg duration domain: single-partition windows are fine.
-    val wAr = Window.orderBy("t")
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
     val wCh = Window.orderBy("t")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ar = g.withColumn("at_risk", sum(col("nrow")).over(wAr))
+    val ar = atRisk(g)
     val ha = ar.withColumn("ch9",
       sum(expr("(d * 1000000000) DIV at_risk")).over(wCh))
     ha.filter(col("d") > 0)
@@ -3550,9 +3593,9 @@ object AnalyticsQueries {
     * window pass. */
   val qPercentileProfile = Q(
     "q_percentile_profile",
-    """WITH oc AS (
+    s"""WITH oc AS (
       |  SELECT c.c_mktsegment AS seg,
-      |    CAST(CAST(o.o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+      |    ${priceCentsSql("o.o_totalprice")}
       |      AS cents,
       |    o.o_orderkey
       |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey),
@@ -3583,7 +3626,7 @@ object AnalyticsQueries {
         .select(col("c_custkey"), col("c_mktsegment").as("seg"))),
         col("o_custkey") === col("c_custkey"))
       .select(col("seg"),
-        (dec2(col("o_totalprice")) * 100).cast(LongType).as("cents"),
+        priceCents(col("o_totalprice")).as("cents"),
         col("o_orderkey"))
     val wr = Window.partitionBy("seg").orderBy(col("cents"), col("o_orderkey"))
     val wn = Window.partitionBy("seg")
@@ -3609,7 +3652,7 @@ object AnalyticsQueries {
     * customer counts and exact cent sums. */
   val qNewVsReturning = Q(
     "q_new_vs_returning",
-    """WITH fo AS (
+    s"""WITH fo AS (
       |  SELECT o_custkey, min(date_trunc('month', o_orderdate)) AS first_m
       |  FROM orders GROUP BY 1),
       |o AS (
@@ -3617,7 +3660,7 @@ object AnalyticsQueries {
       |    CASE WHEN date_trunc('month', o.o_orderdate) = f.first_m THEN 1
       |      ELSE 0 END AS is_new,
       |    o.o_custkey,
-      |    CAST(CAST(o.o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+      |    ${priceCentsSql("o.o_totalprice")}
       |      AS cents
       |  FROM orders o JOIN fo f ON o.o_custkey = f.o_custkey)
       |SELECT CAST(mth AS DATE) AS month,
@@ -3640,7 +3683,7 @@ object AnalyticsQueries {
         when(date_trunc("month", col("o_orderdate")) === col("first_m"), 1)
           .otherwise(0).as("is_new"),
         col("o_custkey"),
-        (dec2(col("o_totalprice")) * 100).cast(LongType).as("cents"))
+        priceCents(col("o_totalprice")).as("cents"))
     o.groupBy("mth")
       .agg(
         countDistinct(when(col("is_new") === 1, col("o_custkey")))
@@ -3666,9 +3709,9 @@ object AnalyticsQueries {
     * run over the bounded monthly series only. */
   val qRollingCorr = Q(
     "q_rolling_corr",
-    """WITH m AS (
+    s"""WITH m AS (
       |  SELECT date_trunc('month', o_orderdate) AS mth, count(*) AS x,
-      |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
+      |    ${sumCentsSql}
       |      // 10000 AS y
       |  FROM orders GROUP BY 1),
       |w AS (
@@ -3692,7 +3735,7 @@ object AnalyticsQueries {
     val m = t(s, d, "orders")
       .groupBy(date_trunc("month", col("o_orderdate")).as("mth"))
       .agg(count(lit(1)).as("x"),
-        sum(dec2(col("o_totalprice")) * 100).cast(LongType).as("yc"))
+        sumCents.as("yc"))
       .select(col("mth"), col("x"), expr("yc DIV 10000").as("y"))
     // Bounded post-agg monthly series: single-partition window is fine.
     val win = Window.orderBy("mth").rowsBetween(-5, Window.currentRow)
@@ -3846,7 +3889,7 @@ object AnalyticsQueries {
         .select(col("c_custkey"), col("c_mktsegment").as("seg"))),
         col("o_custkey") === col("c_custkey"))
       .groupBy(col("seg"), date_trunc("month", col("o_orderdate")).as("mth"))
-      .agg(sum(dec2(col("o_totalprice")) * 100).cast(LongType).as("rev"))
+      .agg(sumCents.as("rev"))
     val w = Window.partitionBy("seg").orderBy("mth")
     val lagRev = lag(col("rev"), 1).over(w)
     m.select(col("seg"), to_date(col("mth")).as("month"),
@@ -3921,9 +3964,9 @@ object AnalyticsQueries {
     * integer before the mean (the q_ips_estimate idiom). */
   val qForecastSnaive = Q(
     "q_forecast_snaive",
-    """WITH m AS (
+    s"""WITH m AS (
       |  SELECT date_trunc('month', o_orderdate) AS mth,
-      |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
+      |    ${sumCentsSql}
       |      AS rev
       |  FROM orders GROUP BY 1),
       |f AS (SELECT mth, rev, lag(rev, 12) OVER (ORDER BY mth) AS fc FROM m),
@@ -3940,7 +3983,7 @@ object AnalyticsQueries {
     val big38 = DecimalType(38, 0)
     val m = t(s, d, "orders")
       .groupBy(date_trunc("month", col("o_orderdate")).as("mth"))
-      .agg(sum(dec2(col("o_totalprice")) * 100).cast(LongType).as("rev"))
+      .agg(sumCents.as("rev"))
     val w = Window.orderBy("mth")
     val b = m.select(col("rev"), lag(col("rev"), 12).over(w).as("fc"))
       .filter(col("fc").isNotNull && col("fc") =!= 0)
@@ -3961,9 +4004,9 @@ object AnalyticsQueries {
     * fixed-op-order double expression. */
   val qEffectSize = Q(
     "q_effect_size",
-    """WITH o AS (
+    s"""WITH o AS (
       |  SELECT c.c_mktsegment AS seg,
-      |    CAST(CAST(o.o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+      |    ${priceCentsSql("o.o_totalprice")}
       |      AS x
       |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
       |  WHERE c.c_mktsegment IN ('BUILDING', 'AUTOMOBILE')),
@@ -4001,7 +4044,7 @@ object AnalyticsQueries {
         col("o_custkey") === col("c_custkey"))
       .filter(col("seg").isin("BUILDING", "AUTOMOBILE"))
       .select(col("seg"),
-        (dec2(col("o_totalprice")) * 100).cast(LongType).as("x"))
+        priceCents(col("o_totalprice")).as("x"))
     val m = o.agg(
       sum(when(col("seg") === "BUILDING", 1).otherwise(0)).cast(LongType)
         .as("n1"),
@@ -4041,9 +4084,9 @@ object AnalyticsQueries {
     * double expressions over the bounded 10-row decile table. */
   val qLorenzCurve = Q(
     "q_lorenz_curve",
-    """WITH c AS (
+    s"""WITH c AS (
       |  SELECT o_custkey,
-      |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
+      |    ${sumCentsSql}
       |      AS rev
       |  FROM orders GROUP BY 1),
       |n AS (SELECT count(*) AS n FROM c),
@@ -4068,7 +4111,7 @@ object AnalyticsQueries {
       |FROM g CROSS JOIN t ORDER BY decile""".stripMargin) { (s, d) =>
     val big38 = DecimalType(38, 0)
     val c = t(s, d, "orders").groupBy("o_custkey")
-      .agg(sum(dec2(col("o_totalprice")) * 100).cast(LongType).as("rev"))
+      .agg(sumCents.as("rev"))
     val (r, n) = graft.plans.GlobalRank.withGlobalRowNumber(
       c, "rk", 32, col("rev"), col("o_custkey"))
     val g = r.select(col("rev"),
@@ -4295,6 +4338,31 @@ object AnalyticsQueries {
       .orderBy("p_rank", "n_name")
   }
 
+  /** Mean and σ of a monthly revenue series m (rev, cents), each ·10³
+    * and quantized once (mu3 an exact DIV, s3 the rounded double σ): the
+    * one-row `st` panel of q_cusum and q_sax_symbols. */
+  private def revMuSigma(m: DataFrame): DataFrame = {
+    val big38 = DecimalType(38, 0)
+    m.agg(
+      expr("CAST(sum(CAST(rev AS DECIMAL(38,0))) * 1000 DIV count(*)" +
+        " AS DECIMAL(38,0))").as("mu3"),
+      round(sqrt((sum(col("rev").cast(big38) * col("rev")).cast(DoubleType)
+        - sum(col("rev").cast(big38)).cast(DoubleType)
+          * sum(col("rev").cast(big38)).cast(DoubleType)
+          / count(lit(1)))
+        / count(lit(1))) * 1000).cast(LongType).as("s3"))
+  }
+
+  /** DuckDB twin of [[revMuSigma]]: the CTE `st` over a CTE `m`. */
+  private val revMuSigmaSql =
+    """st AS (
+      |  SELECT (sum(CAST(rev AS HUGEINT)) * 1000) // count(*) AS mu3,
+      |    CAST(ROUND(sqrt((CAST(sum(CAST(rev AS HUGEINT) * rev)
+      |        AS DOUBLE) - CAST(sum(CAST(rev AS HUGEINT)) AS DOUBLE)
+      |          * sum(CAST(rev AS HUGEINT)) / count(*)) / count(*))
+      |      * 1000) AS BIGINT) AS s3
+      |  FROM m)""".stripMargin
+
   /** One-sided CUSUM mean-shift monitor on the monthly revenue series
     * (k = 0.5σ reference, h = 4σ alarm) — the sequential drift detector
     * next to q_changepoint's single retrospective split. The recurrence
@@ -4305,18 +4373,12 @@ object AnalyticsQueries {
     * end-to-end (μ, σ quantized once; sqrt is IEEE-identical). */
   val qCusum = Q(
     "q_cusum",
-    """WITH m AS (
+    s"""WITH m AS (
       |  SELECT date_trunc('month', o_orderdate) AS mth,
-      |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
+      |    ${sumCentsSql}
       |      AS rev
       |  FROM orders GROUP BY 1),
-      |st AS (
-      |  SELECT (sum(CAST(rev AS HUGEINT)) * 1000) // count(*) AS mu3,
-      |    CAST(ROUND(sqrt((CAST(sum(CAST(rev AS HUGEINT) * rev)
-      |        AS DOUBLE) - CAST(sum(CAST(rev AS HUGEINT)) AS DOUBLE)
-      |          * sum(CAST(rev AS HUGEINT)) / count(*)) / count(*))
-      |      * 1000) AS BIGINT) AS s3
-      |  FROM m),
+      |$revMuSigmaSql,
       |y AS (
       |  SELECT mth, rev,
       |    CAST(rev AS HUGEINT) * 1000 - mu3 - s3 // 2 AS y3, s3
@@ -4338,16 +4400,8 @@ object AnalyticsQueries {
     val big38 = DecimalType(38, 0)
     val m = t(s, d, "orders")
       .groupBy(date_trunc("month", col("o_orderdate")).as("mth"))
-      .agg((sum(dec2(col("o_totalprice")) * 100)).cast(LongType).as("rev"))
-    val st = m.agg(
-      expr("CAST(sum(CAST(rev AS DECIMAL(38,0))) * 1000 DIV count(*)" +
-        " AS DECIMAL(38,0))").as("mu3"),
-      round(sqrt((sum((col("rev").cast(big38) * col("rev")))
-          .cast(DoubleType)
-        - sum(col("rev").cast(big38)).cast(DoubleType)
-          * sum(col("rev").cast(big38)).cast(DoubleType)
-          / count(lit(1)))
-        / count(lit(1))) * 1000).cast(LongType).as("s3"))
+      .agg(sumCents.as("rev"))
+    val st = revMuSigma(m)
     val y = m.crossJoin(broadcast(st))
       .select(col("mth"), col("rev"), col("s3"),
         (col("rev").cast(big38) * 1000 - col("mu3")
@@ -4374,9 +4428,9 @@ object AnalyticsQueries {
     * fan-out feeding one (b)-keyed aggregation — no data-sized state. */
   val qBootstrapCi = Q(
     "q_bootstrap_ci",
-    """WITH w AS (
+    s"""WITH w AS (
       |  SELECT b,
-      |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+      |    ${priceCentsSql("o_totalprice")}
       |      AS cents,
       |    CASE
       |      WHEN u < 367879 THEN 0 WHEN u < 735759 THEN 1
@@ -4427,7 +4481,7 @@ object AnalyticsQueries {
     // the hash into the post-explode projection and evaluate it per
     // (row, b) — 200× the md5 cost on the hot path.
     val base = orders.select(
-        (dec2(col("o_totalprice")) * 100).cast(LongType).as("cents"),
+        priceCents(col("o_totalprice")).as("cents"),
         graft.llm.TextOps.hash60(col("o_orderkey").cast(StringType))
           .as("h60"))
       .localCheckpoint()
@@ -4688,18 +4742,12 @@ object AnalyticsQueries {
     * sorts (month, symbol) structs — order-proof under any merge. */
   val qSaxSymbols = Q(
     "q_sax_symbols",
-    """WITH m AS (
+    s"""WITH m AS (
       |  SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS mth,
-      |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
+      |    ${sumCentsSql}
       |      AS rev
       |  FROM orders GROUP BY 1),
-      |st AS (
-      |  SELECT (sum(CAST(rev AS HUGEINT)) * 1000) // count(*) AS mu3,
-      |    CAST(ROUND(sqrt((CAST(sum(CAST(rev AS HUGEINT) * rev)
-      |        AS DOUBLE) - CAST(sum(CAST(rev AS HUGEINT)) AS DOUBLE)
-      |          * sum(CAST(rev AS HUGEINT)) / count(*)) / count(*))
-      |      * 1000) AS BIGINT) AS s3
-      |  FROM m),
+      |$revMuSigmaSql,
       |sym AS (
       |  SELECT mth, rev,
       |    CASE
@@ -4718,15 +4766,8 @@ object AnalyticsQueries {
     val m = t(s, d, "orders")
       .groupBy(date_trunc("month", col("o_orderdate")).cast(DateType)
         .as("mth"))
-      .agg((sum(dec2(col("o_totalprice")) * 100)).cast(LongType).as("rev"))
-    val st = m.agg(
-      expr("CAST(sum(CAST(rev AS DECIMAL(38,0))) * 1000 DIV count(*)" +
-        " AS DECIMAL(38,0))").as("mu3"),
-      round(sqrt((sum(col("rev").cast(big38) * col("rev")).cast(DoubleType)
-        - sum(col("rev").cast(big38)).cast(DoubleType)
-          * sum(col("rev").cast(big38)).cast(DoubleType)
-          / count(lit(1)))
-        / count(lit(1))) * 1000).cast(LongType).as("s3"))
+      .agg(sumCents.as("rev"))
+    val st = revMuSigma(m)
     val sym = m.crossJoin(broadcast(st))
       .select(col("mth"), col("rev"),
         when((col("rev").cast(big38) * 1000 - col("mu3")) * 10000
@@ -4897,14 +4938,7 @@ object AnalyticsQueries {
     * oracle unrolls both iterations. */
   val qPpr = Q(
     "q_ppr",
-    """WITH e AS (
-      |  SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
-      |    CAST(count(*) AS DOUBLE) AS w
-      |  FROM lineitem l
-      |  JOIN orders o ON l.l_orderkey = o.o_orderkey
-      |  JOIN customer c ON o.o_custkey = c.c_custkey
-      |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      |  GROUP BY 1, 2),
+    s"""WITH ${TradeGraph.edgesSql("CAST(count(*) AS DOUBLE)")},
       |ow AS (SELECT src, sum(w) AS outw FROM e GROUP BY 1),
       |bt AS (SELECT count(*) AS nb FROM customer
       |       WHERE c_mktsegment = 'BUILDING'),
@@ -5035,18 +5069,11 @@ object AnalyticsQueries {
     s"""WITH $durationsCte,
       |g AS (
       |  SELECT t, sum(ev) AS d, count(*) AS nrow FROM durs GROUP BY t),
-      |ar AS (
-      |  SELECT t, d,
-      |    sum(nrow) OVER (ORDER BY t
-      |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS at_risk
-      |  FROM g),
+      |$atRiskSql,
       |sv AS (
       |  SELECT t, d, at_risk,
       |    CASE WHEN d >= at_risk THEN 0.0 ELSE exp(
-      |      sum(CASE WHEN d < at_risk
-      |        THEN ln(CAST(at_risk - d AS DOUBLE) / CAST(at_risk AS DOUBLE))
-      |        ELSE 0 END) OVER (ORDER BY t
-      |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) END AS s
+      |      $kmLogSumSql) END AS s
       |  FROM ar),
       |ev AS (SELECT t, s FROM sv WHERE d > 0)
       |SELECT
@@ -5056,20 +5083,9 @@ object AnalyticsQueries {
       |  CAST(min(CASE WHEN s <= 0.25 THEN t END) AS BIGINT) AS t_q25,
       |  CAST(max(t) AS BIGINT) AS t_max
       |FROM ev""".stripMargin) { (s, d) =>
-    val durs = durations(s, d)
-    val g = durs.groupBy("t")
-      .agg(sum(col("ev")).as("d"), count(lit(1)).as("nrow"))
-    val wAr = Window.orderBy("t")
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    val wSv = Window.orderBy("t")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ar = g.withColumn("at_risk", sum(col("nrow")).over(wAr))
+    val ar = atRisk(durationCounts(s, d))
     val sv = ar.withColumn("s",
-      when(col("d") >= col("at_risk"), 0.0).otherwise(exp(
-        sum(when(col("d") < col("at_risk"),
-          log((col("at_risk") - col("d")).cast(DoubleType)
-            / col("at_risk").cast(DoubleType))).otherwise(lit(0.0)))
-          .over(wSv))))
+      when(col("d") >= col("at_risk"), 0.0).otherwise(exp(kmLogSum)))
     val ev = sv.filter(col("d") > 0).select("t", "s")
     val nStart = ar.agg(max(col("at_risk")).cast(LongType).as("n_at_start"))
     ev.agg(

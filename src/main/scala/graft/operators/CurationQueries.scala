@@ -2,6 +2,8 @@ package graft.operators
 
 import graft.Q
 import graft.Dsl._
+import graft.functions.VectorFunctions
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -87,11 +89,7 @@ object CurationQueries {
     * any sum (adamic-adar idiom), so the means are reduction-order-proof. */
   val qNoveltyRecs = Q(
     "q_novelty_recs",
-    """WITH pairs AS (
-      |  SELECT a.l_partkey AS pa, b.l_partkey AS pb, count(*) AS w
-      |  FROM lineitem a JOIN lineitem b
-      |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-      |  GROUP BY a.l_partkey, b.l_partkey),
+    s"""WITH ${PairStore.coPairsSymCte("pairs")},
       |pop AS (
       |  SELECT l_partkey, count(DISTINCT l_orderkey) AS p
       |  FROM lineitem GROUP BY 1),
@@ -293,6 +291,28 @@ object CurationQueries {
       .limit(20)
   }
 
+  /** Corpus bigram counts g (w1, w2, c) over whitespace tokens: the
+    * shared input of q_kneser_ney and q_good_turing. */
+  private def bigramCounts(s: SparkSession, d: String): DataFrame =
+    t(s, d, "documents")
+      .select(split(col("text"), " ").as("w"))
+      .filter(size(col("w")) >= 2)
+      .select(explode(expr(
+        "transform(sequence(0, size(w) - 2), i -> " +
+          "struct(w[i] AS w1, w[i+1] AS w2))")).as("p"))
+      .select(col("p.w1").as("w1"), col("p.w2").as("w2"))
+      .groupBy("w1", "w2").agg(count(lit(1)).as("c"))
+
+  /** DuckDB twin of [[bigramCounts]]: the CTEs `l`, `pr` and `g`. */
+  private val bigramCountsSql =
+    """l AS (
+      |  SELECT string_split(text, ' ') AS w FROM documents),
+      |pr AS (
+      |  SELECT unnest(list_transform(range(1, len(w)), i -> w[i])) AS w1,
+      |    unnest(list_transform(range(1, len(w)), i -> w[i+1])) AS w2
+      |  FROM l WHERE len(w) >= 2),
+      |g AS (SELECT w1, w2, count(*) AS c FROM pr GROUP BY 1, 2)""".stripMargin
+
   /** Interpolated Kneser–Ney bigram probabilities (D = 0.75) over the
     * corpus — the smoothing q_bigram_lm's raw MLE lacks: continuation
     * counts (HOW MANY distinct histories precede a word) replace raw
@@ -303,13 +323,7 @@ object CurationQueries {
     * total order. */
   val qKneserNey = Q(
     "q_kneser_ney",
-    """WITH l AS (
-      |  SELECT string_split(text, ' ') AS w FROM documents),
-      |pr AS (
-      |  SELECT unnest(list_transform(range(1, len(w)), i -> w[i])) AS w1,
-      |    unnest(list_transform(range(1, len(w)), i -> w[i+1])) AS w2
-      |  FROM l WHERE len(w) >= 2),
-      |g AS (SELECT w1, w2, count(*) AS c FROM pr GROUP BY 1, 2),
+    s"""WITH $bigramCountsSql,
       |hist AS (
       |  SELECT w1, sum(c) AS c1, count(*) AS nfollow FROM g GROUP BY w1),
       |cont AS (SELECT w2, count(*) AS ncont FROM g GROUP BY w2),
@@ -322,14 +336,7 @@ object CurationQueries {
       |JOIN hist ON g.w1 = hist.w1 JOIN cont ON g.w2 = cont.w2
       |CROSS JOIN b
       |ORDER BY g.c DESC, g.w1, g.w2 LIMIT 20""".stripMargin) { (s, d) =>
-    val l = t(s, d, "documents")
-      .select(split(col("text"), " ").as("w"))
-      .filter(size(col("w")) >= 2)
-    val pr = l.select(explode(expr(
-      "transform(sequence(0, size(w) - 2), i -> " +
-        "struct(w[i] AS w1, w[i+1] AS w2))")).as("p"))
-      .select(col("p.w1").as("w1"), col("p.w2").as("w2"))
-    val g = pr.groupBy("w1", "w2").agg(count(lit(1)).as("c"))
+    val g = bigramCounts(s, d)
     val hist = g.groupBy("w1")
       .agg(sum(col("c")).as("c1"), count(lit(1)).as("nfollow"))
     val cont = g.groupBy("w2").agg(count(lit(1)).as("ncont"))
@@ -355,13 +362,7 @@ object CurationQueries {
     * are per-row final doubles. */
   val qGoodTuring = Q(
     "q_good_turing",
-    """WITH l AS (
-      |  SELECT string_split(text, ' ') AS w FROM documents),
-      |pr AS (
-      |  SELECT unnest(list_transform(range(1, len(w)), i -> w[i])) AS w1,
-      |    unnest(list_transform(range(1, len(w)), i -> w[i+1])) AS w2
-      |  FROM l WHERE len(w) >= 2),
-      |g AS (SELECT w1, w2, count(*) AS c FROM pr GROUP BY 1, 2),
+    s"""WITH $bigramCountsSql,
       |coc AS (SELECT c AS r, count(*) AS n_r FROM g GROUP BY c),
       |tot AS (
       |  SELECT sum(r * n_r) AS n_tokens,
@@ -374,14 +375,7 @@ object CurationQueries {
       |LEFT JOIN coc b ON b.r = a.r + 1
       |CROSS JOIN tot
       |WHERE a.r <= 10 ORDER BY a.r""".stripMargin) { (s, d) =>
-    val l = t(s, d, "documents")
-      .select(split(col("text"), " ").as("w"))
-      .filter(size(col("w")) >= 2)
-    val pr = l.select(explode(expr(
-      "transform(sequence(0, size(w) - 2), i -> " +
-        "struct(w[i] AS w1, w[i+1] AS w2))")).as("p"))
-      .select(col("p.w1").as("w1"), col("p.w2").as("w2"))
-    val g = pr.groupBy("w1", "w2").agg(count(lit(1)).as("c"))
+    val g = bigramCounts(s, d)
     val coc = g.groupBy(col("c").as("r")).agg(count(lit(1)).as("n_r"))
     val tot = coc.agg(sum(col("r") * col("n_r")).as("n_tokens"),
       max(when(col("r") === 1, col("n_r")).otherwise(0L)).as("n1"))
@@ -417,12 +411,9 @@ object CurationQueries {
       |  UNION ALL
       |  SELECT vec_id + 2000000, 'xx', list_transform(v, x -> x * 1.05)
       |  FROM e0 WHERE vec_id % 40 = 0),
-      |c AS (SELECT vec_id AS cid, v AS cv FROM e0 WHERE vec_id < 64),
+      |${graft.llm.Clustering.lowIdCentroidsCte("e0", 64)},
       |${graft.llm.Clustering.sqDistCte("dist")},
-      |a0 AS (
-      |  SELECT vec_id, cid,
-      |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rk
-      |  FROM dist),
+      |${graft.llm.Clustering.nearestCte("a0", "dist", "cid")},
       |asg AS (
       |  SELECT e.vec_id, e.lang, e.v, a0.cid AS cluster
       |  FROM e JOIN a0 ON e.vec_id = a0.vec_id AND a0.rk = 1),
@@ -432,9 +423,7 @@ object CurationQueries {
       |  FROM asg a JOIN asg b
       |    ON a.cluster = b.cluster AND a.vec_id < b.vec_id
       |  WHERE a.lang <> b.lang
-      |    AND ROUND(list_inner_product(a.v, b.v)
-      |      / sqrt(list_inner_product(a.v, a.v))
-      |      / sqrt(list_inner_product(b.v, b.v)), 4) >= 0.99)
+      |    AND ${VectorFunctions.cosine4Sql("a.v", "b.v")} >= 0.99)
       |SELECT lang_a, lang_b, count(*) AS n_pairs
       |FROM dup GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, d) =>
     val asDbl = transform(col("embedding"), x => x.cast(DoubleType))
@@ -447,8 +436,7 @@ object CurationQueries {
         lit("xx").as("lang"),
         transform(col("v"), x => x * 1.05).as("v"))
     val e = orig.unionByName(twins)
-    val cents = orig.filter(col("vec_id") < 64)
-      .select(col("vec_id").as("cid"), col("v").as("cvec"))
+    val cents = graft.llm.Clustering.lowIdCentroids(orig, 64)
     val asg = graft.llm.Clustering.assign(e, "v", cents)
       .join(e, Seq("vec_id", "lang"))
       .select(col("vec_id"), col("lang"), col("cluster"), col("v"))
@@ -459,7 +447,7 @@ object CurationQueries {
       col("lang").as("lb"), col("v").as("vb"))
     a.join(b, Seq("cluster"))
       .filter(col("ida") < col("idb") && col("la") =!= col("lb"))
-      .filter(round(graft.functions.VectorFunctions.cosine(col("va"), col("vb")), 4)
+      .filter(VectorFunctions.cosine4(col("va"), col("vb"))
         >= 0.99)
       .select(least(col("la"), col("lb")).as("lang_a"),
         greatest(col("la"), col("lb")).as("lang_b"))

@@ -225,6 +225,18 @@ object DiagQueries {
         .as("bp_lm"))
   }
 
+  /** The Chow test's residual sum of squares Syy − Sxy²/Sxx in doubles,
+    * over the exact moment columns n, sx, sy, sxx, sxy, syy. */
+  private val ssrSql =
+    """(CAST(syy AS DOUBLE)
+      |      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
+      |    - (CAST(sxy AS DOUBLE)
+      |       - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
+      |      * (CAST(sxy AS DOUBLE)
+      |       - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
+      |      / (CAST(sxx AS DOUBLE)
+      |       - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))""".stripMargin
+
   /** Chow structural-break test: did the discount→quantity relationship
     * change at the 1998-07-01 shipdate boundary (the fixture's mid-range)? One grouped exact
     * co-moment aggregate (2 segment rows); pooled moments are the exact
@@ -233,7 +245,7 @@ object DiagQueries {
     * The "your one global model is actually two regimes" detector. */
   val qChowTest = Q(
     "q_chow_test",
-    """WITH seg AS (
+    s"""WITH seg AS (
       |  SELECT CASE WHEN l_shipdate < DATE '1998-07-01' THEN 0 ELSE 1 END
       |      AS s,
       |    CAST(round(l_discount * 100) AS BIGINT) AS x,
@@ -252,14 +264,7 @@ object DiagQueries {
       |      - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
       |    / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
       |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) AS b,
-      |    (CAST(syy AS DOUBLE)
-      |      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-      |    - (CAST(sxy AS DOUBLE)
-      |       - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-      |      * (CAST(sxy AS DOUBLE)
-      |       - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-      |      / (CAST(sxx AS DOUBLE)
-      |       - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
+      |    $ssrSql
       |      AS ssr
       |  FROM g),
       |p AS (
@@ -268,14 +273,7 @@ object DiagQueries {
       |  FROM g),
       |pp AS (
       |  SELECT n,
-      |    (CAST(syy AS DOUBLE)
-      |      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-      |    - (CAST(sxy AS DOUBLE)
-      |       - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-      |      * (CAST(sxy AS DOUBLE)
-      |       - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-      |      / (CAST(sxx AS DOUBLE)
-      |       - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
+      |    $ssrSql
       |      AS ssrp
       |  FROM p)
       |SELECT
@@ -348,9 +346,9 @@ object DiagQueries {
     * exact integer division), so the k-row sums are exact. */
   val qBartlett = Q(
     "q_bartlett",
-    """WITH x AS (
+    s"""WITH x AS (
       |  SELECT o_orderpriority AS prio,
-      |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v
+      |    ${priceCentsSql("o_totalprice")} AS v
       |  FROM orders),
       |g AS (
       |  SELECT prio, CAST(count(*) AS HUGEINT) AS n,
@@ -382,7 +380,7 @@ object DiagQueries {
       |    AS bartlett_t
       |FROM agg""".stripMargin) { (s, d) =>
     val x = t(s, d, "orders").select(col("o_orderpriority").as("prio"),
-      (dec2(col("o_totalprice")) * 100).cast(LongType).as("v"))
+      priceCents(col("o_totalprice")).as("v"))
     val g = x.groupBy("prio").agg(
       count(lit(1)).cast(big38).as("n"),
       sum(col("v").cast(big38)).as("s1"),
@@ -1278,10 +1276,10 @@ object DiagQueries {
     * 7-day trend: series (day, dow, cents) and tr (…, tsum, tn), tn < 7
     * at the ends. Shared by the seasonal-decomposition oracles. */
   private[operators] val dowTrendSql =
-    """series AS (
+    s"""series AS (
       |  SELECT CAST(o_orderdate AS DATE) AS day,
       |    isodow(CAST(o_orderdate AS DATE)) AS dow,
-      |    sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
+      |    sum(${priceCentsSql("o_totalprice")})
       |      AS cents
       |  FROM orders GROUP BY 1, 2),
       |tr AS (
@@ -1300,7 +1298,7 @@ object DiagQueries {
     val series = t(s, d, "orders")
       .groupBy(col("o_orderdate").cast(DateType).as("day"),
         dayofweek(col("o_orderdate")).as("dowRaw"))
-      .agg((sum(dec2(col("o_totalprice")) * 100)).cast(LongType)
+      .agg(sumCents
         .as("cents"))
       // isodow: Mon=1..Sun=7; Spark dayofweek: Sun=1..Sat=7
       .withColumn("dow", when(col("dowRaw") === 1, 7)
@@ -1397,9 +1395,9 @@ object DiagQueries {
     * pure integers. Output: the flagged days. */
   val qHampelFilter = Q(
     "q_hampel_filter",
-    """WITH series AS (
+    s"""WITH series AS (
       |  SELECT CAST(o_orderdate AS DATE) AS day,
-      |    sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
+      |    sum(${priceCentsSql("o_totalprice")})
       |      AS cents
       |  FROM orders GROUP BY 1),
       |wd AS (
@@ -1421,7 +1419,7 @@ object DiagQueries {
       |ORDER BY day""".stripMargin) { (s, d) =>
     val series = t(s, d, "orders")
       .groupBy(col("o_orderdate").cast(DateType).as("day"))
-      .agg((sum(dec2(col("o_totalprice")) * 100)).cast(LongType)
+      .agg(sumCents
         .as("cents"))
     val w15 = Window.orderBy("day").rowsBetween(-7, 7)
     val wd = series

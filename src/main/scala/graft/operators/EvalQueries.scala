@@ -2,6 +2,8 @@ package graft.operators
 
 import graft.Q
 import graft.Dsl._
+import graft.functions.VectorFunctions
+import graft.llm.SimSearch
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -23,7 +25,7 @@ object EvalQueries {
   private def scored(s: SparkSession, d: String): DataFrame =
     t(s, d, "orders").select(
       col("o_orderkey"),
-      (dec2(col("o_totalprice")) * 100).cast(LongType).as("cents"),
+      priceCents(col("o_totalprice")).as("cents"),
       when(col("o_orderpriority") === "1-URGENT", 1).otherwise(0).as("label"))
 
   /** Per score decile, highest scores first (decile 1 = the top 10 %
@@ -45,11 +47,11 @@ object EvalQueries {
 
   /** DuckDB twin of [[topDeciles]]: the x and d CTEs. */
   private val topDecilesSql =
-    """x AS (
+    s"""x AS (
       |  SELECT CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END
       |      AS label,
       |    row_number() OVER (ORDER BY
-      |      -CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT),
+      |      -${priceCentsSql("o_totalprice")},
       |      o_orderkey) AS rn,
       |    count(*) OVER () AS n
       |  FROM orders),
@@ -74,8 +76,8 @@ object EvalQueries {
 
   /** DuckDB twin of [[ppmBins]]: the x, mx and p CTEs. */
   private val ppmBinsSql =
-    """x AS (
-      |  SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+    s"""x AS (
+      |  SELECT ${priceCentsSql("o_totalprice")}
       |      AS cents,
       |    CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS label
       |  FROM orders),
@@ -84,6 +86,33 @@ object EvalQueries {
       |  SELECT label, cents * 1000000 // maxc AS p_ppm,
       |    LEAST(cents * 1000000 // maxc * 10 // 1000000, 9) AS bin
       |  FROM x CROSS JOIN mx)""".stripMargin
+
+  /** Exact rank-sum aggregates of a (label, rk) frame: n1 positives, n0
+    * negatives and the positives' rank sum r1, as DECIMAL(38). */
+  private def rankSums: Seq[Column] = {
+    val big38 = DecimalType(38, 0)
+    Seq(sum(col("label")).cast(big38).as("n1"),
+      (count(lit(1)) - sum(col("label"))).cast(big38).as("n0"),
+      sum(when(col("label") === 1, col("rk")).otherwise(0L).cast(big38))
+        .as("r1"))
+  }
+
+  /** DuckDB twin of [[rankSums]], HUGEINT sums. */
+  private val rankSumsSql =
+    """CAST(sum(label) AS HUGEINT) AS n1,
+      |    CAST(count(*) - sum(label) AS HUGEINT) AS n0,
+      |    sum(CASE WHEN label = 1 THEN CAST(rk AS HUGEINT)
+      |        ELSE CAST(0 AS HUGEINT) END) AS r1""".stripMargin
+
+  /** AUC = (2·r1 − n1(n1+1)) / (2·n1·n0) over [[rankSums]], round 6. */
+  private def auc: Column =
+    round((lit(2) * col("r1") - col("n1") * (col("n1") + 1)).cast(DoubleType)
+      / (lit(2) * col("n1") * col("n0")).cast(DoubleType), 6)
+
+  /** DuckDB twin of [[auc]]. */
+  private val aucSql =
+    """ROUND(CAST(2 * r1 - n1 * (n1 + 1) AS DOUBLE)
+      |    / CAST(2 * n1 * n0 AS DOUBLE), 6)""".stripMargin
 
   /** ROC AUC via the rank-sum (Mann–Whitney) identity: AUC =
     * (R₁ − n₁(n₁+1)/2) / (n₁n₀) where R₁ is the positive class's rank sum
@@ -95,35 +124,24 @@ object EvalQueries {
     * the final single-row select. */
   val qAuc = Q(
     "q_auc",
-    """WITH x AS (
+    s"""WITH x AS (
       |  SELECT CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END
       |      AS label,
       |    row_number() OVER (ORDER BY
-      |      CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT),
+      |      ${priceCentsSql("o_totalprice")},
       |      o_orderkey) AS rk
       |  FROM orders),
       |m AS (
-      |  SELECT CAST(sum(label) AS HUGEINT) AS n1,
-      |    CAST(count(*) - sum(label) AS HUGEINT) AS n0,
-      |    sum(CASE WHEN label = 1 THEN CAST(rk AS HUGEINT)
-      |        ELSE CAST(0 AS HUGEINT) END) AS r1
+      |  SELECT $rankSumsSql
       |  FROM x)
       |SELECT CAST(n1 AS BIGINT) AS n_pos, CAST(n0 AS BIGINT) AS n_neg,
-      |  ROUND(CAST(2 * r1 - n1 * (n1 + 1) AS DOUBLE)
-      |    / CAST(2 * n1 * n0 AS DOUBLE), 6) AS auc
+      |  $aucSql AS auc
       |FROM m""".stripMargin) { (s, d) =>
-    val big38 = DecimalType(38, 0)
     val (ranked, _) = graft.plans.GlobalRank.withGlobalRowNumber(
       scored(s, d), "rk", 32, col("cents"), col("o_orderkey"))
-    val m = ranked.agg(
-      sum(col("label")).cast(big38).as("n1"),
-      (count(lit(1)) - sum(col("label"))).cast(big38).as("n0"),
-      sum(when(col("label") === 1, col("rk"))
-        .otherwise(0L).cast(big38)).as("r1"))
-    m.select(col("n1").cast(LongType).as("n_pos"),
-      col("n0").cast(LongType).as("n_neg"),
-      round((lit(2) * col("r1") - col("n1") * (col("n1") + 1)).cast(DoubleType)
-        / (lit(2) * col("n1") * col("n0")).cast(DoubleType), 6).as("auc"))
+    ranked.agg(rankSums.head, rankSums.tail: _*)
+      .select(col("n1").cast(LongType).as("n_pos"),
+        col("n0").cast(LongType).as("n_neg"), auc.as("auc"))
   }
 
   /** Decile lift table: rank by score DESC (GlobalRank on the negated
@@ -172,11 +190,11 @@ object EvalQueries {
     * guards empty cells). */
   val qConfusionMatrix = Q(
     "q_confusion_matrix",
-    """WITH th AS (SELECT unnest([10000000, 20000000, 30000000]) AS thr),
+    s"""WITH th AS (SELECT unnest([10000000, 20000000, 30000000]) AS thr),
       |x AS (
       |  SELECT thr,
       |    CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS label,
-      |    CASE WHEN CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+      |    CASE WHEN ${priceCentsSql("o_totalprice")}
       |      >= thr THEN 1 ELSE 0 END AS pred
       |  FROM orders CROSS JOIN th),
       |m AS (
@@ -272,16 +290,12 @@ object EvalQueries {
     * harness shape; production retrieval goes through the ANN family. */
   val qMrr = Q(
     "q_mrr",
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
       |  FROM embeddings),
       |ranked AS (
       |  SELECT q.vec_id AS qid, q.label AS q_label, e.label,
-      |    row_number() OVER (PARTITION BY q.vec_id
-      |      ORDER BY ROUND(list_inner_product(q.v, e.v)
-      |        / sqrt(list_inner_product(q.v, q.v))
-      |        / sqrt(list_inner_product(e.v, e.v)), 4) DESC, e.vec_id)
-      |      AS rk
+      |    ${SimSearch.probeRankSql} AS rk
       |  FROM (SELECT * FROM e WHERE vec_id % 25 = 0) q
       |  JOIN e ON e.vec_id <> q.vec_id),
       |firsts AS (
@@ -296,17 +310,14 @@ object EvalQueries {
       |    AS mean_first_rank
       |FROM firsts""".stripMargin) { (s, d) =>
     val embs = t(s, d, "embeddings")
-    val queries = embs.filter(col("vec_id") % 25 === 0)
-      .select(col("vec_id").as("qid"), col("label").as("q_label"),
-        col("embedding").as("q_e"))
+    val queries = SimSearch.probePanel(embs, col("vec_id") % 25 === 0)
     val scored = embs
       .join(broadcast(queries), col("vec_id") =!= col("qid"))
       .select(col("qid"), col("q_label"), col("label"), col("vec_id"),
-        round(graft.functions.VectorFunctions.cosine(col("embedding"), col("q_e")), 4)
+        VectorFunctions.cosine4(col("embedding"), col("q_e"))
           .as("score"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("qid")
-      .orderBy(col("score").desc, col("vec_id"))
-    val firsts = scored.withColumn("rk", row_number().over(w).cast(LongType))
+    val firsts = scored
+      .withColumn("rk", row_number().over(SimSearch.byScore).cast(LongType))
       .filter(col("label") === col("q_label"))
       .groupBy("qid").agg(min(col("rk")).as("first_rank"))
     firsts.agg(
@@ -402,18 +413,14 @@ object EvalQueries {
     * same eval-harness shape as q_mrr. */
   val qMapAtK = Q(
     "q_map_at_k",
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
       |  FROM embeddings),
       |nl AS (SELECT label, count(*) AS n_label FROM e GROUP BY label),
       |ranked AS (
       |  SELECT q.vec_id AS qid, q.label AS q_label,
       |    CASE WHEN e.label = q.label THEN 1 ELSE 0 END AS is_rel,
-      |    row_number() OVER (PARTITION BY q.vec_id
-      |      ORDER BY ROUND(list_inner_product(q.v, e.v)
-      |        / sqrt(list_inner_product(q.v, q.v))
-      |        / sqrt(list_inner_product(e.v, e.v)), 4) DESC, e.vec_id)
-      |      AS rk
+      |    ${SimSearch.probeRankSql} AS rk
       |  FROM (SELECT * FROM e WHERE vec_id % 25 = 0) q
       |  JOIN e ON e.vec_id <> q.vec_id),
       |top10 AS (
@@ -438,20 +445,17 @@ object EvalQueries {
       |FROM perq""".stripMargin) { (s, d) =>
     val embs = t(s, d, "embeddings")
     val nl = embs.groupBy("label").agg(count(lit(1)).as("n_label"))
-    val queries = embs.filter(col("vec_id") % 25 === 0)
-      .select(col("vec_id").as("qid"), col("label").as("q_label"),
-        col("embedding").as("q_e"))
+    val queries = SimSearch.probePanel(embs, col("vec_id") % 25 === 0)
     val scored = embs
       .join(broadcast(queries), col("vec_id") =!= col("qid"))
       .select(col("qid"), col("q_label"), col("vec_id"),
         when(col("label") === col("q_label"), 1).otherwise(0).as("is_rel"),
-        round(graft.functions.VectorFunctions.cosine(col("embedding"), col("q_e")), 4)
+        VectorFunctions.cosine4(col("embedding"), col("q_e"))
           .as("score"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("qid")
-      .orderBy(col("score").desc, col("vec_id"))
     val cum = org.apache.spark.sql.expressions.Window.partitionBy("qid")
       .orderBy("rk")
-    val top10 = scored.withColumn("rk", row_number().over(w).cast(LongType))
+    val top10 = scored
+      .withColumn("rk", row_number().over(SimSearch.byScore).cast(LongType))
       .filter(col("rk") <= 10)
       .withColumn("hits", sum(col("is_rel")).over(cum))
     mapAt10(top10, nl)
@@ -487,11 +491,11 @@ object EvalQueries {
     val nLists = math.max(8, math.min(4096,
       math.round(graft.Tables.countCached(s, d, "embeddings") / 250.0)
         .toInt))
-    val index = graft.llm.SimSearch.ivfIndexGemmCached(embs, d, nLists,
+    val index = SimSearch.ivfIndexGemmCached(embs, d, nLists,
       lloydIters = 2)
     val probes = embs.filter(col("vec_id") % 25 === 0)
       .select(col("vec_id").as("probe_id"), col("embedding").as("probe_e"))
-    val top10 = graft.llm.SimSearch.cosineGemmTopKAll(index, probes,
+    val top10 = SimSearch.cosineGemmTopKAll(index, probes,
       k = 10, nProbe = 3)
     // relevance/label joins run on the |panel|×10 survivor rows
     val labels = embs.select(col("vec_id"), col("label"))
@@ -517,14 +521,14 @@ object EvalQueries {
     * fixed-op-order double expression per feature. */
   val qFeatureCorrTarget = Q(
     "q_feature_corr_target",
-    """WITH b AS (
+    s"""WITH b AS (
       |  SELECT l_orderkey, count(*) AS n_lines,
       |    CAST(sum(CAST(l_quantity AS DECIMAL(18,2)) * 100) AS BIGINT)
       |      AS qty_c
       |  FROM lineitem GROUP BY 1),
       |o AS (
       |  SELECT o_orderkey,
-      |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+      |    ${priceCentsSql("o_totalprice")}
       |      AS cents,
       |    CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS y,
       |    b.n_lines, b.qty_c
@@ -555,7 +559,7 @@ object EvalQueries {
     val o = t(s, d, "orders")
       .join(b, col("o_orderkey") === col("l_orderkey"))
       .select(
-        (dec2(col("o_totalprice")) * 100).cast(LongType).as("cents"),
+        priceCents(col("o_totalprice")).as("cents"),
         when(col("o_orderpriority") === "1-URGENT", 1).otherwise(0).as("y"),
         col("n_lines"), col("qty_c"))
     val f = o.select(lit("price_cents").as("feature"),
@@ -592,11 +596,11 @@ object EvalQueries {
     * reliability bins feed into. */
   val qIsotonic = Q(
     "q_isotonic",
-    """WITH x AS (
+    s"""WITH x AS (
       |  SELECT CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END
       |      AS label,
       |    row_number() OVER (ORDER BY
-      |      CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT),
+      |      ${priceCentsSql("o_totalprice")},
       |      o_orderkey) AS rn,
       |    count(*) OVER () AS n
       |  FROM orders),
@@ -679,29 +683,24 @@ object EvalQueries {
     * AUC is one final double division on the bounded 5-row table. */
   val qAucByGroup = Q(
     "q_auc_by_group",
-    """WITH x AS (
+    s"""WITH x AS (
       |  SELECT c_mktsegment AS seg,
       |    CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END
       |      AS label,
       |    row_number() OVER (PARTITION BY c_mktsegment ORDER BY
-      |      CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT),
+      |      ${priceCentsSql("o_totalprice")},
       |      o_orderkey) AS rk
       |  FROM orders JOIN customer ON o_custkey = c_custkey),
       |m AS (
-      |  SELECT seg, CAST(sum(label) AS HUGEINT) AS n1,
-      |    CAST(count(*) - sum(label) AS HUGEINT) AS n0,
-      |    sum(CASE WHEN label = 1 THEN CAST(rk AS HUGEINT)
-      |        ELSE CAST(0 AS HUGEINT) END) AS r1
+      |  SELECT seg, $rankSumsSql
       |  FROM x GROUP BY seg)
       |SELECT seg, CAST(n1 AS BIGINT) AS n_pos, CAST(n0 AS BIGINT) AS n_neg,
-      |  ROUND(CAST(2 * r1 - n1 * (n1 + 1) AS DOUBLE)
-      |    / CAST(2 * n1 * n0 AS DOUBLE), 6) AS auc
+      |  $aucSql AS auc
       |FROM m ORDER BY seg""".stripMargin) { (s, d) =>
-    val big38 = DecimalType(38, 0)
     // scored() carries no custkey, so rebuild with the segment join inline
     val base = t(s, d, "orders").select(
         col("o_orderkey"), col("o_custkey"),
-        (dec2(col("o_totalprice")) * 100).cast(LongType).as("cents"),
+        priceCents(col("o_totalprice")).as("cents"),
         when(col("o_orderpriority") === "1-URGENT", 1).otherwise(0)
           .as("label"))
       .join(broadcast(t(s, d, "customer")
@@ -717,15 +716,9 @@ object EvalQueries {
       .select(col("seg"), col("label"),
         (col("grk") - col("off") + 1).as("rk"))
       .groupBy("seg")
-      .agg(sum(col("label")).cast(big38).as("n1"),
-        (count(lit(1)) - sum(col("label"))).cast(big38).as("n0"),
-        sum(when(col("label") === 1, col("rk")).otherwise(0L).cast(big38))
-          .as("r1"))
+      .agg(rankSums.head, rankSums.tail: _*)
     m.select(col("seg"), col("n1").cast(LongType).as("n_pos"),
-        col("n0").cast(LongType).as("n_neg"),
-        round((lit(2) * col("r1") - col("n1") * (col("n1") + 1))
-          .cast(DoubleType)
-          / (lit(2) * col("n1") * col("n0")).cast(DoubleType), 6).as("auc"))
+        col("n0").cast(LongType).as("n_neg"), auc.as("auc"))
       .orderBy("seg")
   }
 
@@ -783,9 +776,9 @@ object EvalQueries {
     * TakeOrdered under a total (gap DESC, cents, key) order. */
   val qKsModel = Q(
     "q_ks_model",
-    """WITH x AS (
+    s"""WITH x AS (
       |  SELECT o_orderkey,
-      |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+      |    ${priceCentsSql("o_totalprice")}
       |      AS cents,
       |    CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS label
       |  FROM orders),
@@ -1499,10 +1492,9 @@ object EvalQueries {
     * final-expression double. */
   val qFairnessClf = Q(
     "q_fairness_clf",
-    """WITH x AS (
+    s"""WITH x AS (
       |  SELECT c.c_mktsegment AS seg,
-      |    CASE WHEN CAST(CAST(o.o_totalprice AS DECIMAL(18,2)) * 100
-      |      AS BIGINT) > 15000000 THEN 1 ELSE 0 END AS pred,
+      |    CASE WHEN ${priceCentsSql("o.o_totalprice")} > 15000000 THEN 1 ELSE 0 END AS pred,
       |    CASE WHEN o.o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END
       |      AS label
       |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey),
@@ -1533,7 +1525,7 @@ object EvalQueries {
         col("c_mktsegment").as("seg")),
         col("o_custkey") === col("c_custkey"))
       .select(col("seg"),
-        when((dec2(col("o_totalprice")) * 100).cast(LongType) > 15000000L, 1)
+        when(priceCents(col("o_totalprice")) > 15000000L, 1)
           .otherwise(0).as("pred"),
         when(col("o_orderpriority") === "1-URGENT", 1).otherwise(0)
           .as("label"))
@@ -1627,8 +1619,8 @@ object EvalQueries {
     * per-bin curve (df = g−2 for the usual model-fit reading). */
   val qHosmerLemeshow = Q(
     "q_hosmer_lemeshow",
-    """WITH x AS (
-      |  SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+    s"""WITH x AS (
+      |  SELECT ${priceCentsSql("o_totalprice")}
       |      AS cents,
       |    CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END
       |      AS label, o_orderkey

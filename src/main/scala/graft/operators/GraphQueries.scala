@@ -32,15 +32,7 @@ object GraphQueries {
   private def tradeEdges(s: SparkSession, d: String): DataFrame =
     TradeGraph.edges(s, d)
 
-  private val tradeEdgesSql =
-    """e AS (
-      |  SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
-      |    count(*) AS w
-      |  FROM lineitem l
-      |  JOIN orders o ON l.l_orderkey = o.o_orderkey
-      |  JOIN customer c ON o.o_custkey = c.c_custkey
-      |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      |  GROUP BY 1, 2)""".stripMargin
+  private val tradeEdgesSql = TradeGraph.edgesSql("count(*)")
 
   /** Closeness centrality on the unweighted trade graph within a 4-hop
     * horizon: shortest paths by two doubling rounds (1→2→4 hops — exact

@@ -220,6 +220,21 @@ object LlmQueries {
       |    par
       |  WHERE b < nblocks AND l < lanes)""".stripMargin
 
+  /** Every banded simhash candidate pair `cand` (doc_a < doc_b, with
+    * both lanes' signatures) over the planted corpus, for the oracles
+    * of q_dedup_simhash_pairs and q_dedup_rate_by_source. */
+  private val simhashCandCtes =
+    s"""$ngramDocs2,
+       |$simhashParCte,
+       |$simhashSigCtes,
+       |$simhashBandsCte,
+       |cand AS (
+       |  SELECT DISTINCT a.doc_id AS doc_a, a.simhash AS sa,
+       |    a.simhash1 AS sa1,
+       |    b.doc_id AS doc_b, b.simhash AS sb, b.simhash1 AS sb1
+       |  FROM bands a JOIN bands b
+       |    ON a.bidx = b.bidx AND a.bval = b.bval AND a.doc_id < b.doc_id)""".stripMargin
+
   val qDedupSimhash = Q(
     "q_dedup_simhash",
     s"""WITH toks AS (
@@ -245,15 +260,13 @@ object LlmQueries {
     * (copy ⊂ original) must surface with containment ≈ 1. */
   val qDedupContainment = Q(
     "q_dedup_containment",
-    """WITH docsc AS (
+    s"""WITH docsc AS (
       |  SELECT doc_id, text FROM documents
       |  UNION ALL
       |  SELECT doc_id + 2000000 AS doc_id, substr(text, 1, 120) AS text
       |  FROM documents WHERE doc_id % 40 = 0),
       |sh AS (
-      |  SELECT DISTINCT doc_id, substr(text, p, 5) AS shingle
-      |  FROM docsc, generate_series(1, 2000) t(p)
-      |  WHERE p <= greatest(length(text) - 4, 1)),
+      |  ${ShingleStore.distinctSql("docsc", 5, 2000)}),
       |rarekeys AS (
       |  SELECT shingle FROM (
       |    SELECT shingle, count(*) AS df FROM sh GROUP BY shingle) z
@@ -304,16 +317,7 @@ object LlmQueries {
     * may differ in candidates yet provably agree on the answer. */
   val qDedupSimhashPairs = Q(
     "q_dedup_simhash_pairs",
-    s"""WITH $ngramDocs2,
-       |$simhashParCte,
-       |$simhashSigCtes,
-       |$simhashBandsCte,
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, a.simhash AS sa,
-       |    a.simhash1 AS sa1,
-       |    b.doc_id AS doc_b, b.simhash AS sb, b.simhash1 AS sb1
-       |  FROM bands a JOIN bands b
-       |    ON a.bidx = b.bidx AND a.bval = b.bval AND a.doc_id < b.doc_id)
+    s"""WITH $simhashCandCtes
        |SELECT doc_a, doc_b,
        |  CAST(bit_count(xor(sa, sb)) + bit_count(xor(sa1, sb1)) AS INT)
        |    AS hamming
@@ -431,9 +435,7 @@ object LlmQueries {
     "q_dedup_ngram",
     s"""WITH $ngramDocs2,
        |sh AS (
-       |  SELECT DISTINCT doc_id, substr(text, p, 5) AS shingle
-       |  FROM docs2, generate_series(1, 2000) t(p)
-       |  WHERE p <= greatest(length(text) - 4, 1)),
+       |  ${ShingleStore.distinctSql("docs2", 5, 2000)}),
        |rare AS (
        |  SELECT doc_id, shingle FROM
        |    (SELECT doc_id, shingle,
@@ -484,9 +486,7 @@ object LlmQueries {
        |b AS (SELECT vec_id, embedding, $bucketSql AS bucket FROM embs2)
        |SELECT vec_a, vec_b, cos FROM (
        |  SELECT a.vec_id AS vec_a, b2.vec_id AS vec_b,
-       |    ROUND(list_inner_product(a.embedding, b2.embedding) /
-       |          sqrt(list_inner_product(a.embedding, a.embedding)) /
-       |          sqrt(list_inner_product(b2.embedding, b2.embedding)), 4)
+       |    ${VectorFunctions.cosine4Sql("a.embedding", "b2.embedding")}
        |      AS cos
        |  FROM b a JOIN b b2
        |    ON a.bucket = b2.bucket AND a.vec_id < b2.vec_id) p
@@ -506,12 +506,9 @@ object LlmQueries {
 
   val qSimSearch = Q(
     "q_sim_search",
-    """SELECT vec_id, score FROM (
+    s"""SELECT vec_id, score FROM (
       |  SELECT e.vec_id,
-      |    ROUND(list_inner_product(CAST(e.embedding AS DOUBLE[]), p.pe) /
-      |          sqrt(list_inner_product(CAST(e.embedding AS DOUBLE[]),
-      |                                  CAST(e.embedding AS DOUBLE[]))) /
-      |          sqrt(list_inner_product(p.pe, p.pe)), 4) AS score
+      |    ${VectorFunctions.cosine4Sql("CAST(e.embedding AS DOUBLE[])", "p.pe")} AS score
       |  FROM embeddings e,
       |    (SELECT CAST(embedding AS DOUBLE[]) AS pe FROM embeddings
       |     WHERE vec_id = 0) p
@@ -528,9 +525,7 @@ object LlmQueries {
        |  FROM embeddings)
        |SELECT vec_id, score FROM (
        |  SELECT e.vec_id,
-       |    ROUND(list_inner_product(e.embedding, p.embedding) /
-       |          sqrt(list_inner_product(e.embedding, e.embedding)) /
-       |          sqrt(list_inner_product(p.embedding, p.embedding)), 4)
+       |    ${VectorFunctions.cosine4Sql("e.embedding", "p.embedding")}
        |      AS score
        |  FROM b e JOIN (SELECT * FROM b WHERE vec_id = 0) p
        |    ON e.bucket = p.bucket
@@ -562,9 +557,7 @@ object LlmQueries {
        |pr AS (
        |  SELECT p.qid, e.vec_id,
        |    CASE WHEN e.bucket = p.qb THEN 1 ELSE 0 END AS inb,
-       |    ROUND(list_inner_product(e.v, p.qv)
-       |      / sqrt(list_inner_product(e.v, e.v))
-       |      / sqrt(list_inner_product(p.qv, p.qv)), 4) AS score
+       |    ${VectorFunctions.cosine4Sql("e.v", "p.qv")} AS score
        |  FROM e JOIN p ON e.vec_id <> p.qid),
        |rk AS (
        |  SELECT qid, inb,
@@ -596,8 +589,8 @@ object LlmQueries {
     val pr = e.join(broadcast(p), col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"),
         when(col("bucket") === col("qb"), 1).otherwise(0).as("inb"),
-        round(VectorFunctions.cosine(col("v"),
-          col("qv")), 4).as("score"))
+        VectorFunctions.cosine4(col("v"),
+          col("qv")).as("score"))
     val wa = org.apache.spark.sql.expressions.Window.partitionBy("qid")
       .orderBy(col("score").desc, col("vec_id"))
     val wb = org.apache.spark.sql.expressions.Window
@@ -869,10 +862,8 @@ object LlmQueries {
     * shingle-bucketed, never all-pairs. */
   val qDecontaminate = Q(
     "q_decontaminate",
-    """WITH sh AS (
-      |  SELECT DISTINCT doc_id, substr(text, p, 20) AS shingle
-      |  FROM documents, generate_series(1, 2000) t(p)
-      |  WHERE p <= greatest(length(text) - 19, 1)),
+    s"""WITH sh AS (
+      |  ${ShingleStore.distinctSql("documents", 20, 2000)}),
       |ev AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 97 = 0),
       |tr AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 97 <> 0)
       |SELECT tr.doc_id, count(*) AS n_shared
@@ -1019,12 +1010,9 @@ object LlmQueries {
       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
       |    CAST(embedding[1] AS DOUBLE) AS dim1
       |  FROM embeddings),
-      |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
+      |${Clustering.lowIdCentroidsCte("e", 8)},
       |${Clustering.sqDistCte("d", "e.dim1, ")},
-      |a AS (
-      |  SELECT vec_id, dim1, cid, d2,
-      |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rk
-      |  FROM d)
+      |${Clustering.nearestCte("a", "d", "dim1, cid, d2")}
       |SELECT cid AS cluster, count(*) AS n_members,
       |  ROUND(avg(dim1), 6) AS mean_dim1, ROUND(avg(d2), 6) AS mean_d2
       |FROM a WHERE rk = 1
@@ -1032,8 +1020,7 @@ object LlmQueries {
     val e = t(s, d, "embeddings").select(col("vec_id"),
       col("embedding").cast("array<double>").as("v"),
       element_at(col("embedding"), 1).cast(DoubleType).as("dim1"))
-    val cents = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cid"), col("v").as("cvec"))
+    val cents = Clustering.lowIdCentroids(e, 8)
     Clustering.assign(e, "v", cents)
       .groupBy(col("cluster"))
       .agg(count(lit(1)).as("n_members"),
@@ -1320,15 +1307,8 @@ object LlmQueries {
 
   val qTextLangid = Q(
     "q_text_langid",
-    """SELECT lang, predicted, count(*) AS cnt FROM (
-      |  SELECT lang,
-      |    CASE WHEN vr > 0.34 THEN 'es' WHEN vr > 0.32 THEN 'en'
-      |         WHEN vr > 0.30 THEN 'fr' WHEN vr > 0.28 THEN 'de'
-      |         ELSE 'zh' END AS predicted
-      |  FROM (SELECT lang,
-      |          CAST(length(text) - length(translate(text, 'aeiou', ''))
-      |               AS DOUBLE) / length(text) AS vr
-      |        FROM documents) v) p
+    s"""SELECT lang, predicted, count(*) AS cnt FROM (
+      |  ${TextOps.predictedLangSql}) p
       |GROUP BY lang, predicted ORDER BY lang, predicted""".stripMargin) {
     (s, d) =>
       TextOps.langIdConfusion(t(s, d, "documents"))
@@ -1584,16 +1564,6 @@ object LlmQueries {
       .toDF("n_docs", "n_clustered", "n_survivors")
   }
 
-  /** One unrolled min-label sweep (the q_cc_labelprop helper, local copy
-    * for this file's oracle). */
-  private def ccSweep(prev: String, cur: String): String =
-    s"""$cur AS (
-       |  SELECT l.v, least(l.lbl, coalesce(m.nmin, l.lbl)) AS lbl
-       |  FROM $prev l LEFT JOIN (
-       |    SELECT s.src AS v, min(x.lbl) AS nmin
-       |    FROM sym s JOIN $prev x ON s.dst = x.v
-       |    GROUP BY s.src) m ON l.v = m.v)""".stripMargin
-
   /** The END-TO-END near-dup pipeline UNDER THE ORACLE GATE: simhash
     * banded pairs → 3 min-label CC sweeps (`plans.LabelProp.iterate`) →
     * survivor set (min doc per label + every unclustered doc). The
@@ -1627,10 +1597,7 @@ object LlmQueries {
        |  WHERE ${simhashHamSql("a", "b")} <= (SELECT thr FROM par)),
        |sym AS (SELECT doc_a AS src, doc_b AS dst FROM cand
        |        UNION ALL SELECT doc_b AS src, doc_a AS dst FROM cand),
-       |l0 AS (SELECT DISTINCT src AS v, src AS lbl FROM sym),
-       |${ccSweep("l0", "l1")},
-       |${ccSweep("l1", "l2")},
-       |${ccSweep("l2", "l3")},
+       |${graft.plans.LabelProp.iterateSql(3)},
        |surv AS (
        |  SELECT doc_id FROM docs2
        |  WHERE doc_id NOT IN (SELECT v FROM l3)
@@ -1968,7 +1935,7 @@ object LlmQueries {
     * lexical BM25 rank (`lex`, over `scored`) and the cosine rank to
     * vec_id 0 (`emb`). Follows [[bm25TermsSql]]. */
   private val lexEmbSql =
-    """scored AS (
+    s"""scored AS (
       |  SELECT tf.doc_id,
       |    sum(CAST(ROUND(idf.idf * tf.tf * 2.2
       |      / (tf.tf + 1.2 * (0.25 + 0.75 * len.dl / idf.avgdl))
@@ -1983,10 +1950,7 @@ object LlmQueries {
       |emb AS (
       |  SELECT e.vec_id AS doc_id,
       |    CAST(row_number() OVER (ORDER BY
-      |      ROUND(list_inner_product(CAST(e.embedding AS DOUBLE[]), p.pe)
-      |        / sqrt(list_inner_product(CAST(e.embedding AS DOUBLE[]),
-      |                                  CAST(e.embedding AS DOUBLE[])))
-      |        / sqrt(list_inner_product(p.pe, p.pe)), 4) DESC, e.vec_id)
+      |      ${VectorFunctions.cosine4Sql("CAST(e.embedding AS DOUBLE[])", "p.pe")} DESC, e.vec_id)
       |      AS BIGINT) AS rk
       |  FROM embeddings e,
       |    (SELECT CAST(embedding AS DOUBLE[]) AS pe FROM embeddings
@@ -2227,33 +2191,24 @@ object LlmQueries {
     * BEFORE ranking so the per-query top-3 is cross-engine-stable. */
   val qHardNegatives = Q(
     "q_hard_negatives",
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
       |  FROM embeddings)
       |SELECT qid, rk, vec_id AS neg_id, label AS neg_label, score FROM (
       |  SELECT q.vec_id AS qid, e.vec_id, e.label,
-      |    ROUND(list_inner_product(q.v, e.v)
-      |      / sqrt(list_inner_product(q.v, q.v))
-      |      / sqrt(list_inner_product(e.v, e.v)), 4) AS score,
-      |    row_number() OVER (PARTITION BY q.vec_id
-      |      ORDER BY ROUND(list_inner_product(q.v, e.v)
-      |        / sqrt(list_inner_product(q.v, q.v))
-      |        / sqrt(list_inner_product(e.v, e.v)), 4) DESC, e.vec_id)
-      |      AS rk
+      |    ${VectorFunctions.cosine4Sql("q.v", "e.v")} AS score,
+      |    ${SimSearch.probeRankSql} AS rk
       |  FROM (SELECT * FROM e WHERE vec_id < 8) q
       |  JOIN e ON e.label <> q.label) x
       |WHERE rk <= 3 ORDER BY qid, rk""".stripMargin) { (s, d) =>
     val embs = t(s, d, "embeddings")
-    val queries = embs.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("qid"), col("label").as("q_label"),
-        col("embedding").as("q_e"))
+    val queries = SimSearch.probePanel(embs, col("vec_id") < 8)
     val scored = embs
       .join(broadcast(queries), col("label") =!= col("q_label"))
       .select(col("qid"), col("vec_id"), col("label"),
-        round(VectorFunctions.cosine(col("embedding"), col("q_e")), 4).as("score"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("qid")
-      .orderBy(col("score").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w).cast(LongType))
+        VectorFunctions.cosine4(col("embedding"), col("q_e")).as("score"))
+    scored
+      .withColumn("rk", row_number().over(SimSearch.byScore).cast(LongType))
       .filter(col("rk") <= 3)
       .select(col("qid"), col("rk"), col("vec_id").as("neg_id"),
         col("label").as("neg_label"), col("score"))
@@ -2491,16 +2446,7 @@ object LlmQueries {
     * equi-join — nothing here is all-pairs. */
   val qDedupRateBySource = Q(
     "q_dedup_rate_by_source",
-    s"""WITH $ngramDocs2,
-       |$simhashParCte,
-       |$simhashSigCtes,
-       |$simhashBandsCte,
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, a.simhash AS sa,
-       |    a.simhash1 AS sa1,
-       |    b.doc_id AS doc_b, b.simhash AS sb, b.simhash1 AS sb1
-       |  FROM bands a JOIN bands b
-       |    ON a.bidx = b.bidx AND a.bval = b.bval AND a.doc_id < b.doc_id),
+    s"""WITH $simhashCandCtes,
        |dup AS (
        |  SELECT DISTINCT doc_id FROM (
        |    SELECT doc_a AS doc_id FROM cand
@@ -3336,10 +3282,8 @@ object LlmQueries {
     * aggregation. */
   val qShingleDfProfile = Q(
     "q_shingle_df_profile",
-    """WITH sh AS (
-      |  SELECT DISTINCT doc_id, substr(text, p, 5) AS shingle
-      |  FROM documents, generate_series(1, 2000) t(p)
-      |  WHERE p <= greatest(length(text) - 4, 1)),
+    s"""WITH sh AS (
+      |  ${ShingleStore.distinctSql("documents", 5, 2000)}),
       |d AS (SELECT shingle, count(*) AS df FROM sh GROUP BY shingle),
       |tot AS (SELECT count(*) AS n_shingles FROM d),
       |b AS (SELECT length(bin(df)) - 1 AS bucket, df FROM d)
@@ -3425,7 +3369,7 @@ object LlmQueries {
     embs.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(probe))
       .select(col("vec_id").as("doc_id"),
-        round(VectorFunctions.cosine(col("embedding"), col("pe")), 4).as("score"))
+        VectorFunctions.cosine4(col("embedding"), col("pe")).as("score"))
       .orderBy(col("score").desc, col("doc_id")).limit(50)
       .select(col("doc_id"),
         row_number().over(Window.orderBy(col("score").desc, col("doc_id")))
@@ -3454,12 +3398,9 @@ object LlmQueries {
       |  SELECT vec_id + 1000000 AS vec_id,
       |    list_transform(embedding, x -> CAST(x AS DOUBLE) * 1.1) AS v
       |  FROM embeddings WHERE vec_id % 50 = 0),
-      |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 64),
+      |${Clustering.lowIdCentroidsCte("e", 64)},
       |${Clustering.sqDistCte("dist")},
-      |a AS (
-      |  SELECT vec_id, cid,
-      |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rk
-      |  FROM dist),
+      |${Clustering.nearestCte("a", "dist", "cid")},
       |asg AS (
       |  SELECT e.vec_id, e.v, a.cid AS cluster
       |  FROM e JOIN a ON e.vec_id = a.vec_id AND a.rk = 1),
@@ -3467,9 +3408,7 @@ object LlmQueries {
       |  SELECT DISTINCT b.vec_id
       |  FROM asg a JOIN asg b
       |    ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-      |  WHERE ROUND(list_inner_product(a.v, b.v)
-      |      / sqrt(list_inner_product(a.v, a.v))
-      |      / sqrt(list_inner_product(b.v, b.v)), 4) >= 0.99)
+      |  WHERE ${VectorFunctions.cosine4Sql("a.v", "b.v")} >= 0.99)
       |SELECT cluster, count(*) AS n_members,
       |  CAST(count(r.vec_id) AS BIGINT) AS n_removed,
       |  CAST(count(*) - count(r.vec_id) AS BIGINT) AS n_kept
@@ -3482,8 +3421,7 @@ object LlmQueries {
         .select((col("vec_id") + 1000000).as("vec_id"),
           transform(col("embedding"), x => x.cast(DoubleType) * 1.1)
             .as("v")))
-    val cents = e.filter(col("vec_id") < 64)
-      .select(col("vec_id").as("cid"), col("v").as("cvec"))
+    val cents = Clustering.lowIdCentroids(e, 64)
     val asg = Clustering.assign(e, "v", cents)
       .join(e, Seq("vec_id"))
       .select(col("vec_id"), col("v"), col("cluster"))
@@ -3494,7 +3432,7 @@ object LlmQueries {
       col("v").as("vb"))
     val removed = a.join(b, Seq("cluster"))
       .filter(col("ida") < col("idb"))
-      .filter(round(VectorFunctions.cosine(col("va"), col("vb")), 4) >= 0.99)
+      .filter(VectorFunctions.cosine4(col("va"), col("vb")) >= 0.99)
       .select(col("idb").as("vec_id")).distinct()
     asg.join(removed.withColumn("is_rem", lit(1)), Seq("vec_id"), "left")
       .groupBy("cluster")
@@ -3612,12 +3550,9 @@ object LlmQueries {
     "q_silhouette",
     s"""WITH e AS (
       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
+      |${Clustering.lowIdCentroidsCte("e", 8)},
       |${Clustering.sqDistCte("dist")},
-      |r AS (
-      |  SELECT vec_id, cid, d2,
-      |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rk
-      |  FROM dist),
+      |${Clustering.nearestCte("r", "dist", "cid, d2")},
       |ab AS (
       |  SELECT a.vec_id, a.cid AS cluster, a.d2 AS a2, b.d2 AS b2
       |  FROM r a JOIN r b ON a.vec_id = b.vec_id
@@ -3633,8 +3568,7 @@ object LlmQueries {
       |FROM sil GROUP BY cluster ORDER BY cluster""".stripMargin) { (s, d) =>
     val e = t(s, d, "embeddings").select(col("vec_id"),
       col("embedding").cast("array<double>").as("v"))
-    val cents = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cid"), col("v").as("cvec"))
+    val cents = Clustering.lowIdCentroids(e, 8)
     val dist = e.crossJoin(broadcast(cents))
       .select(col("vec_id"),
         col("cid"), Clustering.sqDist(col("v"), col("cvec")).as("d2"))
@@ -3921,12 +3855,9 @@ object LlmQueries {
       |  SELECT vec_id + 2000000 AS vec_id,
       |    list_transform(v, x -> x * 1.05) AS v, 0 AS is_train
       |  FROM base WHERE is_train = 1 AND vec_id % 40 = 0),
-      |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 64),
+      |${Clustering.lowIdCentroidsCte("e", 64)},
       |${Clustering.sqDistCte("dist")},
-      |a AS (
-      |  SELECT vec_id, cid,
-      |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rk
-      |  FROM dist),
+      |${Clustering.nearestCte("a", "dist", "cid")},
       |asg AS (
       |  SELECT e.vec_id, e.v, e.is_train, a.cid AS cluster
       |  FROM e JOIN a ON e.vec_id = a.vec_id AND a.rk = 1),
@@ -3935,9 +3866,7 @@ object LlmQueries {
       |  FROM asg tr JOIN asg te
       |    ON tr.cluster = te.cluster AND tr.is_train = 1
       |      AND te.is_train = 0
-      |  WHERE ROUND(list_inner_product(tr.v, te.v)
-      |      / sqrt(list_inner_product(tr.v, tr.v))
-      |      / sqrt(list_inner_product(te.v, te.v)), 4) >= 0.99)
+      |  WHERE ${VectorFunctions.cosine4Sql("tr.v", "te.v")} >= 0.99)
       |SELECT
       |  CAST((SELECT count(*) FROM asg WHERE is_train = 1) AS BIGINT)
       |    AS n_train,
@@ -3956,8 +3885,7 @@ object LlmQueries {
         .select((col("vec_id") + 2000000).as("vec_id"),
           transform(col("v"), x => x * 1.05).as("v"),
           lit(0).as("is_train")))
-    val cents = e.filter(col("vec_id") < 64)
-      .select(col("vec_id").as("cid"), col("v").as("cvec"))
+    val cents = Clustering.lowIdCentroids(e, 64)
     val asg = Clustering.assign(e.select("vec_id", "v"), "v", cents)
       .join(e, Seq("vec_id"))
       .select(col("vec_id"), col("v"), col("is_train"), col("cluster"))
@@ -3967,7 +3895,7 @@ object LlmQueries {
     val te = asg.filter(col("is_train") === 0)
       .select(col("cluster"), col("vec_id").as("te_id"), col("v").as("vte"))
     val hits = tr.join(te, Seq("cluster"))
-      .filter(round(VectorFunctions.cosine(col("vtr"), col("vte")), 4) >= 0.99)
+      .filter(VectorFunctions.cosine4(col("vtr"), col("vte")) >= 0.99)
       .select(col("te_id")).distinct()
     val counts = asg.agg(
       sum(col("is_train")).cast(LongType).as("n_train"),
@@ -3980,6 +3908,28 @@ object LlmQueries {
         col("n_planted_caught"))
   }
 
+  /** The MMR query's round k ≥ 2 (its `s`k, `w`k and, below k = 5, the
+    * `pk`k CTEs): the best 2·rel4 − maxsim4 candidate not yet picked. */
+  private def mmrRoundSql(k: Int): String = {
+    val pk = s"pk${k - 1}"
+    s"""s$k AS (
+       |  SELECT c.vec_id,
+       |    2 * max(c.rel4) - max(${rel4Sql("c.v", "p.v")})
+       |      AS score2
+       |  FROM pool c CROSS JOIN $pk p
+       |  WHERE c.vec_id NOT IN (SELECT vec_id FROM $pk)
+       |  GROUP BY c.vec_id),
+       |w$k AS (SELECT * FROM s$k ORDER BY score2 DESC, vec_id LIMIT 1)""".stripMargin +
+      (if (k == 5) "" else
+        s""",
+           |pk$k AS (SELECT * FROM $pk UNION ALL
+           |        SELECT p.vec_id, p.v FROM pool p JOIN w$k USING (vec_id))""".stripMargin)
+  }
+
+  /** The 4-dp cosine as an integer count of 10⁻⁴, MMR's exact score unit. */
+  private def rel4Sql(a: String, b: String): String =
+    s"CAST(round(${VectorFunctions.cosine4Sql(a, b)} * 10000) AS BIGINT)"
+
   /** Maximal-marginal-relevance (MMR, λ = 0.5) diverse top-5 selection
     * from the 20-candidate relevance pool of probe vec 0 — the
     * diversity-aware re-ranker a retrieval-augmented pipeline (or a
@@ -3990,72 +3940,20 @@ object LlmQueries {
     * 2·rel4 − maxsim4, and every pick breaks ties by vec_id. */
   val qMmrSelect = Q(
     "q_mmr_select",
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT vec_id,
       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
       |  FROM embeddings),
       |probe AS (SELECT v AS pv FROM e WHERE vec_id = 0),
       |pool AS (
       |  SELECT e.vec_id, e.v,
-      |    CAST(round(ROUND(list_inner_product(e.v, probe.pv)
-      |      / sqrt(list_inner_product(e.v, e.v))
-      |      / sqrt(list_inner_product(probe.pv, probe.pv)), 4) * 10000)
-      |      AS BIGINT) AS rel4
+      |    ${rel4Sql("e.v", "probe.pv")} AS rel4
       |  FROM e, probe WHERE e.vec_id <> 0
       |  ORDER BY rel4 DESC, e.vec_id LIMIT 20),
       |w1 AS (SELECT vec_id, 2 * rel4 AS score2 FROM pool
       |       ORDER BY rel4 DESC, vec_id LIMIT 1),
       |pk1 AS (SELECT p.vec_id, p.v FROM pool p JOIN w1 USING (vec_id)),
-      |s2 AS (
-      |  SELECT c.vec_id,
-      |    2 * max(c.rel4) - max(CAST(round(ROUND(
-      |      list_inner_product(c.v, p.v)
-      |      / sqrt(list_inner_product(c.v, c.v))
-      |      / sqrt(list_inner_product(p.v, p.v)), 4) * 10000) AS BIGINT))
-      |      AS score2
-      |  FROM pool c CROSS JOIN pk1 p
-      |  WHERE c.vec_id NOT IN (SELECT vec_id FROM pk1)
-      |  GROUP BY c.vec_id),
-      |w2 AS (SELECT * FROM s2 ORDER BY score2 DESC, vec_id LIMIT 1),
-      |pk2 AS (SELECT * FROM pk1 UNION ALL
-      |        SELECT p.vec_id, p.v FROM pool p JOIN w2 USING (vec_id)),
-      |s3 AS (
-      |  SELECT c.vec_id,
-      |    2 * max(c.rel4) - max(CAST(round(ROUND(
-      |      list_inner_product(c.v, p.v)
-      |      / sqrt(list_inner_product(c.v, c.v))
-      |      / sqrt(list_inner_product(p.v, p.v)), 4) * 10000) AS BIGINT))
-      |      AS score2
-      |  FROM pool c CROSS JOIN pk2 p
-      |  WHERE c.vec_id NOT IN (SELECT vec_id FROM pk2)
-      |  GROUP BY c.vec_id),
-      |w3 AS (SELECT * FROM s3 ORDER BY score2 DESC, vec_id LIMIT 1),
-      |pk3 AS (SELECT * FROM pk2 UNION ALL
-      |        SELECT p.vec_id, p.v FROM pool p JOIN w3 USING (vec_id)),
-      |s4 AS (
-      |  SELECT c.vec_id,
-      |    2 * max(c.rel4) - max(CAST(round(ROUND(
-      |      list_inner_product(c.v, p.v)
-      |      / sqrt(list_inner_product(c.v, c.v))
-      |      / sqrt(list_inner_product(p.v, p.v)), 4) * 10000) AS BIGINT))
-      |      AS score2
-      |  FROM pool c CROSS JOIN pk3 p
-      |  WHERE c.vec_id NOT IN (SELECT vec_id FROM pk3)
-      |  GROUP BY c.vec_id),
-      |w4 AS (SELECT * FROM s4 ORDER BY score2 DESC, vec_id LIMIT 1),
-      |pk4 AS (SELECT * FROM pk3 UNION ALL
-      |        SELECT p.vec_id, p.v FROM pool p JOIN w4 USING (vec_id)),
-      |s5 AS (
-      |  SELECT c.vec_id,
-      |    2 * max(c.rel4) - max(CAST(round(ROUND(
-      |      list_inner_product(c.v, p.v)
-      |      / sqrt(list_inner_product(c.v, c.v))
-      |      / sqrt(list_inner_product(p.v, p.v)), 4) * 10000) AS BIGINT))
-      |      AS score2
-      |  FROM pool c CROSS JOIN pk4 p
-      |  WHERE c.vec_id NOT IN (SELECT vec_id FROM pk4)
-      |  GROUP BY c.vec_id),
-      |w5 AS (SELECT * FROM s5 ORDER BY score2 DESC, vec_id LIMIT 1),
+      |${(2 to 5).map(mmrRoundSql).mkString(",\n")},
       |ranked AS (
       |  SELECT 1 AS rank, vec_id, score2 FROM w1
       |  UNION ALL SELECT 2, vec_id, score2 FROM w2
@@ -4072,7 +3970,7 @@ object LlmQueries {
         transform(col("embedding"), x => x.cast(DoubleType)).as("v"))
     val probe = embs.filter(col("vec_id") === 0).select(col("v").as("pv"))
     def sim4(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      round(round(VectorFunctions.cosine(a, b), 4) * 10000).cast(LongType)
+      round(VectorFunctions.cosine4(a, b) * 10000).cast(LongType)
     val pool = embs.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(probe))
       .select(col("vec_id"), col("v"), sim4(col("v"), col("pv")).as("rel4"))
@@ -4247,15 +4145,8 @@ object LlmQueries {
     * wants). Exact integer TP/FP/FN; metrics are ·10⁶ integer DIVs. */
   val qLangidMetrics = Q(
     "q_langid_metrics",
-    """WITH p AS (
-      |  SELECT lang,
-      |    CASE WHEN vr > 0.34 THEN 'es' WHEN vr > 0.32 THEN 'en'
-      |         WHEN vr > 0.30 THEN 'fr' WHEN vr > 0.28 THEN 'de'
-      |         ELSE 'zh' END AS predicted
-      |  FROM (SELECT lang,
-      |          CAST(length(text) - length(translate(text, 'aeiou', ''))
-      |               AS DOUBLE) / length(text) AS vr
-      |        FROM documents) v),
+    s"""WITH p AS (
+      |  ${TextOps.predictedLangSql}),
       |cls AS (SELECT DISTINCT lang AS c FROM p),
       |m AS (
       |  SELECT cls.c,
@@ -4330,7 +4221,7 @@ object LlmQueries {
     * the worst-vector argmax is an integer argmax. */
   val qEmbedQuantizeAudit = Q(
     "q_embed_quantize_audit",
-    """WITH v AS (
+    s"""WITH v AS (
       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
       |  FROM embeddings),
       |sc AS (
@@ -4343,9 +4234,7 @@ object LlmQueries {
       |  FROM sc),
       |pv AS (
       |  SELECT vec_id,
-      |    CAST(round(list_inner_product(e, r)
-      |      / sqrt(list_inner_product(e, e))
-      |      / sqrt(list_inner_product(r, r)) * 1000000) AS BIGINT) AS c6,
+      |    CAST(round(${VectorFunctions.cosineSql("e", "r")} * 1000000) AS BIGINT) AS c6,
       |    CAST(round(list_max(list_transform(
       |      generate_series(1, len(e)), i -> abs(e[i] - r[i])))
       |      * 1000000000) AS BIGINT) AS me9
@@ -4770,12 +4659,9 @@ object LlmQueries {
     s"""WITH e AS (
       |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
       |  FROM embeddings),
-      |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
+      |${Clustering.lowIdCentroidsCte("e", 8)},
       |${Clustering.sqDistCte("dd", "e.label, ")},
-      |a AS (
-      |  SELECT vec_id, label, cid,
-      |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rk
-      |  FROM dd),
+      |${Clustering.nearestCte("a", "dd", "label, cid")},
       |o AS (SELECT cid, label, count(*) AS o FROM a WHERE rk = 1
       |  GROUP BY 1, 2),
       |marg AS (
@@ -4786,25 +4672,9 @@ object LlmQueries {
       |pur AS (
       |  SELECT sum(mx) AS pure_n FROM
       |    (SELECT cid, max(o) AS mx FROM o GROUP BY 1) z),
-      |mi AS (
-      |  SELECT max(n) AS n, sum(CAST(ROUND(
-      |    CAST(o AS DOUBLE) / CAST(n AS DOUBLE)
-      |      * ln(CAST(n AS DOUBLE) * CAST(o AS DOUBLE)
-      |           / (CAST(r AS DOUBLE) * CAST(c AS DOUBLE)))
-      |    * 1000000000) AS HUGEINT)) AS mi9
-      |  FROM marg),
-      |hc AS (
-      |  SELECT sum(CAST(ROUND(
-      |    -(CAST(r AS DOUBLE) / CAST(n AS DOUBLE))
-      |      * ln(CAST(r AS DOUBLE) / CAST(n AS DOUBLE))
-      |    * 1000000000) AS HUGEINT)) AS h9
-      |  FROM (SELECT DISTINCT cid, r, n FROM marg)),
-      |hl AS (
-      |  SELECT sum(CAST(ROUND(
-      |    -(CAST(c AS DOUBLE) / CAST(n AS DOUBLE))
-      |      * ln(CAST(c AS DOUBLE) / CAST(n AS DOUBLE))
-      |    * 1000000000) AS HUGEINT)) AS h9
-      |  FROM (SELECT DISTINCT label, c, n FROM marg))
+      |${AnalyticsQueries.mutualInfo9Sql},
+      |${AnalyticsQueries.marginalEntropy9Sql("hc", "cid", "r")},
+      |${AnalyticsQueries.marginalEntropy9Sql("hl", "label", "c")}
       |SELECT CAST(mi.n AS BIGINT) AS n,
       |  ROUND(CAST(pur.pure_n AS DOUBLE) / CAST(mi.n AS DOUBLE), 6)
       |    AS purity,
@@ -4815,11 +4685,9 @@ object LlmQueries {
       |    / sqrt(CAST(hc.h9 AS DOUBLE) / 1000000000
       |         * (CAST(hl.h9 AS DOUBLE) / 1000000000)), 6) AS nmi
       |FROM mi, hc, hl, pur""".stripMargin) { (s, d) =>
-    val big38 = DecimalType(38, 0)
     val e = t(s, d, "embeddings").select(col("vec_id"), col("label"),
       col("embedding").cast("array<double>").as("v"))
-    val cents = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cid"), col("v").as("cvec"))
+    val cents = Clustering.lowIdCentroids(e, 8)
     // the contingency panel feeds SEVEN bounded consumers (margins, n,
     // purity, MI, two entropies) — without a fence each re-runs the
     // corpus-sized centroid argmin (the q_bradley_terry lesson)
@@ -4834,19 +4702,12 @@ object LlmQueries {
       .crossJoin(broadcast(n))
     val pur = o.groupBy("cid").agg(max("o").as("mx"))
       .agg(sum("mx").as("pure_n"))
-    val mi = marg.agg(max("n").as("n"),
-      sum(round(col("o").cast(DoubleType) / col("n").cast(DoubleType)
-        * log(col("n").cast(DoubleType) * col("o").cast(DoubleType)
-          / (col("r").cast(DoubleType) * col("c").cast(DoubleType)))
-        * 1000000000).cast(big38)).as("mi9"))
-    def margH(keyCol: String, cntCol: String): DataFrame =
-      marg.select(col(keyCol), col(cntCol), col("n")).distinct()
-        .agg(sum(round(-(col(cntCol).cast(DoubleType)
-            / col("n").cast(DoubleType))
-          * log(col(cntCol).cast(DoubleType) / col("n").cast(DoubleType))
-          * 1000000000).cast(big38)).as("h9"))
-    mi.crossJoin(broadcast(margH("cid", "r").select(col("h9").as("hc9"))))
-      .crossJoin(broadcast(margH("label", "c").select(col("h9").as("hl9"))))
+    AnalyticsQueries.mutualInfo9(marg)
+      .crossJoin(broadcast(AnalyticsQueries.marginalEntropy9(marg, "cid", "r")
+        .select(col("h9").as("hc9"))))
+      .crossJoin(broadcast(
+        AnalyticsQueries.marginalEntropy9(marg, "label", "c")
+          .select(col("h9").as("hl9"))))
       .crossJoin(broadcast(pur))
       .select(col("n").cast(LongType).as("n"),
         round(col("pure_n").cast(DoubleType) / col("n").cast(DoubleType), 6)

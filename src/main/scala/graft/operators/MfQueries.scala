@@ -164,8 +164,8 @@ object MfQueries {
     f.crossJoin(broadcast(seeds))
       .filter(col("item_id") =!= col("seed_id"))
       .select(col("seed_id"), col("item_id"),
-        round(graft.functions.VectorFunctions.cosine(col("f"),
-          col("seed_f")), 4).as("score"))
+        graft.functions.VectorFunctions.cosine4(col("f"),
+          col("seed_f")).as("score"))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= 5)
       .select("seed_id", "item_id", "score", "rk")
@@ -591,12 +591,6 @@ object MfQueries {
         "max_item_id")
   }
 
-  /** ALS-backed metric-vs-budget sweep (the paper's figure-level
-    * deliverable): ALL THREE societal metrics + RMSE of the re-factorized
-    * model at α ∈ {0, 0.01, 0.05} — one ALS train per budget, reused for
-    * every metric. ALS-dependent values → rows-only here; the
-    * gradient-descent traces over iterations are property-tested in
-    * MfSpec. */
   /** Memoized (α, metric, objective, rmse) sweep rows per sfDir: the sweep
     * retrains ALS once per nonzero budget (the paper's Alg. 1 cost
     * structure), so the two registered readouts of it — the full sweep
@@ -714,6 +708,12 @@ object MfQueries {
       }
     }
 
+  /** ALS-backed metric-vs-budget sweep (the paper's figure-level
+    * deliverable): ALL THREE societal metrics + RMSE of the re-factorized
+    * model at α ∈ {0, 0.01, 0.05} — one ALS train per budget, reused for
+    * every metric. ALS-dependent values → rows-only here; the
+    * gradient-descent traces over iterations are property-tested in
+    * MfSpec. */
   val qAntidoteSweepAls = Q.noOracle("q_antidote_sweep_als") { (s, d) =>
     val spark = s
     import spark.implicits._
@@ -964,11 +964,7 @@ object MfQueries {
     * one-row lift expression. */
   val qPopBias = Q(
     "q_pop_bias",
-    """WITH pairs AS (
-      |  SELECT a.l_partkey AS pa, b.l_partkey AS pb, count(*) AS w
-      |  FROM lineitem a JOIN lineitem b
-      |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-      |  GROUP BY a.l_partkey, b.l_partkey),
+    s"""WITH ${PairStore.coPairsSymCte("pairs")},
       |pop AS (
       |  SELECT l_partkey, count(DISTINCT l_orderkey) AS p
       |  FROM lineitem GROUP BY 1),
@@ -1026,14 +1022,10 @@ object MfQueries {
     * PairStore's raw pair counts ([[PairStore.coPairsSym]]). */
   val qUserRecsCf = Q(
     "q_user_recs_cf",
-    """WITH ui AS (
+    s"""WITH ui AS (
       |  SELECT DISTINCT o_custkey AS u, l_partkey AS item
       |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-      |co AS (
-      |  SELECT a.l_partkey AS pa, b.l_partkey AS pb, count(*) AS w
-      |  FROM lineitem a JOIN lineitem b
-      |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-      |  GROUP BY 1, 2),
+      |${PairStore.coPairsSymCte("co")},
       |cand AS (
       |  SELECT ui.u, co.pb AS item, CAST(sum(co.w) AS BIGINT) AS score
       |  FROM ui JOIN co ON ui.item = co.pa
@@ -1084,14 +1076,10 @@ object MfQueries {
     * catalog×32 regardless of basket skew. */
   val qRecGini = Q(
     "q_rec_gini",
-    """WITH ui AS (
+    s"""WITH ui AS (
       |  SELECT DISTINCT o_custkey AS u, l_partkey AS item
       |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-      |co0 AS (
-      |  SELECT a.l_partkey AS pa, b.l_partkey AS pb, count(*) AS w
-      |  FROM lineitem a JOIN lineitem b
-      |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-      |  GROUP BY 1, 2),
+      |${PairStore.coPairsSymCte("co0")},
       |co AS (
       |  SELECT pa, pb, w FROM (
       |    SELECT pa, pb, w,

@@ -59,6 +59,15 @@ object PairStore {
         col("n_raw").as("w")))
   }
 
+  /** DuckDB twin of [[coPairsSym]]: the CTE `name` (pa, pb, w) from the
+    * raw lineitem self-join. */
+  def coPairsSymCte(name: String): String =
+    s"""$name AS (
+       |  SELECT a.l_partkey AS pa, b.l_partkey AS pb, count(*) AS w
+       |  FROM lineitem a JOIN lineitem b
+       |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
+       |  GROUP BY 1, 2)""".stripMargin
+
   /** (src, dst): the co-purchase graph's edges, part pairs src < dst
     * that share at least 2 orders (n_dist ≥ 2) — the edge list of the
     * whole part-graph family. Its oracle twin is [[edgeCte]]. */

@@ -360,12 +360,9 @@ object PipelineQueries {
     "q_kmeans_update",
     s"""WITH e AS (
       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
+      |${graft.llm.Clustering.lowIdCentroidsCte("e", 8)},
       |${graft.llm.Clustering.sqDistCte("d")},
-      |a AS (
-      |  SELECT vec_id, cid,
-      |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rk
-      |  FROM d),
+      |${graft.llm.Clustering.nearestCte("a", "d", "cid")},
       |upd AS (
       |  SELECT a.cid, k AS pos, ROUND(avg(e.v[k]), 6) AS m
       |  FROM a JOIN e USING (vec_id), generate_series(1, 8) g(k)
@@ -375,8 +372,7 @@ object PipelineQueries {
       |FROM upd ORDER BY cluster, pos""".stripMargin) { (s, d) =>
     val e = t(s, d, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val cents = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cid"), col("v").as("cvec"))
+    val cents = graft.llm.Clustering.lowIdCentroids(e, 8)
     graft.llm.Clustering.updateCentroids(e, "vec_id", "v", cents)
       .select(col("cid").as("cluster"),
         posexplode(col("cvec")).as(Seq("pos0", "m")))
@@ -883,9 +879,9 @@ object PipelineQueries {
     * TakeOrdered, not a global sort. */
   val qTargetEncode = Q(
     "q_target_encode",
-    """WITH x AS (
+    s"""WITH x AS (
       |  SELECT o_orderkey, c_nationkey AS nk,
-      |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+      |    ${priceCentsSql("o_totalprice")} AS cents
       |  FROM orders JOIN customer ON o_custkey = c_custkey),
       |agg AS (
       |  SELECT nk, CAST(sum(cents) AS HUGEINT) AS s, count(*) AS cnt
@@ -900,7 +896,7 @@ object PipelineQueries {
       .join(broadcast(t(s, d, "customer").select("c_custkey", "c_nationkey")),
         col("o_custkey") === col("c_custkey"))
       .select(col("o_orderkey"), col("c_nationkey").as("nk"),
-        (dec2(col("o_totalprice")) * 100).cast(LongType).as("cents"))
+        priceCents(col("o_totalprice")).as("cents"))
     val agg = x.groupBy("nk")
       .agg(sum(col("cents")).cast(big38).as("s"), count(lit(1)).as("cnt"))
     x.join(broadcast(agg), "nk")
@@ -981,9 +977,8 @@ object PipelineQueries {
     * counts in one aggregate — nothing downstream scales with input. */
   val qPsi = Q(
     "q_psi",
-    """WITH x AS (
-      |  SELECT CAST(least(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
-      |      AS BIGINT) // 5000000, 9) AS INT) AS bucket,
+    s"""WITH x AS (
+      |  SELECT CAST(least(${priceCentsSql("o_totalprice")} // 5000000, 9) AS INT) AS bucket,
       |    CAST(year(CAST(o_orderdate AS DATE)) AS INT) AS yr
       |  FROM orders
       |  WHERE year(CAST(o_orderdate AS DATE)) IN (1995, 1996)),
@@ -1008,7 +1003,7 @@ object PipelineQueries {
       |  ROUND(CAST(p9 AS DOUBLE) / 1000000000, 6) AS psi_total
       |FROM term, psi ORDER BY bucket""".stripMargin) { (s, d) =>
     val big38 = DecimalType(38, 0)
-    val cents = (dec2(col("o_totalprice")) * 100).cast(LongType)
+    val cents = priceCents(col("o_totalprice"))
     val x = t(s, d, "orders")
       .select(least(floor(cents / 5000000), lit(9)).cast(IntegerType)
           .as("bucket"),
@@ -1170,9 +1165,9 @@ object PipelineQueries {
     * Top 100 by custkey keeps the dump bounded. */
   val qOnehotFeatures = Q(
     "q_onehot_features",
-    """WITH beh AS (
+    s"""WITH beh AS (
       |  SELECT o_custkey, count(*) AS n_orders,
-      |    sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
+      |    sum(${priceCentsSql("o_totalprice")})
       |      AS cents
       |  FROM orders GROUP BY o_custkey)
       |SELECT c_custkey,
@@ -1188,7 +1183,7 @@ object PipelineQueries {
     val beh = t(s, d, "orders").select("o_custkey", "o_totalprice")
       .groupBy("o_custkey")
       .agg(count(lit(1)).as("n_orders"),
-        sum((dec2(col("o_totalprice")) * 100).cast(LongType)).as("cents"))
+        sum(priceCents(col("o_totalprice"))).as("cents"))
     def seg(v: String): Column =
       (col("c_mktsegment") === v).cast(IntegerType)
         .as("seg_" + v.toLowerCase)
@@ -1409,9 +1404,9 @@ object PipelineQueries {
     * &#124;segment&#124; table. */
   val qNeymanAlloc = Q(
     "q_neyman_alloc",
-    """WITH x AS (
+    s"""WITH x AS (
       |  SELECT c.c_mktsegment AS segment,
-      |    CAST(CAST(o.o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+      |    ${priceCentsSql("o.o_totalprice")}
       |      AS cents
       |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey),
       |seg AS (
@@ -1447,7 +1442,7 @@ object PipelineQueries {
     val x = t(s, d, "orders")
       .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
       .select(col("c_mktsegment").as("segment"),
-        (dec2(col("o_totalprice")) * 100).cast(LongType).as("cents"))
+        priceCents(col("o_totalprice")).as("cents"))
     val seg = x.groupBy("segment")
       .agg(count(lit(1)).as("n_pop"),
         sum(col("cents").cast(big38)).as("s1"),
@@ -1476,6 +1471,17 @@ object PipelineQueries {
       .orderBy("segment")
   }
 
+  /** The DP releases' seeded uniform draw in (0, 1): the segment's md5
+    * stream under `tag`, (h mod 10⁶ + ½) / 10⁶. */
+  private def dpUniform(tag: String): Column =
+    ((graft.llm.TextOps.hash60(concat(col("segment"), lit(s":$tag")))
+      % 1000000L).cast(DoubleType) + lit(0.5)) / 1000000L
+
+  /** DuckDB twin of [[dpUniform]]. */
+  private def dpUniformSql(tag: String): String =
+    s"""(CAST(concat('0x', substr(md5(concat(segment, ':$tag')), 1, 15))
+       |      AS BIGINT) % 1000000 + 0.5) / 1000000""".stripMargin
+
   /** Differentially-private count release (geometric mechanism, ε = 1):
     * per-segment counts plus discrete-Laplace noise sampled by inverse
     * CDF as the difference of two geometrics G = ⌊−ln(u)⌋. The noise
@@ -1487,15 +1493,13 @@ object PipelineQueries {
     * erasure, DP release. */
   val qDpCount = Q(
     "q_dp_count",
-    """WITH seg AS (
+    s"""WITH seg AS (
       |  SELECT c_mktsegment AS segment, count(*) AS n_true
       |  FROM customer GROUP BY 1),
       |u AS (
       |  SELECT segment, n_true,
-      |    (CAST(concat('0x', substr(md5(concat(segment, ':1')), 1, 15))
-      |      AS BIGINT) % 1000000 + 0.5) / 1000000 AS u1,
-      |    (CAST(concat('0x', substr(md5(concat(segment, ':2')), 1, 15))
-      |      AS BIGINT) % 1000000 + 0.5) / 1000000 AS u2
+      |    ${dpUniformSql("1")} AS u1,
+      |    ${dpUniformSql("2")} AS u2
       |  FROM seg),
       |z AS (
       |  SELECT segment, n_true,
@@ -1508,14 +1512,10 @@ object PipelineQueries {
     val seg = t(s, d, "customer")
       .groupBy(col("c_mktsegment").as("segment"))
       .agg(count(lit(1)).as("n_true"))
-    val h = graft.llm.TextOps.hash60 _
-    def u(tag: String) =
-      ((h(concat(col("segment"), lit(s":$tag"))) % 1000000L)
-        .cast(DoubleType) + lit(0.5)) / 1000000L
     seg
       .withColumn("noise",
-        floor(-log(u("1"))).cast(LongType)
-          - floor(-log(u("2"))).cast(LongType))
+        floor(-log(dpUniform("1"))).cast(LongType)
+          - floor(-log(dpUniform("2"))).cast(LongType))
       .select(col("segment"), col("n_true").cast(LongType).as("n_true"),
         col("noise"), (col("n_true") + col("noise")).cast(LongType)
           .as("n_released"))
@@ -1531,9 +1531,9 @@ object PipelineQueries {
     * governance family's sum-release complement to the count release. */
   val qDpSum = Q(
     "q_dp_sum",
-    """WITH o AS (
+    s"""WITH o AS (
       |  SELECT c_mktsegment AS segment,
-      |    LEAST(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+      |    LEAST(${priceCentsSql("o_totalprice")}
       |      // 100, 100000) AS dollars,
       |    CASE WHEN o_totalprice > 100000 THEN 1 ELSE 0 END AS clipped
       |  FROM orders JOIN customer ON o_custkey = c_custkey),
@@ -1543,10 +1543,8 @@ object PipelineQueries {
       |  FROM o GROUP BY 1),
       |u AS (
       |  SELECT segment, sum_true, n_clipped,
-      |    (CAST(concat('0x', substr(md5(concat(segment, ':s1')), 1, 15))
-      |      AS BIGINT) % 1000000 + 0.5) / 1000000 AS u1,
-      |    (CAST(concat('0x', substr(md5(concat(segment, ':s2')), 1, 15))
-      |      AS BIGINT) % 1000000 + 0.5) / 1000000 AS u2
+      |    ${dpUniformSql("s1")} AS u1,
+      |    ${dpUniformSql("s2")} AS u2
       |  FROM seg),
       |z AS (
       |  SELECT segment, sum_true, n_clipped,
@@ -1561,20 +1559,16 @@ object PipelineQueries {
         .select("c_custkey", "c_mktsegment")),
         col("o_custkey") === col("c_custkey"))
       .select(col("c_mktsegment").as("segment"),
-        least(expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100" +
-          " AS BIGINT) DIV 100"), lit(100000L)).as("dollars"),
+        least(expr(priceCentsSql("o_totalprice") + " DIV 100"),
+          lit(100000L)).as("dollars"),
         when(col("o_totalprice") > 100000, 1).otherwise(0).as("clipped"))
     val seg = o.groupBy("segment")
       .agg(sum(col("dollars")).cast(LongType).as("sum_true"),
         sum(col("clipped")).cast(LongType).as("n_clipped"))
-    val h = graft.llm.TextOps.hash60 _
-    def u(tag: String) =
-      ((h(concat(col("segment"), lit(s":$tag"))) % 1000000L)
-        .cast(DoubleType) + lit(0.5)) / 1000000L
     seg
       .withColumn("noise",
-        floor(lit(-100000) * log(u("s1"))).cast(LongType)
-          - floor(lit(-100000) * log(u("s2"))).cast(LongType))
+        floor(lit(-100000) * log(dpUniform("s1"))).cast(LongType)
+          - floor(lit(-100000) * log(dpUniform("s2"))).cast(LongType))
       .select(col("segment"), col("sum_true"), col("n_clipped"),
         col("noise"),
         (col("sum_true") + col("noise")).cast(LongType).as("sum_released"))
@@ -1886,8 +1880,8 @@ object PipelineQueries {
     * panel; the ·2 rank trick keeps utilities integral for odd/even n. */
   val qDpQuantile = Q(
     "q_dp_quantile",
-    """WITH o AS (
-      |  SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+    s"""WITH o AS (
+      |  SELECT ${priceCentsSql("o_totalprice")}
       |    AS cents
       |  FROM orders),
       |b AS (
@@ -1924,7 +1918,7 @@ object PipelineQueries {
       |WHERE cw * 1000000 > r6 * tw
       |ORDER BY k LIMIT 1""".stripMargin) { (s, d) =>
     val o = t(s, d, "orders")
-      .select((dec2(col("o_totalprice")) * 100).cast(LongType).as("cents"))
+      .select(priceCents(col("o_totalprice")).as("cents"))
     val b = o.groupBy(least(expr("cents DIV 500000").cast(IntegerType),
         lit(100)).as("bkt"))
       .agg(count(lit(1)).as("c"))

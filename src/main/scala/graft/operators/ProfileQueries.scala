@@ -190,9 +190,9 @@ object ProfileQueries {
     * integer-product sum; one final division. */
   val qExpSmooth = Q(
     "q_exp_smooth",
-    """WITH ser AS (
+    s"""WITH ser AS (
       |  SELECT date_trunc('month', o_orderdate) AS mth,
-      |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
+      |    ${sumCentsSql}
       |      AS cents
       |  FROM orders GROUP BY 1),
       |idx AS (
@@ -219,7 +219,7 @@ object ProfileQueries {
       |FROM ag""".stripMargin) { (s, d) =>
     val ser = t(s, d, "orders")
       .groupBy(date_trunc("month", col("o_orderdate")).as("mth"))
-      .agg((sum(dec2(col("o_totalprice")) * 100)).cast(LongType).as("cents"))
+      .agg(sumCents.as("cents"))
     val n = ser.agg(count(lit(1)).as("n"))
     val idx = ser
       .withColumn("lag_k",

@@ -23,28 +23,73 @@ object RankQueries {
 
   private val big38 = DecimalType(38, 0)
 
+  /** Orders (key, customer, total) with their customer's segment. */
+  private def segOrders(s: SparkSession, d: String): DataFrame =
+    t(s, d, "orders").select("o_custkey", "o_orderkey", "o_totalprice")
+      .join(broadcast(t(s, d, "customer")
+          .select("c_custkey", "c_mktsegment")),
+        col("o_custkey") === col("c_custkey"))
+
+  /** Every order in exact cents, grouped by its segment name: the
+    * k-group frame of Dunn's test and Kruskal–Wallis. */
+  private[operators] def segCents(s: SparkSession, d: String): DataFrame =
+    segOrders(s, d).select(col("c_mktsegment").as("grp"),
+      priceCents(col("o_totalprice")).as("cents"), col("o_orderkey"))
+
   /** Orders of two named segments with exact integer cents — the shared
     * two-sample frame for Cliff's δ and Brunner–Munzel (grp 1 = second
     * segment so the composite GlobalRank key sorts group blocks). */
   private def twoSeg(s: SparkSession, d: String, a: String, b: String)
       : DataFrame =
-    t(s, d, "orders").select("o_custkey", "o_orderkey", "o_totalprice")
-      .join(broadcast(t(s, d, "customer")
-          .select("c_custkey", "c_mktsegment")),
-        col("o_custkey") === col("c_custkey"))
-      .filter(col("c_mktsegment").isin(a, b))
+    segOrders(s, d).filter(col("c_mktsegment").isin(a, b))
       .select(when(col("c_mktsegment") === b, 1).otherwise(0).as("grp"),
-        (dec2(col("o_totalprice")) * 100).cast(LongType).as("cents"),
+        priceCents(col("o_totalprice")).as("cents"),
         col("o_orderkey"))
 
   private val twoSegSql =
-    """SELECT CASE WHEN c_mktsegment = 'MACHINERY' THEN 1 ELSE 0 END
+    s"""SELECT CASE WHEN c_mktsegment = 'MACHINERY' THEN 1 ELSE 0 END
       |      AS grp,
-      |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+      |    ${priceCentsSql("o_totalprice")}
       |      AS cents,
       |    o_orderkey
       |  FROM orders JOIN customer ON o_custkey = c_custkey
       |  WHERE c_mktsegment IN ('BUILDING', 'MACHINERY')""".stripMargin
+
+  /** Pooled doubled midranks by value of a frame ranked into `grk`:
+    * (cents, ar2 = 2·midrank as an exact integer, cv = ties at cents). */
+  private def pooledMidranks(ranked: DataFrame): DataFrame =
+    ranked.groupBy("cents")
+      .agg(sum(col("grk")).as("srk"), count(lit(1)).as("cv"))
+      .select(col("cents"), expr("(2 * srk) DIV cv").as("ar2"), col("cv"))
+
+  /** Exact rank sums of `x` (grp, cents, o_orderkey) on one pooled
+    * ranking: the [[pooledMidranks]] panel `pv` and per group `gr` (grp,
+    * r2g = doubled midrank sum, ng = size). */
+  private[operators] def midrankSums(x: DataFrame): (DataFrame, DataFrame) = {
+    val (ranked, _) = graft.plans.GlobalRank.withGlobalRowNumber(
+      x, "grk", 32, col("cents"), col("o_orderkey"))
+    val pv = pooledMidranks(ranked)
+    val gr = ranked.groupBy("grp", "cents").agg(count(lit(1)).as("c"))
+      .join(pv.drop("cv"), "cents").groupBy("grp")
+      .agg(sum((col("c").cast(big38) * col("ar2")).cast(big38)).as("r2g"),
+        sum(col("c")).as("ng"))
+    (pv, gr)
+  }
+
+  /** DuckDB twin of [[midrankSums]]: the `r`, `pv`, `gv` and `gr` CTEs
+    * over a CTE `x`. */
+  private val midrankSumsSql =
+    """r AS (
+      |  SELECT grp, cents,
+      |    row_number() OVER (ORDER BY cents, o_orderkey) AS grk
+      |  FROM x),
+      |pv AS (
+      |  SELECT cents, (2 * sum(grk)) // count(*) AS ar2, count(*) AS cv
+      |  FROM r GROUP BY cents),
+      |gv AS (SELECT grp, cents, count(*) AS c FROM r GROUP BY 1, 2),
+      |gr AS (
+      |  SELECT grp, sum(CAST(c AS HUGEINT) * ar2) AS r2g, sum(c) AS ng
+      |  FROM gv JOIN pv USING (cents) GROUP BY grp)""".stripMargin
 
   /** Cliff's δ ordinal effect size between BUILDING and MACHINERY order
     * totals: δ = P(X₀>X₁) − P(X₀<X₁), computed EXACTLY from midrank sums
@@ -59,17 +104,7 @@ object RankQueries {
     "q_cliffs_delta",
     s"""WITH x AS (
        |  $twoSegSql),
-       |r AS (
-       |  SELECT grp, cents,
-       |    row_number() OVER (ORDER BY cents, o_orderkey) AS grk
-       |  FROM x),
-       |pv AS (
-       |  SELECT cents, (2 * sum(grk)) // count(*) AS ar2, count(*) AS cv
-       |  FROM r GROUP BY cents),
-       |gv AS (SELECT grp, cents, count(*) AS c FROM r GROUP BY 1, 2),
-       |gr AS (
-       |  SELECT grp, sum(CAST(c AS HUGEINT) * ar2) AS r2g, sum(c) AS ng
-       |  FROM gv JOIN pv USING (cents) GROUP BY grp),
+       |$midrankSumsSql,
        |m AS (
        |  SELECT
        |    max(CASE WHEN grp = 1 THEN r2g END) AS r2a,
@@ -89,16 +124,7 @@ object RankQueries {
        |      THEN 'medium'
        |    ELSE 'large' END AS magnitude
        |FROM m""".stripMargin) { (s, d) =>
-    val x = twoSeg(s, d, "BUILDING", "MACHINERY")
-    val (ranked, _) = graft.plans.GlobalRank.withGlobalRowNumber(
-      x, "grk", 32, col("cents"), col("o_orderkey"))
-    val pv = ranked.groupBy("cents")
-      .agg(sum(col("grk")).as("srk"), count(lit(1)).as("cv"))
-      .select(col("cents"), expr("(2 * srk) DIV cv").as("ar2"))
-    val gv = ranked.groupBy("grp", "cents").agg(count(lit(1)).as("c"))
-    val gr = gv.join(pv, "cents").groupBy("grp")
-      .agg(sum((col("c").cast(big38) * col("ar2")).cast(big38)).as("r2g"),
-        sum(col("c")).as("ng"))
+    val (_, gr) = midrankSums(twoSeg(s, d, "BUILDING", "MACHINERY"))
     val m = gr.agg(
       max(when(col("grp") === 1, col("r2g"))).as("r2a"),
       max(when(col("grp") === 1, col("ng"))).cast(big38).as("n1"),
@@ -127,23 +153,13 @@ object RankQueries {
     * identically. */
   val qDunnsTest = Q(
     "q_dunns_test",
-    """WITH x AS (
+    s"""WITH x AS (
       |  SELECT c_mktsegment AS grp,
-      |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+      |    ${priceCentsSql("o_totalprice")}
       |      AS cents,
       |    o_orderkey
       |  FROM orders JOIN customer ON o_custkey = c_custkey),
-      |r AS (
-      |  SELECT grp, cents,
-      |    row_number() OVER (ORDER BY cents, o_orderkey) AS grk
-      |  FROM x),
-      |pv AS (
-      |  SELECT cents, (2 * sum(grk)) // count(*) AS ar2, count(*) AS cv
-      |  FROM r GROUP BY cents),
-      |gv AS (SELECT grp, cents, count(*) AS c FROM r GROUP BY 1, 2),
-      |gr AS (
-      |  SELECT grp, sum(CAST(c AS HUGEINT) * ar2) AS r2g, sum(c) AS ng
-      |  FROM gv JOIN pv USING (cents) GROUP BY grp),
+      |$midrankSumsSql,
       |tot AS (SELECT sum(ng) AS n FROM gr),
       |ties AS (
       |  SELECT sum(CAST(cv AS HUGEINT) * cv * cv - cv) AS tsum FROM pv),
@@ -159,23 +175,7 @@ object RankQueries {
       |SELECT seg_a, seg_b, z,
       |  CASE WHEN abs(z) > 2.807034 THEN 1 ELSE 0 END AS sig_bonferroni
       |FROM z ORDER BY seg_a, seg_b""".stripMargin) { (s, d) =>
-    val x = t(s, d, "orders")
-      .select("o_custkey", "o_orderkey", "o_totalprice")
-      .join(broadcast(t(s, d, "customer")
-          .select("c_custkey", "c_mktsegment")),
-        col("o_custkey") === col("c_custkey"))
-      .select(col("c_mktsegment").as("grp"),
-        (dec2(col("o_totalprice")) * 100).cast(LongType).as("cents"),
-        col("o_orderkey"))
-    val (ranked, _) = graft.plans.GlobalRank.withGlobalRowNumber(
-      x, "grk", 32, col("cents"), col("o_orderkey"))
-    val pv = ranked.groupBy("cents")
-      .agg(sum(col("grk")).as("srk"), count(lit(1)).as("cv"))
-      .select(col("cents"), expr("(2 * srk) DIV cv").as("ar2"), col("cv"))
-    val gv = ranked.groupBy("grp", "cents").agg(count(lit(1)).as("c"))
-    val gr = gv.join(pv.drop("cv"), "cents").groupBy("grp")
-      .agg(sum((col("c").cast(big38) * col("ar2")).cast(big38)).as("r2g"),
-        sum(col("c")).as("ng"))
+    val (pv, gr) = midrankSums(segCents(s, d))
     val tot = gr.agg(sum(col("ng")).as("n"))
     val ties = pv.agg(
       sum((col("cv").cast(big38) * col("cv") * col("cv") - col("cv"))
@@ -274,9 +274,7 @@ object RankQueries {
     val within = comp.join(broadcast(offs), col("grp") === col("ogrp"))
       .select(col("grp"), col("cents"), col("o_orderkey"),
         (col("gk") - col("off") + 1).as("rkw"))
-    val pv = pooled.groupBy("cents")
-      .agg(sum(col("grk")).as("srk"), count(lit(1)).as("cv"))
-      .select(col("cents"), expr("(2 * srk) DIV cv").as("ar2"))
+    val pv = pooledMidranks(pooled).drop("cv")
     val wv = within.groupBy("grp", "cents")
       .agg(sum(col("rkw")).as("srw"), count(lit(1)).as("c"))
       .select(col("grp"), col("cents"),
@@ -437,9 +435,9 @@ object RankQueries {
     * correction is negligible at continuous-price tie rates). */
   val qJonckheere = Q(
     "q_jonckheere",
-    """WITH x AS (
+    s"""WITH x AS (
       |  SELECT c_mktsegment AS grp,
-      |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+      |    ${priceCentsSql("o_totalprice")}
       |      AS cents
       |  FROM orders JOIN customer ON o_custkey = c_custkey),
       |gv AS (
@@ -493,7 +491,7 @@ object RankQueries {
           .select("c_custkey", "c_mktsegment")),
         col("o_custkey") === col("c_custkey"))
       .select(col("c_mktsegment").as("grp"),
-        (dec2(col("o_totalprice")) * 100).cast(LongType).as("cents"))
+        priceCents(col("o_totalprice")).as("cents"))
     val gv = x.groupBy("cents").agg(
       segs.zipWithIndex.map { case (g, i) =>
         sum(when(col("grp") === g, 1L).otherwise(0L)).as(s"c${i + 1}")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.Q
 import graft.Dsl._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -286,23 +286,14 @@ object Relational {
 
   /** LATERAL correlated subquery in FROM — per-customer top-2 orders
     * (decorrelated by Catalyst into a ranked join). */
-  val qLateralTopn = Q(
+  val qLateralTopn = Q.sql(
     "q_lateral_topn",
     """SELECT c_custkey, o_orderkey, o_totalprice
       |FROM customer,
       |  LATERAL (SELECT o_orderkey, o_totalprice FROM orders
       |           WHERE o_custkey = c_custkey
       |           ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
-      |ORDER BY c_custkey, o_totalprice DESC, o_orderkey""".stripMargin) {
-    (s, d) =>
-      Tables.registerAll(s, d)
-      s.sql("""SELECT c_custkey, o_orderkey, o_totalprice
-              |FROM customer,
-              |  LATERAL (SELECT o_orderkey, o_totalprice FROM orders
-              |           WHERE o_custkey = c_custkey
-              |           ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
-              |ORDER BY c_custkey, o_totalprice DESC, o_orderkey""".stripMargin)
-  }
+      |ORDER BY c_custkey, o_totalprice DESC, o_orderkey""".stripMargin)
 
   /** Unpivot (wide→long): melt per-status counts back into rows. */
   val qUnpivot = Q(

@@ -30,7 +30,7 @@ object StatQueries {
       .join(broadcast(t(s, d, "nation").select("n_nationkey", "n_name")),
         col("c_nationkey") === col("n_nationkey"))
       .select(col("n_name"), col("o_orderkey"),
-        (dec2(col("o_totalprice")) * 100).cast(LongType).as("cents"))
+        priceCents(col("o_totalprice")).as("cents"))
 
   /** Jarque–Bera normality test per nation on order totals. Values are
     * quantized to whole dollars (cents DIV 100) so the 4th raw moment sum
@@ -42,9 +42,9 @@ object StatQueries {
     * from the shape the downstream model assumes. */
   val qJarqueBera = Q(
     "q_jarque_bera",
-    """WITH x AS (
+    s"""WITH x AS (
       |  SELECT n_name,
-      |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+      |    ${priceCentsSql("o_totalprice")}
       |      // 100 AS v
       |  FROM orders
       |  JOIN customer ON o_custkey = c_custkey
@@ -275,13 +275,12 @@ object StatQueries {
     * location estimate for heavy-tailed value columns. */
   val qTrimmedMean = Q(
     "q_trimmed_mean",
-    """WITH x AS (
+    s"""WITH x AS (
       |  SELECT o_orderpriority AS prio,
-      |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+      |    ${priceCentsSql("o_totalprice")}
       |      AS cents,
       |    row_number() OVER (PARTITION BY o_orderpriority
-      |      ORDER BY CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
-      |        AS BIGINT), o_orderkey) AS rk,
+      |      ORDER BY ${priceCentsSql("o_totalprice")}, o_orderkey) AS rk,
       |    count(*) OVER (PARTITION BY o_orderpriority) AS ng
       |  FROM orders),
       |kept AS (
@@ -293,7 +292,7 @@ object StatQueries {
       |FROM kept GROUP BY prio ORDER BY prio""".stripMargin) { (s, d) =>
     val x = t(s, d, "orders").select(
       col("o_orderpriority").as("prio"), col("o_orderkey"),
-      (dec2(col("o_totalprice")) * 100).cast(LongType).as("cents"))
+      priceCents(col("o_totalprice")).as("cents"))
       // GlobalRank range-buckets on a numeric leading sort column; the
       // priority's leading digit orders identically to the full string,
       // so (digit·10¹² + cents) is a single sortable composite (cents <
@@ -488,23 +487,12 @@ object StatQueries {
     * tests reject at α=0.05 (t crit 1.644854, a fixed literal). */
   val qTost = Q(
     "q_tost",
-    """WITH x AS (
-      |  SELECT CASE WHEN c_mktsegment = 'AUTOMOBILE' THEN 1 ELSE 0 END
-      |      AS grp,
-      |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-      |      AS cents
-      |  FROM orders JOIN customer ON o_custkey = c_custkey),
+    s"""WITH x AS (
+      |  ${AnalyticsQueries.autoVsRestSql}),
       |m AS (
       |  SELECT CAST(sum(grp) AS HUGEINT) AS n1,
       |    CAST(count(*) - sum(grp) AS HUGEINT) AS n2,
-      |    sum(CASE WHEN grp = 1 THEN CAST(cents AS HUGEINT)
-      |        ELSE CAST(0 AS HUGEINT) END) AS s1,
-      |    sum(CASE WHEN grp = 0 THEN CAST(cents AS HUGEINT)
-      |        ELSE CAST(0 AS HUGEINT) END) AS s2,
-      |    sum(CASE WHEN grp = 1 THEN CAST(cents AS HUGEINT) * cents
-      |        ELSE CAST(0 AS HUGEINT) END) AS q1,
-      |    sum(CASE WHEN grp = 0 THEN CAST(cents AS HUGEINT) * cents
-      |        ELSE CAST(0 AS HUGEINT) END) AS q2
+      |    ${AnalyticsQueries.centMomentsSql}
       |  FROM x),
       |se AS (
       |  SELECT n1, n2,
@@ -523,23 +511,10 @@ object StatQueries {
       |    AND (diff - 50000) / se < -1.644854 THEN 1 ELSE 0 END
       |    AS equivalent
       |FROM se""".stripMargin) { (s, d) =>
-    val x = t(s, d, "orders").select("o_custkey", "o_totalprice")
-      .join(broadcast(t(s, d, "customer").select("c_custkey", "c_mktsegment")),
-        col("o_custkey") === col("c_custkey"))
-      .select(when(col("c_mktsegment") === "AUTOMOBILE", 1).otherwise(0)
-        .as("grp"),
-        (dec2(col("o_totalprice")) * 100).cast(LongType).as("cents"))
-    val m = x.agg(
+    val m = AnalyticsQueries.autoVsRest(s, d).agg(
       sum(col("grp")).cast(big38).as("n1"),
-      (count(lit(1)) - sum(col("grp"))).cast(big38).as("n2"),
-      sum(when(col("grp") === 1, col("cents")).otherwise(0L).cast(big38))
-        .as("s1"),
-      sum(when(col("grp") === 0, col("cents")).otherwise(0L).cast(big38))
-        .as("s2"),
-      sum(when(col("grp") === 1, col("cents").cast(big38) * col("cents"))
-        .otherwise(lit(0).cast(big38))).as("q1"),
-      sum(when(col("grp") === 0, col("cents").cast(big38) * col("cents"))
-        .otherwise(lit(0).cast(big38))).as("q2"))
+      (count(lit(1)) - sum(col("grp"))).cast(big38).as("n2") +:
+        AnalyticsQueries.centMoments: _*)
     val se = m.select(col("n1"), col("n2"),
       (col("s1").cast(DoubleType) / col("n1").cast(DoubleType)
         - col("s2").cast(DoubleType) / col("n2").cast(DoubleType))
@@ -785,15 +760,14 @@ object StatQueries {
     * window); the 9 decile rows assemble by exact integer rank match. */
   val qQqDeciles = Q(
     "q_qq_deciles",
-    """WITH x AS (
+    s"""WITH x AS (
       |  SELECT CASE WHEN c_mktsegment = 'AUTOMOBILE' THEN 1 ELSE 0 END
       |      AS grp,
-      |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+      |    ${priceCentsSql("o_totalprice")}
       |      AS cents,
       |    row_number() OVER (PARTITION BY
       |      CASE WHEN c_mktsegment = 'AUTOMOBILE' THEN 1 ELSE 0 END
-      |      ORDER BY CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
-      |        AS BIGINT), o_orderkey) AS rk,
+      |      ORDER BY ${priceCentsSql("o_totalprice")}, o_orderkey) AS rk,
       |    count(*) OVER (PARTITION BY
       |      CASE WHEN c_mktsegment = 'AUTOMOBILE' THEN 1 ELSE 0 END)
       |      AS ng
@@ -814,7 +788,7 @@ object StatQueries {
         col("o_custkey") === col("c_custkey"))
       .select(when(col("c_mktsegment") === "AUTOMOBILE", 1L).otherwise(0L)
         .as("grp"),
-        (dec2(col("o_totalprice")) * 100).cast(LongType).as("cents"),
+        priceCents(col("o_totalprice")).as("cents"),
         col("o_orderkey"))
       .withColumn("skey", col("grp") * lit(1000000000000L) + col("cents"))
     val (ranked, _) = graft.plans.GlobalRank.withGlobalRowNumber(
@@ -1002,12 +976,12 @@ object StatQueries {
     * row in doubles with the identical expression DAG on both engines. */
   val qKruskalWallis = Q(
     "q_kruskal_wallis",
-    """WITH x AS (
+    s"""WITH x AS (
       |  SELECT c_mktsegment AS grp,
-      |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+      |    ${priceCentsSql("o_totalprice")}
       |      AS cents,
       |    row_number() OVER (ORDER BY
-      |      CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT),
+      |      ${priceCentsSql("o_totalprice")},
       |      o_orderkey) AS grk
       |  FROM orders JOIN customer ON o_custkey = c_custkey),
       |pv AS (
@@ -1035,21 +1009,7 @@ object StatQueries {
       |      / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
       |        - CAST(n AS DOUBLE))), 6) AS h_tie_corrected
       |FROM tot, ties""".stripMargin) { (s, d) =>
-    val x = t(s, d, "orders").select("o_custkey", "o_orderkey", "o_totalprice")
-      .join(broadcast(t(s, d, "customer").select("c_custkey", "c_mktsegment")),
-        col("o_custkey") === col("c_custkey"))
-      .select(col("c_mktsegment").as("grp"),
-        (dec2(col("o_totalprice")) * 100).cast(LongType).as("cents"),
-        col("o_orderkey"))
-    val (ranked, _) = graft.plans.GlobalRank.withGlobalRowNumber(
-      x, "grk", 32, col("cents"), col("o_orderkey"))
-    val pv = ranked.groupBy("cents")
-      .agg(sum(col("grk")).as("srk"), count(lit(1)).as("cv"))
-      .select(col("cents"), expr("(2 * srk) DIV cv").as("ar2"), col("cv"))
-    val gv = ranked.groupBy("grp", "cents").agg(count(lit(1)).as("cgv"))
-    val gr = gv.join(pv, "cents").groupBy("grp")
-      .agg(sum((col("cgv").cast(big38) * col("ar2")).cast(big38)).as("r2g"),
-        sum(col("cgv")).as("ng"))
+    val (pv, gr) = RankQueries.midrankSums(RankQueries.segCents(s, d))
     val tot = gr.agg(sum(col("ng")).as("n"), count(lit(1)).as("k"),
       sum(expr("CAST(r2g * r2g AS DECIMAL(38,0))" +
         " DIV CAST(4 * ng AS DECIMAL(38,0))")).as("s"))
@@ -1132,7 +1092,7 @@ object StatQueries {
     * The month pair-join is (84 months × 25 lags) — bounded. */
   val qEwmaChart = Q(
     "q_ewma_chart",
-    """WITH RECURSIVE pw(d, p4, p5) AS (
+    s"""WITH RECURSIVE pw(d, p4, p5) AS (
       |  SELECT 0, CAST(1 AS HUGEINT), CAST(5 AS HUGEINT)
       |  UNION ALL SELECT d + 1, p4 * 4, p5 * 5 FROM pw WHERE d < 24),
       |w AS (
@@ -1142,7 +1102,7 @@ object StatQueries {
       |m AS (
       |  SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS mth,
       |    year(o_orderdate) * 12 + month(o_orderdate) AS midx,
-      |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
+      |    ${sumCentsSql}
       |      AS rev
       |  FROM orders GROUP BY 1, 2),
       |p AS (
@@ -1167,7 +1127,7 @@ object StatQueries {
     val m = t(s, d, "orders")
       .groupBy(date_trunc("month", col("o_orderdate")).cast(DateType)
         .as("mth"))
-      .agg(sum(dec2(col("o_totalprice")) * 100).cast(LongType).as("rev"))
+      .agg(sumCents.as("rev"))
       .withColumn("midx", year(col("mth")) * 12 + month(col("mth")))
     val bw = m.select(col("midx").as("bmidx"), col("rev").as("brev"))
       .crossJoin(wdf)
@@ -1317,9 +1277,9 @@ object StatQueries {
     * a forecasting pipeline runs before adding a covariate. */
   val qGranger = Q(
     "q_granger",
-    """WITH m AS (
+    s"""WITH m AS (
       |  SELECT year(o_orderdate) * 12 + month(o_orderdate) AS midx,
-      |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
+      |    ${sumCentsSql}
       |      AS rev,
       |    count(*) AS cnt
       |  FROM orders GROUP BY 1),
@@ -1359,7 +1319,7 @@ object StatQueries {
     val m = t(s, d, "orders")
       .groupBy((year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
         .as("midx"))
-      .agg(sum(dec2(col("o_totalprice")) * 100).cast(LongType).as("rev"),
+      .agg(sumCents.as("rev"),
         count(lit(1)).as("cnt"))
     val b = m.select(col("midx").as("bmidx"), col("rev").as("yl"),
       col("cnt").as("xl"))
@@ -1410,9 +1370,9 @@ object StatQueries {
     * and runs over the bounded 10-row lag table. */
   val qLjungBox = Q(
     "q_ljung_box",
-    """WITH m AS (
+    s"""WITH m AS (
       |  SELECT year(o_orderdate) * 12 + month(o_orderdate) AS midx,
-      |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
+      |    ${sumCentsSql}
       |      AS y
       |  FROM orders GROUP BY 1),
       |full_s AS (
@@ -1446,7 +1406,7 @@ object StatQueries {
     val m = t(s, d, "orders")
       .groupBy((year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
         .as("midx"))
-      .agg(sum(dec2(col("o_totalprice")) * 100).cast(LongType).as("y"))
+      .agg(sumCents.as("y"))
     val fullS = m.agg(count(lit(1)).as("n"),
       sum(col("y").cast(big38)).as("s"),
       sum(col("y").cast(big38) * col("y")).as("q2"))
@@ -1685,11 +1645,11 @@ object StatQueries {
     * drop, per standard CEM. */
   val qCemMatch = Q(
     "q_cem_match",
-    """WITH nl AS (
+    s"""WITH nl AS (
       |  SELECT l_orderkey, count(*) AS n_lines FROM lineitem GROUP BY 1),
       |ord AS (
       |  SELECT o.o_orderkey, c.c_mktsegment AS seg,
-      |    CAST(CAST(o.o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+      |    ${priceCentsSql("o.o_totalprice")}
       |      // 100000 AS cell,
       |    o.o_orderpriority AS prio, nl.n_lines
       |  FROM orders o
@@ -1727,8 +1687,7 @@ object StatQueries {
         col("o_custkey") === col("c_custkey"))
       .join(nl, col("o_orderkey") === col("l_orderkey"))
       .select(col("o_orderkey"), col("c_mktsegment").as("seg"),
-        expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)" +
-          " DIV 100000").as("cell"),
+        expr(priceCentsSql("o_totalprice") + " DIV 100000").as("cell"),
         col("o_orderpriority").as("prio"), col("n_lines"))
     val ctrl = ord.filter(col("prio") === "5-LOW")
       .groupBy("seg", "cell")
@@ -1763,15 +1722,7 @@ object StatQueries {
     * readout next to q_doc_entropy's static one. */
   val qMarkovEntropy = Q(
     "q_markov_entropy",
-    """WITH seq AS (
-      |  SELECT event_type AS src,
-      |    lead(event_type) OVER (PARTITION BY user_id
-      |      ORDER BY epoch_us(ts), event_id) AS dst
-      |  FROM events),
-      |pairs AS (
-      |  SELECT src, dst, count(*) AS n FROM seq
-      |  WHERE dst IS NOT NULL GROUP BY 1, 2),
-      |tot AS (SELECT src, sum(n) AS tn FROM pairs GROUP BY 1),
+    s"""WITH ${AnalyticsQueries.markovPairsSql},
       |p AS (
       |  SELECT pairs.src, pairs.dst,
       |    CAST(ROUND(CAST(pairs.n AS DOUBLE) / tn * 1000000000) AS BIGINT)
@@ -1806,17 +1757,10 @@ object StatQueries {
       |  ROUND(CAST(h9 AS DOUBLE) / 1000000000 / ln(2), 6)
       |    AS entropy_rate_bits
       |FROM h""".stripMargin) { (s, d) =>
-    val seqW = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy("us", "event_id")
-    val ev = graft.Tables.tsAsTimestamp(t(s, d, "events"))
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        unix_micros(col("ts")).as("us"))
-    val pairs = ev
-      .select(col("event_type").as("src"),
-        lead(col("event_type"), 1).over(seqW).as("dst"))
-      .filter(col("dst").isNotNull)
-      .groupBy("src", "dst").agg(count(lit(1)).as("n"))
-    val tot = pairs.groupBy("src").agg(sum(col("n")).as("tn"))
+    val (pairs, tot) = AnalyticsQueries.markovPairs(
+      graft.Tables.tsAsTimestamp(t(s, d, "events"))
+        .select(col("user_id"), col("event_id"), col("event_type"),
+          unix_micros(col("ts")).as("us")))
     val p = pairs.join(broadcast(tot), Seq("src"))
       .select(col("src"), col("dst"),
         round(col("n").cast(DoubleType) / col("tn") * 1000000000L)
@@ -1861,9 +1805,9 @@ object StatQueries {
     * one final double expression. */
   val qVarianceRatio = Q(
     "q_variance_ratio",
-    """WITH m AS (
+    s"""WITH m AS (
       |  SELECT year(o_orderdate) * 12 + month(o_orderdate) AS midx,
-      |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
+      |    ${sumCentsSql}
       |      AS y
       |  FROM orders GROUP BY 1),
       |qs AS (SELECT unnest([1, 2, 3, 6, 12]) AS q),
@@ -1885,7 +1829,7 @@ object StatQueries {
     val m = t(s, d, "orders")
       .groupBy((year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
         .as("midx"))
-      .agg(sum(dec2(col("o_totalprice")) * 100).cast(LongType).as("y"))
+      .agg(sumCents.as("y"))
     import s.implicits._
     val qs = Seq(1L, 2L, 3L, 6L, 12L).toDF("q")
     val b = m.select(col("midx").as("bmidx"), col("y").as("by"))
@@ -2299,6 +2243,28 @@ object StatQueries {
           - col("sr2").cast(DoubleType)), 6).as("q_stat"))
   }
 
+  /** The ESD query's round k over the series `ser`k (`ser` for k = 1):
+    * exact moments `s`k, quantized deviations `r`k, the argmax `w`k and,
+    * below round 3, the next round's series without it. */
+  private def esdRoundSql(k: Int): String = {
+    val src = if (k == 1) "ser" else s"ser$k"
+    s"""s$k AS (
+       |  SELECT CAST(count(*) AS HUGEINT) AS n, sum(CAST(v AS HUGEINT))
+       |      AS a, sum(CAST(v AS HUGEINT) * v) AS b
+       |  FROM $src),
+       |r$k AS (
+       |  SELECT mth, v,
+       |    CAST(round(abs(v - CAST(a AS DOUBLE) / CAST(n AS DOUBLE))
+       |      / sqrt((CAST(b AS DOUBLE)
+       |        - CAST(a AS DOUBLE) * CAST(a AS DOUBLE) / CAST(n AS DOUBLE))
+       |        / (CAST(n AS DOUBLE) - 1)) * 1000000000) AS BIGINT) AS r9
+       |  FROM $src, s$k),
+       |w$k AS (SELECT * FROM r$k ORDER BY r9 DESC, mth LIMIT 1)""".stripMargin +
+      (if (k == 3) "" else
+        s""",
+           |ser${k + 1} AS (SELECT $src.* FROM $src, w$k WHERE $src.mth <> w$k.mth)""".stripMargin)
+  }
+
   /** Generalized ESD (Rosner) anomaly screen: three unrolled
     * test-and-remove rounds on the monthly revenue panel — the
     * multi-outlier-safe upgrade over a single Grubbs pass (one giant
@@ -2309,49 +2275,12 @@ object StatQueries {
     * fixed-sweep contract. */
   val qAnomalyEsd = Q(
     "q_anomaly_esd",
-    """WITH ser AS (
+    s"""WITH ser AS (
       |  SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS mth,
-      |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
+      |    ${sumCentsSql}
       |      AS v
       |  FROM orders GROUP BY 1),
-      |s1 AS (
-      |  SELECT CAST(count(*) AS HUGEINT) AS n, sum(CAST(v AS HUGEINT))
-      |      AS a, sum(CAST(v AS HUGEINT) * v) AS b
-      |  FROM ser),
-      |r1 AS (
-      |  SELECT mth, v,
-      |    CAST(round(abs(v - CAST(a AS DOUBLE) / CAST(n AS DOUBLE))
-      |      / sqrt((CAST(b AS DOUBLE)
-      |        - CAST(a AS DOUBLE) * CAST(a AS DOUBLE) / CAST(n AS DOUBLE))
-      |        / (CAST(n AS DOUBLE) - 1)) * 1000000000) AS BIGINT) AS r9
-      |  FROM ser, s1),
-      |w1 AS (SELECT * FROM r1 ORDER BY r9 DESC, mth LIMIT 1),
-      |ser2 AS (SELECT ser.* FROM ser, w1 WHERE ser.mth <> w1.mth),
-      |s2 AS (
-      |  SELECT CAST(count(*) AS HUGEINT) AS n, sum(CAST(v AS HUGEINT))
-      |      AS a, sum(CAST(v AS HUGEINT) * v) AS b
-      |  FROM ser2),
-      |r2 AS (
-      |  SELECT mth, v,
-      |    CAST(round(abs(v - CAST(a AS DOUBLE) / CAST(n AS DOUBLE))
-      |      / sqrt((CAST(b AS DOUBLE)
-      |        - CAST(a AS DOUBLE) * CAST(a AS DOUBLE) / CAST(n AS DOUBLE))
-      |        / (CAST(n AS DOUBLE) - 1)) * 1000000000) AS BIGINT) AS r9
-      |  FROM ser2, s2),
-      |w2 AS (SELECT * FROM r2 ORDER BY r9 DESC, mth LIMIT 1),
-      |ser3 AS (SELECT ser2.* FROM ser2, w2 WHERE ser2.mth <> w2.mth),
-      |s3 AS (
-      |  SELECT CAST(count(*) AS HUGEINT) AS n, sum(CAST(v AS HUGEINT))
-      |      AS a, sum(CAST(v AS HUGEINT) * v) AS b
-      |  FROM ser3),
-      |r3 AS (
-      |  SELECT mth, v,
-      |    CAST(round(abs(v - CAST(a AS DOUBLE) / CAST(n AS DOUBLE))
-      |      / sqrt((CAST(b AS DOUBLE)
-      |        - CAST(a AS DOUBLE) * CAST(a AS DOUBLE) / CAST(n AS DOUBLE))
-      |        / (CAST(n AS DOUBLE) - 1)) * 1000000000) AS BIGINT) AS r9
-      |  FROM ser3, s3),
-      |w3 AS (SELECT * FROM r3 ORDER BY r9 DESC, mth LIMIT 1)
+      |${(1 to 3).map(esdRoundSql).mkString(",\n")}
       |SELECT iteration, mth, ROUND(CAST(v AS DOUBLE) / 100, 2) AS revenue,
       |  ROUND(CAST(r9 AS DOUBLE) / 1000000000, 6) AS r_stat
       |FROM (
@@ -2362,7 +2291,7 @@ object StatQueries {
     val ser = t(s, d, "orders")
       .groupBy(date_trunc("month", col("o_orderdate")).cast(DateType)
         .as("mth"))
-      .agg((sum(dec2(col("o_totalprice")) * 100)).cast(LongType).as("v"))
+      .agg(sumCents.as("v"))
     def round1(panel: DataFrame): DataFrame = {
       val st = panel.agg(count(lit(1)).cast(big38).as("n"),
         sum(col("v").cast(big38)).as("a"),
@@ -2488,6 +2417,63 @@ object StatQueries {
       when(abs(zc) > 1.96, 1).otherwise(0).as("significant"))
   }
 
+  /** 1996 and 1997 orders with segment, year and exact cents: the
+    * frame of the mix/rate split and the segment waterfall. */
+  private def segYears(s: SparkSession, d: String): DataFrame =
+    t(s, d, "orders")
+      .join(broadcast(t(s, d, "customer")
+        .select("c_custkey", "c_mktsegment")),
+        col("o_custkey") === col("c_custkey"))
+      .filter(year(col("o_orderdate")).isin(1996, 1997))
+      .select(col("c_mktsegment").as("seg"),
+        year(col("o_orderdate")).cast(LongType).as("yr"),
+        priceCents(col("o_totalprice")).as("cents"))
+
+  /** DuckDB twin of [[segYears]]. */
+  private val segYearsSql =
+    s"""SELECT c_mktsegment AS seg,
+       |    CAST(year(o_orderdate) AS BIGINT) AS yr,
+       |    ${priceCentsSql("o_totalprice")}
+       |      AS cents
+       |  FROM orders JOIN customer ON o_custkey = c_custkey
+       |  WHERE year(o_orderdate) IN (1996, 1997)""".stripMargin
+
+  /** The mix/rate panel of a (key, yr, cents) frame over 1996 and 1997:
+    * per key the mean order value m (millicents, exact DIV) and the
+    * order share sh (ppm, exact DIV) of each year, as (key, m96, sh96,
+    * b`key`, m97, sh97). */
+  private def mixRatePanel(x: DataFrame, key: String): DataFrame = {
+    val g = x.groupBy(key, "yr")
+      .agg(count(lit(1)).cast(big38).as("n"),
+        sum(col("cents").cast(big38)).as("sc"))
+    val ty = g.groupBy("yr").agg(sum(col("n")).as("nt"))
+    val p = g.join(broadcast(ty.withColumnRenamed("yr", "tyr")),
+        col("yr") === col("tyr"))
+      .select(col(key), col("yr"),
+        expr("sc * 1000 DIV n").as("m3"),
+        expr("n * 1000000 DIV nt").as("sh6"))
+    val a = p.filter(col("yr") === 1996)
+      .select(col(key), col("m3").as("m96"), col("sh6").as("sh96"))
+    val b = p.filter(col("yr") === 1997)
+      .select(col(key).as(s"b$key"), col("m3").as("m97"),
+        col("sh6").as("sh97"))
+    a.join(b, col(key) === col(s"b$key"))
+  }
+
+  /** DuckDB twin of [[mixRatePanel]]'s year means and shares: the CTEs
+    * `g`, `ty` and `p` (key, yr, m3, sh6) over a CTE `x`. */
+  private def yearMeansSharesSql(key: String): String =
+    s"""g AS (
+       |  SELECT $key, yr, CAST(count(*) AS HUGEINT) AS n,
+       |    sum(CAST(cents AS HUGEINT)) AS sc
+       |  FROM x GROUP BY 1, 2),
+       |ty AS (SELECT yr, sum(n) AS nt FROM g GROUP BY 1),
+       |p AS (
+       |  SELECT g.$key, g.yr,
+       |    g.sc * 1000 // g.n AS m3,
+       |    g.n * 1000000 // ty.nt AS sh6
+       |  FROM g JOIN ty ON g.yr = ty.yr)""".stripMargin
+
   /** Mix/rate decomposition of the 1996→1997 change in mean order value
     * across market segments (the Oaxaca–Blinder / price-volume split):
     * rate effect = Σ share96·(m97−m96), mix effect = Σ (share97−share96)
@@ -2497,23 +2483,9 @@ object StatQueries {
     * products scaled once at output. */
   val qMixRateDecomp = Q(
     "q_mix_rate_decomp",
-    """WITH x AS (
-      |  SELECT c_mktsegment AS seg,
-      |    CAST(year(o_orderdate) AS BIGINT) AS yr,
-      |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-      |      AS cents
-      |  FROM orders JOIN customer ON o_custkey = c_custkey
-      |  WHERE year(o_orderdate) IN (1996, 1997)),
-      |g AS (
-      |  SELECT seg, yr, CAST(count(*) AS HUGEINT) AS n,
-      |    sum(CAST(cents AS HUGEINT)) AS sc
-      |  FROM x GROUP BY 1, 2),
-      |ty AS (SELECT yr, sum(n) AS nt FROM g GROUP BY 1),
-      |p AS (
-      |  SELECT g.seg, g.yr,
-      |    g.sc * 1000 // g.n AS m3,
-      |    g.n * 1000000 // ty.nt AS sh6
-      |  FROM g JOIN ty ON g.yr = ty.yr),
+    s"""WITH x AS (
+      |  $segYearsSql),
+      |${yearMeansSharesSql("seg")},
       |w AS (
       |  SELECT a.seg, a.m3 AS m96, b.m3 AS m97,
       |    a.sh6 AS sh96, b.sh6 AS sh97
@@ -2529,30 +2501,7 @@ object StatQueries {
       |  ROUND(CAST((sh97 - sh96) * m97 AS DOUBLE) / 1e11, 4)
       |    AS mix_effect_dollars
       |FROM w ORDER BY seg""".stripMargin) { (s, d) =>
-    val x = t(s, d, "orders")
-      .join(broadcast(t(s, d, "customer")
-        .select("c_custkey", "c_mktsegment")),
-        col("o_custkey") === col("c_custkey"))
-      .filter(year(col("o_orderdate")).isin(1996, 1997))
-      .select(col("c_mktsegment").as("seg"),
-        year(col("o_orderdate")).cast(LongType).as("yr"),
-        (dec2(col("o_totalprice")) * 100).cast(LongType).as("cents"))
-    val g = x.groupBy("seg", "yr")
-      .agg(count(lit(1)).cast(big38).as("n"),
-        sum(col("cents").cast(big38)).as("sc"))
-    val ty = g.groupBy("yr").agg(sum(col("n")).as("nt"))
-    val p = g.join(broadcast(ty.withColumnRenamed("yr", "tyr")),
-        col("yr") === col("tyr"))
-      .select(col("seg"), col("yr"),
-        expr("sc * 1000 DIV n").as("m3"),
-        expr("n * 1000000 DIV nt").as("sh6"))
-    val a = p.filter(col("yr") === 1996)
-      .select(col("seg"), col("m3").as("m96"), col("sh6").as("sh96"))
-    val b = p.filter(col("yr") === 1997)
-      .select(col("seg").as("bseg"), col("m3").as("m97"),
-        col("sh6").as("sh97"))
-    val w = a.join(b, col("seg") === col("bseg"))
-    w.select(col("seg"),
+    mixRatePanel(segYears(s, d), "seg").select(col("seg"),
         round(col("m96").cast(DoubleType) / 1e5, 2).as("mean96_dollars"),
         round(col("m97").cast(DoubleType) / 1e5, 2).as("mean97_dollars"),
         round(col("sh96").cast(DoubleType) / 1e4, 4).as("share96_pct"),
@@ -2570,13 +2519,8 @@ object StatQueries {
     * bounded 5-segment panel). */
   val qWaterfallSegments = Q(
     "q_waterfall_segments",
-    """WITH x AS (
-      |  SELECT c_mktsegment AS seg,
-      |    CAST(year(o_orderdate) AS BIGINT) AS yr,
-      |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-      |      AS cents
-      |  FROM orders JOIN customer ON o_custkey = c_custkey
-      |  WHERE year(o_orderdate) IN (1996, 1997)),
+    s"""WITH x AS (
+      |  $segYearsSql),
       |g AS (
       |  SELECT seg,
       |    sum(CASE WHEN yr = 1996 THEN CAST(cents AS HUGEINT)
@@ -2597,14 +2541,7 @@ object StatQueries {
       |    / CAST((SELECT sum(delta) FROM w) AS DOUBLE), 6)
       |    AS share_of_total_delta
       |FROM w ORDER BY seg""".stripMargin) { (s, d) =>
-    val x = t(s, d, "orders")
-      .join(broadcast(t(s, d, "customer")
-        .select("c_custkey", "c_mktsegment")),
-        col("o_custkey") === col("c_custkey"))
-      .filter(year(col("o_orderdate")).isin(1996, 1997))
-      .select(col("c_mktsegment").as("seg"),
-        year(col("o_orderdate")).cast(LongType).as("yr"),
-        (dec2(col("o_totalprice")) * 100).cast(LongType).as("cents"))
+    val x = segYears(s, d)
     val g = x.groupBy("seg").agg(
       sum(when(col("yr") === 1996, col("cents").cast(big38))
         .otherwise(0)).as("r96"),
@@ -2814,24 +2751,16 @@ object StatQueries {
     * integer products; integer ranking. Top 10. */
   val qDeltaAttribution = Q(
     "q_delta_attribution",
-    """WITH x AS (
+    s"""WITH x AS (
       |  SELECT n_name AS nation,
       |    CAST(year(o_orderdate) AS BIGINT) AS yr,
-      |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+      |    ${priceCentsSql("o_totalprice")}
       |      AS cents
       |  FROM orders
       |  JOIN customer ON o_custkey = c_custkey
       |  JOIN nation ON c_nationkey = n_nationkey
       |  WHERE year(o_orderdate) IN (1996, 1997)),
-      |g AS (
-      |  SELECT nation, yr, CAST(count(*) AS HUGEINT) AS n,
-      |    sum(CAST(cents AS HUGEINT)) AS sc
-      |  FROM x GROUP BY 1, 2),
-      |ty AS (SELECT yr, sum(n) AS nt FROM g GROUP BY 1),
-      |p AS (
-      |  SELECT g.nation, g.yr, g.sc * 1000 // g.n AS m3,
-      |    g.n * 1000000 // ty.nt AS sh6
-      |  FROM g JOIN ty ON g.yr = ty.yr),
+      |${yearMeansSharesSql("nation")},
       |w AS (
       |  SELECT a.nation, a.m3 AS m96, b.m3 AS m97,
       |    a.sh6 AS sh96, b.sh6 AS sh97,
@@ -2857,22 +2786,8 @@ object StatQueries {
       .filter(year(col("o_orderdate")).isin(1996, 1997))
       .select(col("n_name").as("nation"),
         year(col("o_orderdate")).cast(LongType).as("yr"),
-        (dec2(col("o_totalprice")) * 100).cast(LongType).as("cents"))
-    val g = x.groupBy("nation", "yr")
-      .agg(count(lit(1)).cast(big38).as("n"),
-        sum(col("cents").cast(big38)).as("sc"))
-    val ty = g.groupBy("yr").agg(sum(col("n")).as("nt"))
-    val p = g.join(broadcast(ty.withColumnRenamed("yr", "tyr")),
-        col("yr") === col("tyr"))
-      .select(col("nation"), col("yr"),
-        expr("sc * 1000 DIV n").as("m3"),
-        expr("n * 1000000 DIV nt").as("sh6"))
-    val a = p.filter(col("yr") === 1996)
-      .select(col("nation"), col("m3").as("m96"), col("sh6").as("sh96"))
-    val b = p.filter(col("yr") === 1997)
-      .select(col("nation").as("bnation"), col("m3").as("m97"),
-        col("sh6").as("sh97"))
-    val w = a.join(b, col("nation") === col("bnation"))
+        priceCents(col("o_totalprice")).as("cents"))
+    val w = mixRatePanel(x, "nation")
       .withColumn("eff", col("sh96") * (col("m97") - col("m96"))
         + (col("sh97") - col("sh96")) * col("m97"))
     val rk = w.withColumn("rank",
@@ -2897,9 +2812,9 @@ object StatQueries {
     * forward. */
   val qForecastMase = Q(
     "q_forecast_mase",
-    """WITH m AS (
+    s"""WITH m AS (
       |  SELECT date_trunc('month', o_orderdate) AS mth,
-      |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
+      |    ${sumCentsSql}
       |      AS rev
       |  FROM orders GROUP BY 1),
       |f AS (
@@ -2923,7 +2838,7 @@ object StatQueries {
       |FROM ag""".stripMargin) { (s, d) =>
     val m = t(s, d, "orders")
       .groupBy(date_trunc("month", col("o_orderdate")).as("mth"))
-      .agg((sum(dec2(col("o_totalprice")) * 100)).cast(LongType)
+      .agg(sumCents
         .as("rev"))
     val w = org.apache.spark.sql.expressions.Window.orderBy("mth")
     val f = m
@@ -3047,9 +2962,9 @@ object StatQueries {
     * panel assembles once. */
   val qTwoWayAnova = Q(
     "q_two_way_anova",
-    """WITH x AS (
+    s"""WITH x AS (
       |  SELECT c_mktsegment AS a, o_orderpriority AS b,
-      |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+      |    ${priceCentsSql("o_totalprice")}
       |      AS cents
       |  FROM orders JOIN customer ON o_custkey = c_custkey),
       |cell AS (
@@ -3100,7 +3015,7 @@ object StatQueries {
         col("o_custkey") === col("c_custkey"))
       .select(col("c_mktsegment").as("a"),
         col("o_orderpriority").as("b"),
-        (dec2(col("o_totalprice")) * 100).cast(LongType).as("cents"))
+        priceCents(col("o_totalprice")).as("cents"))
     val cell = x.groupBy("a", "b")
       .agg(count(lit(1)).cast(big38).as("n"),
         sum(col("cents").cast(big38)).as("s"),
@@ -3264,9 +3179,9 @@ object StatQueries {
     * end-to-end, one final division. */
   val qXiCorrelation = Q(
     "q_xi_correlation",
-    """WITH xy AS (
+    s"""WITH xy AS (
       |  SELECT o.o_orderkey AS ok,
-      |    CAST(CAST(o.o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+      |    ${priceCentsSql("o.o_totalprice")}
       |      AS x,
       |    CAST(sum(l.l_quantity) AS BIGINT) AS y
       |  FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
@@ -3293,7 +3208,7 @@ object StatQueries {
       .join(t(s, d, "lineitem").select("l_orderkey", "l_quantity"),
         col("o_orderkey") === col("l_orderkey"))
       .groupBy(col("o_orderkey").as("ok"),
-        (dec2(col("o_totalprice")) * 100).cast(LongType).as("x"))
+        priceCents(col("o_totalprice")).as("x"))
       .agg(sum(col("l_quantity")).cast(LongType).as("y"))
     // y (total order quantity) lives on a bounded domain — the max-rank
     // tie map is a broadcast prefix sum over ≤ a few hundred values
@@ -3400,8 +3315,8 @@ object StatQueries {
     * and σ comes once from exact moments. */
   val qHuberLocation = Q(
     "q_huber_location",
-    """WITH x AS (
-      |  SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+    s"""WITH x AS (
+      |  SELECT ${priceCentsSql("o_totalprice")}
       |      AS v
       |  FROM orders),
       |mo AS (
@@ -3435,7 +3350,7 @@ object StatQueries {
       |  ROUND(CAST(m2.mu2 AS DOUBLE) / 100, 2) AS huber_round2
       |FROM st, m1, m2""".stripMargin) { (s, d) =>
     val x = t(s, d, "orders")
-      .select((dec2(col("o_totalprice")) * 100).cast(LongType).as("v"))
+      .select(priceCents(col("o_totalprice")).as("v"))
     val mo = x.agg(count(lit(1)).cast(big38).as("n"),
       sum(col("v").cast(big38)).as("s"),
       sum(col("v").cast(big38) * col("v")).as("q"))

@@ -43,4 +43,16 @@ object TradeGraph {
       s.sparkContext.parallelize(dist.collect().toIndexedSeq, 1),
       dist.schema)
   }
+
+  /** DuckDB twin of [[edges]]: the CTE `e` (src, dst, w), with w the
+    * SQL `weight` over each edge's count(*). */
+  def edgesSql(weight: String): String =
+    s"""e AS (
+       |  SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
+       |    $weight AS w
+       |  FROM lineitem l
+       |  JOIN orders o ON l.l_orderkey = o.o_orderkey
+       |  JOIN customer c ON o.o_custkey = c.c_custkey
+       |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
+       |  GROUP BY 1, 2)""".stripMargin
 }

@@ -56,6 +56,20 @@ object LabelProp {
     labels
   }
 
+  /** DuckDB twin of [[iterate]] for the oracle SQL: CTEs `l0` … `l`n over
+    * a CTE `sym` (src, dst) that already holds both edge directions; `l`n
+    * holds the labels after `n` sweeps. */
+  def iterateSql(n: Int): String =
+    ("l0 AS (SELECT DISTINCT src AS v, src AS lbl FROM sym)" +:
+      (1 to n).map { i =>
+        s"""l$i AS (
+           |  SELECT l.v, least(l.lbl, coalesce(m.nmin, l.lbl)) AS lbl
+           |  FROM l${i - 1} l LEFT JOIN (
+           |    SELECT s.src AS v, min(x.lbl) AS nmin
+           |    FROM sym s JOIN l${i - 1} x ON s.dst = x.v
+           |    GROUP BY s.src) m ON l.v = m.v)""".stripMargin
+      }).mkString(",\n")
+
   /** Propagate to fixpoint (component id = min vertex id reachable).
     * Each frontier is localCheckpoint'ed so the iterative plan's lineage
     * stays one sweep deep instead of growing with the iteration count —

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
@@ -35,24 +35,9 @@ object PageRank {
       edges: DataFrame,
       iters: Int,
       damping: Double = 0.85): DataFrame = {
-    val e = edges.select(col("src"), col("dst"), col("w").cast(DoubleType))
-    val outW = e.groupBy("src").agg(sum(col("w")).as("outw"))
     val n = nodes.count().toDouble
-    var ranks = nodes.select(col("id"), (lit(1.0) / n).as("rank"))
-    for (_ <- 1 to iters) {
-      val contrib = e
-        .join(broadcast(ranks.withColumnRenamed("id", "src")), "src")
-        .join(broadcast(outW), "src")
-        .select(col("dst"), (col("rank") * col("w") / col("outw")).as("c"))
-        .groupBy("dst")
-        .agg(sum(col("c")).as("inflow"))
-      ranks = nodes
-        .join(broadcast(contrib.withColumnRenamed("dst", "id")), Seq("id"), "left")
-        .select(col("id"),
-          (lit((1.0 - damping) / n) +
-            lit(damping) * coalesce(col("inflow"), lit(0.0))).as("rank"))
-    }
-    ranks
+    sweeps(nodes, edges, nodes.select(col("id"), (lit(1.0) / n).as("rank")),
+      iters, damping, lit((1.0 - damping) / n))
   }
 
   /** Personalized PageRank: identical loop, but the teleport term is a
@@ -66,12 +51,26 @@ object PageRank {
       teleport: DataFrame,
       iters: Int,
       damping: Double = 0.85): DataFrame = {
-    val e = edges.select(col("src"), col("dst"), col("w").cast(DoubleType))
-    val outW = e.groupBy("src").agg(sum(col("w")).as("outw"))
     val tp = nodes
       .join(broadcast(teleport), Seq("id"), "left")
       .select(col("id"), coalesce(col("tp"), lit(0.0)).as("tp"))
-    var ranks = tp.select(col("id"), col("tp").as("rank"))
+    sweeps(tp, edges, tp.select(col("id"), col("tp").as("rank")),
+      iters, damping, lit(1.0 - damping) * col("tp"))
+  }
+
+  /** `iters` damped sweeps from `start` (id, rank): each node of `base`
+    * (id, …) gets `teleport`, a column of `base`, plus damping × the
+    * weighted rank flowing in over `edges`. */
+  private def sweeps(
+      base: DataFrame,
+      edges: DataFrame,
+      start: DataFrame,
+      iters: Int,
+      damping: Double,
+      teleport: Column): DataFrame = {
+    val e = edges.select(col("src"), col("dst"), col("w").cast(DoubleType))
+    val outW = e.groupBy("src").agg(sum(col("w")).as("outw"))
+    var ranks = start
     for (_ <- 1 to iters) {
       val contrib = e
         .join(broadcast(ranks.withColumnRenamed("id", "src")), "src")
@@ -79,12 +78,12 @@ object PageRank {
         .select(col("dst"), (col("rank") * col("w") / col("outw")).as("c"))
         .groupBy("dst")
         .agg(sum(col("c")).as("inflow"))
-      ranks = tp
+      ranks = base
         .join(broadcast(contrib.withColumnRenamed("dst", "id")),
           Seq("id"), "left")
         .select(col("id"),
-          (lit(1.0 - damping) * col("tp") +
-            lit(damping) * coalesce(col("inflow"), lit(0.0))).as("rank"))
+          (teleport + lit(damping) * coalesce(col("inflow"), lit(0.0)))
+            .as("rank"))
     }
     ranks
   }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -108,19 +108,8 @@ object StreamOps {
     * and the join condition bounds event-time distance — that pair is what
     * lets Spark GC join state, the requirement for unbounded streams. */
   def viewClickJoin(events: DataFrame, window: String = "5 minutes",
-      watermark: String = "10 minutes"): DataFrame = {
-    val views = events.filter(col("event_type") === "view")
-      .select(col("user_id"), col("ts").as("view_ts"))
-      .withWatermark("view_ts", watermark)
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("user_id").as("click_user"), col("ts").as("click_ts"))
-      .withWatermark("click_ts", watermark)
-    views.join(clicks,
-        col("user_id") === col("click_user") &&
-          col("click_ts") > col("view_ts") &&
-          col("click_ts") <= col("view_ts") + expr(s"INTERVAL $window"))
-      .select("user_id", "view_ts", "click_ts")
-  }
+      watermark: String = "10 minutes"): DataFrame =
+    viewClicks(events, window, watermark, "inner")
 
   /** Stream-stream LEFT OUTER interval join: like viewClickJoin, but views
     * with no click inside the window still emit (click_ts NULL) — once the
@@ -129,7 +118,12 @@ object StreamOps {
     * what lets Spark both GC the state AND prove a view can no longer
     * match, the prerequisite for outer results on unbounded streams. */
   def viewClickLeftJoin(events: DataFrame, window: String = "5 minutes",
-      watermark: String = "10 minutes"): DataFrame = {
+      watermark: String = "10 minutes"): DataFrame =
+    viewClicks(events, window, watermark, "left_outer")
+
+  /** The views ⋈ clicks interval join of both forms above. */
+  private def viewClicks(events: DataFrame, window: String,
+      watermark: String, joinType: String): DataFrame = {
     val views = events.filter(col("event_type") === "view")
       .select(col("user_id"), col("ts").as("view_ts"))
       .withWatermark("view_ts", watermark)
@@ -140,7 +134,7 @@ object StreamOps {
         col("user_id") === col("click_user") &&
           col("click_ts") > col("view_ts") &&
           col("click_ts") <= col("view_ts") + expr(s"INTERVAL $window"),
-        "left_outer")
+        joinType)
       .select("user_id", "view_ts", "click_ts")
   }
 
@@ -392,6 +386,15 @@ object StreamOps {
         round(col("p90"), 6).as("p90"), round(col("p99"), 6).as("p99"))
   }
 
+  /** An event's value in exact 10⁻⁶ units, the maintainers' `v6`. */
+  private def v6: Column =
+    round(col("value") * 1000000L).cast(LongType).as("v6")
+
+  /** A merged running count or sum: state `a` plus batch `b` after a
+    * full outer join, a missing side counting 0. */
+  private def plus0(a: String, b: String): Column =
+    (coalesce(col(a), lit(0L)) + coalesce(col(b), lit(0L))).as(a)
+
   /** Incremental extreme/mean maintenance per event type over a real
     * micro-batch replay: per-type count, 10⁻⁶-unit integer sum, min and
     * max are ALL associative-commutative merges, so the final state is
@@ -401,8 +404,7 @@ object StreamOps {
   def incrementalExtremes(spark: SparkSession, sfDir: String,
       workDir: String, nBatches: Int = 4): DataFrame = {
     val stream = sliceStream(spark, sfDir, nBatches)._1
-      .select(col("event_type"),
-        round(col("value") * 1000000L).cast(LongType).as("v6"))
+      .select(col("event_type"), v6)
     foldState(stream, workDir) { (batch, prev) =>
       val partial = batch.groupBy("event_type")
         .agg(count(lit(1)).as("n_rows"),
@@ -427,8 +429,7 @@ object StreamOps {
       workDir: String, nBatches: Int = 4): DataFrame = {
     val big38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val stream = sliceStream(spark, sfDir, nBatches)._1
-      .select(col("event_type"),
-        round(col("value") * 1000000L).cast(LongType).as("v6"))
+      .select(col("event_type"), v6)
     foldState(stream, workDir) { (batch, prev) =>
       val partial = batch.groupBy("event_type")
         .agg(count(lit(1)).as("n_rows"),
@@ -965,10 +966,8 @@ object StreamOps {
           greatest(col("b_maxp"), col("b_rawbest")).as("best")))(_
         .join(partial, Seq("event_type"), "full_outer")
         .select(col("event_type"),
-          (coalesce(col("n"), lit(0L))
-            + coalesce(col("b_n"), lit(0L))).as("n"),
-          (coalesce(col("s"), lit(0L))
-            + coalesce(col("b_sum"), lit(0L))).as("s"),
+          plus0("n", "b_n"),
+          plus0("s", "b_sum"),
           when(col("b_minp").isNull, col("minp"))
             .when(col("minp").isNull, col("b_minp"))
             .otherwise(least(col("minp"),
@@ -1006,7 +1005,7 @@ object StreamOps {
     val stream = sliceStream(spark, sfDir, nBatches)._1
       .select(col("event_type"),
         expr("unix_micros(ts) DIV 1000000").as("x"),
-        round(col("value") * 1000000L).cast(LongType).as("v6"))
+        v6)
     foldState(stream, workDir) { (batch, prev) =>
       val partial = batch.groupBy("event_type")
         .agg(count(lit(1)).cast(LongType).as("n"),
@@ -1101,8 +1100,7 @@ object StreamOps {
     import org.apache.spark.sql.expressions.Window
     val big38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val stream = sliceStream(spark, sfDir, nBatches)._1
-      .select(col("event_id"), col("event_type"),
-        round(col("value") * 1000000L).cast(LongType).as("v6"))
+      .select(col("event_id"), col("event_type"), v6)
     foldState(stream, workDir) { (batch, prev) =>
       val w = Window.partitionBy("event_type").orderBy("event_id")
       val base = prev.fold(batch
@@ -1140,15 +1138,12 @@ object StreamOps {
           col("b_al").as("alarms")))(_
         .join(partial, Seq("event_type"), "full_outer")
         .select(col("event_type"),
-          (coalesce(col("n"), lit(0L))
-            + coalesce(col("b_n"), lit(0L))).as("n"),
-          (coalesce(col("s"), lit(0L))
-            + coalesce(col("b_s"), lit(0L))).as("s"),
+          plus0("n", "b_n"),
+          plus0("s", "b_s"),
           (coalesce(col("q"), lit(0L).cast(big38))
             + coalesce(col("b_q"), lit(0L).cast(big38)))
             .cast(big38).as("q"),
-          (coalesce(col("alarms"), lit(0L))
-            + coalesce(col("b_al"), lit(0L))).as("alarms")))
+          plus0("alarms", "b_al")))
     }
   }
 

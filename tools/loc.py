@@ -7,10 +7,13 @@ lines dropped. The count every CHANGES.md entry quotes.
 
 Prints the total as a comma-grouped integer (e.g. 26,400).
 
-`--dups` counts the code lines that lie in a window of 6 consecutive code
-lines, at least 150 characters long once each line is stripped, whose text
-occurs more than once across the given files (a window made only of
-`package`/`import` lines does not count).
+`--dups` counts the code lines touched by a window of 60 consecutive code
+tokens (a `\\w+` run or one punctuation character) that occurs more than
+once across the given files, so a copy counts however its lines are
+wrapped. Comments and the leading `|` of a `stripMargin` line are dropped
+before tokenizing, and a window that touches a `package` or `import` line
+does not count. Each duplicated run of lines is printed as
+`path:first-last` on stderr; the total alone goes to stdout.
 """
 import os
 import re
@@ -18,8 +21,10 @@ import sys
 from collections import defaultdict
 
 BLOCK = re.compile(r"/\*.*?\*/", re.S)
-DUP_WINDOW = 6
-DUP_MIN_CHARS = 150
+# a trailing `//` comment: preceded by whitespace, so `s3://` stays code
+TRAILING = re.compile(r"\s//.*$")
+TOKEN = re.compile(r"\w+|[^\w\s]")
+DUP_TOKENS = 60
 
 
 def code_line_list(text):
@@ -33,24 +38,58 @@ def code_lines(text):
     return len(code_line_list(text))
 
 
-def duplicate_lines(sources, window=DUP_WINDOW, min_chars=DUP_MIN_CHARS):
-    """Code lines of `sources` (a list of source texts) inside a repeated
-    window of `window` code lines and at least `min_chars` characters."""
-    files = [code_line_list(t) for t in sources]
+def tokens(text):
+    """(token, line number, in a package/import line) for each code token
+    of one Scala source text; line numbers are 1-based source lines."""
+    # blank a block comment out but keep its newlines, so numbers hold
+    text = BLOCK.sub(lambda m: "\n" * m.group().count("\n"), text)
+    out = []
+    for n, line in enumerate(text.splitlines(), 1):
+        line = TRAILING.sub("", line).strip()
+        if line.startswith("//"):
+            continue
+        header = line.startswith(("package ", "import "))
+        if line.startswith("|"):
+            line = line[1:]
+        out.extend((t, n, header) for t in TOKEN.findall(line))
+    return out
+
+
+def duplicate_runs(sources, window=DUP_TOKENS):
+    """{file index: sorted source line numbers} of the code lines of
+    `sources` (a list of source texts) touched by a window of `window`
+    tokens that occurs more than once."""
+    files = [tokens(t) for t in sources]
     where = defaultdict(list)
-    for f, lines in enumerate(files):
-        for i in range(len(lines) - window + 1):
-            w = lines[i:i + window]
-            if sum(map(len, w)) < min_chars or all(
-                    l.startswith(("package ", "import ")) for l in w):
-                continue
-            where["\n".join(w)].append((f, i))
-    dup = set()
+    for f, toks in enumerate(files):
+        headers = [0]
+        for _, _, h in toks:
+            headers.append(headers[-1] + h)
+        for i in range(len(toks) - window + 1):
+            if headers[i + window] == headers[i]:
+                where[tuple(t for t, _, _ in toks[i:i + window])].append((f, i))
+    dup = defaultdict(set)
     for starts in where.values():
         if len(starts) > 1:
             for f, i in starts:
-                dup.update((f, j) for j in range(i, i + window))
-    return len(dup)
+                dup[f].update(n for _, n, _ in files[f][i:i + window])
+    return {f: sorted(lines) for f, lines in dup.items()}
+
+
+def duplicate_lines(sources, window=DUP_TOKENS):
+    """Code lines of `sources` inside a repeated `window`-token window."""
+    return sum(map(len, duplicate_runs(sources, window).values()))
+
+
+def runs(lines):
+    """Maximal (first, last) ranges of consecutive numbers in `lines`."""
+    out = []
+    for n in lines:
+        if out and n == out[-1][1] + 1:
+            out[-1][1] = n
+        else:
+            out.append([n, n])
+    return [tuple(r) for r in out]
 
 
 def scala_files(path):
@@ -61,22 +100,35 @@ def scala_files(path):
 
 
 def sources(paths):
+    """(path, text) of every Scala file under `paths`."""
     for p in paths:
         for f in scala_files(p):
             with open(f, encoding="utf-8") as fh:
-                yield fh.read()
+                yield f, fh.read()
 
 
 def count(paths):
-    return sum(code_lines(t) for t in sources(paths))
+    return sum(code_lines(t) for _, t in sources(paths))
+
+
+def dups(paths):
+    """Duplicated code lines under `paths`; each run goes to stderr."""
+    files = list(sources(paths))
+    names = [f for f, _ in files]
+    found = duplicate_runs([t for _, t in files])
+    for f in sorted(found):
+        for first, last in runs(found[f]):
+            print(f"{os.path.relpath(names[f])}:{first}-{last}",
+                  file=sys.stderr)
+    return sum(map(len, found.values()))
 
 
 def main(argv):
-    dups = argv[:1] == ["--dups"]
-    argv = argv[1:] if dups else argv
+    want_dups = argv[:1] == ["--dups"]
+    argv = argv[1:] if want_dups else argv
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     paths = argv or [os.path.join(root, "src", "main", "scala")]
-    n = duplicate_lines(list(sources(paths))) if dups else count(paths)
+    n = dups(paths) if want_dups else count(paths)
     print(f"{n:,}")
     return 0
 

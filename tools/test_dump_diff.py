@@ -4,6 +4,7 @@
 """
 import contextlib
 import io
+import json
 import os
 import sys
 import tempfile
@@ -22,6 +23,12 @@ def dump(root, name, table):
     os.makedirs(qdir)
     pq.write_table(table, os.path.join(qdir, "part-00000.parquet"))
     open(os.path.join(qdir, "_SUCCESS"), "w").close()
+
+
+def oracles(root, sql_by_key):
+    """The oracle_sql.json Verify writes beside the query dirs."""
+    with open(os.path.join(root, "oracle_sql.json"), "w") as fh:
+        json.dump(sql_by_key, fh)
 
 
 def run(parent, change):
@@ -71,6 +78,34 @@ class DumpDiff(unittest.TestCase):
         for name in ("q_dup", "q_cols", "q_gone", "q_new"):
             self.assertIn(f"DIFF {name}:", out)
         self.assertIn("4 queries compared, 4 differ", out)
+
+    def test_oracle_sql_equal_after_whitespace_collapse(self):
+        oracles(self.parent, {"q_a": "SELECT 1 AS x\n  FROM t\tWHERE y = 2"})
+        oracles(self.change, {"q_a": "  SELECT 1 AS x FROM t\n\n WHERE  y = 2\n"})
+        code, out = run(self.parent, self.change)
+        self.assertEqual(code, 0, out)
+        self.assertIn("1 oracle keys compared, 0 differ", out)
+
+    def test_oracle_sql_text_and_missing_keys_differ(self):
+        oracles(self.parent, {"q_a": "SELECT 1 AS x", "q_same": "SELECT 2",
+                              "q_gone": "SELECT 3"})
+        oracles(self.change, {"q_a": "SELECT 1 AS y", "q_same": "SELECT 2",
+                              "q_new": "SELECT 4"})
+        code, out = run(self.parent, self.change)
+        self.assertEqual(code, 1)
+        self.assertIn("ORACLE q_a: SQL differs from character 12", out)
+        self.assertIn("ORACLE q_gone: only in parent", out)
+        self.assertIn("ORACLE q_new: only in change", out)
+        self.assertNotIn("ORACLE q_same", out)
+        self.assertIn("4 oracle keys compared, 3 differ", out)
+        # the row check alone passed: only the oracle check failed
+        self.assertIn("0 queries compared, 0 differ", out)
+
+    def test_oracle_file_on_one_side_only(self):
+        oracles(self.parent, {"q_a": "SELECT 1"})
+        code, out = run(self.parent, self.change)
+        self.assertEqual(code, 1)
+        self.assertIn("ORACLE q_a: only in parent", out)
 
 
 if __name__ == "__main__":

@@ -57,41 +57,68 @@ class Loc(unittest.TestCase):
                 loc.main([d])
             self.assertEqual(out.getvalue().strip(), "1,234")
 
-    def test_dups_count_lines_of_repeated_long_windows(self):
+    def test_dups_count_lines_of_a_repeated_token_window(self):
+        # 6 lines of 13 tokens: 78 tokens, so 19 repeated 60-token windows
         block = "".join(f"  val v{i} = compute(\"a fairly long argument {i}\")\n"
                         for i in range(6))
-        other = "object B {\n  // differently indented copy\n" + \
-            block.replace("  val", "      val") + "  val tail = 0\n}\n"
-        self.assertEqual(loc.duplicate_lines(["object A {\n" + block + "}\n",
-                                              other]), 12)
+        a = "object A\n" + block + "}\n"
+        b = "object B\n  // differently indented copy\n" + \
+            block.replace("  val", "      val") + "  val tail = 0\n"
+        self.assertEqual(loc.duplicate_runs([a, b]),
+                         {0: [2, 3, 4, 5, 6, 7], 1: [3, 4, 5, 6, 7, 8]})
+        self.assertEqual(loc.duplicate_lines([a, b]), 12)
         # a single occurrence is not a duplicate
         self.assertEqual(loc.duplicate_lines([block]), 0)
 
-    def test_dups_skip_short_and_import_only_windows(self):
-        short = "val x = 1\n" * 6
+    def test_dups_count_a_copy_with_other_line_breaks(self):
+        sql = "".join(f"  |  sum(CASE WHEN grp = {i} THEN cents END) AS s{i},\n"
+                      for i in range(6))
+        wrapped = "val q = s\"\"\"SELECT " + \
+            " ".join(l.strip().lstrip("|") for l in sql.splitlines()) + \
+            "\"\"\".stripMargin\n"
+        original = "val q = s\"\"\"SELECT\n" + sql + "  |\"\"\".stripMargin\n"
+        # the one-line copy counts once; all 6 margin lines of the original
+        # (and the opening line, which its windows reach) count
+        self.assertEqual(loc.duplicate_runs([original, wrapped]),
+                         {0: list(range(1, 9)), 1: [1]})
+
+    def test_dups_skip_short_and_header_windows(self):
+        short = "val x = 1\n" * 4
         self.assertEqual(loc.duplicate_lines([short, short]), 0)
-        imports = "".join(f"import org.apache.spark.sql.functions.f{i}_long_name\n"
-                          for i in range(6))
-        self.assertEqual(loc.duplicate_lines(["package p\n" + imports] * 2), 0)
+        imports = "".join(f"import org.apache.spark.sql.functions.{{f{i}, g{i}}}\n"
+                          for i in range(8))
+        # a shared import header, then different bodies: every 60-token
+        # window either touches an import line or is unique
+        a = "package p\n" + imports + "object A { val a = 1 }\n"
+        b = "package p\n" + imports + "object B { val b = 2 }\n"
+        self.assertEqual(loc.duplicate_lines([a, b]), 0)
 
     def test_dups_ignore_comments(self):
         block = "".join(f"val v{i} = compute(\"a fairly long argument {i}\")\n"
                         for i in range(6))
-        commented = block.replace("\n", "\n// note\n", 2).replace(
-            "val v3", "/* c */ val v3")
+        commented = block.replace("\n", "  // note\n", 2).replace(
+            "val v3", "/* c */ val v3").replace("val v4", "// gone\nval v4")
         self.assertEqual(loc.duplicate_lines([block, commented]), 12)
 
-    def test_main_dups_flag(self):
+    def test_runs_merge_consecutive_lines(self):
+        self.assertEqual(loc.runs([1, 2, 3, 7, 9, 10]),
+                         [(1, 3), (7, 7), (9, 10)])
+
+    def test_main_dups_prints_runs_on_stderr_and_total_on_stdout(self):
         block = "".join(f"val v{i} = compute(\"a fairly long argument {i}\")\n"
                         for i in range(6))
         with tempfile.TemporaryDirectory() as d:
             for name in ("A.scala", "B.scala"):
                 with open(os.path.join(d, name), "w") as fh:
                     fh.write(block)
-            out = io.StringIO()
-            with contextlib.redirect_stdout(out):
+            out, err = io.StringIO(), io.StringIO()
+            with contextlib.redirect_stdout(out), \
+                    contextlib.redirect_stderr(err):
                 self.assertEqual(loc.main(["--dups", d]), 0)
             self.assertEqual(out.getvalue().strip(), "12")
+            self.assertEqual(
+                [l.rsplit(os.sep, 1)[-1] for l in err.getvalue().split()],
+                ["A.scala:1-6", "B.scala:1-6"])
 
 
 if __name__ == "__main__":
